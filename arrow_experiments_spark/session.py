@@ -38,6 +38,81 @@ def _env_extra_conf() -> list[tuple[str, str]]:
     return pairs
 
 
+# Runtime SQL confs both entry points apply: build_session on the
+# builder, tune_session on a live driver-owned session.
+_RUNTIME_CONF = [
+    # testdata events.parquet uses TIMESTAMP(NANOS); see tables.py
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    ("spark.sql.adaptive.enabled", "true"),
+    # Coalesce small shuffles by DATA SIZE, not down to default
+    # parallelism: a delta-sized reduce stage becomes 1 task instead
+    # of shuffle.partitions tasks (the gate sinks' 1-row floor
+    # measured 14.1 -> 3.9 s steady state under this pair, the
+    # biggest single cut of the r9-r12 floor thread), while
+    # warehouse-scale shuffles stay wide because their bytes exceed
+    # advisoryPartitionSizeInBytes — the per-job scoping the r12
+    # floor profile asked for, by shape instead of by conf.  This is
+    # also Spark's own recommended production posture for
+    # parallelismFirst.  The cached-plan flag extends the same
+    # coalescing to persisted frames (the sinks persist every gate
+    # leg), which otherwise pin pre-AQE partitioning.
+    ("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"),
+    ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
+    # 16m, not Spark's 64m default: the engine's hot mid-size stages
+    # (LSH candidate verify, embedding cosine folds) are COMPUTE-
+    # dense per byte — ~300 B/row carrying ~100 FLOPs of vectorized
+    # kernel work — so CPU-optimal partitions are smaller than the
+    # IO-optimal default.  Under parallelismFirst=false the advisory
+    # size is the only parallelism floor for these stages: at 64m a
+    # 40-row gate batch's verify leg collapsed to 1-2 tasks and gave
+    # back ~2 s of its floor win (measured: steady 8.7 s at 16m vs
+    # 11.3-12.6 s at 64m, old-conf paired control 9.15 s).  At
+    # warehouse scale the effect is a 4x finer reduce fan-out on
+    # multi-GB shuffles — more tasks, each still seconds long.
+    # Override per deployment via extra_conf/SPARK_GRAFT_EXTRA_CONF.
+    ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m"),
+    # A small PARALLELISM floor under parallelismFirst=false (r14,
+    # the r13 verdict's untried lever): with pf=false the coalescer
+    # floors at minPartitionNum-or-1, and sub-advisory mid-size
+    # stages (events_session_window's sessionize shuffle at small
+    # SF) collapsed to 1-2 tasks, the one measured cost of the r12
+    # conf set (1.26x).  Floor 8 recovers it (0.86x paired A/B)
+    # while staying inert everywhere it could hurt: the gate sinks'
+    # delta legs floor at 8 near-empty tasks instead of 1
+    # (min-over-clean parity, 6.36 vs 6.90 s, generalized gate-sink
+    # A/B) and four sensitive headline keys measured 0.91-1.06x.
+    # At warehouse scale every real shuffle exceeds 8 partitions
+    # under the 16m advisory, so the floor never binds there.
+    ("spark.sql.adaptive.coalescePartitions.minPartitionNum", "8"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    # A read that binds an explicit file list (the versioned
+    # snapshots' manifest-driven reads) launches a DISTRIBUTED
+    # listing job once the path count crosses this threshold
+    # (default 32) — a ~600-task stat job per version read at
+    # derived bucket counts, pure overhead when the manifest
+    # already IS the listing and a driver-side stat of local (or
+    # manifest-known object-store) paths is microseconds each.
+    ("spark.sql.sources.parallelPartitionDiscovery.threshold", "16384"),
+]
+
+
+def _disable_debugging_cache() -> None:
+    """Pin pyspark's per-API-call origin capture off (see build_session).
+    The conf is STATIC — spark.conf.set on a live session throws
+    CANNOT_MODIFY_STATIC_CONFIG, and getOrCreate may return a
+    pre-existing session that ignores it — but its sole consumer is
+    pyspark's Python-side is_debugging_enabled(), which reads it ONCE
+    into a module-global cache, so set that cache directly (guarded:
+    private attr, best-effort across pyspark versions — on a layout
+    change the capture just stays on)."""
+    try:
+        import pyspark.errors.utils as _perr
+
+        _perr._enable_debugging_cache = False
+    except Exception:  # pragma: no cover — future pyspark layout change
+        pass
+
+
 def build_session(
     app_name: str = "arrow-experiments-spark",
     master: str | None = None,
@@ -45,7 +120,7 @@ def build_session(
     batch_rows: int = DEFAULT_BATCH_ROWS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
@@ -53,63 +128,9 @@ def build_session(
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Coalesce small shuffles by DATA SIZE, not down to default
-        # parallelism: a delta-sized reduce stage becomes 1 task instead
-        # of shuffle.partitions tasks (the gate sinks' 1-row floor
-        # measured 14.1 -> 3.9 s steady state under this pair, the
-        # biggest single cut of the r9-r12 floor thread), while
-        # warehouse-scale shuffles stay wide because their bytes exceed
-        # advisoryPartitionSizeInBytes — the per-job scoping the r12
-        # floor profile asked for, by shape instead of by conf.  This is
-        # also Spark's own recommended production posture for
-        # parallelismFirst.  The cached-plan flag extends the same
-        # coalescing to persisted frames (the sinks persist every gate
-        # leg), which otherwise pin pre-AQE partitioning.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-        )
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-        )
-        # 16m, not Spark's 64m default: the engine's hot mid-size stages
-        # (LSH candidate verify, embedding cosine folds) are COMPUTE-
-        # dense per byte — ~300 B/row carrying ~100 FLOPs of vectorized
-        # kernel work — so CPU-optimal partitions are smaller than the
-        # IO-optimal default.  Under parallelismFirst=false the advisory
-        # size is the only parallelism floor for these stages: at 64m a
-        # 40-row gate batch's verify leg collapsed to 1-2 tasks and gave
-        # back ~2 s of its floor win (measured: steady 8.7 s at 16m vs
-        # 11.3-12.6 s at 64m, old-conf paired control 9.15 s).  At
-        # warehouse scale the effect is a 4x finer reduce fan-out on
-        # multi-GB shuffles — more tasks, each still seconds long.
-        # Override per deployment via extra_conf/SPARK_GRAFT_EXTRA_CONF.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        # A small PARALLELISM floor under parallelismFirst=false (r14,
-        # the r13 verdict's untried lever): with pf=false the coalescer
-        # floors at minPartitionNum-or-1, and sub-advisory mid-size
-        # stages (events_session_window's sessionize shuffle at small
-        # SF) collapsed to 1-2 tasks, the one measured cost of the r12
-        # conf set (1.26x).  Floor 8 recovers it (0.86x paired A/B)
-        # while staying inert everywhere it could hurt: the gate sinks'
-        # delta legs floor at 8 near-empty tasks instead of 1
-        # (min-over-clean parity, 6.36 vs 6.90 s, generalized gate-sink
-        # A/B) and four sensitive headline keys measured 0.91-1.06x.
-        # At warehouse scale every real shuffle exceeds 8 partitions
-        # under the 16m advisory, so the floor never binds there.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", "8")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
-        # A read that binds an explicit file list (the versioned
-        # snapshots' manifest-driven reads) launches a DISTRIBUTED
-        # listing job once the path count crosses this threshold
-        # (default 32) — a ~600-task stat job per version read at
-        # derived bucket counts, pure overhead when the manifest
-        # already IS the listing and a driver-side stat of local (or
-        # manifest-known object-store) paths is microseconds each.
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "16384")
         # PySpark's DataFrame-debugging origin capture adds TWO py4j
         # round-trips (PySparkCurrentOrigin set/clear) plus a Python
         # stack walk to EVERY DataFrame API call — measured 40-60% of
@@ -119,11 +140,11 @@ def build_session(
         # a local[32] tweak; the only loss is the call-site line in
         # DataFrame error contexts (diagnostic only).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # testdata events.parquet uses TIMESTAMP(NANOS); see tables.py
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    for k, v in _RUNTIME_CONF:
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     # measurement/deployment escape hatch, applied last (see
@@ -132,50 +153,16 @@ def build_session(
     for k, v in _env_extra_conf():
         builder = builder.config(k, v)
     sess = builder.getOrCreate()
-    # getOrCreate may return a pre-existing session (static conf above
-    # ignored), and the flag's Python-side cache may already be
-    # populated True — pin it False either way (see tune_session).
-    try:
-        import pyspark.errors.utils as _perr
-
-        _perr._enable_debugging_cache = False
-    except Exception:  # pragma: no cover — future pyspark layout change
-        pass
+    _disable_debugging_cache()
     return sess
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally-built session (the
     driver owns its own SparkSession; these are all SQL confs)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionNum", "8"
-    )
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold", "16384"
-    )
-    # Disable the per-API-call origin capture (see build_session).  The
-    # conf is STATIC — spark.conf.set on a live session throws
-    # CANNOT_MODIFY_STATIC_CONFIG — but its sole consumer is pyspark's
-    # Python-side is_debugging_enabled(), which reads it ONCE into a
-    # module-global cache.  For driver-owned sessions set that cache
-    # directly (guarded: private attr, best-effort across pyspark
-    # versions — on a layout change the capture just stays on).
-    try:
-        import pyspark.errors.utils as _perr
-
-        _perr._enable_debugging_cache = False
-    except Exception:  # pragma: no cover — future pyspark layout change
-        pass
+    for k, v in _RUNTIME_CONF:
+        spark.conf.set(k, v)
+    _disable_debugging_cache()
     # same escape hatch as build_session (r12 ADVICE: the A/B-a-conf-
     # without-a-code-edit workflow must cover driver-owned sessions).
     # Static/core confs cannot be set on a live session — the builder

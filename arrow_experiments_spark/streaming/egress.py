@@ -12,6 +12,12 @@ one logical plan, batch and streaming, one transport.
 Clients discover batches through the catalog endpoint (the get_indirect
 two-step shape): ``GET /catalog`` lists ``{prefix}.{batch_id}`` entries as
 they appear; each is an independently fetchable Arrow stream.
+
+The snapshot sinks merge micro-batches into versioned parquet snapshots
+(:func:`upsert_snapshot_sink`, :func:`incremental_curation_sink`, the IVF
+index sink).  The two near-dup gates keep a corpus snapshot plus a probe
+index and share one skeleton, :func:`_corpus_index_sink`, whose docstring
+states their fused-commit and crash-heal contract.
 """
 
 from __future__ import annotations
@@ -273,25 +279,18 @@ def _adopted_index_buckets(snapshot_dir: str) -> int | None:
     return int(n) if isinstance(n, int) else None
 
 
-_PARALLEL_WRITES_CONF = "spark.arrowExperimentsSpark.snapshot.parallelWrites"
-
-
 def _resolve_parallel_writes(spark) -> bool:
-    """Resolve the write-overlap default from the session's coalescing
-    posture.  The parallel default was measured as a win ONLY under
-    size-based shuffle coalescing (the delta write legs become ~1-task
-    jobs bound by driver commit latency); pre-coalescing, the same A/B
-    was a wash-to-loss on local cores because two concurrent wide write
-    jobs oversubscribed them (r12 SCALE.md).  The two defaults are
-    LINKED (r12 ADVICE): a deployment that overrides coalescing off via
-    extra_conf/SPARK_GRAFT_EXTRA_CONF — or a driver-owned session that
-    never ran tune_session — would silently re-enter the measured
-    oversubscription loss under an unconditional "true".  So absent an
-    explicit ``snapshot.parallelWrites`` conf, the default FOLLOWS the
-    coalescing state; an explicit conf always wins."""
-    explicit = spark.conf.get(_PARALLEL_WRITES_CONF, None)
-    if explicit is not None:
-        return str(explicit).lower() == "true"
+    """Whether the write phases of a multi-table sink overlap, read off
+    the session's coalescing posture.  The overlap was measured as a
+    win ONLY under size-based shuffle coalescing (the delta write legs
+    become ~1-task jobs bound by driver commit latency); pre-coalescing,
+    the same A/B was a wash-to-loss on local cores because two
+    concurrent wide write jobs oversubscribed them (r12 SCALE.md).  So
+    the two are LINKED (r12 ADVICE): a deployment that overrides
+    coalescing off via extra_conf/SPARK_GRAFT_EXTRA_CONF — or a
+    driver-owned session that never ran tune_session — writes
+    sequentially instead of re-entering the measured oversubscription
+    loss."""
 
     def on(conf: str, unreadable_default: bool) -> bool:
         # no fallback ARGUMENT to conf.get: these are REGISTERED SQL
@@ -333,12 +332,11 @@ def _parallel_writes(jobs, parallel: bool = False):
     post-commit read-back) and holds in BOTH execution modes.
 
     ``parallel=False`` runs the thunks in order on the calling
-    thread.  The sinks now default to PARALLEL (the conf
-    ``spark.arrowExperimentsSpark.snapshot.parallelWrites`` defaults
-    "true"; set "false" to serialize): the original r12 A/B measured
-    the thread overlap as a wash-to-loss on local[32] because two
-    concurrent 128-partition write jobs oversubscribed 32 cores — but
-    once size-based shuffle coalescing landed
+    thread.  The sinks run PARALLEL whenever the session coalesces
+    shuffles by size (:func:`_resolve_parallel_writes`): the original
+    r12 A/B measured the thread overlap as a wash-to-loss on local[32]
+    because two concurrent 128-partition write jobs oversubscribed 32
+    cores — but once size-based shuffle coalescing landed
     (``coalescePartitions.parallelismFirst=false``, session.py) the
     delta write legs are ~1-task jobs whose wall is driver plan/commit
     latency, not CPU, and the same A/B re-measured the overlap as a
@@ -763,10 +761,10 @@ def _merge_batch(
     zero-argument ``commit()`` callable is returned that performs the
     fence check, the atomic pointer swap, and the superseded-version
     prune.  The multi-table sinks use this to decouple their two legs'
-    write phases from the pointer swaps: legs write (threaded by
-    default; ``snapshot.parallelWrites=false`` serializes — see
-    :func:`_parallel_writes`) and then commit in the contract
-    order (corpus before index).  Returns ``None`` instead of the
+    write phases from the pointer swaps: legs write (threaded under
+    size-based coalescing — see :func:`_parallel_writes`) and then
+    commit in the contract order (corpus before index;
+    :func:`_corpus_index_sink`).  Returns ``None`` instead of the
     callable when there is nothing to commit (empty first batch).  An
     uncommitted write leaves only an unreferenced version dir, which the
     next merge at the same seq overwrites.
@@ -1406,6 +1404,288 @@ def incremental_curation_sink(
     )
 
 
+def _drop_saturated(frame: DataFrame, cols: list[str], max_pop: int) -> DataFrame:
+    """``frame`` without the rows of its ``cols`` groups holding more than
+    ``max_pop`` rows — the near-dup gates' saturated band/cell skip (see
+    ``max_band_pop`` on :func:`incremental_neardup_sink`), applied to the
+    pruned index slice and to the delta's own cells alike."""
+    from pyspark.sql import functions as F
+
+    ok = (
+        frame.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") <= max_pop)
+        .select(*cols)
+    )
+    return frame.join(ok, cols)
+
+
+def _corpus_index_sink(
+    stream_df: DataFrame,
+    base_dir: str,
+    *,
+    what: str,
+    geometry: dict,
+    corpus: str,
+    key_col: str,
+    batch_key,
+    id_col: str,
+    post_cols: list[str],
+    index: str,
+    cell_cols: list[str],
+    cells_per_row: int,
+    gate,
+    screen,
+    postings,
+    n_buckets: int,
+    index_buckets: int | None,
+    checkpoint_dir: str | None,
+    timeout_sec: int,
+    lease_ttl_sec: float,
+):
+    """The corpus-plus-index skeleton both near-dup gates
+    (:func:`incremental_neardup_sink`, :func:`incremental_embedding_dedup_sink`)
+    run on.  Two bucketed versioned snapshots live under ``base_dir``:
+
+    * ``{corpus}/`` — the retained rows, keyed and bucketed on
+      ``key_col``;
+    * ``{index}/`` — the probe INDEX: one posting per (``cell_cols``,
+      ``id_col``) with the owner's ``post_cols`` denormalized in,
+      BUCKETED on ``cell_cols`` so a delta's cell lookups prune to the
+      buckets its cells hash into.
+
+    A sink supplies only what differs: ``gate(batch_df)`` (its row
+    gate), ``screen(fresh, probe, pinned)`` (candidates + verify: it
+    explodes the exact-novel rows ``fresh`` into their cells, calls
+    ``probe(delta_cells)`` for the committed index slice those cells
+    fall into — bucket-pruned, or None before the first index commit —
+    and returns the survivors), ``postings(frame)`` (its exploder from
+    ``post_cols`` rows to index rows), ``batch_key`` (the ``key_col``
+    expression over the raw batch), its column names and its
+    ``geometry`` record.
+
+    Attach: ONE :class:`WriterLease` over ``base_dir`` covers BOTH
+    snapshots — the hazard is two writers interleaving corpus and index
+    commits (a LATEST pointer mixing writers' buckets), which per-subdir
+    leases would not stop.  Size ``lease_ttl_sec`` above the slowest
+    expected micro-batch: the heartbeat runs once per batch, and a batch
+    outliving the TTL can lose the lease mid-flight (its commit then
+    fences, safely).  ``geometry`` is INDEX-LIFETIME: every posting is a
+    function of it, so the first commit records it in
+    ``{base_dir}/_GEOMETRY.json`` and later runs raise on mismatch
+    instead of silently missing duplicates (:func:`_check_geometry`).
+
+    Per micro-batch: (1) ONE probe aggregate over the raw batch yields
+    the corpus buckets its keys hash into — pruning both the seen-before
+    anti-join and the heal read-back below — and the batch row count,
+    which bounds every downstream backfill guard (r12 floor cut);
+    (2) the row gate, persisted BEFORE the anti-join (the helper's
+    broadcast-size probe is an eager count, and unpersisted it executed
+    the whole gate plan one extra time per micro-batch — ADVICE r10);
+    (3) the bucket-pruned first-seen anti-join against the committed
+    corpus, which also returns the MATCHED keys — the batch's
+    re-delivered rows; (4) ``screen``; (5) the fused commit.
+
+    ``index_buckets`` — the index's bucket count — defaults to DERIVED
+    (r10 verdict #4): an existing committed index's recorded layout is
+    ADOPTED verbatim (no migration on re-attach), else the first batch
+    sizes it via :func:`derive_index_buckets` (``max(postings/50k,
+    4·cells·delta)`` rounded to a power of two) — the ``B ≥ cells ×
+    delta`` rule that keeps the delta's touched set a small fraction of
+    the index instead of all of it.  Bucket counts are NOT in
+    ``_GEOMETRY.json``: they are not a function of the DATA (a mismatch
+    migrates the layout wholesale, correctly, via the per-version
+    ``_LAYOUT.json`` record — the same mechanism ``n_buckets`` has
+    always used), so the committed layout record IS their geometry
+    record.  An explicit value migrates the index once; long-lived
+    sinks whose corpus outgrows the derived count re-attach with a
+    larger explicit value.
+
+    FUSED commit (r10 verdict #2): both legs' WRITE phases run before
+    either pointer swaps (``_merge_batch(..., defer_commit=True)``;
+    threaded when the session coalesces shuffles by size — see
+    :func:`_parallel_writes` for the measured history), then the
+    pointers swap in contract order: corpus first, index second, and a
+    failed leg raises before any later leg commits, so the index never
+    leads the corpus.  The index leg's posting source is *survivors ∪
+    (committed corpus ∩ the batch's keys)* — since the new corpus
+    version is exactly (committed ∪ survivors), this is the posting set
+    a read-back of the POST-commit corpus would produce, but it depends
+    only on PRE-commit frames, which is what decouples the writes from
+    the commit points.  The re-delivered term is fetched WIDE only when
+    the anti-join matched something (usually nothing), else the
+    postings come from the survivors alone.
+
+    Crash contract: a crash (or a failed index write) between the two
+    pointer swaps heals on replay — the corpus leg skips as already
+    committed, and the re-delivered term (the batch's keys joined
+    against the NOW-committed corpus) recomputes the identical
+    postings, whose insert-only re-merge is idempotent by key.  The
+    index lags the corpus by at most the in-flight batch."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    spark = stream_df.sparkSession
+    corpus_dir = os.path.join(base_dir, corpus)
+    index_dir = os.path.join(base_dir, index)
+    index_keys = [*cell_cols, id_col]
+    # resolved once at attach: follows the session's coalescing posture
+    par_writes = _resolve_parallel_writes(spark)
+    lease = WriterLease.acquire(base_dir, ttl_sec=lease_ttl_sec)
+    try:
+        _check_geometry(base_dir, geometry, [corpus, index])
+    except Exception:
+        lease.release()
+        raise
+    corpus_bucket = F.pmod(F.xxhash64(batch_key), F.lit(n_buckets)).cast("int")
+    resolved = {"index": index_buckets}
+
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        lease.heartbeat()
+        ckpt = checkpoint_dir is not None
+        committed_corpus = _committed_version(corpus_dir)
+        seq_corpus = _alloc_seq(committed_corpus, batch_id, ckpt)
+        committed_index = _committed_version(index_dir)
+        seq_index = _alloc_seq(committed_index, batch_id, ckpt)
+        pinned = []
+        corpus_touched, n_batch = _touched_list(
+            batch_df, corpus_bucket, with_count=True
+        )
+        if resolved["index"] is None:
+            # adopt-else-derive (see docstring)
+            resolved["index"] = _adopted_index_buckets(index_dir) or (
+                derive_index_buckets(
+                    cells_per_row * n_batch, bands=cells_per_row, delta_rows=n_batch
+                )
+            )
+        index_n = resolved["index"]
+        index_bucket = F.pmod(F.xxhash64(*cell_cols), F.lit(index_n)).cast("int")
+        index_touched = None
+
+        def probe(delta_cells: DataFrame) -> DataFrame | None:
+            nonlocal index_touched
+            idx = _prepare_view(
+                spark, index_dir, committed_index, index_n, index_keys, cell_cols
+            )
+            if idx is None:
+                return None
+            # the delta's index-bucket set, computed ONCE — prunes the
+            # probe and (when the posting source is survivors alone) is
+            # handed to the index merge so it skips its own probe job.
+            # The slice is deliberately NOT persisted: the saturation
+            # count and the candidate join are partition- AND column-
+            # pruned scans, and a persist would materialize every
+            # payload column of every touched bucket
+            index_touched = _touched_list(delta_cells, index_bucket)
+            return _filter_buckets(idx, index_touched)
+
+        def leg(sdir, frame, **kw):
+            """One write leg for _parallel_writes: (name, write thunk)."""
+            return os.path.basename(sdir), lambda: _merge_batch(
+                spark, frame, sdir, order_col=id_col, lease=lease,
+                insert_only=True, defer_commit=True, **kw,
+            )
+
+        try:
+            survivors = None
+            redelivered = None
+            view = _prepare_view(
+                spark, corpus_dir, committed_corpus, n_buckets, [key_col]
+            )
+            if seq_corpus is not None:
+                fresh = gate(batch_df).persist()
+                pinned.append(fresh)
+                if view is not None:
+                    seen = _filter_buckets(view, corpus_touched).select(key_col)
+                    fresh, redelivered = _anti_join_small_left(
+                        fresh, seen, [key_col], return_matched=True,
+                        small_rows_max=n_batch,
+                    )
+                    # feeds both the screen and the corpus merge
+                    fresh = fresh.persist()
+                    pinned.append(fresh)
+                    if redelivered is not None:
+                        pinned.append(redelivered)
+                # persisted: BOTH legs' write phases build on survivors
+                survivors = screen(fresh, probe, pinned).persist()
+                pinned.append(survivors)
+            post_src = (
+                survivors.select(*post_cols) if survivors is not None else None
+            )
+            from_survivors_only = False
+            if view is None:
+                from_survivors_only = survivors is not None
+            elif survivors is not None and redelivered is not None:
+                if redelivered.isEmpty():
+                    from_survivors_only = True
+                else:
+                    post_src = post_src.unionByName(
+                        _filter_buckets(view, corpus_touched)
+                        .join(F.broadcast(redelivered), key_col)
+                        .select(*post_cols)
+                    )
+            else:
+                # replay heal (corpus leg skipped) or the giant-backfill
+                # fallback (matched set unavailable): the unconditional
+                # pruned join-back on the batch's keys
+                batch_keys = batch_df.select(batch_key.alias(key_col)).distinct()
+                again = (
+                    _filter_buckets(view, corpus_touched)
+                    .join(batch_keys, key_col)
+                    .select(*post_cols)
+                )
+                post_src = again if post_src is None else post_src.unionByName(again)
+            legs = []
+            if seq_corpus is not None and survivors is not None:
+                legs.append(leg(
+                    corpus_dir, survivors,
+                    key_cols=[key_col], n_buckets=n_buckets, bucket_cols=None,
+                    seq=seq_corpus, committed=committed_corpus,
+                    # survivors were anti-joined against THIS committed
+                    # version above; their buckets ⊆ the raw batch's
+                    assume_novel=True, touched=set(corpus_touched),
+                ))
+            if seq_index is not None and post_src is not None:
+                legs.append(leg(
+                    index_dir, postings(post_src),
+                    key_cols=index_keys, n_buckets=index_n,
+                    bucket_cols=cell_cols, seq=seq_index,
+                    committed=committed_index,
+                    # the delta's index buckets cover the postings ONLY
+                    # when they come from survivors alone: re-delivered
+                    # rows can carry cells of a DIFFERENT payload, and the
+                    # insert-only anti-join's seen-scan must cover every
+                    # incoming bucket or a duplicate key slips in
+                    touched=(
+                        set(index_touched)
+                        if from_survivors_only and index_touched is not None
+                        else None
+                    ),
+                    # post_src ≤ survivors ∪ re-delivered ≤ 2·batch rows —
+                    # a sound bound that skips the backfill-guard count
+                    incoming_rows_max=2 * cells_per_row * n_batch,
+                ))
+            commits, errors = _parallel_writes(legs, parallel=par_writes)
+            # commit in list order, corpus first; a failed leg raises
+            # before any later leg commits
+            for commit_fn, err in zip(commits, errors):
+                if err is not None:
+                    raise err
+                if commit_fn is not None:
+                    commit_fn()
+        finally:
+            for f in pinned:
+                f.unpersist()
+
+    try:
+        return _run_foreach_batch(
+            stream_df, merge, checkpoint_dir, timeout_sec, f"{what} ({base_dir})"
+        )
+    finally:
+        lease.release()
+
+
 def incremental_neardup_sink(
     stream_df: DataFrame,
     base_dir: str,
@@ -1422,17 +1702,16 @@ def incremental_neardup_sink(
     """The incremental curation sink extended with NEAR-dup gating — the
     shape a continuously-fed 100 TB corpus actually runs, because full-
     corpus MinHash+LSH (``dedup_minhash_lsh``) is a batch job you cannot
-    afford per delta.  Two bucketed versioned snapshots live under
-    ``base_dir``:
+    afford per delta.  It runs on :func:`_corpus_index_sink` (lease,
+    geometry record, adopt-else-derive ``index_buckets``, fused commit
+    and crash heal) with two snapshots under ``base_dir``:
 
     * ``docs/`` — the curated corpus, keyed on ``content_hash``, each
       row carrying its 8 MinHash signatures (computed once at ingest,
       reused forever);
     * ``bands/`` — the LSH BAND INDEX: one posting per (band_idx,
       band_val, doc_id) with the owner's signatures denormalized in,
-      keyed on the full posting identity but BUCKETED on
-      ``(band_idx, band_val)`` so a delta's band lookups prune to the
-      buckets its band values hash into (``bucket_cols``).
+      bucketed on ``(band_idx, band_val)``.
 
     Each micro-batch pays delta-sized work only: (1) the row-local
     quality gate + in-batch exact dedup (:func:`_gated_firsts`), (2) the
@@ -1461,30 +1740,6 @@ def incremental_neardup_sink(
     Both behaviors are the documented ones for their scope, not
     defects.
 
-    FUSED commit (r10 verdict #2): both legs' WRITE phases run before
-    either pointer swaps (``_merge_batch(..., defer_commit=True)``;
-    threaded by default, serialized under
-    ``snapshot.parallelWrites=false`` — see
-    :func:`_parallel_writes` for the measured history), then the
-    pointers swap in contract order: ``docs/`` first, ``bands/``
-    second.  The band leg's posting source is *survivors ∪ (committed
-    docs ∩ the batch's hashes)* — since the new docs version is
-    exactly (committed ∪ survivors), this is the same posting set the
-    old post-commit read-back produced, but it depends only on
-    PRE-commit frames, which is what decouples the writes from the
-    commit points.
-
-    Crash contract: a crash between the two pointer swaps heals on
-    replay — docs skips as already committed, and the re-delivered
-    term of the posting source (the batch's hashes joined against the
-    NOW-committed docs) recomputes the identical postings, whose
-    re-upserts are idempotent by key.  ``index_buckets`` (the band
-    index's bucket count) is adopt-else-derive exactly as in
-    :func:`incremental_embedding_dedup_sink` — see there for why
-    bucket counts live in the layout record, not ``_GEOMETRY.json``.
-    The index lags the
-    corpus by at most the in-flight batch.
-
     Batch twin: ``pipeline_neardup_incremental`` (registered, DuckDB
     oracle) pins the gate semantics on a deterministic delta/base split.
 
@@ -1500,16 +1755,16 @@ def incremental_neardup_sink(
     check is delta-bounded); a true near-dup still has the other
     ``_N_BANDS - 1`` bands to be caught by — the streaming seat of the
     batch ops' pair-mass guard, which SKIPS (a sink cannot refuse a
-    delta) where batch refuses.
+    delta) where batch refuses.  The same cap applies to the BATCH side:
+    one skewed mega-batch (a clone-heavy backlog delivered as a single
+    availableNow batch) would otherwise go quadratic in its hottest band.
 
     The MinHash geometry (``_N_SIGS`` signatures, ``_N_BANDS`` bands)
-    is an INDEX-LIFETIME property: every band posting's value is a
-    function of it, so an index built under one geometry probed by code
-    with another silently misses duplicates.  The constants are
-    module-level today, but code versions change — the first commit
-    records them in ``{base_dir}/_GEOMETRY.json`` and later runs raise
-    on mismatch instead of degrading.  (``min_jaccard_est`` is
-    gate-only; ``n_buckets`` changes migrate via the layout record.)
+    is the index's ``_GEOMETRY.json`` record: the constants are
+    module-level today, but code versions change, and an index built
+    under one geometry probed by code with another would silently miss
+    duplicates.  (``min_jaccard_est`` is gate-only; ``n_buckets``
+    changes migrate via the layout record.)
 
     ``eval_docs`` composes the FOURTH funnel stage — benchmark
     DECONTAMINATION — into the same sink (quality → exact → near-dup →
@@ -1526,9 +1781,7 @@ def incremental_neardup_sink(
     rejects contaminated docs at ingest, so they are never retained and
     never suppress anything — the documented greedy/online behavior.
     """
-    import json
     import math
-    import os
 
     from pyspark.sql import functions as F
 
@@ -1539,34 +1792,6 @@ def incremental_neardup_sink(
         tokens,
     )
     from arrow_experiments_spark.operators.dedup import _N_BANDS, _N_SIGS
-
-    spark = stream_df.sparkSession
-    docs_dir = os.path.join(base_dir, "docs")
-    bands_dir = os.path.join(base_dir, "bands")
-    # write-phase overlap: defaults ON whenever size-based shuffle
-    # coalescing is active on this session (the two defaults are
-    # LINKED — see _resolve_parallel_writes); an explicit conf wins.
-    # Resolved once at attach.
-    par_writes = _resolve_parallel_writes(spark)
-    # ONE lease over base_dir covers BOTH snapshots: the hazard is two
-    # writers interleaving docs/ and bands/ commits (a LATEST pointer
-    # mixing writers' buckets), which per-subdir leases would not stop.
-    # Size lease_ttl_sec above the slowest expected micro-batch: the
-    # heartbeat runs once per batch, and a batch outliving the TTL can
-    # lose the lease mid-flight (its commit then fences, safely).
-    lease = WriterLease.acquire(base_dir, ttl_sec=lease_ttl_sec)
-    try:
-        _check_geometry(
-            base_dir,
-            {"n_sigs": _N_SIGS, "n_bands": _N_BANDS},
-            ["docs", "bands"],
-        )
-    except Exception:
-        lease.release()
-        raise
-    doc_keys = ["content_hash"]
-    band_keys = ["band_idx", "band_val", "doc_id"]
-    band_buckets = ["band_idx", "band_val"]
 
     ev_pairs = None
     if eval_docs is not None:
@@ -1586,9 +1811,10 @@ def incremental_neardup_sink(
 
     min_agree = max(1, math.ceil(min_jaccard_est * _N_SIGS))
     sig_cols = [f"s{i}" for i in range(_N_SIGS)]
+    band_cols = ["band_idx", "band_val"]
 
-    def band_rows(frame: DataFrame, keep_sigs: bool) -> DataFrame:
-        """(doc_id, band_idx, band_val[, s0..s7]) exploded from a frame
+    def band_rows(frame: DataFrame) -> DataFrame:
+        """(doc_id, band_idx, band_val, s0..s7) exploded from a frame
         carrying doc_id + signature columns.  inline(array(named_struct))
         in ONE selectExpr (r16): row-identical to the former
         explode(array(struct)) + field select, one py4j call per
@@ -1598,322 +1824,123 @@ def incremental_neardup_sink(
             f"'band_val', concat(s{2 * b}, s{2 * b + 1}))"
             for b in range(_N_BANDS)
         ) + "))"
-        extra = sig_cols if keep_sigs else []
-        return frame.selectExpr("doc_id", inline_expr, *extra)
+        return frame.selectExpr("doc_id", inline_expr, *sig_cols)
 
-    hash_bucket = F.pmod(
-        F.xxhash64(md5_str(F.col("text"))), F.lit(n_buckets)
-    ).cast("int")
-    # band-index bucket count: adopt the committed layout, else derive
-    # from the first batch's shape (see the embedding sink's docstring)
-    resolved = {"bands": index_buckets}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        lease.heartbeat()
-        ckpt = checkpoint_dir is not None
-        committed_docs = _committed_version(docs_dir)
-        seq_docs = _alloc_seq(committed_docs, batch_id, ckpt)
-        committed_bands = _committed_version(bands_dir)
-        seq_bands = _alloc_seq(committed_bands, batch_id, ckpt)
-        pinned = []
-        # ONE md5+xxhash pass over the raw batch serves both legs' hash
-        # pruning (the docs anti-join and the band-leg read-back) AND
-        # yields the batch row count from the same job — the count
-        # bounds every downstream backfill guard (r12 floor cut)
-        hash_touched, n_batch = _touched_list(
-            batch_df, hash_bucket, with_count=True
+    def screen(firsts: DataFrame, probe, pinned: list) -> DataFrame:
+        # ONE tokenize pass over the exact-novel docs; the persist
+        # barriers stop Catalyst's projection collapse from re-inlining
+        # the shingle chain into each of the 8 signature lambdas (no CSE
+        # across HOF lambdas — the _minhash_sigs discipline)
+        toks = firsts.select(
+            "doc_id", tokens(F.col("text")).alias("toks")
+        ).persist()
+        sh = toks.select(
+            "doc_id",
+            F.array_distinct(shingles3(F.col("toks"))).alias("sh"),
+        ).persist()
+        pinned += [toks, sh]
+        if ev_pairs is not None:
+            # decontamination: delta shingles vs the broadcast eval
+            # index, >= min_shared_shingles per (doc, eval) pair
+            # rejects.  Filtering sh BEFORE signatures keeps
+            # contaminated docs out of survivors AND the band index
+            # (postings derive from committed docs).
+            contaminated = (
+                sh.select("doc_id", F.explode("sh").alias("s"))
+                .join(F.broadcast(ev_pairs), "s")
+                .groupBy("doc_id", "eval_id")
+                .agg(F.count(F.lit(1)).alias("_n"))
+                .filter(F.col("_n") >= min_shared_shingles)
+                .select("doc_id")
+                .distinct()
+            )
+            sh = sh.join(
+                F.broadcast(contaminated), "doc_id", "left_anti"
+            ).persist()
+            pinned.append(sh)
+        sigs = sh.selectExpr(
+            "doc_id",
+            *[f"{minhash_sig_expr('sh', i)} AS s{i}" for i in range(_N_SIGS)],
+        ).persist()
+        pinned.append(sigs)
+        # the delta's band rows carry their own 8-int signature vector
+        # (r16, the batch twins' carried-sigs shape), so BOTH verify
+        # legs below compute the agreement on the collision row itself
+        # — no sigs-table join-back and no pair-level distinct per leg
+        # (drops.distinct() at the survivors anti-join dedupes; a pair
+        # passing in any collision row passes in all, same signatures)
+        dbands = band_rows(sigs).persist()
+        pinned.append(dbands)
+        n_agree = sum(
+            F.when(F.col(f"s{i}") == F.col(f"yb{i}"), 1).otherwise(0)
+            for i in range(_N_SIGS)
         )
-        if resolved["bands"] is None:
-            adopted = _adopted_index_buckets(bands_dir)
-            if adopted is not None:
-                resolved["bands"] = adopted
-            else:
-                resolved["bands"] = derive_index_buckets(
-                    _N_BANDS * n_batch, bands=_N_BANDS, delta_rows=n_batch
-                )
-        bands_buckets = resolved["bands"]
-        band_probe_bucket = F.pmod(
-            F.xxhash64(F.col("band_idx"), F.col("band_val")),
-            F.lit(bands_buckets),
-        ).cast("int")
-        try:
-            survivors = None
-            redelivered_hashes = None
-            bands_touched = None
-            postings_from_survivors_only = False
-            if seq_docs is not None:
-                # persist the gate BEFORE the anti-join: the helper's
-                # broadcast-size probe counts the delta's keys — an
-                # eager action — and unpersisted that count executed
-                # the full quality-gate + scan plan one extra time per
-                # micro-batch (ADVICE r10), the exact double-execution
-                # the persist exists to prevent
-                firsts = _gated_firsts(batch_df).persist()
-                pinned.append(firsts)
-                docs_view = _prepare_view(
-                    spark, docs_dir, committed_docs, n_buckets, doc_keys
-                )
-                if docs_view is not None:
-                    seen = _filter_buckets(docs_view, hash_touched).select(
-                        "content_hash"
-                    )
-                    # the anti-join output feeds BOTH the signature
-                    # chain and the merge — persisted too (delta-sized).
-                    # return_matched: the matched hashes ARE the batch's
-                    # re-delivered docs; the band-index healing leg below
-                    # fetches their wide committed rows only when the
-                    # set is non-empty (see the embedding sink)
-                    firsts, redelivered_hashes = _anti_join_small_left(
-                        firsts, seen, ["content_hash"], return_matched=True,
-                        small_rows_max=n_batch,
-                    )
-                    firsts = firsts.persist()
-                    pinned.append(firsts)
-                    if redelivered_hashes is not None:
-                        pinned.append(redelivered_hashes)
-                # ONE tokenize pass over the exact-novel docs; the persist
-                # barriers stop Catalyst's projection collapse from
-                # re-inlining the shingle chain into each of the 8
-                # signature lambdas (no CSE across HOF lambdas — the
-                # _minhash_sigs discipline)
-                toks = firsts.select(
-                    "doc_id", tokens(F.col("text")).alias("toks")
-                ).persist()
-                sh = toks.select(
-                    "doc_id",
-                    F.array_distinct(shingles3(F.col("toks"))).alias("sh"),
-                ).persist()
-                if ev_pairs is not None:
-                    # decontamination: delta shingles vs the broadcast
-                    # eval index, >= min_shared_shingles per (doc, eval)
-                    # pair rejects.  Filtering sh BEFORE signatures keeps
-                    # contaminated docs out of survivors AND the band
-                    # index (postings derive from committed docs).
-                    contaminated = (
-                        sh.select("doc_id", F.explode("sh").alias("s"))
-                        .join(F.broadcast(ev_pairs), "s")
-                        .groupBy("doc_id", "eval_id")
-                        .agg(F.count(F.lit(1)).alias("_n"))
-                        .filter(F.col("_n") >= min_shared_shingles)
-                        .select("doc_id")
-                        .distinct()
-                    )
-                    sh = sh.join(
-                        F.broadcast(contaminated), "doc_id", "left_anti"
-                    ).persist()
-                    pinned.append(sh)
-                sigs = sh.selectExpr(
-                    "doc_id",
-                    *[
-                        f"{minhash_sig_expr('sh', i)} AS s{i}"
-                        for i in range(_N_SIGS)
-                    ],
-                ).persist()
-                pinned += [toks, sh, sigs]
-                # keep_sigs=True (r16, session 2 — the batch twins'
-                # carried-sigs shape): the delta's band rows carry their
-                # own 8-int signature vector, so BOTH verify legs below
-                # compute the agreement on the collision row itself —
-                # no sigs-table join-back (xa) and no pair-level
-                # distinct per leg (drops.distinct() at the survivors
-                # anti-join dedupes; a pair passing in any collision row
-                # passes in all, same signatures).  Three exchanges
-                # fewer per micro-batch; the persist widens by 8 ints
-                # per delta band row.
-                dbands = band_rows(sigs, keep_sigs=True).persist()
-                pinned.append(dbands)
-                n_agree = sum(
-                    F.when(F.col(f"s{i}") == F.col(f"yb{i}"), 1).otherwise(0)
-                    for i in range(_N_SIGS)
-                )
-                drops = None
-                # cross-batch: probe the committed band index, verify by
-                # signature agreement against the posting's denormalized
-                # signatures — no join back to the corpus
-                idx = _prepare_view(
-                    spark, bands_dir, committed_bands,
-                    bands_buckets, band_keys, band_buckets,
-                )
-                if idx is not None:
-                    # the delta's band-bucket set, computed ONCE — prunes
-                    # the probe and (when the posting source is survivors
-                    # alone) is handed to the bands merge so it skips its
-                    # own probe job
-                    bands_touched = _touched_list(dbands, band_probe_bucket)
-                    # NOTE: deliberately NOT persisted — the saturation
-                    # count reads only (band_idx, band_val) and the
-                    # candidate join its own columns, both partition- AND
-                    # column-pruned scans; a persist would materialize
-                    # the slice full-width (every sig column of every
-                    # touched bucket), far more I/O than two narrow scans
-                    idx = _filter_buckets(idx, bands_touched)
-                    # saturated-band skip (see docstring): group sizes are
-                    # computed over the PRUNED slice only — delta-bounded
-                    ok_bands = (
-                        idx.groupBy("band_idx", "band_val")
-                        .agg(F.count(F.lit(1)).alias("_n"))
-                        .filter(F.col("_n") <= max_band_pop)
-                        .select("band_idx", "band_val")
-                    )
-                    idx = idx.join(ok_bands, ["band_idx", "band_val"])
-                    drops = (
-                        dbands.join(
-                            idx.select(
-                                "band_idx",
-                                "band_val",
-                                *[
-                                    F.col(f"s{i}").alias(f"yb{i}")
-                                    for i in range(_N_SIGS)
-                                ],
-                            ),
-                            ["band_idx", "band_val"],
-                        )
-                        .filter(n_agree >= min_agree)
-                        .select("doc_id")
-                    )
-                # in-batch pairwise (cluster-min, see docstring).  The
-                # same saturation cap applies to the BATCH side: one
-                # skewed mega-batch (a clone-heavy backlog delivered as
-                # a single availableNow batch) would otherwise go
-                # quadratic in its hottest band with no bound
-                db_ok = (
-                    dbands.groupBy("band_idx", "band_val")
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .filter(F.col("_n") <= max_band_pop)
-                    .select("band_idx", "band_val")
-                )
-                dpairs_src = dbands.join(db_ok, ["band_idx", "band_val"])
-                in_agree = sum(
-                    F.when(F.col(f"a.s{i}") == F.col(f"b.s{i}"), 1).otherwise(0)
-                    for i in range(_N_SIGS)
-                )
-                in_drops = (
-                    dpairs_src.alias("a")
-                    .join(
-                        dpairs_src.alias("b"),
-                        (F.col("a.band_idx") == F.col("b.band_idx"))
-                        & (F.col("a.band_val") == F.col("b.band_val"))
-                        & (F.col("a.doc_id") < F.col("b.doc_id")),
-                    )
-                    .filter(in_agree >= min_agree)
-                    .select(F.col("b.doc_id").alias("doc_id"))
-                )
-                drops = in_drops if drops is None else drops.unionByName(in_drops)
-                # persisted: BOTH legs' write phases build on survivors
-                survivors = (
-                    firsts.join(drops.distinct(), "doc_id", "left_anti")
-                    .join(sigs, "doc_id")
-                    .persist()
-                )
-                pinned.append(survivors)
-            # FUSED commit — posting source = survivors ∪ (committed
-            # docs ∩ batch hashes): identical coverage to the old
-            # post-commit read-back (new docs version = committed ∪
-            # survivors), but pre-commit-only inputs let the two write
-            # phases overlap; the re-delivered term heals a crash
-            # between the pointer swaps (see docstring)
-            jobs = []
-            if seq_docs is not None and survivors is not None:
-                jobs.append((
-                    "docs",
-                    lambda: _merge_batch(
-                        spark, survivors, docs_dir,
-                        key_cols=doc_keys, order_col="doc_id",
-                        n_buckets=n_buckets, bucket_cols=None,
-                        seq=seq_docs, committed=committed_docs,
-                        lease=lease, insert_only=True, defer_commit=True,
-                        # survivors were anti-joined against THIS
-                        # committed version by the gate above; their
-                        # hash buckets ⊆ the raw batch's, probed once
-                        assume_novel=True,
-                        touched=set(hash_touched),
+        drops = None
+        # cross-batch: probe the committed band index, verify by
+        # signature agreement against the posting's denormalized
+        # signatures — no join back to the corpus
+        idx = probe(dbands)
+        if idx is not None:
+            idx = _drop_saturated(idx, band_cols, max_band_pop)
+            drops = (
+                dbands.join(
+                    idx.select(
+                        *band_cols,
+                        *[F.col(f"s{i}").alias(f"yb{i}") for i in range(_N_SIGS)],
                     ),
-                ))
-            post_src = (
-                survivors.select("doc_id", *sig_cols)
-                if survivors is not None
-                else None
+                    band_cols,
+                )
+                .filter(n_agree >= min_agree)
+                .select("doc_id")
             )
-            docs_committed_view = _prepare_view(
-                spark, docs_dir, committed_docs, n_buckets, doc_keys
+        # in-batch pairwise (cluster-min, see docstring)
+        dpairs_src = _drop_saturated(dbands, band_cols, max_band_pop)
+        in_agree = sum(
+            F.when(F.col(f"a.s{i}") == F.col(f"b.s{i}"), 1).otherwise(0)
+            for i in range(_N_SIGS)
+        )
+        in_drops = (
+            dpairs_src.alias("a")
+            .join(
+                dpairs_src.alias("b"),
+                (F.col("a.band_idx") == F.col("b.band_idx"))
+                & (F.col("a.band_val") == F.col("b.band_val"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
             )
-            if docs_committed_view is None:
-                postings_from_survivors_only = survivors is not None
-            elif survivors is not None and redelivered_hashes is not None:
-                # common case: fetch the wide committed rows only
-                # when the gate actually saw re-delivered hashes
-                if redelivered_hashes.isEmpty():
-                    postings_from_survivors_only = True
-                else:
-                    post_src = post_src.unionByName(
-                        _filter_buckets(docs_committed_view, hash_touched)
-                        .join(F.broadcast(redelivered_hashes), "content_hash")
-                        .select("doc_id", *sig_cols)
-                    )
-            else:
-                # replay heal or giant-backfill fallback: the
-                # unconditional pruned join-back on the batch hashes
-                batch_hashes = batch_df.select(
-                    md5_str(F.col("text")).alias("content_hash")
-                ).distinct()
-                redelivered = (
-                    _filter_buckets(docs_committed_view, hash_touched)
-                    .join(batch_hashes, "content_hash")
-                    .select("doc_id", *sig_cols)
-                )
-                post_src = (
-                    redelivered
-                    if post_src is None
-                    else post_src.unionByName(redelivered)
-                )
-            if seq_bands is not None and post_src is not None:
-                postings = band_rows(post_src, keep_sigs=True)
-                # precomputed band buckets pass through ONLY when the
-                # posting source is survivors alone (⊆ dbands — see the
-                # embedding sink: the insert-only anti-join's seen-scan
-                # must cover every incoming bucket)
-                bands_merge_touched = (
-                    set(bands_touched)
-                    if postings_from_survivors_only
-                    and bands_touched is not None
-                    else None
-                )
-                jobs.append((
-                    "bands",
-                    lambda: _merge_batch(
-                        spark, postings, bands_dir,
-                        key_cols=band_keys, order_col="doc_id",
-                        n_buckets=bands_buckets, bucket_cols=band_buckets,
-                        seq=seq_bands, committed=committed_bands,
-                        lease=lease, insert_only=True, defer_commit=True,
-                        touched=bands_merge_touched,
-                        # post_src ≤ survivors ∪ re-delivered ≤ 2·batch
-                        # rows, _N_BANDS postings each — a sound bound
-                        # that skips the merge's backfill-guard count
-                        incoming_rows_max=2 * _N_BANDS * n_batch,
-                    ),
-                ))
-            commits, errors = _parallel_writes(jobs, parallel=par_writes)
-            # commit docs before bands; a failed leg raises before any
-            # later leg commits, so the index never leads the corpus
-            for commit_fn, err in zip(commits, errors):
-                if err is not None:
-                    raise err
-                if commit_fn is not None:
-                    commit_fn()
-        finally:
-            for f in pinned:
-                f.unpersist()
+            .filter(in_agree >= min_agree)
+            .select(F.col("b.doc_id").alias("doc_id"))
+        )
+        drops = in_drops if drops is None else drops.unionByName(in_drops)
+        return firsts.join(drops.distinct(), "doc_id", "left_anti").join(
+            sigs, "doc_id"
+        )
 
     try:
-        return _run_foreach_batch(
-            stream_df, merge, checkpoint_dir, timeout_sec,
-            f"neardup ({base_dir})",
+        return _corpus_index_sink(
+            stream_df,
+            base_dir,
+            what="neardup",
+            geometry={"n_sigs": _N_SIGS, "n_bands": _N_BANDS},
+            corpus="docs",
+            key_col="content_hash",
+            batch_key=md5_str(F.col("text")),
+            id_col="doc_id",
+            post_cols=["doc_id", *sig_cols],
+            index="bands",
+            cell_cols=band_cols,
+            cells_per_row=_N_BANDS,
+            gate=_gated_firsts,
+            screen=screen,
+            postings=band_rows,
+            n_buckets=n_buckets,
+            index_buckets=index_buckets,
+            checkpoint_dir=checkpoint_dir,
+            timeout_sec=timeout_sec,
+            lease_ttl_sec=lease_ttl_sec,
         )
     finally:
         if ev_pairs is not None:
             ev_pairs.unpersist()
-        lease.release()
 
 
 def incremental_embedding_dedup_sink(
@@ -1932,14 +1959,15 @@ def incremental_embedding_dedup_sink(
     """SemDeDup at INGEST: the embedding-modality twin of
     :func:`incremental_neardup_sink` — full-corpus embedding dedup
     (``dedup_embedding_cosine``) is a batch job you cannot re-run per
-    delta, so the gate maintains its own index incrementally.  Two
-    bucketed versioned snapshots under ``base_dir``:
+    delta, so the gate maintains its own index incrementally.  It runs
+    on :func:`_corpus_index_sink` (lease, geometry record,
+    adopt-else-derive ``index_buckets``, fused commit and crash heal)
+    with two snapshots under ``base_dir``:
 
     * ``vecs/`` — the retained vectors, keyed on ``vec_id``;
     * ``cells/`` — the hyperplane-LSH CELL INDEX: one posting per
       (band, cell, vec_id) with the owner's embedding denormalized in,
-      bucketed on ``(band, cell)`` via ``bucket_cols`` so a delta's
-      cell lookups prune to the buckets its cells hash into.
+      bucketed on ``(band, cell)``.
 
     Per micro-batch: (1) direction gate — NULL/empty/zero-norm vectors
     have no cosine and are rejected (the batch ops' ``nz`` filter), one
@@ -1955,11 +1983,7 @@ def incremental_embedding_dedup_sink(
     partner drops, whether or not that partner itself survives — see
     :func:`incremental_neardup_sink` for the chain semantics in both
     scopes); (4) survivors merge into ``vecs/``, their postings
-    into ``cells/``.  Same greedy/online cross-batch semantics and
-    crash contract as the MinHash sink; see it for the FUSED commit
-    shape (parallel write phases, vecs pointer swaps first, posting
-    source = survivors ∪ re-delivered committed rows so a crash
-    between the two swaps heals on replay).
+    into ``cells/``.
 
     Batch twin: ``dedup_embedding_incremental`` (registered, DuckDB
     oracle) pins the candidate+verify semantics on a deterministic
@@ -1977,62 +2001,22 @@ def incremental_embedding_dedup_sink(
     ``bits`` to the expected corpus as ``derive_lsh_bits`` does for the
     batch ops.)
 
-    ``bands``/``bits`` are INDEX-LIFETIME parameters, like any ANN
-    index's geometry: every posting's cell value is a function of them,
-    so a sink re-attached with different values would probe a foreign
-    geometry — cells that no current vector can produce — and silently
-    stop detecting duplicates.  The first commit records them in
-    ``{base_dir}/_GEOMETRY.json``; later runs raise on mismatch instead
-    of degrading.  (``min_cosine`` is gate-only and bucket counts
-    migrate via the layout record — both safe to vary.)
-
-    ``index_buckets`` — the cell index's bucket count — defaults to
-    DERIVED (r10 verdict #4): an existing committed index's recorded
-    layout is ADOPTED verbatim (no migration on re-attach), else the
-    first batch sizes it via :func:`derive_index_buckets`
-    (``max(postings/50k, 4·bands·delta)`` rounded to a power of two) —
-    the ``B ≥ bands × delta`` rule that keeps the delta's touched set a
-    small fraction of the index instead of all of it.  Bucket counts
-    are NOT in ``_GEOMETRY.json``: unlike bands/bits they are not a
-    function of the DATA (a mismatch migrates the layout wholesale,
-    correctly, via the per-version ``_LAYOUT.json`` record — the same
-    mechanism ``n_buckets`` has always used), so the committed layout
-    record IS their geometry record.  An explicit value migrates the
-    index once; long-lived sinks whose corpus outgrows the derived
-    count re-attach with a larger explicit value.
+    ``bands``/``bits`` are the index's ``_GEOMETRY.json`` record, like
+    any ANN index's geometry: a sink re-attached with different values
+    would probe cells that no current vector can produce and silently
+    stop detecting duplicates.  (``min_cosine`` is gate-only and bucket
+    counts migrate via the layout record — both safe to vary.)
     """
-    import json
-    import os
+    import functools
 
     from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
     from arrow_experiments_spark.functions.numeric import snap6
     from arrow_experiments_spark.functions.vectors import dot, norm
     from arrow_experiments_spark.operators.similarity import lsh_cells_col
 
-    spark = stream_df.sparkSession
-    vecs_dir = os.path.join(base_dir, "vecs")
-    cells_dir = os.path.join(base_dir, "cells")
-    # write-phase overlap: defaults ON whenever size-based shuffle
-    # coalescing is active on this session (the two defaults are
-    # LINKED — see _resolve_parallel_writes); an explicit conf wins.
-    # Resolved once at attach.
-    par_writes = _resolve_parallel_writes(spark)
-    # one lease over base_dir covers both snapshots (see
-    # incremental_neardup_sink: interleaved vecs/cells commits are the
-    # hazard per-subdir leases would miss); size lease_ttl_sec above
-    # the slowest expected micro-batch
-    lease = WriterLease.acquire(base_dir, ttl_sec=lease_ttl_sec)
-    try:
-        _check_geometry(
-            base_dir, {"bands": bands, "bits": bits}, ["vecs", "cells"]
-        )
-    except Exception:
-        lease.release()
-        raise
-    vec_keys = ["vec_id"]
-    cell_keys = ["band", "cell", "vec_id"]
-    cell_buckets = ["band", "cell"]
+    cell_cols = ["band", "cell"]
 
     def cell_rows(frame: DataFrame, keep_emb: bool) -> DataFrame:
         """(vec_id, band, cell[, embedding]) exploded from vector rows.
@@ -2051,368 +2035,141 @@ def incremental_embedding_dedup_sink(
             ).alias("band", "cell"),
         ).select("vec_id", "band", "cell", *extra)
 
-    id_bucket = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_buckets)).cast(
-        "int"
-    )
-    # resolved lazily: adopt the committed index layout, else derive
-    # from the first batch's shape (see docstring)
-    resolved = {"cells": index_buckets}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql.window import Window
-
-        lease.heartbeat()
-        ckpt = checkpoint_dir is not None
-        committed_vecs = _committed_version(vecs_dir)
-        seq_vecs = _alloc_seq(committed_vecs, batch_id, ckpt)
-        committed_cells = _committed_version(cells_dir)
-        seq_cells = _alloc_seq(committed_cells, batch_id, ckpt)
-        pinned = []
-        if resolved["cells"] is None:
-            # layout adoption is a driver-side record read — it must
-            # precede the geometry-derivation check below so a restarted
-            # sink reuses the on-disk index layout instead of deriving a
-            # fresh one from its first batch
-            resolved["cells"] = _adopted_index_buckets(cells_dir)
-        # Two-pass probe: id probe on the raw batch here, cells probe
-        # from the gated delta below.  r12 recorded a FUSED one-job
-        # variant (id buckets + cell buckets + row count in one
-        # aggregate) as the next floor lever; it shipped behind a conf
-        # and measured a WASH in TWO paired A/Bs (r13: min 6.37 fused
-        # vs 6.30 two-pass over 12 marginal batches/arm; r14 re-run at
-        # equal evidence quality: min 6.41 fused vs 6.11 two-pass,
-        # 6/12 vs 10/12 clean) — the eliminated probe job's compute
-        # moved into the fused aggregate and the dcells
-        # materialization moved downstream, conserving work exactly as
-        # the r12 guard-count lesson predicts.  The fused path was
-        # DELETED (r14 verdict #4) rather than carried as a
-        # dead-unless-remeasured branch in the hottest sink; the A/B
-        # harness survives as tools/fused_probe_ab.py.
-        cells_touched = None
-        id_touched, n_batch = _touched_list(
-            batch_df, id_bucket, with_count=True
+    def gate(batch_df: DataFrame) -> DataFrame:
+        # deterministic one-row-per-vec_id: a duplicated id in one
+        # batch (upstream retry with re-embedding) must pick the SAME
+        # row on a replay re-merge, or the retained embedding silently
+        # changes — order by the embedding's own hash, not
+        # dropDuplicates' arbitrary first-seen partition order
+        w_id = Window.partitionBy("vec_id").orderBy(
+            F.xxhash64(F.col("embedding"))
         )
-        if resolved["cells"] is None:
-            # first-ever batch of a brand-new index: the cell geometry
-            # DERIVES from this batch's count
-            resolved["cells"] = derive_index_buckets(
-                bands * n_batch, bands=bands, delta_rows=n_batch
+        return (
+            batch_df.filter(
+                F.col("embedding").isNotNull() & (norm("embedding") > 0)
             )
-        cells_buckets = resolved["cells"]
-        cell_probe_bucket = F.pmod(
-            F.xxhash64(F.col("band"), F.col("cell")), F.lit(cells_buckets)
-        ).cast("int")
-        try:
-            survivors = None
-            redelivered_ids = None
-            postings_from_survivors_only = False
-            if seq_vecs is not None:
-                # deterministic one-row-per-vec_id: a duplicated id in one
-                # batch (upstream retry with re-embedding) must pick the
-                # SAME row on a replay re-merge, or the retained embedding
-                # silently changes — order by the embedding's own hash,
-                # not dropDuplicates' arbitrary first-seen partition order
-                w_id = Window.partitionBy("vec_id").orderBy(
-                    F.xxhash64(F.col("embedding"))
+            .withColumn("_rn", F.row_number().over(w_id))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
+    def screen(fresh: DataFrame, probe, pinned: list) -> DataFrame:
+        # Two-pass probe (the skeleton's id probe on the raw batch, the
+        # cells probe on the gated delta here): a one-job variant
+        # measured a wash in two paired A/Bs (r13, r14; SCALE.md).
+        # Cells materialized once behind a persist barrier — the
+        # hyperplane dot-products would otherwise re-inline per band
+        # reference (no CSE across HOF lambdas)
+        dcells = cell_rows(fresh, keep_emb=False).persist()
+        pinned.append(dcells)
+        drops = None
+        idx = probe(dcells)
+        if idx is not None:
+            idx = _drop_saturated(idx, cell_cols, max_cell_pop)
+            # candidate match NARROW-first: the (band, cell, vec_id)
+            # join scans 3 int columns of the pruned slice; the 64-float
+            # embedding column — an order of magnitude more bytes — is
+            # fetched ONLY for the matched postings (delta-bounded), and
+            # not at all when nothing collides
+            cand_keys = (
+                dcells.join(
+                    idx.select(*cell_cols, F.col("vec_id").alias("_idx_vec")),
+                    cell_cols,
                 )
-                # persisted BEFORE the anti-join: its broadcast-size
-                # probe is an eager count, and unpersisted it executed
-                # this gate+window plan one extra time per micro-batch
-                # (ADVICE r10 — see incremental_neardup_sink)
-                fresh = (
-                    batch_df.filter(
-                        F.col("embedding").isNotNull()
-                        & (norm("embedding") > 0)
-                    )
-                    .withColumn("_rn", F.row_number().over(w_id))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                    .persist()
+                .select("vec_id", "band", "cell", "_idx_vec")
+                .distinct()
+                .persist()
+            )
+            pinned.append(cand_keys)
+            # the eager isEmpty is load-bearing: it gates the WIDE verify
+            # scan (the embedding column of every touched index bucket)
+            # out of the no-collision batch entirely — measured r11:
+            # dropping it in favor of lazy AQE empty-propagation cost
+            # ~1-2 s per batch, so the one narrow probe pass stays
+            if not cand_keys.isEmpty():
+                matched = idx.join(
+                    F.broadcast(
+                        cand_keys.select(
+                            *cell_cols, F.col("_idx_vec").alias("vec_id")
+                        ).distinct()
+                    ),
+                    ["band", "cell", "vec_id"],
+                    "left_semi",
+                ).select(
+                    F.col("vec_id").alias("_idx_vec"),
+                    F.col("embedding").alias("_idx_emb"),
+                ).dropDuplicates(["_idx_vec"])
+                cos = snap6(
+                    dot("embedding", "_idx_emb")
+                    / (norm("embedding") * norm("_idx_emb"))
                 )
-                pinned.append(fresh)
-                vecs_view = _prepare_view(
-                    spark, vecs_dir, committed_vecs, n_buckets, vec_keys
-                )
-                if vecs_view is not None:
-                    seen = _filter_buckets(vecs_view, id_touched).select(
-                        "vec_id"
-                    )
-                    # return_matched: the matched set IS the batch's
-                    # re-delivered ids — the healing leg below fetches
-                    # wide rows only when it is non-empty, instead of
-                    # wide-scanning every touched bucket per batch
-                    fresh, redelivered_ids = _anti_join_small_left(
-                        fresh, seen, ["vec_id"], return_matched=True,
-                        small_rows_max=n_batch,
-                    )
-                    fresh = fresh.persist()
-                    pinned.append(fresh)
-                    if redelivered_ids is not None:
-                        pinned.append(redelivered_ids)
-                # cells materialized once behind a persist barrier — the
-                # hyperplane dot-products would otherwise re-inline per
-                # band reference (no CSE across HOF lambdas)
-                dcells = cell_rows(fresh, keep_emb=False).persist()
-                pinned.append(dcells)
-                drops = None
-                idx = _prepare_view(
-                    spark, cells_dir, committed_cells,
-                    cells_buckets, cell_keys, cell_buckets,
-                )
-                if idx is not None:
-                    # the delta's cell-bucket set, derived from dcells
-                    # (the gated delta) — the second pass of the
-                    # two-pass probe
-                    if cells_touched is None:
-                        cells_touched = _touched_list(
-                            dcells, cell_probe_bucket
-                        )
-                    # deliberately NOT persisted — see the band-index
-                    # note in incremental_neardup_sink: the count and
-                    # the join are narrow column-pruned scans; a persist
-                    # would materialize every embedding in the slice
-                    idx = _filter_buckets(idx, cells_touched)
-                    # saturated-cell skip (see docstring): delta-bounded,
-                    # computed over the pruned slice only
-                    ok_cells = (
-                        idx.groupBy("band", "cell")
-                        .agg(F.count(F.lit(1)).alias("_n"))
-                        .filter(F.col("_n") <= max_cell_pop)
-                        .select("band", "cell")
-                    )
-                    idx = idx.join(ok_cells, ["band", "cell"])
-                    # candidate match NARROW-first: the (band, cell,
-                    # vec_id) join scans 3 int columns of the pruned
-                    # slice; the 64-float embedding column — an order of
-                    # magnitude more bytes — is fetched ONLY for the
-                    # matched postings (delta-bounded), and not at all
-                    # when nothing collides
-                    cand_keys = (
-                        dcells.join(
-                            idx.select(
-                                "band",
-                                "cell",
-                                F.col("vec_id").alias("_idx_vec"),
-                            ),
-                            ["band", "cell"],
-                        )
-                        .select("vec_id", "band", "cell", "_idx_vec")
-                        .distinct()
-                        .persist()
-                    )
-                    pinned.append(cand_keys)
-                    # the eager isEmpty is load-bearing: it gates the
-                    # WIDE verify scan (the embedding column of every
-                    # touched index bucket) out of the no-collision
-                    # batch entirely — measured r11: dropping it in
-                    # favor of lazy AQE empty-propagation cost ~1-2 s
-                    # per batch, so the one narrow probe pass stays
-                    if cand_keys.isEmpty():
-                        drops = None
-                    else:
-                        matched = idx.join(
-                            F.broadcast(
-                                cand_keys.select(
-                                    "band",
-                                    "cell",
-                                    F.col("_idx_vec").alias("vec_id"),
-                                ).distinct()
-                            ),
-                            ["band", "cell", "vec_id"],
-                            "left_semi",
-                        ).select(
-                            F.col("vec_id").alias("_idx_vec"),
-                            F.col("embedding").alias("_idx_emb"),
-                        ).dropDuplicates(["_idx_vec"])
-                        cos = snap6(
-                            dot("embedding", "_idx_emb")
-                            / (
-                                norm("embedding")
-                                * norm("_idx_emb")
-                            )
-                        )
-                        drops = (
-                            cand_keys.select("vec_id", "_idx_vec")
-                            .distinct()
-                            .join(matched, "_idx_vec")
-                            .join(
-                                fresh.select("vec_id", "embedding"), "vec_id"
-                            )
-                            .filter(cos >= min_cosine)
-                            .select("vec_id")
-                        )
-                # in-batch pairwise (cluster-min, see docstring) with
-                # the saturation cap applied to the BATCH side too — a
-                # skewed mega-batch would otherwise go quadratic in its
-                # hottest cell with no bound
-                dc_ok = (
-                    dcells.groupBy("band", "cell")
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .filter(F.col("_n") <= max_cell_pop)
-                    .select("band", "cell")
-                )
-                dpairs_src = dcells.join(dc_ok, ["band", "cell"])
-                pairs = (
-                    dpairs_src.alias("a")
-                    .join(
-                        dpairs_src.alias("b"),
-                        (F.col("a.band") == F.col("b.band"))
-                        & (F.col("a.cell") == F.col("b.cell"))
-                        & (F.col("a.vec_id") < F.col("b.vec_id")),
-                    )
-                    .select(
-                        F.col("a.vec_id").alias("ida"),
-                        F.col("b.vec_id").alias("idb"),
-                    )
+                drops = (
+                    cand_keys.select("vec_id", "_idx_vec")
                     .distinct()
+                    .join(matched, "_idx_vec")
+                    .join(fresh.select("vec_id", "embedding"), "vec_id")
+                    .filter(cos >= min_cosine)
+                    .select("vec_id")
                 )
-                cos_ab = snap6(
-                    dot("_ea", "_eb")
-                    / (norm("_ea") * norm("_eb"))
-                )
-                in_drops = (
-                    pairs.join(
-                        fresh.select(
-                            F.col("vec_id").alias("ida"),
-                            F.col("embedding").alias("_ea"),
-                        ),
-                        "ida",
-                    )
-                    .join(
-                        fresh.select(
-                            F.col("vec_id").alias("idb"),
-                            F.col("embedding").alias("_eb"),
-                        ),
-                        "idb",
-                    )
-                    .filter(cos_ab >= min_cosine)
-                    .select(F.col("idb").alias("vec_id"))
-                )
-                drops = in_drops if drops is None else drops.unionByName(in_drops)
-                # persisted: BOTH legs' write phases build on survivors
-                survivors = fresh.join(
-                    drops.distinct(), "vec_id", "left_anti"
-                ).persist()
-                pinned.append(survivors)
-            # FUSED commit (r10 verdict #2): posting source = survivors
-            # ∪ (committed vecs ∩ batch ids, bucket-pruned).  Since the
-            # new vecs version is exactly (committed ∪ survivors), this
-            # is bit-identical coverage to the old read-back of the
-            # POST-commit snapshot — but it depends only on PRE-commit
-            # frames, so both legs WRITE before either pointer swaps
-            # (threaded by default; snapshot.parallelWrites=false
-            # serializes — see _parallel_writes) in contract order (vecs
-            # first).  The re-delivered term is what heals a crash
-            # between the two swaps: the replay's batch ids match
-            # committed-but-unindexed vecs, whose postings the insert-
-            # only anti-join then re-derives (and drops when already
-            # indexed).
-            jobs = []
-            if seq_vecs is not None and survivors is not None:
-                jobs.append((
-                    "vecs",
-                    lambda: _merge_batch(
-                        spark, survivors, vecs_dir,
-                        key_cols=vec_keys, order_col="vec_id",
-                        n_buckets=n_buckets, bucket_cols=None,
-                        seq=seq_vecs, committed=committed_vecs,
-                        lease=lease, insert_only=True, defer_commit=True,
-                        # survivors were anti-joined against THIS
-                        # committed version by the gate above; their
-                        # buckets ⊆ the raw batch's id buckets (same
-                        # hash, same count), already probed once
-                        assume_novel=True,
-                        touched=set(id_touched),
-                    ),
-                ))
-            post_src = (
-                survivors.select("vec_id", "embedding")
-                if survivors is not None
-                else None
+        # in-batch pairwise (cluster-min, see docstring), saturation cap
+        # on the batch side too
+        dpairs_src = _drop_saturated(dcells, cell_cols, max_cell_pop)
+        pairs = (
+            dpairs_src.alias("a")
+            .join(
+                dpairs_src.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.cell") == F.col("b.cell"))
+                & (F.col("a.vec_id") < F.col("b.vec_id")),
             )
-            vecs_committed_view = _prepare_view(
-                spark, vecs_dir, committed_vecs, n_buckets, vec_keys
+            .select(
+                F.col("a.vec_id").alias("ida"),
+                F.col("b.vec_id").alias("idb"),
             )
-            if vecs_committed_view is None:
-                postings_from_survivors_only = survivors is not None
-            elif survivors is not None and redelivered_ids is not None:
-                # common case: the gate's anti-join already named the
-                # re-delivered ids (usually none) — fetch the WIDE
-                # committed rows only when the set is non-empty,
-                # instead of scanning the embedding column of every
-                # touched bucket per batch (the r11 profile's
-                # dominant write-leg term)
-                if redelivered_ids.isEmpty():
-                    postings_from_survivors_only = True
-                else:
-                    post_src = post_src.unionByName(
-                        _filter_buckets(vecs_committed_view, id_touched)
-                        .join(F.broadcast(redelivered_ids), "vec_id")
-                        .select("vec_id", "embedding")
-                    )
-            else:
-                # replay heal (survivors not computed) or the giant-
-                # backfill fallback (matched unavailable): the
-                # unconditional pruned join-back on the batch's ids
-                redelivered = (
-                    _filter_buckets(vecs_committed_view, id_touched)
-                    .join(batch_df.select("vec_id").distinct(), "vec_id")
-                    .select("vec_id", "embedding")
-                )
-                post_src = (
-                    redelivered
-                    if post_src is None
-                    else post_src.unionByName(redelivered)
-                )
-            if seq_cells is not None and post_src is not None:
-                postings = cell_rows(post_src, keep_emb=True)
-                # pass the delta's precomputed cell-bucket set ONLY when
-                # the posting source is survivors alone (⊆ dcells, so
-                # coverage is provable; re-delivered committed rows can
-                # carry cells from a DIFFERENT embedding of the same id,
-                # and the insert-only anti-join's seen-scan must cover
-                # every incoming bucket or a duplicate key slips in)
-                cells_merge_touched = (
-                    set(cells_touched)
-                    if postings_from_survivors_only
-                    and cells_touched is not None
-                    else None
-                )
-                jobs.append((
-                    "cells",
-                    lambda: _merge_batch(
-                        spark, postings, cells_dir,
-                        key_cols=cell_keys, order_col="vec_id",
-                        n_buckets=cells_buckets, bucket_cols=cell_buckets,
-                        seq=seq_cells, committed=committed_cells,
-                        lease=lease, insert_only=True, defer_commit=True,
-                        touched=cells_merge_touched,
-                        # post_src ≤ survivors ∪ re-delivered ≤ 2·batch
-                        # rows, bands cells each — a sound bound that
-                        # skips the merge's backfill-guard count job
-                        incoming_rows_max=2 * bands * n_batch,
-                    ),
-                ))
-            commits, errors = _parallel_writes(jobs, parallel=par_writes)
-            # commit in list order (vecs before cells); a leg that
-            # failed raises BEFORE later legs commit, so the index
-            # never runs ahead of the corpus
-            for commit_fn, err in zip(commits, errors):
-                if err is not None:
-                    raise err
-                if commit_fn is not None:
-                    commit_fn()
-        finally:
-            for f in pinned:
-                f.unpersist()
-
-    try:
-        return _run_foreach_batch(
-            stream_df, merge, checkpoint_dir, timeout_sec,
-            f"embedding-dedup ({base_dir})",
+            .distinct()
         )
-    finally:
-        lease.release()
+        cos_ab = snap6(dot("_ea", "_eb") / (norm("_ea") * norm("_eb")))
+        in_drops = (
+            pairs.join(
+                fresh.select(
+                    F.col("vec_id").alias("ida"), F.col("embedding").alias("_ea")
+                ),
+                "ida",
+            )
+            .join(
+                fresh.select(
+                    F.col("vec_id").alias("idb"), F.col("embedding").alias("_eb")
+                ),
+                "idb",
+            )
+            .filter(cos_ab >= min_cosine)
+            .select(F.col("idb").alias("vec_id"))
+        )
+        drops = in_drops if drops is None else drops.unionByName(in_drops)
+        return fresh.join(drops.distinct(), "vec_id", "left_anti")
+
+    return _corpus_index_sink(
+        stream_df,
+        base_dir,
+        what="embedding-dedup",
+        geometry={"bands": bands, "bits": bits},
+        corpus="vecs",
+        key_col="vec_id",
+        batch_key=F.col("vec_id"),
+        id_col="vec_id",
+        post_cols=["vec_id", "embedding"],
+        index="cells",
+        cell_cols=cell_cols,
+        cells_per_row=bands,
+        gate=gate,
+        screen=screen,
+        postings=functools.partial(cell_rows, keep_emb=True),
+        n_buckets=n_buckets,
+        index_buckets=index_buckets,
+        checkpoint_dir=checkpoint_dir,
+        timeout_sec=timeout_sec,
+        lease_ttl_sec=lease_ttl_sec,
+    )
 
 
 def incremental_ivf_index_sink(

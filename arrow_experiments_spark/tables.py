@@ -143,7 +143,7 @@ def _source_bytes(
     (``getContentSummary``, the same driver-side listing a scan's file
     index performs), so a 100 TB s3/gs corpus sizes correctly instead of
     reading as 0 through ``os.stat``.  Returns None when no filesystem
-    can see the path."""
+    can see the path; an empty local directory is sized, as 0."""
     if os.path.isfile(path):
         return os.stat(path).st_size
     if os.path.isdir(path):
@@ -151,7 +151,7 @@ def _source_bytes(
         for dirpath, _dirs, files in os.walk(path):
             for f in files:
                 total += os.stat(os.path.join(dirpath, f)).st_size
-        return total or None
+        return total
     try:
         jvm = spark._jvm
         hpath = jvm.org.apache.hadoop.fs.Path(path)

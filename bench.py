@@ -1759,10 +1759,11 @@ def main() -> None:
     # and everything diagnostic goes to BENCH_DETAIL.json next to bench.py.
     _certified, _best = drift_anchors()
     _cert_cpus, _best_cpus = anchor_cpus()
+    _default_cpus = os.cpu_count() or 1  # build_session's local[] default
     try:
-        _run_cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 32)
+        _run_cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _default_cpus)
     except ValueError:
-        _run_cpus = 32
+        _run_cpus = _default_cpus
     # ADVICE r15: the merge below would silently let a tail ratio shadow
     # a headline ratio if a key ever appeared in both sections — they are
     # disjoint by construction (tail = registry minus headline), so pin it

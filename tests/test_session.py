@@ -93,13 +93,11 @@ def test_tune_session_applies_env_extra_conf(spark, monkeypatch):
 
 
 def test_parallel_writes_default_follows_coalescing(spark):
-    """The parallelWrites default is LINKED to size-based coalescing
-    (r12 ADVICE): parallel overlap was only measured as a win when the
-    delta write legs coalesce to ~1-task jobs, so with coalescing
-    overridden off the resolver falls back to sequential — unless an
-    explicit conf says otherwise."""
+    """Write-phase overlap is LINKED to size-based coalescing (r12
+    ADVICE): parallel overlap was only measured as a win when the delta
+    write legs coalesce to ~1-task jobs, so with coalescing overridden
+    off the resolver falls back to sequential."""
     from arrow_experiments_spark.streaming.egress import (
-        _PARALLEL_WRITES_CONF,
         _resolve_parallel_writes,
     )
 
@@ -109,16 +107,8 @@ def test_parallel_writes_default_follows_coalescing(spark):
     try:
         spark.conf.set(pf, "true")  # coalescing back to parallelism-first
         assert _resolve_parallel_writes(spark) is False
-        spark.conf.set(_PARALLEL_WRITES_CONF, "true")  # explicit wins
-        assert _resolve_parallel_writes(spark) is True
     finally:
-        spark.conf.unset(_PARALLEL_WRITES_CONF)
         spark.conf.set(pf, "false")
-    spark.conf.set(_PARALLEL_WRITES_CONF, "false")
-    try:
-        assert _resolve_parallel_writes(spark) is False
-    finally:
-        spark.conf.unset(_PARALLEL_WRITES_CONF)
 
 
 def test_parallel_writes_unreadable_conf_falls_back_sequential():
@@ -132,15 +122,113 @@ def test_parallel_writes_unreadable_conf_falls_back_sequential():
     )
 
     class RaisingConf:
-        def get(self, key, default="sentinel-no-default"):
-            if default != "sentinel-no-default":
-                return default  # the explicit-conf lookup passes None
+        def get(self, key):
             raise Exception(f"unregistered conf: {key}")
 
     class FakeSpark:
         conf = RaisingConf()
 
     assert _resolve_parallel_writes(FakeSpark()) is False
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records what build_session
+    asks for instead of starting a JVM."""
+
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+        self.master_url = None
+
+    def appName(self, _name):
+        return self
+
+    def master(self, url):
+        self.master_url = url
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self
+
+
+@pytest.fixture
+def recording_builder(monkeypatch):
+    from arrow_experiments_spark import session
+
+    rec = _RecordingBuilder()
+
+    class FakeSparkSession:
+        builder = rec
+
+    monkeypatch.setattr(session, "SparkSession", FakeSparkSession)
+    for env in ("SPARK_GRAFT_EXTRA_CONF", "SPARK_GRAFT_CPUS",
+                "SPARK_GRAFT_DRIVER_MEM"):
+        monkeypatch.delenv(env, raising=False)
+    return rec
+
+
+# The runtime SQL confs both session entry points apply.
+_SHARED_CONF = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
+    "spark.sql.adaptive.coalescePartitions.minPartitionNum": "8",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "16384",
+}
+
+
+def test_session_entry_points_apply_pinned_conf_sets(recording_builder):
+    """build_session and tune_session apply exactly these confs.  The
+    driver owns the session tune_session receives, so tune_session must
+    leave its time zone, coalescing switch, skew-join switch and Arrow
+    batch size alone."""
+    from arrow_experiments_spark.session import build_session, tune_session
+
+    build_session(master="local[3]", shuffle_partitions=3, batch_rows=100)
+    assert recording_builder.master_url == "local[3]"
+    assert recording_builder.conf == {
+        **_SHARED_CONF,
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": "3",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "100",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": "8g",
+    }
+
+    class RecordingConf:
+        def __init__(self):
+            self.set_calls: dict[str, str] = {}
+
+        def set(self, key, value):
+            self.set_calls[key] = value
+
+    class FakeSpark:
+        conf = RecordingConf()
+
+    tune_session(FakeSpark())
+    assert FakeSpark.conf.set_calls == _SHARED_CONF
+
+
+def test_build_session_defaults_to_host_cores(recording_builder):
+    """Without SPARK_GRAFT_CPUS the session runs one task slot and one
+    shuffle partition per host core, not a fixed 32."""
+    import os
+
+    from arrow_experiments_spark.session import build_session
+
+    build_session()
+    cores = os.cpu_count()
+    assert recording_builder.master_url == f"local[{cores}]"
+    assert recording_builder.conf["spark.sql.shuffle.partitions"] == str(cores)
 
 
 def test_extra_conf_env_rejects_malformed(monkeypatch):

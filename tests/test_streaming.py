@@ -875,30 +875,36 @@ def test_incremental_neardup_sink_gates_exact_and_near(spark, tmp_path):
     )
 
 
-def test_incremental_neardup_sink_band_leg_heals_after_crash(spark, tmp_path):
-    """Crash contract: docs/ commits before bands/.  If the process dies
-    between the two merges, a checkpointed replay must skip the docs
-    merge (already committed) and still rebuild the batch's band
-    postings from the committed docs snapshot — the index catches up
-    instead of silently lagging forever."""
+def _heal_fixture(spark, tmp_path, kind):
+    """One staged batch of two rows that both survive either near-dup
+    sink.  Returns a checkpointed sink run over it, the base and
+    checkpoint dirs, the corpus and index subdirs, and the postings the
+    two survivors leave in the index (bands × survivors)."""
     import glob
     import os
     import shutil
 
-    from arrow_experiments_spark.streaming.egress import (
-        _gated_firsts,
-        incremental_neardup_sink,
-        read_snapshot,
-    )
+    import arrow_experiments_spark.streaming.egress as eg
 
-    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
-    texts = [
-        r["text"]
-        for r in _gated_firsts(docs).orderBy("doc_id").limit(2).collect()
-    ]
-    b1 = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
-    )
+    if kind == "neardup":
+        docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
+        texts = [
+            r["text"]
+            for r in eg._gated_firsts(docs).orderBy("doc_id").limit(2).collect()
+        ]
+        b1 = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
+        )
+        sink, corpus, index, bands = eg.incremental_neardup_sink, "docs", "bands", 4
+    else:
+        # orthogonal basis vectors: cosine 0, both retained
+        b1 = spark.createDataFrame(
+            [(i, [float(i == j) for j in range(64)]) for i in range(2)],
+            "vec_id bigint, embedding array<float>",
+        )
+        sink, corpus, index, bands = (
+            eg.incremental_embedding_dedup_sink, "vecs", "cells", 3
+        )
     staged = str(tmp_path / "staged")
     os.makedirs(staged)
     wdir = str(tmp_path / "w0")
@@ -907,30 +913,48 @@ def test_incremental_neardup_sink_band_leg_heals_after_crash(spark, tmp_path):
         glob.glob(os.path.join(wdir, "part-*.parquet"))[0],
         os.path.join(staged, "000.parquet"),
     )
-    base = str(tmp_path / "neardup")
+    base = str(tmp_path / kind)
     ckpt = str(tmp_path / "ckpt")
-    incremental_neardup_sink(
-        spark.readStream.schema(b1.schema).parquet(staged),
-        base,
-        checkpoint_dir=ckpt,
-        n_buckets=8,
+
+    def run():
+        sink(
+            spark.readStream.schema(b1.schema).parquet(staged),
+            base,
+            checkpoint_dir=ckpt,
+            n_buckets=8,
+        )
+
+    return run, base, ckpt, corpus, index, bands * 2
+
+
+@pytest.mark.parametrize("kind", ["neardup", "embedding"])
+def test_dedup_sink_index_leg_heals_after_crash(spark, tmp_path, kind):
+    """Crash contract: the corpus (docs/, vecs/) commits before the
+    index (bands/, cells/).  If the process dies between the two
+    merges, a checkpointed replay must skip the corpus merge (already
+    committed) and still rebuild the batch's postings from the
+    committed corpus — the index catches up instead of silently lagging
+    forever."""
+    import os
+    import shutil
+
+    from arrow_experiments_spark.streaming.egress import read_snapshot
+
+    run, base, ckpt, corpus, index, postings = _heal_fixture(
+        spark, tmp_path, kind
     )
-    # simulate the crash window: docs/ committed, bands/ lost, and the
+    run()
+    # simulate the crash window: corpus committed, index lost, and the
     # engine lost the commit marker so the batch replays
-    shutil.rmtree(os.path.join(base, "bands"))
+    shutil.rmtree(os.path.join(base, index))
     os.remove(os.path.join(ckpt, "commits", "0"))
     crc = os.path.join(ckpt, "commits", ".0.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    incremental_neardup_sink(
-        spark.readStream.schema(b1.schema).parquet(staged),
-        base,
-        checkpoint_dir=ckpt,
-        n_buckets=8,
-    )
-    assert read_snapshot(spark, os.path.join(base, "docs")).count() == 2
-    index = read_snapshot(spark, os.path.join(base, "bands"))
-    assert index.count() == 8  # 4 postings x 2 docs, rebuilt
+    run()
+    assert read_snapshot(spark, os.path.join(base, corpus)).count() == 2
+    index_rows = read_snapshot(spark, os.path.join(base, index))
+    assert index_rows.count() == postings  # rebuilt
 
 
 def test_incremental_embedding_dedup_sink_gates_by_cosine(spark, tmp_path):
@@ -2194,71 +2218,45 @@ def test_incremental_neardup_sink_composed_with_decontamination(spark, tmp_path)
     ) == got_ids  # contaminated doc 13 indexed NOTHING
 
 
-def test_fused_commit_index_leg_failure_heals_on_replay(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["neardup", "embedding"])
+def test_fused_commit_index_leg_failure_heals_on_replay(spark, tmp_path, kind):
     """r11 fused-commit failure contract: when the INDEX leg's write
     phase fails, the corpus leg (listed first) still commits — the
     index lags by one batch, exactly like a crash between the old
     sequential merges — the sink call raises, and a checkpointed
-    replay rebuilds the batch's postings from the committed docs (the
+    replay rebuilds the batch's postings from the committed corpus (the
     heal path).  The index must never lead the corpus."""
-    import glob
     import os
-    import shutil
 
     import arrow_experiments_spark.streaming.egress as eg
     from arrow_experiments_spark.streaming.egress import read_snapshot
 
-    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
-    texts = [
-        r["text"]
-        for r in eg._gated_firsts(docs).orderBy("doc_id").limit(2).collect()
-    ]
-    b1 = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
+    run, base, _ckpt, corpus, index, postings = _heal_fixture(
+        spark, tmp_path, kind
     )
-    staged = str(tmp_path / "staged")
-    os.makedirs(staged)
-    wdir = str(tmp_path / "w0")
-    b1.coalesce(1).write.parquet(wdir)
-    shutil.copy(
-        glob.glob(os.path.join(wdir, "part-*.parquet"))[0],
-        os.path.join(staged, "000.parquet"),
-    )
-    base = str(tmp_path / "neardup")
-    ckpt = str(tmp_path / "ckpt")
-
     orig = eg._merge_batch
 
     def failing_merge(spark_, df, sdir, **kw):
-        if os.path.basename(sdir) == "bands":
-            raise RuntimeError("injected bands write failure")
+        if os.path.basename(sdir) == index:
+            raise RuntimeError(f"injected {index} write failure")
         return orig(spark_, df, sdir, **kw)
 
     eg._merge_batch = failing_merge
     try:
-        with pytest.raises(Exception, match="injected bands write failure"):
-            eg.incremental_neardup_sink(
-                spark.readStream.schema(b1.schema).parquet(staged),
-                base,
-                checkpoint_dir=ckpt,
-                n_buckets=8,
-            )
+        with pytest.raises(Exception, match=f"injected {index} write failure"):
+            run()
     finally:
         eg._merge_batch = orig
     # corpus committed, index did not — never index-ahead-of-corpus
-    assert read_snapshot(spark, os.path.join(base, "docs")).count() == 2
-    assert eg._committed_version(os.path.join(base, "bands")) is None
+    assert read_snapshot(spark, os.path.join(base, corpus)).count() == 2
+    assert eg._committed_version(os.path.join(base, index)) is None
 
-    # replay (the failed batch was never checkpoint-committed): docs
-    # skip as already committed, the heal path re-derives the postings
-    eg.incremental_neardup_sink(
-        spark.readStream.schema(b1.schema).parquet(staged),
-        base,
-        checkpoint_dir=ckpt,
-        n_buckets=8,
-    )
-    assert read_snapshot(spark, os.path.join(base, "docs")).count() == 2
-    assert read_snapshot(spark, os.path.join(base, "bands")).count() == 8
+    # replay (the failed batch was never checkpoint-committed): the
+    # corpus skips as already committed, the heal path re-derives the
+    # postings
+    run()
+    assert read_snapshot(spark, os.path.join(base, corpus)).count() == 2
+    assert read_snapshot(spark, os.path.join(base, index)).count() == postings
 
 
 def test_merge_batch_precomputed_touched_superset(spark, tmp_path):

@@ -156,6 +156,22 @@ def test_widen_if_narrow_is_size_adaptive(spark, monkeypatch):
     )
 
 
+def test_widen_if_narrow_sizes_empty_dir_as_zero(spark, tmp_path):
+    """An existing local directory with no bytes in it is SIZED (0), not
+    unsizable (None): it is the smallest source there is, so it widens.
+    None stays reserved for paths no filesystem can size, which fail
+    closed."""
+    from arrow_experiments_spark import tables
+
+    (tmp_path / "documents.parquet").mkdir()
+    (tmp_path / "documents.parquet" / "_SUCCESS").touch()
+    path = str(tmp_path / "documents.parquet")
+    assert tables._source_bytes(spark, path) == 0
+    docs = tables.table(spark, SF_DIR, "documents")
+    out = tables.widen_if_narrow(docs, spark, str(tmp_path), "documents")
+    assert "Repartition" in out._jdf.queryExecution().logical().toString()
+
+
 def test_events_ts_predicate_pushes_down_on_us_layout(spark):
     """r16 verdict #6: the ns→µs `timestampadd` rebuild would block
     parquet predicate pushdown on ts — but _normalize_events_ts is
