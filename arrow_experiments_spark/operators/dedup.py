@@ -28,6 +28,7 @@ from arrow_experiments_spark.functions.text import (
 from arrow_experiments_spark.functions.vectors import cosine_sql, dot, norm_sql
 from arrow_experiments_spark.functions.vectors import norm as vnorm
 from arrow_experiments_spark.registry import register
+from arrow_experiments_spark.session import missing_jvm_methods, probe_once
 from arrow_experiments_spark.tables import table, widen_if_narrow
 
 _N_SIGS = 8  # MinHash signatures
@@ -224,6 +225,11 @@ def curate_corpus(
             except Exception:
                 still_cached = False
         if still_cached:
+            if prev_toks is not None and not defer_materialize:
+                # a deferred caller raised before release_curate_tokens:
+                # restore the eager contract (materialized corpus, token
+                # stage released) before handing the frame out
+                release_curate_tokens(spark, sf_dir)
             return prev_frame
         # Source changed (or unstatable): release the stale frame BEFORE
         # persisting the new one — the two plans are equal, so
@@ -281,26 +287,47 @@ def curate_corpus(
     return corpus
 
 
+# the JVM accessor chain _is_cache_materialized walks, (class, method)
+_CACHE_ACCESSORS = (
+    ("org.apache.spark.sql.internal.SharedState", "cacheManager"),
+    ("org.apache.spark.sql.execution.CacheManager", "lookupCachedData"),
+    ("org.apache.spark.sql.execution.CachedData", "cachedRepresentation"),
+    ("org.apache.spark.sql.execution.columnar.InMemoryRelation", "cacheBuilder"),
+    (
+        "org.apache.spark.sql.execution.columnar.CachedRDDBuilder",
+        "isCachedColumnBuffersLoaded",
+    ),
+)
+
+
 def _is_cache_materialized(spark: SparkSession, df: DataFrame) -> bool:
     """True when ``df``'s persisted buffers are actually loaded (not
-    merely declared) — read from the JVM CacheManager; False on any
-    doubt, so callers fall back to an explicit materialize."""
-    try:
-        opt = (
-            spark._jsparkSession.sharedState()  # type: ignore[union-attr]
-            .cacheManager()
-            .lookupCachedData(df._jdf)
-        )
-        if opt.isEmpty():
-            return False
-        return bool(
-            opt.get()
-            .cachedRepresentation()
-            .cacheBuilder()
-            .isCachedColumnBuffersLoaded()
-        )
-    except Exception:
+    merely declared) — read from the JVM CacheManager.  The accessors
+    are private; they are probed once per SparkContext, and when one is
+    missing (one warning logged) this answers False, so callers fall
+    back to an explicit materialize."""
+    sc = spark.sparkContext
+    if not probe_once(
+        sc, "cache_materialized",
+        lambda: missing_jvm_methods(
+            sc, [(spark._jsparkSession.getClass(), "sharedState"), *_CACHE_ACCESSORS]
+        ),
+        "cached frames are materialized with an explicit count()",
+    ):
         return False
+    opt = (
+        spark._jsparkSession.sharedState()  # type: ignore[union-attr]
+        .cacheManager()
+        .lookupCachedData(df._jdf)
+    )
+    if opt.isEmpty():
+        return False
+    return bool(
+        opt.get()
+        .cachedRepresentation()
+        .cacheBuilder()
+        .isCachedColumnBuffersLoaded()
+    )
 
 
 def release_curate_tokens(spark: SparkSession, sf_dir: str) -> None:

@@ -10,8 +10,13 @@ at scale.
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
+import weakref
+from collections.abc import Callable, Iterable
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_BATCH_ROWS = 4096  # reference default batch size (get_simple server.py:35)
@@ -181,3 +186,54 @@ def tune_session(spark: SparkSession) -> SparkSession:
                 stacklevel=2,
             )
     return spark
+
+
+_log = logging.getLogger(__name__)
+
+# SparkContext -> {feature: available}; a context's probes die with it
+_PROBED: "weakref.WeakKeyDictionary[SparkContext, dict[str, bool]]" = (
+    weakref.WeakKeyDictionary()
+)
+_PROBE_LOCK = threading.Lock()
+
+
+def probe_once(
+    sc: SparkContext, feature: str, probe: Callable[[], list[str]], fallback: str
+) -> bool:
+    """True when ``feature``'s private Spark entry points all exist.
+
+    ``probe`` returns the entry points it could not find (or raises).
+    It runs once per SparkContext and feature; a miss logs one warning
+    naming what is missing and ``fallback`` (what the caller does
+    instead), and every later call answers from the cache, so callers
+    branch on the answer rather than wrapping each use in try/except.
+    """
+    with _PROBE_LOCK:
+        seen = _PROBED.setdefault(sc, {})
+        if feature not in seen:
+            try:
+                missing = probe()
+            except Exception as e:  # noqa: BLE001 — any probe failure is a miss
+                missing = [f"probe failed: {(str(e) or type(e).__name__).splitlines()[0]}"]
+            seen[feature] = not missing
+            if missing:
+                _log.warning(
+                    "%s: %s not found in this Spark build; %s",
+                    feature, ", ".join(missing), fallback,
+                )
+        return seen[feature]
+
+
+def missing_jvm_methods(sc: SparkContext, methods: Iterable[tuple]) -> list[str]:
+    """The ``(class, method)`` pairs whose public JVM method does not
+    exist, as ``Class.method`` strings; ``class`` is a py4j ``Class`` or
+    a class name."""
+    reflection = sc._jvm.py4j.reflection
+    engine = reflection.ReflectionEngine()
+    missing = []
+    for cls, name in methods:
+        if isinstance(cls, str):
+            cls = reflection.ReflectionUtil.classForName(cls)
+        if engine.getMethod(cls, name) is None:
+            missing.append(f"{cls.getName()}.{name}")
+    return missing

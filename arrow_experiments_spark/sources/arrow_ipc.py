@@ -8,17 +8,29 @@ are not splittable without the footer — the reference's range client
 reassembles on one consumer too, SURVEY.md §7 Phase 3).  For parallel
 ingest use many streams via the catalog (one Spark task per URI), which is
 the reference's only parallel ingest path (get_indirect).
+
+Egress has two shapes.  Per request, :func:`df_to_reader` runs the
+query to completion in the JVM (executors build Arrow IPC batch
+messages, kept on executor disk) and then streams the batches to the
+driver in partition order: no Python worker runs and no spill file is
+written.  Materialize once and serve many, :func:`spill_dataframe` writes
+per-partition ``.arrows`` files through executor Python workers, which
+:func:`spilled_files_reader` streams and :func:`raw_spill_stream`
+splices byte for byte.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import weakref
 from collections.abc import Iterator
 
 import pyarrow as pa
 import pyarrow.ipc as ipc
 from pyspark.sql import DataFrame, SparkSession
+
+from arrow_experiments_spark.session import missing_jvm_methods, probe_once
 
 
 # ---- ingest ---------------------------------------------------------------
@@ -73,50 +85,103 @@ def read_ipc_streams_parallel(spark: SparkSession, paths: list[str]) -> DataFram
 # ---- egress ---------------------------------------------------------------
 
 
-def df_to_reader(
-    df: DataFrame,
-    batch_rows: int = 4096,
-    mode: str = "spill",
-    spill_dir: str | None = None,
-) -> pa.RecordBatchReader:
-    """DataFrame → RecordBatchReader with reference-style batch sizing.
+def _arrow_schema(df: DataFrame) -> pa.Schema:
+    """The Arrow schema ``df.toArrow()`` returns: timestamps labelled
+    UTC, large string/binary types when the session asks for them."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(
+        df.schema,
+        timestamp_utc=True,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
+
+
+def _missing_egress_entry_points(df: DataFrame) -> list[str]:
+    import pyspark.util
+
+    missing = missing_jvm_methods(df.sparkSession.sparkContext, [
+        (df._jdf.getClass(), "toArrowBatchRdd"),
+        ("org.apache.spark.api.python.PythonRDD", "toLocalIteratorAndServe"),
+    ])
+    if not hasattr(pyspark.util, "_local_iterator_from_socket"):
+        missing.append("pyspark.util._local_iterator_from_socket")
+    return missing
+
+
+def df_to_reader(df: DataFrame, batch_rows: int = 4096) -> pa.RecordBatchReader:
+    """DataFrame → RecordBatchReader of ``batch_rows``-row batches, with
+    the schema (and data) ``df.toArrow()`` would return.
 
     The reference serves O(batch) on the server side (incremental IPC
-    writer, http/get_simple/python/server/http.server/server.py:59-72) —
-    the Spark-side adapter must therefore never hold the whole result on
-    the driver.  Modes:
+    writer, http/get_simple/python/server/http.server/server.py:59-72);
+    this adapter never holds the whole result on the driver either:
 
-    ``spill`` (default, bounded memory)
-        Executors write their partitions as Arrow IPC stream files via
-        ``mapInArrow`` (exact Arrow types — the same batches Spark's own
-        Arrow exchange produces); the driver then streams the files in
-        partition order, holding one batch at a time.  The write is fully
-        distributed; on a real cluster ``spill_dir`` must be shared
-        storage (NFS/object store), which is the standard shuffle-to-store
-        egress posture at 100 TB.
-    ``local_iter`` (DEBUG ONLY — never select implicitly)
-        ``df.toLocalIterator()`` row pull, converted to Arrow in
-        ``batch_rows`` chunks driver-side.  Rows cross the Py4J socket
-        one at a time — the classic per-row-Python trap at any real
-        volume.  Exists solely for debugging on a machine with no shared
-        storage; server/production paths must use ``spill`` (default) —
-        nothing in the engine passes this mode programmatically.
-    ``collect``
-        Legacy ``df.toArrow()`` — whole result on the driver.  Only for
-        the pre-materialize-once registry path (reference server.py:144
-        builds its batches once at startup and replays them per request).
+    1. Executors encode their partitions as Arrow IPC record-batch
+       messages in the JVM (``toArrowBatchRdd``), persisted DISK_ONLY so
+       the bytes stay out of the storage memory cached frames use.  One
+       fully parallel ``count()`` job runs the query to completion
+       before this function returns, so a runtime error (ANSI overflow,
+       a failed task) raises here, before an HTTP server has sent
+       headers.
+    2. The reader then pulls the persisted partitions to the driver in
+       partition order (``toLocalIteratorAndServe``, one small job per
+       partition, the next one prefetched), decoding one message at a
+       time.  Partition order preserves any order the plan produced.
+    3. The persisted blocks are released when the stream ends, when the
+       reader is dropped part way, or when step 1 fails.
+
+    Memory: the driver JVM holds at most two partitions of Arrow bytes
+    (the one being served and the prefetched one), Python holds one
+    batch plus the rebatch buffer.  A single result partition larger
+    than ``spark.driver.maxResultSize`` fails with Spark's error.
+
+    The entry points are private Spark API, probed once per
+    SparkContext; if one is missing, one warning is logged and results
+    go through the executor-side IPC spill (:func:`spill_dataframe`)
+    instead.
     """
-    if mode == "collect":
-        table = df.toArrow()
-        return pa.RecordBatchReader.from_batches(
-            table.schema, table.to_batches(max_chunksize=batch_rows)
-        )
-    if mode == "local_iter":
-        return _local_iter_reader(df, batch_rows)
-    if mode != "spill":
-        raise ValueError(f"unknown mode: {mode!r}")
-    tmp, files, schema = spill_dataframe(df, spill_dir)
-    return spilled_files_reader(files, schema, batch_rows, cleanup_dir=tmp)
+    from arrow_experiments_spark.transport.server import rebatch_reader
+
+    sc = df.sparkSession.sparkContext
+    if not probe_once(
+        sc, "jvm_arrow_egress", lambda: _missing_egress_entry_points(df),
+        "query results are served through the executor-side IPC spill",
+    ):
+        tmp, files, schema = spill_dataframe(df)
+        return spilled_files_reader(files, schema, batch_rows, cleanup_dir=tmp)
+
+    schema = _arrow_schema(df)
+    jrdd = df._jdf.toArrowBatchRdd()
+    jrdd.persist(sc._jvm.org.apache.spark.storage.StorageLevel.DISK_ONLY())
+    try:
+        jrdd.count()
+    except BaseException:
+        jrdd.unpersist(False)
+        raise
+
+    def batches() -> Iterator[pa.RecordBatch]:
+        from pyspark.serializers import NoOpSerializer
+        from pyspark.util import _local_iterator_from_socket
+
+        try:
+            frames = _local_iterator_from_socket(
+                sc._jvm.PythonRDD.toLocalIteratorAndServe(jrdd, True),
+                NoOpSerializer(),
+            )
+            try:
+                for frame in frames:
+                    yield pa.ipc.read_record_batch(pa.py_buffer(frame), schema)
+            finally:
+                # stop the JVM serving thread before its blocks go
+                frames.close()
+        finally:
+            release()
+
+    gen = batches()
+    # a reader dropped before its first read never enters the generator
+    release = weakref.finalize(gen, jrdd.unpersist, False)
+    return rebatch_reader(pa.RecordBatchReader.from_batches(schema, gen), batch_rows)
 
 
 def spill_dataframe(
@@ -351,49 +416,19 @@ def register_dataframe_materialized(
     return d
 
 
-def _local_iter_reader(df: DataFrame, batch_rows: int) -> pa.RecordBatchReader:
-    """Bounded-memory row pull: ``toLocalIterator`` → Arrow chunks.
-
-    Uses Spark's own local Row→Arrow converters so the 21-type surface
-    (decimal/struct/list/binary/timestamp — SURVEY.md §1.2) round-trips
-    exactly as ``df.toArrow`` would produce it."""
-    from pyspark.sql.conversion import LocalDataToArrowConversion
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = df.schema
-    expected = to_arrow_schema(schema, timestamp_utc=True)
-
-    def convert(rows: list) -> Iterator[pa.RecordBatch]:
-        tbl = LocalDataToArrowConversion.convert(rows, schema, False)
-        yield from tbl.cast(expected).to_batches(max_chunksize=batch_rows)
-
-    def gen() -> Iterator[pa.RecordBatch]:
-        buf: list = []
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            buf.append(row)
-            if len(buf) >= batch_rows:
-                yield from convert(buf)
-                buf = []
-        if buf:
-            yield from convert(buf)
-
-    return pa.RecordBatchReader.from_batches(expected, gen())
-
-
 def register_dataframe(registry, name: str, df: DataFrame, batch_rows: int = 4096,
-                       mode: str = "spill", meta: dict | None = None) -> None:
+                       meta: dict | None = None) -> None:
     """Register a live DataFrame with the HTTP server: each request re-runs
-    the (lazy) plan through the bounded-memory reader — the server never
-    holds more than one batch per in-flight request.  The Arrow schema is
-    derived from the plan (no job) so /describe answers without executing
-    the query."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    the (lazy) plan through :func:`df_to_reader`, so the query finishes
+    before the response starts and the driver holds at most two result
+    partitions of Arrow bytes in the JVM and one batch in Python per
+    in-flight request.  The Arrow schema is derived from the plan (no
+    job) so /describe answers without executing the query."""
     registry.register(
         name,
-        lambda: df_to_reader(df, batch_rows, mode=mode),
+        lambda: df_to_reader(df, batch_rows),
         meta,
-        schema=to_arrow_schema(df.schema, timestamp_utc=True),
+        schema=_arrow_schema(df),
     )
 
 

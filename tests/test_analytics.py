@@ -1097,6 +1097,86 @@ def test_curate_corpus_deferred_materialize_discipline(spark):
     dedup._CURATE_CACHE.clear()
 
 
+def test_curate_corpus_eager_hit_releases_leaked_tokens(spark, monkeypatch):
+    """A composite that raises between ``curate_corpus(defer_materialize=
+    True)`` and ``release_curate_tokens`` leaves the token persist
+    parked; the next eager caller's cache hit must restore the eager
+    contract: a materialized corpus and one cache entry."""
+    import os
+
+    from arrow_experiments_spark.operators import dedup
+    from arrow_experiments_spark.operators.dedup import (
+        _is_cache_materialized,
+        curate_corpus,
+    )
+    from arrow_experiments_spark.operators.text import pipeline_curate_end_to_end
+    from conftest import SF_DIR
+
+    spark.catalog.clearCache()
+    dedup._CURATE_CACHE.clear()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def boom(*args, **kw):
+        raise RuntimeError("injected between defer and release")
+
+    monkeypatch.setattr(dedup, "dedup_keep_canonical", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        pipeline_curate_end_to_end(spark, SF_DIR)
+    monkeypatch.undo()
+    assert cm.cachedData().size() == 2  # corpus + the leaked token stage
+
+    c = curate_corpus(spark, SF_DIR)
+    assert cm.cachedData().size() == 1
+    assert _is_cache_materialized(spark, c)
+    assert dedup._CURATE_CACHE[(id(spark), os.path.abspath(SF_DIR))][2] is None
+    spark.catalog.clearCache()
+    dedup._CURATE_CACHE.clear()
+
+
+@pytest.mark.parametrize("accessor", ["sharedState", "isCachedColumnBuffersLoaded"])
+def test_cache_probe_miss_logs_once_and_materializes(spark, monkeypatch, caplog, accessor):
+    """A missing JVM cache accessor is found once per SparkContext (one
+    warning), answers 'not materialized', and release_curate_tokens
+    falls back to an explicit count: the corpus still ends materialized
+    with one cache entry."""
+    import logging
+    from weakref import WeakKeyDictionary
+
+    from arrow_experiments_spark import session
+    from arrow_experiments_spark.operators import dedup
+    from arrow_experiments_spark.operators.dedup import (
+        _is_cache_materialized,
+        curate_corpus,
+        release_curate_tokens,
+    )
+    from conftest import SF_DIR
+
+    spark.catalog.clearCache()
+    dedup._CURATE_CACHE.clear()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    monkeypatch.setattr(session, "_PROBED", WeakKeyDictionary())
+    real = dedup.missing_jvm_methods
+
+    def renamed(sc, methods):
+        return real(sc, [(c, m + "Gone" if m == accessor else m) for c, m in methods])
+
+    monkeypatch.setattr(dedup, "missing_jvm_methods", renamed)
+    with caplog.at_level(logging.WARNING, logger="arrow_experiments_spark"):
+        c = curate_corpus(spark, SF_DIR, defer_materialize=True)
+        n = c.count()
+        assert not _is_cache_materialized(spark, c)  # the fallback answer
+        release_curate_tokens(spark, SF_DIR)
+    records = [r for r in caplog.records if r.name.startswith("arrow_experiments_spark")]
+    assert len(records) == 1, [r.getMessage() for r in records]
+    assert accessor in records[0].getMessage()
+    monkeypatch.undo()
+    assert cm.cachedData().size() == 1
+    assert _is_cache_materialized(spark, c)
+    assert c.count() == n
+    spark.catalog.clearCache()
+    dedup._CURATE_CACHE.clear()
+
+
 def test_curate_corpus_rebuilds_when_source_changes(spark, tmp_path):
     """The warm-reuse path must be fingerprint-guarded: rewriting the
     source corpus invalidates the cached frame and a rebuild reflects

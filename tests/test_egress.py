@@ -2,15 +2,27 @@
 
 The reference's servers hold O(batch), never the whole response
 (http/get_simple/python/server/http.server/server.py:59-72); the Spark
-adapter must match: ``df_to_reader`` defaults to executor-side IPC spill
-streamed file-by-file, with a ``toLocalIterator`` row-pull fallback.
+adapter must match.  ``df_to_reader`` runs the query to completion in
+the JVM (executors build Arrow IPC batches, persisted to executor disk),
+then streams them in partition order; if Spark lacks the private entry
+points it serves through the executor-side IPC spill instead.  The
+contract pinned here: the schema and data of ``df.toArrow()`` in any
+session time zone, global order, bounded driver memory, a runtime error
+raised before the HTTP response starts, and no persisted RDD left
+behind.  ``spill_dataframe``/``spilled_files_reader`` remain the
+materialize-once serve path.
 """
 
 from __future__ import annotations
 
+import gc
+import logging
+
 import pyarrow as pa
 import pytest
 
+from arrow_experiments_spark import session
+from arrow_experiments_spark.sources import arrow_ipc
 from arrow_experiments_spark.sources.arrow_ipc import (
     df_to_reader,
     register_dataframe,
@@ -20,23 +32,156 @@ from arrow_experiments_spark.sources.arrow_ipc import (
 from arrow_experiments_spark.sources.generators import gen_flight_bench
 
 
-@pytest.mark.parametrize("mode", ["spill", "local_iter", "collect"])
-def test_modes_agree_with_toarrow(spark, mode):
+@pytest.fixture(params=["jvm", "spill"])
+def egress(request, monkeypatch):
+    """Run a test over the JVM path and over the spill fallback."""
+    if request.param == "spill":
+        monkeypatch.setattr(arrow_ipc, "probe_once", lambda *a: False)
+    return request.param
+
+
+def test_modes_agree_with_toarrow(spark, egress):
     df = gen_flight_bench(spark, rows=20_000).repartition(4)
     expect = df.toArrow().combine_chunks().sort_by("a")
-    got = df_to_reader(df, batch_rows=1024, mode=mode).read_all()
+    got = df_to_reader(df, batch_rows=1024).read_all()
     assert got.schema.equals(expect.schema)
     assert got.combine_chunks().sort_by("a").equals(expect)
+    assert all(b.num_rows <= 1024 for b in got.to_batches())
 
 
-@pytest.mark.parametrize("mode", ["spill", "local_iter"])
-def test_global_order_preserved(spark, mode):
+def test_global_order_preserved(spark, egress):
     """Range-partitioned sort order must survive the partition-ordered
-    file replay (and the one-job-per-partition local iterator)."""
+    replay."""
     df = gen_flight_bench(spark, rows=20_000).orderBy("a")
-    got = df_to_reader(df, batch_rows=4096, mode=mode).read_all()
+    got = df_to_reader(df, batch_rows=4096).read_all()
     col = got.column("a").to_pylist()
     assert col == sorted(col)
+
+
+_ALL_TYPES_SQL = """
+    SELECT id,
+           CAST(id * 1.25 AS DECIMAL(12, 2)) AS dec,
+           array(id, id + 1) AS arr,
+           named_struct('x', id, 'y', CAST(id AS STRING)) AS st,
+           map(CAST(id AS STRING), id) AS mp,
+           CAST(CAST(id AS STRING) AS BINARY) AS bin,
+           date_add(DATE'2024-03-09', CAST(id AS INT)) AS dt,
+           TIMESTAMP_LTZ'2024-03-10 01:30:00' + make_interval(0, 0, 0, 0, CAST(id AS INT)) AS ts_ltz,
+           TIMESTAMP_NTZ'2024-03-10 01:30:00' + make_interval(0, 0, 0, 0, CAST(id AS INT)) AS ts_ntz,
+           NULL AS nul,
+           IF(id % 3 = 0, NULL, id) AS maybe
+    FROM range(0, 48, 1, 3)
+"""
+
+
+@pytest.mark.parametrize("zone", ["UTC", "America/Los_Angeles"])
+def test_types_match_toarrow_in_session_zone(spark, zone):
+    """Schema and data equal ``df.toArrow()`` across the Spark types, in
+    a UTC and a non-UTC session zone (timestamps labelled UTC, as
+    ``toArrow`` labels them)."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        df = spark.sql(_ALL_TYPES_SQL)
+        expect = df.toArrow()
+        got = df_to_reader(df, batch_rows=10).read_all()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert got.schema.equals(expect.schema), (got.schema, expect.schema)
+    assert got.num_rows == 48
+    assert got.combine_chunks().equals(expect.combine_chunks())
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_no_persisted_rdd_left_behind(spark):
+    """The per-request persist is released after a full drain, after a
+    reader dropped after its first batch, and when the query fails."""
+    base = _persisted(spark)
+    df = gen_flight_bench(spark, rows=50_000).repartition(4)
+
+    reader = df_to_reader(df, batch_rows=4096)
+    assert _persisted(spark) == base + 1  # held while the stream is open
+    assert reader.read_all().num_rows == 50_000
+    assert _persisted(spark) == base
+
+    reader = df_to_reader(df, batch_rows=4096)
+    assert reader.read_next_batch().num_rows == 4096
+    reader.close()
+    del reader
+    gc.collect()
+    assert _persisted(spark) == base
+
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        df_to_reader(spark.sql("SELECT CAST(id + 2147483647 AS INT) AS x FROM range(10)"))
+    assert _persisted(spark) == base
+
+
+def test_runtime_error_answers_400_before_any_body(spark):
+    """An ANSI runtime failure in ``GET /query`` surfaces while the
+    query runs, before the response starts: both front-ends answer 400
+    with the error, not a 200 with a truncated stream."""
+    import json
+
+    from test_asgi import front_ends
+
+    from arrow_experiments_spark.transport.server import DatasetRegistry
+
+    def sql_runner(sql):
+        return df_to_reader(spark.sql(sql))
+
+    sql = "SELECT+CAST(id+%2B+2147483647+AS+INT)+AS+x+FROM+range(10)"
+    with front_ends(DatasetRegistry(), sql_runner=sql_runner) as fronts:
+        for name, fetch in fronts.items():
+            status, headers, body = fetch("GET", f"/query?sql={sql}")
+            assert status == 400, name
+            assert headers["content-type"].startswith("application/json"), name
+            assert "CAST_OVERFLOW" in json.loads(body)["error"], name
+            ok, _, _ = fetch("GET", "/query?sql=SELECT+1+AS+one")
+            assert ok == 200, name
+
+
+@pytest.mark.parametrize(
+    "entry_point",
+    ["toArrowBatchRdd", "toLocalIteratorAndServe", "_local_iterator_from_socket"],
+)
+def test_missing_entry_point_falls_back_to_spill(spark, monkeypatch, caplog, entry_point):
+    """With any private entry point missing, the probe logs ONE warning
+    for the SparkContext and every request serves through the spill."""
+    import pyspark.util
+    from weakref import WeakKeyDictionary
+
+    monkeypatch.setattr(session, "_PROBED", WeakKeyDictionary())
+    if entry_point == "_local_iterator_from_socket":
+        monkeypatch.delattr(pyspark.util, entry_point)
+    else:
+        real = arrow_ipc.missing_jvm_methods
+
+        def renamed(sc, methods):
+            return real(sc, [(c, m + "Gone" if m == entry_point else m) for c, m in methods])
+
+        monkeypatch.setattr(arrow_ipc, "missing_jvm_methods", renamed)
+    spills = []
+    real_spill = arrow_ipc.spill_dataframe
+
+    def counting_spill(df, *args, **kw):
+        spills.append(df)
+        return real_spill(df, *args, **kw)
+
+    monkeypatch.setattr(arrow_ipc, "spill_dataframe", counting_spill)
+
+    df = gen_flight_bench(spark, rows=5_000).repartition(2)
+    expect = df.toArrow().combine_chunks().sort_by("a")
+    with caplog.at_level(logging.WARNING, logger="arrow_experiments_spark"):
+        for _ in range(2):
+            got = df_to_reader(df, batch_rows=1024).read_all()
+            assert got.combine_chunks().sort_by("a").equals(expect)
+    records = [r for r in caplog.records if r.name.startswith("arrow_experiments_spark")]
+    assert len(records) == 1, [r.getMessage() for r in records]
+    assert entry_point in records[0].getMessage()
+    assert len(spills) == 2
 
 
 def test_spill_driver_memory_is_bounded(spark):
@@ -44,7 +189,7 @@ def test_spill_driver_memory_is_bounded(spark):
     driver Arrow memory: peak allocation while draining stays a small
     multiple of one batch, far below the result size."""
     df = gen_flight_bench(spark, rows=500_000)  # ~16 MB of int64s
-    reader = df_to_reader(df, batch_rows=4096, mode="spill")
+    reader = df_to_reader(df, batch_rows=4096)
     base = pa.total_allocated_bytes()
     peak = 0
     rows = 0
@@ -59,7 +204,7 @@ def test_spill_driver_memory_is_bounded(spark):
 
 def test_spill_empty_result_keeps_schema(spark):
     df = gen_flight_bench(spark, rows=100).filter("a is null and b = 1")
-    got = df_to_reader(df, mode="spill").read_all()
+    got = df_to_reader(df).read_all()
     assert got.num_rows == 0
     assert got.schema.names == ["a", "b", "c", "d"]
 

@@ -2,9 +2,8 @@
 """Job-log decomposition of the curate composites (r17, VERDICT item 3).
 
 For each named query: run build + noop write once (warm) and once
-recorded, with a Spark listener counting scheduled jobs/stages and
-summing executor run time — so 'wall vs sum-of-job-time' and 'number of
-sequential jobs' are measured, not guessed.
+recorded, and print the recorded run's wall time, the number of Spark
+jobs it scheduled and the stages of each job (from the status tracker).
 
 Usage: python tools/composite_decompose.py <query> [query ...]
 """
@@ -55,8 +54,6 @@ def main() -> None:
                 set(tracker.getJobIdsForGroup(f"{name}-{leg}") or [])
                 - jobs_before
             )
-            # per-job wall from the status tracker (submission→completion)
-            total_job_ms = 0
             spans = []
             for jid in job_ids:
                 ji = tracker.getJobInfo(jid)

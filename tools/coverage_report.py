@@ -193,7 +193,7 @@ CHECKLIST: list[tuple[str, str, list[str]]] = [
         "code:arrow_experiments_spark.operators.scale:write_zordered",
         "test:tests/test_scale.py:test_zorder_write_prunes_both_dimensions",
     ]),
-    ("§2.3", "bounded-memory Spark egress (spill / local_iter readers)", [
+    ("§2.3", "bounded-memory Spark egress (JVM Arrow batches / executor spill)", [
         "code:arrow_experiments_spark.sources.arrow_ipc:df_to_reader",
         "code:arrow_experiments_spark.sources.arrow_ipc:spill_dataframe",
         "test:tests/test_egress.py:test_spill_driver_memory_is_bounded",
