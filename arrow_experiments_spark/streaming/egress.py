@@ -75,7 +75,6 @@ def upsert_snapshot_sink(
     order_col: str,
     timeout_sec: int = 120,
     checkpoint_dir: str | None = None,
-    prepare=None,
     n_buckets: int = 32,
     bucket_cols: list[str] | None = None,
     insert_only: bool = False,
@@ -136,6 +135,13 @@ def upsert_snapshot_sink(
       skipped — a second run against an existing snapshot merges its
       first micro-batch instead of silently discarding it.
 
+    Per micro-batch (:func:`_snapshot_sink`, shared with
+    :func:`incremental_curation_sink`): lease heartbeat, version id, then
+    one :func:`_merge_batch` — a touched-bucket probe, the pruned
+    read-back and merge window, the write.  A steady-state micro-batch
+    runs 7 Spark jobs at ``local[4]``; ``insert_only`` adds the
+    seen-before anti-join and its backfill-guard count (14 jobs).
+
     One WRITER at a time per snapshot — ENFORCED by :class:`WriterLease`
     (create-exclusive ``_LEASE.json`` with heartbeat + fencing token;
     a second concurrent writer raises :class:`WriterLeaseHeld` at
@@ -144,18 +150,6 @@ def upsert_snapshot_sink(
     swap).  A crashed writer's lease expires after its TTL and the next
     writer takes over with a higher token.  Readers are unlimited —
     that is what the versioned-dir contract exists for.
-
-    ``prepare``: optional ``(batch_df, current_snapshot | None) ->
-    DataFrame`` hook run before the keyed merge — the seam for
-    delta-vs-snapshot gating (quality filters, seen-before anti-joins)
-    that must see the committed snapshot, not just the incoming rows.
-    When the committed version carries the current bucket geometry, the
-    snapshot frame handed to the hook RETAINS the ``_bucket`` layout
-    column (``pmod(xxhash64(key), n_buckets)``) so a hook that filters
-    on it gets partition-pruned reads — the bucketed-fingerprint
-    anti-join shape; hooks must not emit ``_bucket`` in their output.
-    Its output defines the snapshot schema and must contain ``key_cols``
-    and ``order_col``.
 
     ``bucket_cols``: the columns the ``_bucket`` hash is computed over —
     defaults to ``key_cols``, and must be a SUBSET of them (every row of
@@ -173,26 +167,10 @@ def upsert_snapshot_sink(
     semantics (the dedup gates do, via their seen-before anti-joins);
     latest-wins updates need the default rewrite.
     """
-    import os
-
     spark = stream_df.sparkSession
     _check_bucket_cols(key_cols, bucket_cols)
-    os.makedirs(snapshot_dir, exist_ok=True)
-    lease = WriterLease.acquire(snapshot_dir, ttl_sec=lease_ttl_sec)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        lease.heartbeat()
-        committed = _committed_version(snapshot_dir)
-        seq = _alloc_seq(committed, batch_id, checkpoint_dir is not None)
-        if seq is None:
-            return  # replay of an already-committed batch — idempotent skip
-        if prepare is not None:
-            batch_df = prepare(
-                batch_df,
-                _prepare_view(
-                    spark, snapshot_dir, committed, n_buckets, key_cols, bucket_cols
-                ),
-            )
+    def merge_one(batch_df: DataFrame, committed: str | None, seq: int, lease) -> None:
         _merge_batch(
             spark,
             batch_df,
@@ -208,10 +186,44 @@ def upsert_snapshot_sink(
             retain_versions=retain_versions,
         )
 
+    return _snapshot_sink(
+        stream_df, snapshot_dir, merge_one, what="upsert",
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        lease_ttl_sec=lease_ttl_sec,
+    )
+
+
+def _snapshot_sink(
+    stream_df: DataFrame,
+    snapshot_dir: str,
+    merge_one,
+    *,
+    what: str,
+    checkpoint_dir: str | None,
+    timeout_sec: int,
+    lease_ttl_sec: float,
+):
+    """The scaffolding of the single-snapshot sinks
+    (:func:`upsert_snapshot_sink`, :func:`incremental_curation_sink`):
+    one :class:`WriterLease` over ``snapshot_dir`` for the run; per
+    micro-batch a heartbeat, the committed pointer and the version id
+    (:func:`_alloc_seq` — a checkpointed replay of an already-committed
+    batch is skipped here), then ``merge_one(batch_df, committed, seq,
+    lease)``, which writes and commits ``v{seq}``."""
+    lease = WriterLease.acquire(snapshot_dir, ttl_sec=lease_ttl_sec)
+
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        lease.heartbeat()
+        committed = _committed_version(snapshot_dir)
+        seq = _alloc_seq(committed, batch_id, checkpoint_dir is not None)
+        if seq is None:
+            return  # replay of an already-committed batch — idempotent skip
+        merge_one(batch_df, committed, seq, lease)
+
     try:
         return _run_foreach_batch(
             stream_df, merge, checkpoint_dir, timeout_sec,
-            f"upsert ({snapshot_dir})",
+            f"{what} ({snapshot_dir})",
         )
     finally:
         lease.release()
@@ -1355,15 +1367,28 @@ def incremental_curation_sink(
     each micro-batch pays only delta-sized tokenize plus one anti-join
     keyed on the hash — never a full-corpus rescan.  The snapshot side
     of that anti-join is BUCKET-PRUNED: same hash ⇒ same bucket, so
-    only the buckets the delta's hashes land in are read back (the
-    delta's touched-bucket set comes from a cheap md5+xxhash pass over
-    the raw batch, a superset of the gated survivors' buckets) — the
+    only the buckets the delta's hashes land in are read back — the
     bucketed-by-hash fingerprint-table shape a 100 TB warehouse runs,
     made concrete by the versioned layout.
+
+    Per micro-batch, the shape of the near-dup sinks' corpus leg
+    (:func:`_corpus_index_sink`): the gate is PERSISTED, then ONE
+    aggregate over it (not over the raw batch, so its bucket set is
+    exactly the merge's) yields the touched buckets and its row count,
+    which bounds the anti-join's backfill guard (no count job); the
+    survivors go to the insert-only merge with that bucket set and
+    ``assume_novel``, so the merge neither probes nor anti-joins again.
+    Sound because the gate reads the same committed pointer the merge
+    writes past: a replayed batch whose commit was lost re-gates
+    against the version before it.  The raw batch is read once, and a
+    steady-state micro-batch runs 9 Spark jobs (16 stages) at
+    ``local[4]``.
 
     Expects ``doc_id`` and ``text`` columns; the snapshot carries the
     batch columns plus ``content_hash``.  First-seen-wins across
     micro-batches (arrival order), min-doc_id-wins within one batch.
+    The lease, version-id and checkpoint-replay contract is
+    :func:`upsert_snapshot_sink`'s (both run on :func:`_snapshot_sink`).
     This gate is EXACT-only; :func:`incremental_neardup_sink` is the
     same funnel extended with near-duplicate rejection over a persisted
     band index, and :func:`incremental_embedding_dedup_sink` its
@@ -1371,36 +1396,37 @@ def incremental_curation_sink(
     """
     from pyspark.sql import functions as F
 
-    from arrow_experiments_spark.functions.text import md5_str
+    spark = stream_df.sparkSession
+    key = ["content_hash"]
+    # the merge's ``_bucket`` expression
+    hash_bucket = F.pmod(F.xxhash64(*key), F.lit(n_buckets)).cast("int")
 
-    def prepare(batch_df: DataFrame, current: DataFrame | None) -> DataFrame:
-        firsts = _gated_firsts(batch_df)
-        if current is not None:
-            # prune the fingerprint read to the delta's buckets — sound
-            # because equal hashes share a bucket, and the touched set
-            # comes from ALL raw hashes (a superset of the gated
-            # survivors')
-            hash_bucket = F.pmod(
-                F.xxhash64(md5_str(F.col("text"))), F.lit(n_buckets)
-            ).cast("int")
-            seen = _prune_buckets(current, batch_df, hash_bucket).select(
-                "content_hash"
+    def merge_one(batch_df: DataFrame, committed: str | None, seq: int, lease) -> None:
+        # persisted: the probe, the anti-join and the merge build on it
+        fresh = firsts = _gated_firsts(batch_df).persist()
+        touched = None
+        try:
+            view = _prepare_view(spark, snapshot_dir, committed, n_buckets, key)
+            if view is not None:
+                touched, n_rows = _touched_list(firsts, hash_bucket, with_count=True)
+                seen = _filter_buckets(view, touched).select(*key)
+                fresh = _anti_join_small_left(firsts, seen, key, small_rows_max=n_rows)
+                touched = set(touched)
+            _merge_batch(
+                spark, fresh, snapshot_dir,
+                key_cols=key, order_col="doc_id", n_buckets=n_buckets,
+                bucket_cols=None, seq=seq, committed=committed, lease=lease,
+                # first-seen-wins is this gate's contract, and ``fresh`` was
+                # anti-joined against THIS committed version over ``touched``
+                insert_only=True, assume_novel=True, touched=touched,
             )
-            firsts = _anti_join_small_left(firsts, seen, ["content_hash"])
-        return firsts
+        finally:
+            firsts.unpersist()
 
-    return upsert_snapshot_sink(
-        stream_df,
-        snapshot_dir,
-        key_cols=["content_hash"],
-        order_col="doc_id",
-        timeout_sec=timeout_sec,
-        checkpoint_dir=checkpoint_dir,
-        prepare=prepare,
-        n_buckets=n_buckets,
-        # first-seen-wins is this gate's documented contract — the
-        # insert-only append merge writes O(delta), not O(touched bucket)
-        insert_only=True,
+    return _snapshot_sink(
+        stream_df, snapshot_dir, merge_one, what="curation",
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        lease_ttl_sec=60.0,
     )
 
 

@@ -46,7 +46,9 @@ threaded ``http.server`` form (:class:`ArrowHttpHandler`, started by
 :func:`serve`) and the ASGI form (transport/asgi.py) only read requests
 and frame replies.  The threaded form speaks HTTP/1.1 with keep-alive:
 fixed bodies carry Content-Length, streams are chunked, and HTTP/1.0
-requests get close-delimited streams.
+requests get close-delimited streams.  Request bodies arrive with a
+Content-Length or chunked (:func:`read_chunked`), as an ASGI server
+hands them over dechunked.
 """
 
 from __future__ import annotations
@@ -519,6 +521,32 @@ def content_length(headers) -> int | None:
     return int(value) if _CONTENT_LENGTH_RE.fullmatch(value) else None
 
 
+_CHUNK_SIZE_RE = re.compile(rb"[0-9A-Fa-f]+")
+
+
+def read_chunked(rfile) -> bytes | None:
+    """An HTTP/1.1 chunked request body read off ``rfile`` (the inverse of
+    ``write_chunked``): chunk extensions and trailer fields are dropped.
+    None when the framing is malformed or the stream ends early."""
+    parts = []
+    while True:
+        line = rfile.readline(1 << 16)
+        size = line.split(b";", 1)[0].strip()
+        if not line.endswith(b"\n") or not _CHUNK_SIZE_RE.fullmatch(size):
+            return None
+        n = int(size, 16)
+        if n == 0:
+            break
+        data = rfile.read(n)
+        if len(data) != n or rfile.readline(3) not in (b"\r\n", b"\n"):
+            return None
+        parts.append(data)
+    while (trailer := rfile.readline(1 << 16)) not in (b"\r\n", b"\n"):
+        if not trailer.endswith(b"\n"):
+            return None
+    return b"".join(parts)
+
+
 # ---- the request core: routing, negotiation and the replay ladder ----------
 
 
@@ -567,7 +595,7 @@ def respond(
     path: str,
     query: str,
     headers,
-    body: bytes,
+    body: bytes | None,
     http10: bool,
     *,
     registry: DatasetRegistry,
@@ -579,10 +607,16 @@ def respond(
     ``headers`` is any case-insensitive mapping with ``.get`` (the
     threaded form's ``HTTPMessage``, the ASGI form's ``Message``);
     ``query`` is the raw query string; ``http10`` selects the HTTP/1.0
-    negotiation default (identity) over the HTTP/1.1 one (gzip).  The
+    negotiation default (identity) over the HTTP/1.1 one (gzip); ``body``
+    is None when the front-end could not decode the body's framing.  The
     front-end only frames the returned :class:`Response` on its wire."""
     try:
-        resp = _route(method, path, query, headers, body, http10, registry, sql_runner)
+        if body is None:
+            resp = _json({"error": "malformed chunked request body"}, status=400)
+        else:
+            resp = _route(
+                method, path, query, headers, body, http10, registry, sql_runner
+            )
     except NotAcceptable as e:
         resp = _not_acceptable(str(e), headers)
     if cors:
@@ -884,8 +918,14 @@ class ArrowHttpHandler(BaseHTTPRequestHandler):
     def _reply(self, method: str) -> None:
         path, _, query = self.path.partition("?")
         http10 = self.request_version == "HTTP/1.0"
-        length = content_length(self.headers)
-        body = self.rfile.read(length) if length else b""
+        if "chunked" in self.headers.get("Transfer-Encoding", "").lower():
+            # chunked framing overrides any Content-Length (RFC 9112 §6.3)
+            body = read_chunked(self.rfile)
+            unread = body is None
+        else:
+            length = content_length(self.headers)
+            body = self.rfile.read(length) if length else b""
+            unread = length is None  # a body of unknown size is left unread
         resp = respond(
             method, path, query, self.headers, body, http10,
             registry=self.registry, cors=self.enable_cors, sql_runner=self.sql_runner,
@@ -893,7 +933,7 @@ class ArrowHttpHandler(BaseHTTPRequestHandler):
         self.send_response(resp.status)
         for k, v in resp.headers:
             self.send_header(k, v)
-        if length is None:  # a body of unknown size is left unread
+        if unread:  # the next request's start is unknown
             self.send_header("Connection", "close")
         if resp.length is not None:
             self.send_header("Content-Length", str(resp.length))

@@ -601,29 +601,16 @@ def drift_anchors(
                 and isinstance(r.get("sec"), (int, float))
             ):
                 certified.setdefault(k, float(r["sec"]))
-    best: dict[str, float] = {}
-    for path in sorted(glob.glob(os.path.join(base, "BENCH_r*.json"))):
-        try:
-            rec = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        parsed = rec.get("parsed") if isinstance(rec, dict) else None
-        if not isinstance(parsed, dict):
-            continue
-        for section in ("queries", "tail_queries"):
-            sec = parsed.get(section)
-            for k, v in (sec.items() if isinstance(sec, dict) else ()):
-                if isinstance(v, (int, float)):
-                    best[k] = min(best.get(k, float("inf")), float(v))
+    best = {k: min(m.values()) for k, m in best_by_cpus(base).items()}
     return certified, best
 
 
 # Core-count provenance default for floor records that predate r17:
 # every committed certification/bulk/bench run before round 17 was taken
-# at the driver's main config, local[32] (BENCH_QUIET/BULK/r01..r16 —
-# verified against their gitignored-nothing history; the one 8-core run,
-# BENCH_r16_c8.json, is excluded from anchors below by its own recorded
-# cpus).  New records carry an explicit "cpus" field.
+# at the driver's main config, local[32] (BENCH_QUIET/BULK/r01..r16).
+# New records carry an explicit "cpus" field; the 8-core runs
+# (BENCH_r16_c8.json, BENCH_r17_c8.json) do, and they feed the best-ever
+# anchors at 8 cores only (best_by_cpus).
 _FLOOR_DEFAULT_CPUS = 32
 
 
@@ -633,6 +620,32 @@ def _rec_cpus(rec: dict, default: int = _FLOOR_DEFAULT_CPUS) -> int:
         return int(rec.get("cpus") or default)
     except (TypeError, ValueError):
         return default
+
+
+def best_by_cpus(base: str | None = None) -> dict[str, dict[int, float]]:
+    """Best-ever committed value per (key, cpus) across all BENCH_r*.json
+    (headline + tail sections), ``{key: {cpus: seconds}}`` with cpus in
+    first-seen file order.  :func:`vs_floor` gates a run on the minimum
+    recorded at the run's own core count, so a faster 8-core minimum
+    cannot un-gate a key that has 32-core history."""
+    base = base or os.path.dirname(os.path.abspath(__file__))
+    best: dict[str, dict[int, float]] = {}
+    for path in sorted(glob.glob(os.path.join(base, "BENCH_r*.json"))):
+        try:
+            rec = json.load(open(path))
+        except (OSError, ValueError):
+            continue
+        parsed = rec.get("parsed") if isinstance(rec, dict) else None
+        if not isinstance(parsed, dict):
+            continue
+        file_cpus = _rec_cpus(rec)
+        for section in ("queries", "tail_queries"):
+            sec = parsed.get(section)
+            for k, v in (sec.items() if isinstance(sec, dict) else ()):
+                if isinstance(v, (int, float)):
+                    at = best.setdefault(k, {})
+                    at[file_cpus] = min(at.get(file_cpus, float("inf")), float(v))
+    return best
 
 
 def anchor_cpus(
@@ -664,25 +677,7 @@ def anchor_cpus(
                 and isinstance(r.get("sec"), (int, float))
             ):
                 certified.setdefault(k, _rec_cpus(r, file_cpus))
-    best_sec: dict[str, float] = {}
-    best_cpus: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(base, "BENCH_r*.json"))):
-        try:
-            rec = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        parsed = rec.get("parsed") if isinstance(rec, dict) else None
-        if not isinstance(parsed, dict):
-            continue
-        file_cpus = _rec_cpus(rec)
-        for section in ("queries", "tail_queries"):
-            sec = parsed.get(section)
-            for k, v in (sec.items() if isinstance(sec, dict) else ()):
-                if isinstance(v, (int, float)) and float(v) < best_sec.get(
-                    k, float("inf")
-                ):
-                    best_sec[k] = float(v)
-                    best_cpus[k] = file_cpus
+    best_cpus = {k: min(m, key=m.get) for k, m in best_by_cpus(base).items()}
     return certified, best_cpus
 
 
@@ -693,6 +688,7 @@ def vs_floor(
     run_cpus: int | None = None,
     certified_cpus: dict[str, int] | None = None,
     best_cpus: dict[str, int] | None = None,
+    best_at: dict[str, dict[int, float]] | None = None,
 ) -> dict[str, dict]:
     """Each key's committed value vs its drift anchor: the certified
     floor when one exists, else best-ever committed, else no anchor
@@ -702,7 +698,11 @@ def vs_floor(
     :func:`anchor_cpus`), each anchored record also carries
     ``anchor_cpus`` and ``cpus_match`` — the drift gate only fires on
     same-cpus anchors (r16 verdict #2: a 32-core floor is not a valid
-    2x bound for an 8-core run on a key that actually scales)."""
+    2x bound for an 8-core run on a key that actually scales).  With
+    ``best_at`` (:func:`best_by_cpus`), a best-ever anchor is the
+    minimum recorded at ``run_cpus`` when one exists; a key with only
+    other-cpus history keeps its overall minimum, visible but not
+    gating."""
     out: dict[str, dict] = {}
     for k, v in vals.items():
         if k in certified:
@@ -711,6 +711,9 @@ def vs_floor(
         elif k in best:
             anchor, src = best[k], "best_ever"
             a_cpus = (best_cpus or {}).get(k, _FLOOR_DEFAULT_CPUS)
+            same = (best_at or {}).get(k, {}).get(run_cpus)
+            if same is not None:
+                anchor, a_cpus = same, run_cpus
         else:
             out[k] = {"ratio": None, "anchor": "none"}
             continue
@@ -1773,6 +1776,7 @@ def main() -> None:
         run_cpus=_run_cpus,
         certified_cpus=_cert_cpus,
         best_cpus=_best_cpus,
+        best_at=best_by_cpus(),
     )
     _vs_floor_all = {
         **vs_floor(timings, _certified, _best, **_vs_kw),

@@ -350,6 +350,58 @@ def test_post_ingest_roundtrip(fronts, table):
             assert decode_body(io.BytesIO(got), "identity").read_all().equals(table)
 
 
+def test_chunked_post_ingest_parity(fronts, registry, table):
+    """A ``Transfer-Encoding: chunked`` POST registers the same rows on
+    both front-ends (an ASGI server hands the app the dechunked body),
+    and the threaded connection stays usable for the next request.  A
+    malformed chunk size is a 400 that closes the connection."""
+    body = ipc_bytes(table)
+    arrow = {"Content-Type": "application/vnd.apache.arrow.stream"}
+    status, _, ack = fronts["asgi"]("POST", "/ingest/chunked_asgi", arrow, body)
+    assert status == 200 and json.loads(ack)["rows"] == table.num_rows
+
+    httpd = serve(registry)
+    host, port = httpd.server_address
+    conn = http.client.HTTPConnection(host, port, timeout=30)
+    try:
+        pieces = (body[i:i + 1000] for i in range(0, len(body), 1000))
+        conn.request(
+            "POST", "/ingest/chunked_threaded", body=pieces,
+            headers={**arrow, "Host": HOST}, encode_chunked=True,
+        )
+        resp = conn.getresponse()
+        assert resp.status == 200, resp.read()
+        assert json.loads(resp.read())["rows"] == table.num_rows
+        sock = conn.sock
+        status, got, reply = http_send(
+            conn, "GET", "/datasets/chunked_threaded", {"Accept-Encoding": "identity"}
+        )
+        assert status == 200 and conn.sock is sock
+        assert decode_body(io.BytesIO(reply), "identity").read_all().equals(table)
+
+        with socket.create_connection((host, port), timeout=30) as raw:
+            raw.sendall(
+                b"POST /ingest/bad_chunks HTTP/1.1\r\nHost: x\r\n"
+                b"Transfer-Encoding: chunked\r\n\r\nzz\r\nabc\r\n0\r\n\r\n"
+            )
+            buf = b""
+            while chunk := raw.recv(1 << 16):  # ends only when the server closes
+                buf += chunk
+        assert buf.startswith(b"HTTP/1.1 400")
+        assert b"error" in buf.partition(b"\r\n\r\n")[2]
+    finally:
+        conn.close()
+        httpd.shutdown()
+        httpd.server_close()
+    for name in ("chunked_threaded", "chunked_asgi"):
+        for status, _, got in each(
+            fronts, "GET", f"/datasets/{name}", {"Accept-Encoding": "identity"}
+        ):
+            assert status == 200
+            assert decode_body(io.BytesIO(got), "identity").read_all().equals(table)
+    assert fronts["threaded"]("GET", "/datasets/bad_chunks")[0] == 404
+
+
 def test_post_multipart_ingest(fetch, table):
     from arrow_experiments_spark.transport.multipart import (
         encode_form_data,

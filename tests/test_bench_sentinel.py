@@ -420,6 +420,41 @@ def test_drift_gate_is_core_count_aware(tmp_path):
     assert "cpus_match" not in legacy["a"]
 
 
+def test_best_ever_anchor_is_kept_per_cpus(tmp_path):
+    """Best-ever minima are kept per (key, cpus): a key whose 8-core
+    minimum beats its 32-core one is still gated by a 32-core run against
+    its 32-core minimum, and an 8-core run against the 8-core one.  A key
+    with only 8-core history stays visible to a 32-core run without
+    gating it."""
+    import json
+
+    (tmp_path / "BENCH_r01.json").write_text(json.dumps({
+        "cpus": 32, "parsed": {"queries": {"e": 1.0, "g": 2.0}}
+    }))
+    (tmp_path / "BENCH_r01_c8.json").write_text(json.dumps({
+        "cpus": 8, "parsed": {"queries": {"e": 0.5, "h": 0.4}}
+    }))
+    certified, best = bench.drift_anchors(str(tmp_path))
+    cert_cpus, best_cpus = bench.anchor_cpus(str(tmp_path))
+    best_at = bench.best_by_cpus(str(tmp_path))
+    assert best == {"e": 0.5, "g": 2.0, "h": 0.4}
+    assert best_cpus == {"e": 8, "g": 32, "h": 8}
+    assert best_at == {"e": {32: 1.0, 8: 0.5}, "g": {32: 2.0}, "h": {8: 0.4}}
+
+    kw = dict(certified_cpus=cert_cpus, best_cpus=best_cpus, best_at=best_at)
+    vals = {"e": 2.5, "g": 2.1, "h": 1.2}
+    out32 = bench.vs_floor(vals, certified, best, run_cpus=32, **kw)
+    assert out32["e"] == {"ratio": 2.5, "anchor": "best_ever", "floor_sec": 1.0,
+                          "anchor_cpus": 32, "cpus_match": True}
+    assert out32["h"]["cpus_match"] is False and out32["h"]["ratio"] == 3.0
+    assert bench.drift_breaches(out32) == ["e"]
+
+    out8 = bench.vs_floor(vals, certified, best, run_cpus=8, **kw)
+    assert out8["e"]["floor_sec"] == 0.5 and out8["e"]["cpus_match"] is True
+    assert out8["g"]["cpus_match"] is False
+    assert bench.drift_breaches(out8) == ["e", "h"]
+
+
 def test_drift_gate_rc_forced_breach():
     """r15 verdict #7: the 2x drift clause is machine-enforced — a
     synthetic breach makes the run exit nonzero; an empty breach list

@@ -650,18 +650,18 @@ def test_upsert_snapshot_bucket_geometry_change_migrates(spark, tmp_path):
         assert json.load(f)["n_buckets"] == 16
 
 
-def test_upsert_snapshot_prepare_sees_bucketed_frame_when_geometry_matches(
-    spark, tmp_path
-):
-    """The snapshot frame handed to the ``prepare`` hook retains the
-    ``_bucket`` layout column exactly when the committed version carries
-    the CURRENT geometry — that is what lets a hook's bucket filter
-    prune at the parquet read (the seen-before anti-join shape).  On a
-    geometry change the hook must get the plain snapshot instead:
-    pruning against a foreign geometry is unsound."""
+def test_prepare_view_keeps_bucket_column_when_geometry_matches(spark, tmp_path):
+    """The committed snapshot as the gates see it (``_prepare_view``)
+    retains the ``_bucket`` layout column exactly when the committed
+    version carries the CURRENT geometry — that is what lets a gate's
+    bucket filter prune at the parquet read (the seen-before anti-join
+    shape).  On a geometry change the gate must get the plain snapshot
+    instead: pruning against a foreign geometry is unsound."""
     import os
 
     from arrow_experiments_spark.streaming.egress import (
+        _committed_version,
+        _prepare_view,
         read_snapshot,
         upsert_snapshot_sink,
     )
@@ -670,11 +670,12 @@ def test_upsert_snapshot_prepare_sees_bucketed_frame_when_geometry_matches(
         "user_id", "event_id", "value"
     ).limit(200)
     snap = str(tmp_path / "snap")
-    seen: list = []
+    n_users = src.select("user_id").distinct().count()
 
-    def prepare(batch_df, current):
-        seen.append(None if current is None else "_bucket" in current.columns)
-        return batch_df
+    def view(n_buckets):
+        return _prepare_view(
+            spark, snap, _committed_version(snap), n_buckets, ["user_id"]
+        )
 
     def run(df, n_buckets):
         staged = str(tmp_path / f"staged{run.n}")
@@ -683,20 +684,26 @@ def test_upsert_snapshot_prepare_sees_bucketed_frame_when_geometry_matches(
         stream = spark.readStream.schema(df.schema).parquet(staged)
         upsert_snapshot_sink(
             stream, snap, key_cols=["user_id"], order_col="event_id",
-            n_buckets=n_buckets, prepare=prepare,
+            n_buckets=n_buckets,
         )
 
     run.n = 0
-    run(src, 8)          # no committed version yet
-    run(src, 8)          # committed v0 carries n_buckets=8 → bucketed
-    run(src, 16)         # geometry change → plain snapshot, no _bucket
-    assert seen == [None, True, False], seen
+    assert view(8) is None  # no committed version yet
+    run(src, 8)
+    assert "_bucket" in view(8).columns  # v0 carries n_buckets=8
+    flat = view(16)  # geometry change → the flattened snapshot
+    assert "_bucket" not in flat.columns
+    assert sorted(flat.columns) == sorted(read_snapshot(spark, snap).columns)
+    assert flat.count() == n_users
 
+    run(src, 16)  # the merge migrates to the new geometry
+    assert "_bucket" in view(16).columns
+    assert "_bucket" not in view(8).columns
     final = read_snapshot(spark, snap)
     assert "_bucket" not in final.columns
-    assert final.count() == src.select("user_id").distinct().count()
+    assert final.count() == n_users
     with open(os.path.join(snap, "LATEST")) as f:
-        assert f.read().strip() == "v2"
+        assert f.read().strip() == "v1"
 
 
 def test_incremental_curation_sink_matches_batch_funnel(spark, tmp_path):
@@ -784,6 +791,187 @@ def test_incremental_curation_sink_matches_batch_funnel(spark, tmp_path):
         .count()
         == 0
     )
+
+
+def _curation_docs(spark, n):
+    """``n`` documents with distinct texts that pass the curation sink's
+    quality gate, as (doc_id, text) tuples in doc_id order."""
+    from arrow_experiments_spark.streaming.egress import _gated_firsts
+
+    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
+    rows = _gated_firsts(docs).orderBy("doc_id").limit(n).collect()
+    assert len(rows) == n
+    return [(r["doc_id"], r["text"]) for r in rows]
+
+
+def _stage_docs(spark, path, rows):
+    """Write (doc_id, text) rows as one parquet file; returns the schema."""
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df.coalesce(1).write.parquet(path)
+    return df.schema
+
+
+def _jobs_so_far(spark) -> int:
+    """The newest Spark job id — job ids are sequential, so the difference
+    around a call is the number of jobs it ran (the retained job list is
+    capped, so its size is not)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return max(jobs.head().jobId(), jobs.last().jobId()) if jobs.size() else -1
+
+
+def test_curation_sink_steady_state_jobs_per_batch(spark, tmp_path, monkeypatch):
+    """A curation micro-batch against a committed snapshot probes its
+    touched buckets once, anti-joins once and merges without a second
+    anti-join: at most 12 Spark jobs, and the raw delta is read once."""
+    import os
+
+    from arrow_experiments_spark.streaming import egress
+
+    docs = _curation_docs(spark, 60)
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    for i in range(3):
+        part = str(tmp_path / f"part{i}")
+        schema = _stage_docs(spark, part, docs[i * 20:(i + 1) * 20])
+        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
+        dst = os.path.join(staged, f"{i:03d}.parquet")
+        os.replace(os.path.join(part, src), dst)
+        # increasing mtimes: the file source reads oldest first
+        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
+
+    jobs: list[int] = []
+    run_foreach_batch = egress._run_foreach_batch
+
+    def counted(stream_df, merge, *args):
+        def merge_counted(batch_df, batch_id):
+            before = _jobs_so_far(spark)
+            merge(batch_df, batch_id)
+            jobs.append(_jobs_so_far(spark) - before)
+
+        return run_foreach_batch(stream_df, merge_counted, *args)
+
+    monkeypatch.setattr(egress, "_run_foreach_batch", counted)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged)
+    )
+    snap = str(tmp_path / "snap")
+    q = egress.incremental_curation_sink(stream, snap)
+
+    assert len(jobs) == 3, jobs
+    assert max(jobs[1:]) <= 12, jobs  # batches 1, 2 merge into a committed v
+    assert [p.numInputRows for p in q.recentProgress] == [20, 20, 20]
+    assert egress.read_snapshot(spark, snap).count() == 60
+
+
+def test_curation_sink_commits_only_novel_hashes(spark, tmp_path):
+    """The property the merge's ``assume_novel`` rests on: the sink's gate
+    drops every hash the committed snapshot holds — also when the
+    re-delivered copy carries a LOWER doc_id — and keeps one row per new
+    hash, the lowest in-batch doc_id.  The second version writes only the
+    novel rows."""
+    import os
+
+    from arrow_experiments_spark.streaming.egress import (
+        incremental_curation_sink,
+        read_snapshot,
+    )
+
+    docs = _curation_docs(spark, 8)
+    first = [(1000 + i, text) for i, (_id, text) in enumerate(docs[:5])]
+    second = [
+        # re-deliveries of committed documents: a lower doc_id, and the
+        # same row again
+        (10, first[0][1]),
+        first[1],
+        # new documents, one posted twice (the higher doc_id first)
+        (2001, docs[5][1]),
+        (2000, docs[5][1]),
+        (2002, docs[6][1]),
+        (2003, docs[7][1]),
+    ]
+    snap = str(tmp_path / "snap")
+    for i, rows in enumerate((first, second)):
+        staged = str(tmp_path / f"staged{i}")
+        schema = _stage_docs(spark, staged, rows)
+        stream = spark.readStream.schema(schema).parquet(staged)
+        incremental_curation_sink(stream, snap)
+
+    with open(os.path.join(snap, "LATEST")) as f:
+        assert f.read().strip() == "v1"
+    got = sorted(
+        (r["doc_id"], r["text"])
+        for r in read_snapshot(spark, snap).select("doc_id", "text").collect()
+    )
+    novel = [(2000, docs[5][1]), (2002, docs[6][1]), (2003, docs[7][1])]
+    want = sorted(first + novel)
+    assert got == want
+    # v1 wrote only the three novel rows; every v0 file is linked forward
+    v1 = [
+        os.path.join(dp, fn)
+        for dp, _d, fns in os.walk(os.path.join(snap, "v1"))
+        for fn in fns
+        if fn.endswith(".parquet")
+    ]
+    written = spark.read.parquet(*[p for p in v1 if os.stat(p).st_nlink == 1])
+    assert sorted(r["doc_id"] for r in written.collect()) == [2000, 2002, 2003]
+
+
+def test_curation_sink_checkpointed_reattach_commits_nothing(spark, tmp_path):
+    """Re-attaching a checkpointed curation run to its own checkpoint
+    commits nothing: with no new input no micro-batch runs, and a batch
+    replayed after a lost commit marker is skipped (the pointer already
+    names its version) — LATEST and the version's files stay as they were."""
+    import os
+
+    from arrow_experiments_spark.streaming.egress import (
+        incremental_curation_sink,
+        read_snapshot,
+    )
+
+    staged = str(tmp_path / "staged")
+    schema = _stage_docs(spark, staged, _curation_docs(spark, 10))
+    snap = str(tmp_path / "snap")
+    ckpt = str(tmp_path / "ckpt")
+
+    def attach():
+        stream = spark.readStream.schema(schema).parquet(staged)
+        incremental_curation_sink(stream, snap, checkpoint_dir=ckpt)
+
+    def state():
+        with open(os.path.join(snap, "LATEST")) as f:
+            latest = f.read().strip()
+        vdir = os.path.join(snap, latest)
+        files = sorted(
+            (os.path.relpath(p, vdir), os.stat(p).st_ino)
+            for p in (
+                os.path.join(dp, fn)
+                for dp, _d, fns in os.walk(vdir)
+                for fn in fns
+            )
+        )
+        versions = sorted(d for d in os.listdir(snap) if d.startswith("v"))
+        return latest, files, versions
+
+    attach()
+    before = state()
+    assert before[0] == "v0"
+    assert read_snapshot(spark, snap).count() == 10
+
+    attach()  # nothing new to read
+    assert state() == before
+
+    # crash after commit: the offsets are logged, the commit marker lost
+    os.remove(os.path.join(ckpt, "commits", "0"))
+    crc = os.path.join(ckpt, "commits", ".0.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    attach()  # replays batch 0, which the pointer already names
+    assert state() == before
+    assert read_snapshot(spark, snap).count() == 10
 
 
 def test_incremental_neardup_sink_gates_exact_and_near(spark, tmp_path):
