@@ -278,292 +278,104 @@ class WindowQualifier:
         return self.samples[i] <= self.limit
 
 
-class BandwidthSentinel:
-    """IN-LEG sentinel (r12 verdict Wrong #2): the loopback sentinel is
-    cache-resident CPU + socket, so the box's co-tenant phases —
-    memory-bandwidth-like, minutes long, inflating Spark walls 2-10× —
-    are INVISIBLE to it even when probed during them (measured r12:
-    46-138 s outlier batches with clean brackets on 6-12 s code).  This
-    probe measures what those phases actually steal: a 128 MiB int64
-    copy (256 MiB of DRAM traffic — far beyond LLC), timed as GB/s, run
-    at ~1 Hz on a background thread DURING each leg.
-
-    Calibration (measured r13, quiet box): idle 16-20 GB/s; during
-    busy Spark compute legs the per-probe series stays 14-16 GB/s with
-    ISOLATED dips to 3.7-7.1 (the engine's own shuffle/Arrow bursts),
-    so the per-leg statistic is the MEDIAN — engine self-use never
-    depresses the median below ~14 while a minutes-long co-tenant
-    phase depresses every probe in the window.  A leg is flagged when
-    its median falls under ``REL_BAND`` × the run reference (p90 of
-    all probes); legs with fewer than ``MIN_SAMPLES`` probes
-    (sub-second legs) stay governed by the bracketing loopback
-    sentinel alone.  A run contended END-TO-END self-reports through
-    the committed absolute reference (GB/s), the same posture as the
-    loopback sentinel's committed floor."""
-
-    BUF_MB = 128
-    GATHER_MB = 32
-    REL_BAND = 0.5
-    # gather promotion band — None = recorded-only, and FINAL (r14).
-    # Promotion was evaluated on two independent correlation datasets
-    # and rejected twice, for opposite failure modes: r13 (67 points,
-    # one mixed-runtime leg) — half the QUIET legs showed collapsed
-    # gather, so any useful band false-flags 32-53% of commit-worthy
-    # legs; r14 (67 points, a JVM-only leg and a Python-only leg per
-    # cycle, tools/data_gather_correlation_r14.jsonl) — quiet cycles
-    # never collapsed but even the best band missed half the inflated
-    # cycles (9/17 under 0.25x), and the "phase steals Python latency
-    # without slowing the JVM" hypothesis was refuted outright (zero
-    # cycles of Python-only inflation; the JVM leg inflates at least
-    # as often).  The signal is inconsistent across legs and days —
-    # closed as a verdict input; the series stays recorded as a
-    # post-hoc diagnostic (SCALE.md "Gather promotion: closed").
-    GATHER_BAND: float | None = None
-    MIN_SAMPLES = 2
-    INTERVAL_SEC = 1.0
-
-    def __init__(self):
-        import numpy as np
-
-        n = self.BUF_MB * 1024 * 1024 // 8
-        self._src = np.ones(n, dtype=np.int64)
-        self._dst = np.empty_like(self._src)
-        # second, RECORDED-ONLY series (r13): a random-gather probe —
-        # memory-LATENCY-sensitive where the sequential copy is
-        # bandwidth-sensitive.  Observed r13: 10-30 s batches on 6-7 s
-        # code passed both the loopback brackets AND the copy-median
-        # band, so whatever those phases steal is not plain DRAM
-        # bandwidth; the gather series is recorded alongside to test
-        # (post-hoc, across rounds) whether latency contention is the
-        # missing signal before promoting it to a verdict input.
-        gn = self.GATHER_MB * 1024 * 1024 // 8
-        rng = np.random.default_rng(7)
-        self._gidx = rng.permutation(gn).astype(np.int64)
-        self._gout = np.empty_like(self._gidx)
-        # (monotonic, copy GB/s, gather GB/s)
-        self.samples: list[tuple[float, float, float]] = []
-        # env floors read at CONSTRUCTION, not import (r13 ADVICE): a
-        # sweep tool that sets SPARK_GRAFT_BW_REF_FLOOR after importing
-        # bench must still see it at sentinel build time.  The class
-        # attributes below remain the documented defaults.
-        self.REF_FLOOR_GBS = float(
-            os.environ.get("SPARK_GRAFT_BW_REF_FLOOR", str(self.REF_FLOOR_GBS))
-        )
-        self.GATHER_REF_FLOOR_GBS = float(
-            os.environ.get(
-                "SPARK_GRAFT_GATHER_REF_FLOOR", str(self.GATHER_REF_FLOOR_GBS)
-            )
-        )
-        self.probe()  # fault in all buffers' pages (first touch ~50× slow)
-        self.samples.clear()
-
-    def probe(self) -> float:
-        import numpy as np
-
-        t0 = time.perf_counter()
-        np.copyto(self._dst, self._src)
-        dt = time.perf_counter() - t0
-        bw = self._src.nbytes * 2 / 1e9 / max(dt, 1e-9)
-        t1 = time.perf_counter()
-        np.take(self._gidx, self._gidx, out=self._gout)
-        gdt = time.perf_counter() - t1
-        gbw = self._gidx.nbytes * 2 / 1e9 / max(gdt, 1e-9)
-        self.samples.append((time.monotonic(), bw, gbw))
-        return bw
-
-    # Calibrated ANCHOR for the run reference (this box copies 16-20
-    # GB/s quiet; the anchor is set conservatively below that).  A run
-    # that STARTS inside a co-tenant phase would otherwise
-    # self-normalize — every early probe depressed, p90 ≈ the phase
-    # level, contaminated legs judged clean against it.  Anchoring the
-    # reference means such legs flag "contended" (loudly visible)
-    # instead of committing silently.  On permanently slower hardware
-    # everything would flag until SPARK_GRAFT_BW_REF_FLOOR is
-    # recalibrated — the intended failure direction (flagged, never
-    # silently trusted), same posture as the loopback band constants
-    # above, which are equally box-calibrated.  The class value is the
-    # default; __init__ overrides from the env at construction time.
-    REF_FLOOR_GBS = 12.0
-
-    @property
-    def reference(self) -> float:
-        """p90 of all copy probes this run, anchored from below by the
-        calibrated floor — the quiet-box bandwidth."""
-        vals = sorted(s[1] for s in self.samples)
-        p90 = vals[int(len(vals) * 0.9)] if vals else 0.0
-        return max(p90, self.REF_FLOOR_GBS)
-
-    # gather anchor, same self-normalization rationale as REF_FLOOR_GBS
-    # (this box gathers ~1.5-2.2 GB/s-equivalent quiet at 32 MiB);
-    # default here, env override in __init__
-    GATHER_REF_FLOOR_GBS = 1.0
-
-    @property
-    def gather_reference(self) -> float:
-        """p90 of the gather series, anchored from below."""
-        vals = sorted(s[2] for s in self.samples)
-        p90 = vals[int(len(vals) * 0.9)] if vals else 0.0
-        return max(p90, self.GATHER_REF_FLOOR_GBS)
-
-    def leg_clean(self, bws: list[float]):
-        """True/False verdict for a leg's in-leg series; None when the
-        leg was too short to judge (defer to the bracketing sentinel).
-        The statistic is statistics.median — the same one the leg
-        records display, so a committed diagnostic can never look
-        in-band on a leg this verdict flagged."""
-        import statistics
-
-        if len(bws) < self.MIN_SAMPLES:
-            return None
-        return statistics.median(bws) >= self.REL_BAND * self.reference
-
-    def leg_clean_full(self, bws: list[float], gathers: list[float]):
-        """Copy verdict AND (when promoted) the gather verdict: a leg
-        is contended if either series' median falls under its band.
-        ``GATHER_BAND = None`` keeps the gather series recorded-only
-        (the r13 default while the correlation dataset accrues);
-        setting a number promotes it."""
-        import statistics
-
-        copy_verdict = self.leg_clean(bws)
-        if self.GATHER_BAND is None:
-            return copy_verdict
-        if len(gathers) < self.MIN_SAMPLES:
-            return copy_verdict
-        gather_ok = statistics.median(gathers) >= (
-            self.GATHER_BAND * self.gather_reference
-        )
-        if copy_verdict is None:
-            return gather_ok
-        return copy_verdict and gather_ok
-
-    def between(self, t0: float, t1: float) -> list[float]:
-        """Copy probes recorded in the monotonic interval [t0, t1]."""
-        return [s[1] for s in self.samples if t0 <= s[0] <= t1]
-
-    def gather_between(self, t0: float, t1: float) -> list[float]:
-        """Gather probes (the recorded-only latency series) in the
-        monotonic interval [t0, t1]."""
-        return [s[2] for s in self.samples if t0 <= s[0] <= t1]
-
-    def window(self) -> "_BwWindow":
-        return _BwWindow(self)
-
-
-class _BwWindow:
-    """Context manager: background ~1 Hz bandwidth probes for one leg."""
-
-    def __init__(self, sentinel: BandwidthSentinel):
-        self.sentinel = sentinel
-        self.bws: list[float] = []
-
-    def __enter__(self):
-        import threading
-
-        self.t0 = time.monotonic()
-        self._stop = threading.Event()
-
-        def run():
-            while not self._stop.is_set():
-                self.bws.append(self.sentinel.probe())
-                self._stop.wait(self.sentinel.INTERVAL_SEC)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self._stop.set()
-        self._thread.join()
-        self.t1 = time.monotonic()
-        return False
-
-    def clean(self):
-        return self.sentinel.leg_clean(self.bws)
-
-    def gathers(self) -> list[float]:
-        """The recorded-only gather series for this window (post-hoc
-        correlation diagnostics — not a verdict input)."""
-        return self.sentinel.gather_between(self.t0, self.t1)
-
-
-def bw_sentinel() -> BandwidthSentinel:
-    """The in-leg sentinel packaged for the sweep tools (r12 verdict
-    Wrong #2), like sweep_qualifier packages the loopback sentinel.
-    Three seed probes anchor the run reference before the first leg."""
-    s = BandwidthSentinel()
-    for _ in range(3):
-        s.probe()
-    return s
-
-
 # 15/round (was 10 through r13): 90 registered non-headline keys had
 # no wall-clock series entering r14 and 10/round would not close the
 # gap by r20 — 15 exactly does.  Tail keys are mostly sub-second plans
 # at sf0.1, so the extra 5 cost ~1 min/round of budget.
 TAIL_COUNT = 15
 
+# The one certified-floor ledger: {"keys": {key: {cpus: record}}, "runs":
+# [...]}, written only by tools/certify_bench.py.  A record anchors the
+# drift gate when its "certified" flag is set.
+LEDGER = "BENCH_FLOORS.json"
 
-def _tail_rotation(queries) -> list[str]:
+
+def session_cpus(spark) -> int:
+    """The core count the live session runs on (``local[N]`` → N).  Read
+    once per run and used for the drift gate, BENCH_DETAIL ``cpus`` and
+    ledger stamps, so a floor always carries the cores it was taken at."""
+    return int(spark.sparkContext.defaultParallelism)
+
+
+def read_anchors(base: str | None = None):
+    """The drift anchors, in one read of the committed files:
+
+    - ``certified``: ``{key: {cpus: sec}}`` from the ledger's certified
+      records;
+    - ``best``: ``{key: {cpus: sec}}``, the best-ever committed value per
+      (key, cpus) across the ``BENCH_r*.json`` headline and tail sections
+      (cpus in first-seen file order; files without a ``cpus`` field do
+      not anchor);
+    - ``last_round``: the latest round ``N`` of a ``BENCH_rN.json`` whose
+      ``tail_queries`` section holds each key (the tail rotation's
+      ledger)."""
+    base = base or os.path.dirname(os.path.abspath(__file__))
+    certified: dict[str, dict[int, float]] = {}
+    try:
+        with open(os.path.join(base, LEDGER)) as fh:
+            ledger = json.load(fh)
+    except (OSError, ValueError):
+        ledger = {}
+    for k, at in (ledger.get("keys") or {}).items():
+        for cpus, r in at.items():
+            if r.get("certified") and isinstance(r.get("sec"), (int, float)):
+                certified.setdefault(k, {})[int(cpus)] = float(r["sec"])
+    best: dict[str, dict[int, float]] = {}
+    last_round: dict[str, int] = {}
+    for path in sorted(glob.glob(os.path.join(base, "BENCH_r*.json"))):
+        try:
+            with open(path) as fh:
+                rec = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        parsed = rec.get("parsed", rec) if isinstance(rec, dict) else None
+        if not isinstance(parsed, dict):
+            continue
+        m = re.search(r"r(\d+)\.json$", path)
+        if m:
+            for k in parsed.get("tail_queries") or {}:
+                last_round[k] = max(last_round.get(k, 0), int(m.group(1)))
+        try:
+            cpus = int(rec["cpus"])
+        except (KeyError, TypeError, ValueError):
+            continue
+        for section in ("queries", "tail_queries"):
+            sec = parsed.get(section)
+            for k, v in (sec.items() if isinstance(sec, dict) else ()):
+                if isinstance(v, (int, float)):
+                    at = best.setdefault(k, {})
+                    at[cpus] = min(at.get(cpus, float("inf")), float(v))
+    return certified, best, last_round
+
+
+def drift_anchors(base: str | None = None):
+    """``(certified, best)`` from :func:`read_anchors`: every key with a
+    committed timing is in one of the two maps."""
+    return read_anchors(base)[:2]
+
+
+def _tail_rotation(queries, last_round: dict[str, int]) -> list[str]:
     """r11 verdict #6: ~110 of the 154 registered queries have plan
     audits but no wall-clock series.  Each round, the TAIL_COUNT
     non-headline queries that were least recently benched get one
     window-qualified sample; the ledger is the committed
-    ``BENCH_r*.json`` files' ``tail_queries`` sections (the driver
-    stores the printed JSON line under ``parsed``), never-benched keys
-    first, lexicographic tie-break — the same exactly-predictable LRV
-    total order the oracle rotation uses (registry.all_queries)."""
-    import glob
-    import re
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    led: dict[str, int] = {}
-    for path in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        m = re.search(r"r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rec, dict):
-            continue
-        parsed = rec.get("parsed", rec)
-        section = parsed.get("tail_queries", {}) if isinstance(parsed, dict) else {}
-        for k in section:
-            led[k] = max(led.get(k, 0), rnd)
+    ``BENCH_r*.json`` files' ``tail_queries`` sections
+    (:func:`read_anchors`), never-benched keys first, lexicographic
+    tie-break — the same exactly-predictable LRV total order the oracle
+    rotation uses (registry.all_queries)."""
     cands = [n for n in queries if n not in HEADLINE]
-    cands.sort(key=lambda n: (led.get(n, 0), n))
+    cands.sort(key=lambda n: (last_round.get(n, 0), n))
     return cands[:TAIL_COUNT]
-
-
-def sweep_qualifier(spark) -> "WindowQualifier":
-    """The bench's window qualifier packaged for the SCALE sweep tools
-    (r11 verdict #2): same sentinel workload (s2_serve_1m_identity —
-    CPU + loopback socket, no Spark jobs, no disk), same BAND/floor
-    rules.  Three warm probes seed the floor (the first also pays the
-    lazy 1M-row server materialization, which is why it is discarded
-    by re-probing rather than special-cased)."""
-    qual = WindowQualifier(
-        lambda: _bench_transport(spark, "s2_serve_1m_identity")
-    )
-    for _ in range(3):
-        qual.probe()
-    return qual
 
 
 def commit_stat(samples: list[float]) -> float:
     """The COMMITTED statistic: MIN of the (window-qualified clean)
     samples.  r14 (verdict #1): the box's co-tenant phases inflate
     mildly (1.5-1.9×) below every probe's detection threshold, so any
-    order statistic above the min embeds phase inflation — the box-noise
-    protocol's conclusion (SCALE.md gather rejection; three rounds of
-    paired A/Bs) is that min over clean legs is the only load-bearing
-    statistic on this box.  Round-over-round DRIFT is watched via
-    drift_stat in BENCH_DETAIL instead, where r11-r13's committed
-    lower-middle keeps its series."""
+    order statistic above the min embeds phase inflation — min over
+    clean legs is the only load-bearing statistic on this box.
+    Round-over-round DRIFT is watched via drift_stat in BENCH_DETAIL
+    instead, where r11-r13's committed lower-middle keeps its series."""
     return round(min(samples), 3)
 
 
@@ -576,147 +388,29 @@ def drift_stat(samples: list[float]) -> float:
     return round(s[(len(s) - 1) // 2], 3)
 
 
-def drift_anchors(
-    base: str | None = None,
-) -> tuple[dict[str, float], dict[str, float]]:
-    """Per-key drift anchors (r14 verdict #5): the CERTIFIED floors from
-    BENCH_QUIET.json (quiet-window provenance — the formal anchor) and
-    the best-ever committed values across all BENCH_r*.json (headline +
-    tail sections — the fallback for never-certified keys)."""
-    base = base or os.path.dirname(os.path.abspath(__file__))
-    certified: dict[str, float] = {}
-    # BENCH_QUIET (headline, strongest provenance) wins over BENCH_BULK
-    # (registry-wide r15 bulk pass) on overlap — ordered reads + setdefault
-    for name in ("BENCH_QUIET.json", "BENCH_BULK.json"):
-        try:
-            with open(os.path.join(base, name)) as fh:
-                rec = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        keys = rec.get("keys", {}) if isinstance(rec, dict) else {}
-        for k, r in keys.items():
-            if (
-                isinstance(r, dict)
-                and r.get("certified")
-                and isinstance(r.get("sec"), (int, float))
-            ):
-                certified.setdefault(k, float(r["sec"]))
-    best = {k: min(m.values()) for k, m in best_by_cpus(base).items()}
-    return certified, best
-
-
-# Core-count provenance default for floor records that predate r17:
-# every committed certification/bulk/bench run before round 17 was taken
-# at the driver's main config, local[32] (BENCH_QUIET/BULK/r01..r16).
-# New records carry an explicit "cpus" field; the 8-core runs
-# (BENCH_r16_c8.json, BENCH_r17_c8.json) do, and they feed the best-ever
-# anchors at 8 cores only (best_by_cpus).
-_FLOOR_DEFAULT_CPUS = 32
-
-
-def _rec_cpus(rec: dict, default: int = _FLOOR_DEFAULT_CPUS) -> int:
-    """Best-effort int cpus from a bench/ledger record's top level."""
-    try:
-        return int(rec.get("cpus") or default)
-    except (TypeError, ValueError):
-        return default
-
-
-def best_by_cpus(base: str | None = None) -> dict[str, dict[int, float]]:
-    """Best-ever committed value per (key, cpus) across all BENCH_r*.json
-    (headline + tail sections), ``{key: {cpus: seconds}}`` with cpus in
-    first-seen file order.  :func:`vs_floor` gates a run on the minimum
-    recorded at the run's own core count, so a faster 8-core minimum
-    cannot un-gate a key that has 32-core history."""
-    base = base or os.path.dirname(os.path.abspath(__file__))
-    best: dict[str, dict[int, float]] = {}
-    for path in sorted(glob.glob(os.path.join(base, "BENCH_r*.json"))):
-        try:
-            rec = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        parsed = rec.get("parsed") if isinstance(rec, dict) else None
-        if not isinstance(parsed, dict):
-            continue
-        file_cpus = _rec_cpus(rec)
-        for section in ("queries", "tail_queries"):
-            sec = parsed.get(section)
-            for k, v in (sec.items() if isinstance(sec, dict) else ()):
-                if isinstance(v, (int, float)):
-                    at = best.setdefault(k, {})
-                    at[file_cpus] = min(at.get(file_cpus, float("inf")), float(v))
-    return best
-
-
-def anchor_cpus(
-    base: str | None = None,
-) -> tuple[dict[str, int], dict[str, int]]:
-    """Per-key core-count provenance for the drift anchors (r16 verdict
-    #2: floors certified at 32 cores false-fire the 2x gate on any
-    well-scaling key in an 8-core run — agg_hll_sketch_exchange's genuine
-    8/32 ratio is 2.46).  Mirrors :func:`drift_anchors` precedence
-    exactly: QUIET wins over BULK per key; the best-ever map records the
-    cpus of the run that produced each key's winning minimum.  Records
-    without a cpus field default to ``_FLOOR_DEFAULT_CPUS``."""
-    base = base or os.path.dirname(os.path.abspath(__file__))
-    certified: dict[str, int] = {}
-    for name in ("BENCH_QUIET.json", "BENCH_BULK.json"):
-        try:
-            with open(os.path.join(base, name)) as fh:
-                rec = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rec, dict):
-            continue
-        file_cpus = _rec_cpus(rec)
-        keys = rec.get("keys", {})
-        for k, r in (keys.items() if isinstance(keys, dict) else ()):
-            if (
-                isinstance(r, dict)
-                and r.get("certified")
-                and isinstance(r.get("sec"), (int, float))
-            ):
-                certified.setdefault(k, _rec_cpus(r, file_cpus))
-    best_cpus = {k: min(m, key=m.get) for k, m in best_by_cpus(base).items()}
-    return certified, best_cpus
-
-
 def vs_floor(
     vals: dict[str, float],
-    certified: dict[str, float],
-    best: dict[str, float],
+    certified: dict[str, dict[int, float]],
+    best: dict[str, dict[int, float]],
     run_cpus: int | None = None,
-    certified_cpus: dict[str, int] | None = None,
-    best_cpus: dict[str, int] | None = None,
-    best_at: dict[str, dict[int, float]] | None = None,
 ) -> dict[str, dict]:
     """Each key's committed value vs its drift anchor: the certified
     floor when one exists, else best-ever committed, else no anchor
-    (first-ever timing — the next round's anchor is this value).
-
-    With ``run_cpus`` (plus the provenance maps from
-    :func:`anchor_cpus`), each anchored record also carries
-    ``anchor_cpus`` and ``cpus_match`` — the drift gate only fires on
-    same-cpus anchors (r16 verdict #2: a 32-core floor is not a valid
-    2x bound for an 8-core run on a key that actually scales).  With
-    ``best_at`` (:func:`best_by_cpus`), a best-ever anchor is the
-    minimum recorded at ``run_cpus`` when one exists; a key with only
-    other-cpus history keeps its overall minimum, visible but not
-    gating."""
+    (first-ever timing — the next round's anchor is this value).  Within
+    a source the floor taken at ``run_cpus`` is the anchor; a key with
+    only other-cpus floors is anchored at its lowest one, which stays
+    visible (``cpus_match: false``) but does not gate (r16 verdict #2: a
+    32-core floor is not a valid 2x bound for an 8-core run).  Without
+    ``run_cpus`` the records carry no cpus fields."""
     out: dict[str, dict] = {}
     for k, v in vals.items():
-        if k in certified:
-            anchor, src = certified[k], "certified"
-            a_cpus = (certified_cpus or {}).get(k, _FLOOR_DEFAULT_CPUS)
-        elif k in best:
-            anchor, src = best[k], "best_ever"
-            a_cpus = (best_cpus or {}).get(k, _FLOOR_DEFAULT_CPUS)
-            same = (best_at or {}).get(k, {}).get(run_cpus)
-            if same is not None:
-                anchor, a_cpus = same, run_cpus
-        else:
+        src = "certified" if k in certified else "best_ever" if k in best else None
+        if src is None:
             out[k] = {"ratio": None, "anchor": "none"}
             continue
+        at = (certified if src == "certified" else best)[k]
+        a_cpus = run_cpus if run_cpus in at else min(at, key=at.get)
+        anchor = at[a_cpus]
         rec = {
             "ratio": round(v / anchor, 3) if anchor > 0 else None,
             "anchor": src,
@@ -766,9 +460,9 @@ def accrue_certified(
     prev: dict[str, dict],
     stale_limit: int = 3,
 ) -> dict[str, dict]:
-    """Merge a certification run's per-key records with a prior ledger
-    (shared by tools/certify_bench.py and tools/bulk_bench.py).
-    Semantics (r14 accrual + r15 staleness, ADVICE r14):
+    """Merge a certification run's per-key records with the ledger's
+    prior records at the same cpus (tools/certify_bench.py).  Semantics
+    (r14 accrual + r15 staleness, ADVICE r14):
 
     - a key certified by ANY run keeps its LOWEST certified floor;
     - when the current run certifies slower than the kept floor, the
@@ -832,99 +526,105 @@ def accrue_certified(
     return keys
 
 
-def qualified_legs(qual, leg_fns, min_clean: int = 2, bw=None):
-    """Sentinel-bracket a sweep's measurement legs (r11 verdict #2 —
-    the SCALE sweeps used to commit min-over-N-legs and adjudicate
-    9-69 s spreads by hand).  ``leg_fns`` are zero-arg callables that
-    each run ONE genuinely fresh leg and return its wall seconds
-    (legs must not be replays of each other — the caller stages a
-    fresh delta per leg).  Legs run in order until ``min_clean`` of
-    them were bracketed by a clean sentinel window, or the supply is
-    exhausted.  Returns ``(committed_sec, tag, legs)`` where ``legs``
-    is ``[{"sec": s, "window": "clean"|"contended"}, ...]``; the
-    committed number is the MIN of clean legs ("clean"), else the min
-    of everything ("contended" — flagged, never silently trusted).
+def query_timer(spark, sf_dir: str, queries):
+    """``measure(name) -> seconds`` for every bench item: the S1/S2
+    transport scenarios by name, else the registered query forced
+    end-to-end through the noop sink (full compute, no driver collect)."""
 
-    Pass ``bw`` (a ``BandwidthSentinel``) to also sample memory
-    bandwidth INSIDE each leg (r12 verdict Wrong #2: a co-tenant
-    window that opens and closes inside one leg is invisible to the
-    bracketing probes); a leg whose in-leg bandwidth median falls
-    below the band is contended regardless of its brackets."""
-    import statistics
+    def measure(name: str) -> float:
+        if name == "s1_replay_10m":
+            return _bench_replay(spark)
+        if name == "s1_replay_10m_x4":
+            return _bench_replay_10m_x4(spark)
+        if name in _S2_STRATEGIES:
+            return _bench_transport(spark, name)
+        t0 = time.perf_counter()
+        queries[name].build(spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        dt = time.perf_counter() - t0
+        spark.catalog.clearCache()
+        return dt
 
-    legs: list[dict] = []
-    inlegs: list[tuple[list[float], list[float]]] = []
-    brackets: list[tuple[int, int]] = []
-    fns = iter(leg_fns)
+    return measure
 
-    def run_leg(fn) -> bool:
-        """Run one leg; record it; return the PROVISIONAL verdict."""
-        b = qual.probe()
-        if bw is not None:
-            with bw.window() as w:
-                sec = fn()
-            inleg = w.bws
-            gathers = getattr(w, "gathers", lambda: [])()
-        else:
-            sec = fn()
-            inleg, gathers = [], []
-        a = qual.probe()
-        ok = qual.clean(b, a) and (
-            bw is None or bw.leg_clean_full(inleg, gathers) is not False
-        )
-        leg = {"sec": round(sec, 2)}
-        if inleg:
-            leg["bw_med_gbs"] = round(statistics.median(inleg), 1)
-            if gathers:
-                leg["gather_med_gbs"] = round(statistics.median(gathers), 2)
-        legs.append(leg)
-        inlegs.append((inleg, gathers))
-        brackets.append((b, a))
-        return ok
 
-    def finalize() -> int:
-        """Re-derive every leg's verdict with the CURRENT (end-of-run)
-        bandwidth reference and rewrite the tags; returns the clean
-        count.  A run whose start falls inside a co-tenant phase would
-        otherwise self-normalize (the reference p90 is phase-depressed
-        when the early legs are judged, so contaminated legs tag clean
-        and the early-break stops the run); re-deriving after all legs
-        means a later quiet probe raises the reference and
-        retroactively flags them."""
-        n = 0
-        for leg, (inleg, gathers), (b, a) in zip(legs, inlegs, brackets):
-            ok = qual.clean(b, a) and (
-                bw is None or bw.leg_clean_full(inleg, gathers) is not False
-            )
-            leg["window"] = "clean" if ok else "contended"
-            n += ok
-        return n
+def bracketed(qual: WindowQualifier, leg) -> tuple[float, bool]:
+    """One leg between two fresh sentinel probes: (seconds, clean)."""
+    b = qual.probe()
+    v = leg()
+    return v, qual.clean(b, qual.probe())
 
-    # the in-flight verdicts only steer the early-break; the COMMITTED
-    # verdicts are re-derived by finalize()
-    n_clean = 0
-    for fn in fns:
-        n_clean += run_leg(fn)
-        if n_clean >= min_clean:
-            break
-    # r13 ADVICE: the re-derivation can only get STRICTER (the
-    # reference rises as quiet probes accrue), so a retro-flagged leg
-    # can leave fewer than min_clean survivors — keep consuming the
-    # remaining leg supply until the FINAL verdicts hold min_clean
-    # clean legs or the supply is exhausted.
-    while finalize() < min_clean:
-        fn = next(fns, None)
-        if fn is None:
-            break
-        run_leg(fn)
-    clean_vals = [g["sec"] for g in legs if g["window"] == "clean"]
-    if clean_vals:
-        # supply exhausted below the promised sample count: still a
-        # min-over-clean commit, but tagged so consumers know the
-        # sample was thinner than asked (r13 ADVICE)
-        tag = "clean" if len(clean_vals) >= min_clean else "clean_partial"
-        return min(clean_vals), tag, legs
-    return min(g["sec"] for g in legs), "contended", legs
+
+def first_clean(qual: WindowQualifier, leg, tries: int = 2):
+    """Bracketed legs until one is clean or ``tries`` ran out: returns
+    (the clean value or None, every value measured)."""
+    vals: list[float] = []
+    for _ in range(tries):
+        v, ok = bracketed(qual, leg)
+        vals.append(v)
+        if ok:
+            return v, vals
+    return None, vals
+
+
+def measure_keys(qual: WindowQualifier, measure, items: list[str], passes: int = 3):
+    """The per-key measurement: ``passes`` recorded passes in alternating
+    order, each leg bracketed by the sentinel probes either side of it.
+    The box's co-tenant phases last minutes, so back-to-back repeats of
+    one item would land in the same phase; alternating the order puts an
+    item at the tail of one pass at the head of the next.  A key
+    commits :func:`commit_stat` over its clean legs ("clean"); a key
+    whose every leg was contended re-runs between fresh probes
+    ("rerun_clean"), else commits over everything, flagged
+    ("contended").  Returns ``(legs, timings, drift_watch, quality,
+    spread)``; ``legs[key]`` is ``[(sec, probe_before, probe_after)]``
+    per pass."""
+    legs: dict[str, list[tuple[float, int, int]]] = {k: [] for k in items}
+    for i in range(passes):
+        order = items if i % 2 == 0 else list(reversed(items))
+        last = qual.probe()
+        for name in order:
+            v = measure(name)
+            nxt = qual.probe()
+            legs[name].append((v, last, nxt))
+            last = nxt
+    timings: dict[str, float] = {}
+    drift_watch: dict[str, float] = {}
+    quality: dict[str, str] = {}
+    for k in items:
+        clean = [v for v, b, a in legs[k] if qual.clean(b, a)]
+        tag = "clean"
+        if not clean:
+            v, tried = first_clean(qual, lambda: measure(k))
+            if v is None:
+                tag, clean = "contended", [s for s, _, _ in legs[k]] + tried
+            else:
+                tag, clean = "rerun_clean", [v]
+        timings[k] = commit_stat(clean)
+        drift_watch[k] = drift_stat(clean)
+        quality[k] = tag
+    spread = {
+        k: [round(min(s for s, _, _ in legs[k]), 3),
+            round(max(s for s, _, _ in legs[k]), 3)]
+        for k in items
+    }
+    return legs, timings, drift_watch, quality, spread
+
+
+# Keys re-measured after the passes with two extra bracketed samples each
+# (r6/r8/r9 verdicts: the CPU-bound keys and IPC-codec serves whose
+# floors drifted against a steadier sentinel); the extras join the
+# committed statistic.
+FLOOR_WATCH = (
+    "s2_serve_1m_ipc_zstd",
+    "s2_serve_1m_ipc_lz4",
+    "asof_join",
+    "events_session_window",
+    "s1_replay_10m",
+    "topk_per_group",
+    "dedup_exact",
+)
 
 
 # x4 band factor: committed aggregate GiB/s must reach this share of the
@@ -932,7 +632,7 @@ def qualified_legs(qual, leg_fns, min_clean: int = 2, bw=None):
 # quiet-window x4 runs measure 1.2-1.5x the userspace probe because the
 # serve path is mmap splice, so 0.95 still leaves headroom while a
 # phase-halved run falls clearly below)
-_X4_BAND = float(os.environ.get("SPARK_GRAFT_X4_BAND", "0.95"))
+_X4_BAND = 0.95
 
 
 def _bench_replay_100m(
@@ -1436,6 +1136,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
     spark = build_session(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
+    run_cpus = session_cpus(spark)
     queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
 
@@ -1444,176 +1145,56 @@ def main() -> None:
     queries["q1_pricing_summary"].build(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-
-    # The bench machine sees recurring co-tenant contention: contiguous
-    # ~2-4 min windows (roughly every ~10 min) where everything measured
-    # inside runs 5-30× slower (wall≈CPU, loadavg low — a neighbor
-    # stealing memory bandwidth, invisible to /proc/loadavg).  Back-to-back
-    # repeats land both runs inside one window; and because a full pass
-    # lasts about one window period, the SAME tail items can hit windows
-    # in consecutive passes.  So: THREE full passes, alternating order
-    # (an item at the tail of one pass runs at the head of the next), and
-    # per-item MEDIAN — robust when at most one pass hits a window, and
-    # unlike min it doesn't reward a lucky cache-warm outlier, making
-    # round-over-round regression signal real (round-2 verdict item 5).
-    def measure(name: str) -> float:
-        if name == "s1_replay_10m":
-            return _bench_replay(spark)
-        if name == "s1_replay_10m_x4":
-            return _bench_replay_10m_x4(spark)
-        if name in _S2_STRATEGIES:
-            return _bench_transport(spark, name)
-        t0 = time.perf_counter()
-        queries[name].build(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return dt
+    measure = query_timer(spark, sf_dir, queries)
 
     # Machine-noise sentinel (round-4 verdict item 5, upgraded to a
     # SELF-QUALIFYING window r10 verdict #3): the same fixed pure-serve
     # workload (s2_serve_1m_identity — CPU + localhost socket, no Spark
     # jobs, no disk) probed between EVERY measured item, so each sample
-    # carries its own bracket.  Spread between probes IS the co-tenant
-    # noise floor; a sample whose brackets exceed BAND × the run's best
-    # probe was measured in a contended phase and is excluded from the
-    # committed statistic (see WindowQualifier).
+    # carries its own bracket (see WindowQualifier).
     qual = WindowQualifier(
         lambda: _bench_transport(spark, "s2_serve_1m_identity")
     )
-    # in-leg bandwidth sentinel (r12 verdict Wrong #2): the loopback
-    # sentinel brackets each leg but cannot see a memory-bandwidth
-    # co-tenant phase that opens and closes INSIDE one — these probes
-    # run at ~1 Hz during every measured leg and flag it directly
-    bw = bw_sentinel()
 
-    gather_meds: dict[str, list] = {}
-
-    # keys needing a per-leg re-warm (r15 — rationale at the warm-pass
-    # note below): count = untimed executions immediately before every
-    # recorded sample
+    # keys needing a per-leg re-warm (r15): count = untimed executions
+    # immediately before every recorded sample.  events_session_window's
+    # executed AQE plans are byte-identical on its fast and slow runs;
+    # its spread was the JVM C2 compiler promoting the key's large
+    # generated-code span across its first ~6 executions (decay series
+    # 1.51, 0.71, 0.60, ... 0.52 s), and with 43 other keys compiled
+    # between passes the bounded codegen/JIT caches evict it, so a
+    # one-time deeper warm is not enough.  Applied in measure_leg so
+    # every recorded sample — pass legs, re-runs, floor_watch extras —
+    # is steady-state.
     _pre_warm = {"events_session_window": 2}
 
-    def measure_inleg(name: str):
-        import statistics
-
-        # per-leg re-warm (r15, see the _pre_warm note below): applied
-        # HERE so every recorded sample — pass legs, contended re-runs,
-        # floor_watch extras — is steady-state, not just the pass loop's
+    def measure_leg(name: str) -> float:
         for _ in range(_pre_warm.get(name, 0)):
             measure(name)
-        with bw.window() as w:
-            v = measure(name)
-        # latency diagnostics (r13): per-leg gather medians accumulate
-        # per key so a cross-round adjudication of any odd BENCH number
-        # can check the latency-phase signature without re-running
-        g = w.gathers()
-        gather_meds.setdefault(name, []).append(
-            round(statistics.median(g), 2) if g else None
-        )
-        return v, (w.bws, g)
+        return measure(name)
 
     items = ["s1_replay_10m", "s1_replay_10m_x4", *_S2_STRATEGIES, *names]
     # WARM PASS (r14): run every item once, untimed, before the three
-    # recorded passes.  The r14 certification data showed pass-1
-    # samples structurally slower on the heavier keys (per-session
-    # codegen + parquet page cache — e.g. dedup_minhash_lsh spread
-    # [1.22, 3.97] on an otherwise idle box, and re-running with a
-    # warm page cache did not close it, so it is codegen, not IO).
-    # Those cold samples never win the min (the committed statistic)
-    # but they pollute the spread/drift series and block spread-based
-    # certification.  The bench's declared object is STEADY-STATE
-    # timings — the reference's own protocol pre-materializes before
-    # timing (get_simple server.py:144) — so the warm pass aligns the
-    # measurement with the declaration at ~25% extra wall.
-    # r15 (verdict #3, the last uncertified headline floor): measured
-    # decay series for events_session_window at sf0.1 on a quiet box —
-    # 1.51, 0.71, 0.60, 0.58, 0.56, 0.60, 0.54, 0.54, 0.52, 0.52 — with
-    # BYTE-IDENTICAL executed AQE plans (ids normalized) on the slow and
-    # fast runs, so the r14 quiet-run spread ([0.46, 0.79] / [0.53, 1.15])
-    # was the JVM C2 compiler promoting the key's large generated-code
-    # span across its first ~6 executions, not plan variance or box
-    # state.  A deeper one-time warm is NOT enough in the full bench:
-    # with 43 other keys' generated classes compiled between passes, the
-    # key's code is evicted from the bounded codegen/JIT caches and every
-    # pass restarts the decay slope (an r15 certify run with a 6-deep
-    # initial warm still spread [0.47, 1.14]).  The fix that matches the
-    # steady-state declaration is PER-LEG: re-warm the key immediately
-    # before each recorded sample (2 untimed executions, ~1.2 s/pass —
-    # applied inside measure_inleg so contended re-runs and floor_watch
-    # extras are covered too).
+    # recorded passes.  Pass-1 samples were structurally slower on the
+    # heavier keys (per-session codegen + parquet page cache); they never
+    # won the min but polluted the spread/drift series.  The bench's
+    # declared object is STEADY-STATE timings — the reference's own
+    # protocol pre-materializes before timing (get_simple server.py:144).
     for name in items:
         measure(name)
-    passes: list[dict[str, float]] = []
-    brackets: list[dict[str, tuple[int, int]]] = []
-    inlegs: list[dict[str, list[float]]] = []
-    for i in range(3):
-        order = items if i % 2 == 0 else list(reversed(items))
-        p: dict[str, float] = {}
-        br: dict[str, tuple[int, int]] = {}
-        il: dict[str, list[float]] = {}
-        last = qual.probe()
-        for name in order:
-            p[name], il[name] = measure_inleg(name)
-            nxt = qual.probe()
-            br[name] = (last, nxt)
-            last = nxt
-        passes.append(p)
-        brackets.append(br)
-        inlegs.append(il)
+    legs, timings, drift_watch, quality, spread = measure_keys(
+        qual, measure_leg, items
+    )
 
-    def leg_ok(p: int, k: str) -> bool:
-        """Bracket-clean AND in-leg-clean (None = leg too short for an
-        in-leg verdict — the brackets govern, as before)."""
-        return qual.clean(*brackets[p][k]) and (
-            bw.leg_clean_full(*inlegs[p][k]) is not False
-        )
-
-    timings: dict[str, float] = {}
-    quality: dict[str, str] = {}
-    drift_watch: dict[str, float] = {}
-    for k in items:
-        clean = [
-            passes[p][k] for p in range(len(passes)) if leg_ok(p, k)
-        ]
-        if clean:
-            timings[k] = commit_stat(clean)
-            drift_watch[k] = drift_stat(clean)
-            quality[k] = "clean"
-            continue
-        # every pass's sample was bracketed by a contended window (or
-        # in-leg flagged): re-run between fresh probes instead of
-        # committing any of them
-        rerun_vals: list[float] = []
-        tag = "contended"
-        for _ in range(2):
-            b = qual.probe()
-            v, il = measure_inleg(k)
-            a = qual.probe()
-            rerun_vals.append(v)
-            if qual.clean(b, a) and bw.leg_clean_full(*il) is not False:
-                timings[k] = round(v, 3)
-                drift_watch[k] = round(v, 3)
-                tag = "rerun_clean"
-                break
-        if tag != "rerun_clean":
-            all_vals = [p[k] for p in passes] + rerun_vals
-            timings[k] = commit_stat(all_vals)
-            drift_watch[k] = drift_stat(all_vals)
-        quality[k] = tag
     # reference-scale S1 (single run, after the passes so its 3 GiB of
-    # I/O doesn't perturb the small-query timings).  r8 verdict #2: the
-    # serve family drifted beyond what the sentinel model explains — pin
-    # sentinel samples IMMEDIATELY adjacent to each reference-scale run
-    # so a noise-window hit shows in the bracketing sentinel values; the
-    # per-attempt lists land in floor_watch below.
+    # I/O doesn't perturb the small-query timings), with sentinel samples
+    # pinned IMMEDIATELY adjacent (r8 verdict #2).
     qual.probe()
     loopback_gibs = [_loopback_gibs()]
     # the replay's committed number must hold >= 70% of the same-run
-    # raw-socket ceiling (the declared 70-97% band, BENCH_DETAIL notes):
-    # payload/sec vs loopback — computed with the framing-free payload
-    # size, so the ratio is slightly understated (conservative)
+    # raw-socket ceiling (the declared 70-97% band): payload/sec vs
+    # loopback — computed with the framing-free payload size, so the
+    # ratio is slightly understated (conservative)
     payload_gib_100m = 100_000_000 * 4 * 8 / 1024**3
 
     def replay_in_band(best_sec: float) -> bool:
@@ -1622,93 +1203,49 @@ def main() -> None:
     r100 = _bench_replay_100m(spark, qual=qual, qualify=replay_in_band)
     loopback_gibs.append(_loopback_gibs())
     qual.probe()
-    timings["s1_replay_100m"] = r100["s1_replay_100m"]
-    timings["s1_replay_100m_x4"] = r100["s1_replay_100m_x4"]
-    quality["s1_replay_100m"] = r100["s1_replay_100m_quality"]
-    # r16 (r15 verdict Wrong #3): x4 wears ITS OWN quality tag, earned
-    # against its own 4-stream paired ceiling — no longer the
-    # single-stream tag by proxy
-    quality["s1_replay_100m_x4"] = r100["s1_replay_100m_x4_quality"]
+    for k in ("s1_replay_100m", "s1_replay_100m_x4"):
+        timings[k] = r100[k]
+        # r16 (r15 verdict Wrong #3): x4 wears ITS OWN quality tag, earned
+        # against its own 4-stream paired ceiling
+        quality[k] = r100[f"{k}_quality"]
     timings["s2_serve_42m_zstd"] = _bench_serve_42m(spark, qual=qual)
     quality["s2_serve_42m_zstd"] = (
         _SERVE_42M_QUALITY[-1] if _SERVE_42M_QUALITY else "clean"
     )
     qual.probe()
-    # per-query [min, max] across the 3 passes — separates a real
-    # regression (tight spread, higher level) from a noise-window hit
-    # (one wild pass); for the 100M replay the two recorded attempts are
-    # the spread (attempt 1 colder page cache than attempt 2, ADVICE r5)
-    spread = {
-        k: [
-            round(min(p[k] for p in passes), 3),
-            round(max(p[k] for p in passes), 3),
-        ]
-        for k in items
-    }
     attempts = r100["s1_replay_100m_attempts"]
     spread["s1_replay_100m"] = [min(attempts), max(attempts)]
     x4_attempts = r100["s1_replay_100m_x4_attempts"]
     spread["s1_replay_100m_x4"] = [min(x4_attempts), max(x4_attempts)]
 
-    # r6 verdict #4: agg_count_distinct / window_running_sum per-pass
-    # FLOORS rose 1.3-1.7× while the sentinel improved — re-measure with
-    # extra passes pinned adjacent to sentinel samples, so a window hit
-    # is visible in the bracketing sentinel numbers.  Median over all 5
-    # samples becomes the committed figure; every sample is recorded.
+    # floor watch: two extra bracketed samples per FLOOR_WATCH key; every
+    # sample is recorded and the clean ones join the committed statistic
     floor_watch: dict[str, list[float]] = {}
-    # r8 verdict #2: the r8 TPC-H watch closed (floors recovered to r6
-    # levels); r9 watches the serve family — the two IPC-codec keys whose
-    # r8 brackets did not overlap r7's (now cache-served; the watch
-    # verifies the new floor) — plus the CPU-bound keys that drifted
-    # 1.4-1.7× against a 1.15× sentinel (asof_join, events_session_window,
-    # s1_replay_10m, topk_per_group, dedup_exact).
-    for name in (
-        "s2_serve_1m_ipc_zstd",
-        "s2_serve_1m_ipc_lz4",
-        "asof_join",
-        "events_session_window",
-        "s1_replay_10m",
-        "topk_per_group",
-        "dedup_exact",
-    ):
+    for name in FLOOR_WATCH:
         if name not in items:
             continue
-        extra: list[tuple[float, bool]] = []
-        for _ in range(2):
-            b = qual.probe()
-            v, il = measure_inleg(name)
-            a = qual.probe()
-            extra.append(
-                (v, qual.clean(b, a) and bw.leg_clean_full(*il) is not False)
-            )
-        samples = [p[name] for p in passes] + [v for v, _ in extra]
-        floor_watch[name] = [round(s, 3) for s in samples]
+        extra = [bracketed(qual, lambda: measure_leg(name)) for _ in range(2)]
+        samples = [v for v, _, _ in legs[name]] + [v for v, _ in extra]
         clean_samples = [
-            passes[p][name] for p in range(len(passes)) if leg_ok(p, name)
+            v for v, b, a in legs[name] if qual.clean(b, a)
         ] + [v for v, ok in extra if ok]
-        if quality.get(name) == "rerun_clean":
-            # the commit loop already replaced this key's contended
-            # pass samples with a freshly-bracketed clean re-run; that
-            # value is a clean sample too.  Without it, two contended
-            # watch samples would fall through to the else branch and
-            # overwrite the clean number with a contended median
-            # (r11 ADVICE)
+        if quality[name] == "rerun_clean":
+            # the freshly-bracketed clean re-run is a clean sample too;
+            # without it two contended extras would overwrite the clean
+            # number with a contended one (r11 ADVICE)
             clean_samples.append(timings[name])
             samples.append(timings[name])
-            floor_watch[name] = [round(s, 3) for s in samples]
+        floor_watch[name] = [round(s, 3) for s in samples]
         if clean_samples:
             timings[name] = commit_stat(clean_samples)
             drift_watch[name] = drift_stat(clean_samples)
-            # the extra bracketed samples refine, not degrade, the tag
-            if quality.get(name) != "rerun_clean":
+            if quality[name] != "rerun_clean":
                 quality[name] = "clean"
         else:
             timings[name] = commit_stat(samples)
             drift_watch[name] = drift_stat(samples)
             quality[name] = "contended"
-        spread[name] = [
-            round(min(samples), 3), round(max(samples), 3)
-        ]
+        spread[name] = [round(min(samples), 3), round(max(samples), 3)]
     # the reference-scale pair can't re-run cheaply (each invocation
     # regenerates a multi-GiB spill) — their recorded attempts, taken
     # between pinned sentinels above, are the watch samples
@@ -1717,166 +1254,73 @@ def main() -> None:
 
     # r11 verdict #6: rotating TAIL — TAIL_COUNT registered queries
     # outside the headline get one window-qualified wall-clock sample
-    # per round, least-recently-benched first (_tail_rotation), so
-    # every registered query accrues a time series across rounds
-    # without growing the headline budget.  One bracketed sample per
-    # key, one in-invocation retry if contended, tags like the
-    # headline's.  Kept OUT of `queries`/total so round-over-round
+    # per round, least-recently-benched first, and one retry if
+    # contended.  Kept OUT of `queries`/total so round-over-round
     # total_sec comparisons are unaffected.
+    certified, best, last_round = read_anchors()
     tail: dict[str, float] = {}
     tail_quality: dict[str, str] = {}
-    for name in _tail_rotation(queries):
+    for name in _tail_rotation(queries, last_round):
         measure(name)  # warm (codegen/footers) — same r14 warm-pass rule
-        b = qual.probe()
-        v, il = measure_inleg(name)
-        a = qual.probe()
-        if qual.clean(b, a) and bw.leg_clean_full(*il) is not False:
-            tail[name] = round(v, 3)
-            tail_quality[name] = "clean"
-            continue
-        b2 = qual.probe()
-        v2, il2 = measure_inleg(name)
-        a2 = qual.probe()
-        if qual.clean(b2, a2) and bw.leg_clean_full(*il2) is not False:
-            tail[name] = round(v2, 3)
-            tail_quality[name] = "rerun_clean"
-        else:
-            tail[name] = round(min(v, v2), 3)
-            tail_quality[name] = "contended"
+        v, tried = first_clean(qual, lambda: measure_leg(name))
+        tail[name] = round(min(tried) if v is None else v, 3)
+        tail_quality[name] = (
+            "contended" if v is None
+            else "clean" if len(tried) == 1 else "rerun_clean"
+        )
 
     # The x4 entry is a different metric (4-client aggregate wall), not a
     # fifth headline query — keep it OUT of the total so the
     # round-over-round total_sec comparison isn't conflated (ADVICE r6).
-    # NOTE for cross-round comparison: the r6 total INCLUDED
-    # s1_replay_100m_x4; drop that key from r6's sum before comparing.
     total_excludes = {"s1_replay_100m_x4"}
     total = round(
         sum(v for k, v in timings.items() if k not in total_excludes), 3
     )
     sentinel_samples = qual.samples
     med = sorted(sentinel_samples)[len(sentinel_samples) // 2]
-    # r7 verdict #1: the driver's stdout capture window truncated the r6/r7
-    # bench lines (spread + floor_watch + sentinel pushed the one-liner past
-    # the window, losing the headline value and early query medians).  The
-    # stdout line stays COMPACT — {metric, value, unit, queries, sf} only —
-    # and everything diagnostic goes to BENCH_DETAIL.json next to bench.py.
-    _certified, _best = drift_anchors()
-    _cert_cpus, _best_cpus = anchor_cpus()
-    _default_cpus = os.cpu_count() or 1  # build_session's local[] default
-    try:
-        _run_cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _default_cpus)
-    except ValueError:
-        _run_cpus = _default_cpus
-    # ADVICE r15: the merge below would silently let a tail ratio shadow
-    # a headline ratio if a key ever appeared in both sections — they are
-    # disjoint by construction (tail = registry minus headline), so pin it
-    _overlap = set(timings) & set(tail)
-    assert not _overlap, f"headline/tail key overlap: {sorted(_overlap)}"
-    _vs_kw = dict(
-        run_cpus=_run_cpus,
-        certified_cpus=_cert_cpus,
-        best_cpus=_best_cpus,
-        best_at=best_by_cpus(),
-    )
-    _vs_floor_all = {
-        **vs_floor(timings, _certified, _best, **_vs_kw),
-        **vs_floor(tail, _certified, _best, **_vs_kw),
+    # headline and tail are disjoint by construction (tail = registry
+    # minus headline), so the merge below cannot shadow a ratio
+    assert not set(timings) & set(tail), "headline/tail key overlap"
+    vs_floor_all = {
+        **vs_floor(timings, certified, best, run_cpus),
+        **vs_floor(tail, certified, best, run_cpus),
     }
+    # The stdout line stays COMPACT (r7 verdict #1: the driver's capture
+    # window truncated longer lines); diagnostics go to BENCH_DETAIL.json.
     detail = {
         "spread": spread,
         "total_excludes": sorted(total_excludes),
-        # r14 verdict #5: the formal drift anchor — committed value vs the
-        # CERTIFIED floor (BENCH_QUIET.json, quiet-window provenance),
-        # falling back to best-ever committed only for never-certified
-        # keys, for headline AND tail keys, so the 2x adjudication reads
-        # one field instead of reconstructing the anchor per round
-        "vs_certified_floor": _vs_floor_all,
-        # keys whose committed value breached the 2x drift gate vs their
-        # anchor this run — the adjudication's one-glance field (only
-        # same-cpus anchors gate; cross-cpus ratios stay visible in
-        # vs_certified_floor with cpus_match=false — see drift_breaches)
-        "drift_breaches": drift_breaches(_vs_floor_all),
-        "drift_gate_cpus": _run_cpus,
-        # r14 (verdict #1): the committed statistic moved to MIN over
-        # clean samples (see commit_stat); this series keeps r11-r13's
-        # lower-middle per key, so cross-round drift comparisons against
-        # r11-r13 committed numbers stay apples-to-apples
+        # each key's committed value vs its certified floor (else its
+        # best-ever committed value), headline and tail
+        "vs_certified_floor": vs_floor_all,
+        # keys whose committed value breached the 2x drift gate vs a
+        # same-cpus anchor this run (see drift_breaches)
+        "drift_breaches": drift_breaches(vs_floor_all),
+        "drift_gate_cpus": run_cpus,
+        # lower-middle of the clean samples per key (see drift_stat)
         "drift_watch": drift_watch,
-        # comparability notes vs earlier rounds' keys
         "notes": [
-            "r14: a WARM PASS (every item once, untimed) precedes the"
-            " three recorded passes, so all recorded samples are"
-            " steady-state — pass-1 codegen/page-cache cost no longer"
-            " widens the spread/drift series (it never affected the"
-            " committed min)",
-            "r14: committed statistic is the MIN of the CLEAN samples"
-            " (commit_stat) — the box-noise protocol's load-bearing"
-            " statistic (mild 1.5-1.9x phase inflation is invisible to"
-            " every probe tried, so any higher order statistic embeds"
-            " it); r11-r13 committed the lower-middle, which continues"
-            " as BENCH_DETAIL drift_watch — compare r14+ values to"
-            " earlier rounds via that series, not the headline",
-            "r11 (superseded r14): committed statistic was the lower-middle"
-            " of the CLEAN samples (window-qualified per key; see 'window'),"
-            " replacing the unconditional median-of-3 — in a fully-quiet"
-            " run the two coincide for 3 clean samples and differ by at"
-            " most the min-vs-median gap when one pass was excluded",
-            "q1/q5 decomposition (r10 verdict #8, measured r11 at sf0.1):"
-            " q1 is AGGREGATION-bound, not scan-bound — the filtered 6-col"
-            " lineitem scan alone is 0.24 s of the 1.05 s total; the cost"
-            " is the DECIMAL(18,2) sums + the revenue multiply.  An exact"
-            " integer-cents variant measured 0.597 s with hash-identical"
-            " output at this SF and was REJECTED: revenue sums in 1e-4-"
-            " dollar units exceed int64 (and double's 2^53 exactness) at"
-            " 100 TB scale factors, so the decimal formulation is the"
-            " deliberate scale-safe choice and q1's level is its price."
-            " q5: AQE's final plan runs all five joins as"
-            " BroadcastHashJoin at this SF (every non-lineitem side fits"
-            " the threshold); join-side scans alone are 0.52 s of the"
-            " 1.12 s total — the declared shuffle-join plan only"
-            " materializes at scale factors where broadcasting would be"
-            " wrong anyway.  Neither query has a same-semantics,"
-            " same-scale-posture improvement left at sf0.1; both drift"
-            " with page-cache/box state.",
-            "agg_hll_sketch_exchange now emits (exact_users, within_bound)"
-            " — the rollup reads the manifest's exact anchor so the sketch"
-            " family is DuckDB-oracle-checkable; ~+0.15-0.25 s vs the r8"
-            " estimate-only form, a deliberate trade",
-            "s2_serve_42m_zstd: attempt 1 encodes + fills the disk"
-            " artifact cache, attempt 2 replays it (client-decode-bound);"
-            " committed min measures the replay steady state",
-            "s2_serve_1m_ipc_zstd / ipc_lz4 serve the encode-once"
-            " IPC-codec body cache (r8 verdict #2)",
-            "s1_replay_100m tracks loopback_gibs (r8 verdict #2 watch):"
-            " the committed r9 final attempts were 0.914-0.965 s"
-            " = ~3.1-3.3 GiB/s effective against a raw ceiling measured"
-            " 3.6-3.87 GiB/s on the same code — the splice serve holds"
-            " ~70-97% of raw sendall (the gap is HTTP chunk framing +"
-            " client Arrow decode), so absolute floors track box state;"
-            " the RATIO vs loopback_gibs is the regression signal",
-            "s2_serve_42m_zstd COLD leg decomposition (r9 verdict #6,"
-            " measured r10 in one window): reader-chain drain alone"
-            " (spill read + per-batch append-only dict encode,"
-            " prefetch-overlapped) 2.89-3.0 s; chain + parallel-zstd"
-            " encode 5.01 s at the default 4 workers and 5.32 s at 8 —"
-            " the fill already routes through _encode_parallel_frames"
-            " and is chain-bound, not compression-bound; full HTTP"
-            " attempt-1 (encode+tee+serve) 5.03 s == encode alone;"
-            " attempt-2 artifact replay 1.65 s.  The ~3 s floor is the"
-            " 6,836-batch dict-encode loop at the reference's 6144-row"
-            " serve shape; both attempts stay in floor_watch",
+            "committed statistic: the MIN of each key's window-qualified"
+            " clean samples (commit_stat, since r14); r11-r13 committed"
+            " the lower-middle, which continues as drift_watch — compare"
+            " r14+ values to earlier rounds via that series",
+            "every recorded sample is steady-state: a WARM PASS (every"
+            " item once, untimed) precedes the three recorded passes, and"
+            " events_session_window re-warms twice before each sample",
+            "s1_replay_100m / s1_replay_100m_x4 / s2_serve_42m_zstd commit"
+            " the min over their recorded attempts (floor_watch); the"
+            " 42m key's attempt 1 fills the encoded-artifact cache, so its"
+            " min measures the replay steady state",
         ],
         "floor_watch": floor_watch,
-        # r10 verdict #3: per-key window quality.  "clean" = committed
-        # from samples whose bracketing sentinel probes sat within
-        # BAND × the run's best probe; "rerun_clean" = the pass samples
-        # were all contended and a freshly-bracketed re-run replaced
-        # them; "contended" = retries exhausted inside a contended
-        # phase — the number is the best available and FLAGGED, so a
-        # cross-round comparison knows to discount it; "below_band"
-        # (replay only, r11 ADVICE) = throughput under 70% of the
-        # same-run loopback ceiling WITH clean sentinel brackets — a
-        # real regression, flagged so it is NOT discounted as noise.
+        # per-key window quality.  "clean" = committed from samples whose
+        # bracketing sentinel probes sat within the band; "rerun_clean" =
+        # every pass sample was contended and a freshly-bracketed re-run
+        # replaced them; "contended" = retries exhausted inside a
+        # contended phase — the number is the best available and FLAGGED;
+        # "below_band" (replay only) = throughput under 70% of the
+        # same-run loopback ceiling WITH clean sentinel brackets — a real
+        # regression, flagged so it is NOT discounted as noise.
         "window": {
             "band": WindowQualifier.BAND,
             "slack_sec": WindowQualifier.SLACK_SEC,
@@ -1895,38 +1339,7 @@ def main() -> None:
                 for k, q in quality.items()
                 if q in ("contended", "below_band")
             ),
-            # r12 verdict Wrong #2: the in-leg bandwidth sentinel — a
-            # leg is clean only if its brackets are quiet AND its
-            # in-leg DRAM-copy bandwidth median stays in band, so a
-            # co-tenant window inside one leg can no longer commit a
-            # clean-tagged outlier
-            "inleg": {
-                "buf_mb": BandwidthSentinel.BUF_MB,
-                "rel_band": BandwidthSentinel.REL_BAND,
-                "gather_band": BandwidthSentinel.GATHER_BAND,
-                "interval_sec": BandwidthSentinel.INTERVAL_SEC,
-                "min_samples": BandwidthSentinel.MIN_SAMPLES,
-                "reference_gbs": round(bw.reference, 1),
-                "gather_reference_gbs": round(bw.gather_reference, 2),
-                "n_probes": len(bw.samples),
-                # per-key per-leg gather medians (recorded-only latency
-                # series; None = leg too short for a probe)
-                "gather_med_by_key": gather_meds,
-                "bracket_clean_but_inleg_flagged": sorted(
-                    {
-                        k
-                        for p in range(len(passes))
-                        for k in items
-                        if qual.clean(*brackets[p][k])
-                        and bw.leg_clean_full(*inlegs[p][k]) is False
-                    }
-                ),
-            },
         },
-        # r11 verdict #6: the rotating tail's per-key window tags; the
-        # rotation ledger is the committed BENCH_r*.json tail_queries
-        # sections (see _tail_rotation) — never-benched first, then
-        # least-recently-benched, lexicographic tie-break
         "tail_quality": tail_quality,
         "sentinel": {
             "name": "s2_serve_1m_identity",
@@ -1934,19 +1347,14 @@ def main() -> None:
             "median": round(med, 3),
         },
         # raw socket bandwidth bracketing the 100M replay: the serve
-        # family's physical ceiling (see _loopback_gibs) — divide the
-        # replay's ~3.1 GiB by its wall and compare
+        # family's physical ceiling (see _loopback_gibs)
         "loopback_gibs": loopback_gibs,
         "s1_replay_100m_attempts": attempts,
-        # x4's own evidence (r16, verdict Wrong #3): every attempt and
-        # every paired 4-stream ceiling probe, so a certification or an
-        # adjudication can read the aggregate-GiB/s-vs-ceiling ratio
-        # per attempt without re-running
         "s1_replay_100m_x4_attempts": x4_attempts,
         "s1_replay_100m_x4_ceilings_gibs": r100["s1_replay_100m_x4_ceilings"],
         "s2_serve_42m_attempts": list(_SERVE_42M_ATTEMPTS),
         "sf": sf,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", ""),
+        "cpus": run_cpus,
     }
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_DETAIL.json")

@@ -680,7 +680,7 @@ def test_exact_scorer_guard_fires_on_clone_corpus(spark, tmp_path):
     exceeds the configured limit — with a pointer to the bounded
     sibling — and keep working on the base corpus under the same
     limit.  The clone corpus replicates each base document 30×
-    (scale_sweep's synthesis shape), which grows in-bucket pair mass
+    (the clone shape of SCALE.md's scale sweeps), which grows in-bucket pair mass
     ~quadratically while the base stays put."""
     import pyspark.sql.functions as F
     import pytest

@@ -1,18 +1,16 @@
-"""In-leg bandwidth sentinel (r12 verdict Wrong #2).
-
-The loopback sentinel brackets each measurement leg but is
-cache-resident, so the box's memory-bandwidth co-tenant phases are
-invisible to it even when probed during them — r12 committed 46-138 s
-"clean"-tagged outlier batches on 6-12 s code.  ``BandwidthSentinel``
-closes that: ~1 Hz DRAM-copy probes DURING each leg, median-vs-run-
-reference verdict.  These tests pin the verdict logic (pure) and the
-sampling context manager (real probes, no Spark)."""
+"""The bench harness's measurement and gating logic, without Spark:
+the committed statistic, the per-key bracketed measurement, the
+certified-floor ledger (one file keyed by (key, cpus)) and the drift
+gate read from it, and the certify tool that writes the ledger."""
 
 from __future__ import annotations
 
+import importlib.util
+import json
 import sys
-import time
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
@@ -21,210 +19,23 @@ if str(REPO) not in sys.path:
 import bench
 
 
-def _stub_sentinel(ref_bw: float = 16.0) -> bench.BandwidthSentinel:
-    s = bench.BandwidthSentinel.__new__(bench.BandwidthSentinel)
-    s.samples = [(float(i), ref_bw, ref_bw / 8) for i in range(10)]
-    return s
-
-
-def test_leg_clean_verdicts():
-    s = _stub_sentinel(16.0)  # run reference (p90) = 16 GB/s
-    # too few in-leg probes: no verdict — the brackets govern
-    assert s.leg_clean([]) is None
-    assert s.leg_clean([15.0]) is None
-    # isolated engine dip (measured shape: the engine's own shuffle /
-    # Arrow bursts momentarily saturate DRAM) does not drag the median
-    assert s.leg_clean([15.0, 3.7, 15.5]) is True
-    # sustained depression = a co-tenant phase inside the leg
-    assert s.leg_clean([4.0, 3.0, 5.0]) is False
-    # boundary: median exactly at REL_BAND x reference is clean
-    band = bench.BandwidthSentinel.REL_BAND * 16.0
-    assert s.leg_clean([band, band]) is True
-
-
-def test_leg_clean_full_gather_promotion():
-    """GATHER_BAND=None keeps the gather series recorded-only (verdict
-    = the copy verdict); a promoted band ANDs the two medians, and a
-    too-short gather series defers to copy alone."""
-    s = _stub_sentinel(16.0)  # copy ref 16, gather ref max(2.0, floor)
-    good_copy, bad_gather = [15.0, 15.5], [0.1, 0.1]
-    assert s.leg_clean_full(good_copy, bad_gather) is True  # recorded-only
-    try:
-        bench.BandwidthSentinel.GATHER_BAND = 0.4
-        ref = s.gather_reference
-        assert s.leg_clean_full(good_copy, bad_gather) is False
-        assert s.leg_clean_full(good_copy, [0.9 * ref, 0.9 * ref]) is True
-        # short gather series: copy verdict governs
-        assert s.leg_clean_full(good_copy, [0.1]) is True
-        # copy unknown + gather known: gather governs
-        assert s.leg_clean_full([], bad_gather) is False
-    finally:
-        bench.BandwidthSentinel.GATHER_BAND = None
-
-
-def test_between_selects_interval():
-    s = _stub_sentinel()
-    assert s.between(2.0, 4.0) == [16.0, 16.0, 16.0]
-    assert s.between(100.0, 200.0) == []
-    assert s.gather_between(2.0, 3.0) == [2.0, 2.0]
-
-
-def test_window_samples_during_leg():
-    s = bench.BandwidthSentinel()
-    with s.window() as w:
-        time.sleep(1.2)  # > INTERVAL_SEC: at least one probe lands
-    assert len(w.bws) >= 1
-    assert all(b > 0 for b in w.bws)
-    # the probes joined the run series (reference accrues from them)
-    assert len(s.samples) >= len(w.bws)
-
-
-def test_qualified_legs_inleg_flag_overrides_clean_brackets():
-    """A leg whose brackets are quiet but whose in-leg bandwidth is
-    depressed is contended — the exact blind spot of r12."""
-
-    class QuietQual:
-        def __init__(self):
-            self.samples = []
-
-        def probe(self):
-            self.samples.append(0.01)
-            return len(self.samples) - 1
-
-        def clean(self, b, a):
-            return True
-
-    class DepressedBw:
-        class _W:
-            bws = [1.0, 1.0]
-
-            def __enter__(self):
-                return self
-
-            def __exit__(self, *exc):
-                return False
-
-        def window(self):
-            return self._W()
-
-        def leg_clean_full(self, bws, gathers):
-            return False
-
-    sec, tag, legs = bench.qualified_legs(
-        QuietQual(), [lambda: 0.5, lambda: 0.6], bw=DepressedBw()
+def _certify_tool():
+    spec = importlib.util.spec_from_file_location(
+        "certify_bench", REPO / "tools" / "certify_bench.py"
     )
-    assert tag == "contended"
-    assert [g["window"] for g in legs] == ["contended", "contended"]
-    assert sec == 0.5  # min of everything, flagged
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
-class _QuietQual:
-    def __init__(self):
-        self.samples = []
-
-    def probe(self):
-        self.samples.append(0.01)
-        return len(self.samples) - 1
-
-    def clean(self, b, a):
-        return True
-
-
-def test_qualified_legs_retro_flag_consumes_remaining_supply():
-    """r13 ADVICE: the end-of-run re-derivation can only get stricter,
-    so a retro-flagged leg can drop the clean count below min_clean —
-    the function must then keep consuming leg_fns instead of committing
-    'clean' over a thinner-than-promised sample.  This stub flags every
-    leg EXCEPT the most recent one at re-derivation time (the rising-
-    reference shape), so the run must consume the whole 4-leg supply
-    and, still one short of min_clean=2, downgrade to clean_partial."""
-
-    class RetroBw:
-        def __init__(self):
-            self.latest = -1
-
-        def window(self):
-            self.latest += 1
-            outer = self
-
-            class W:
-                bws = [float(outer.latest), float(outer.latest)]
-
-                def __enter__(self):
-                    return self
-
-                def __exit__(self, *exc):
-                    return False
-
-                def gathers(self):
-                    return []
-
-            return W()
-
-        def leg_clean_full(self, bws, gathers):
-            return bool(bws) and bws[0] == float(self.latest)
-
-    runs = []
-
-    def make_leg(sec):
-        def leg():
-            runs.append(sec)
-            return sec
-
-        return leg
-
-    sec, tag, legs = bench.qualified_legs(
-        _QuietQual(),
-        [make_leg(s) for s in (0.5, 0.6, 0.7, 0.4)],
-        bw=RetroBw(),
-    )
-    assert len(runs) == 4  # supply consumed past the early break
-    assert tag == "clean_partial"  # exhausted with 1 < min_clean survivors
-    assert sec == 0.4  # min over the legs that FINALIZED clean
-    assert [g["window"] for g in legs] == [
-        "contended", "contended", "contended", "clean",
-    ]
-
-
-def test_qualified_legs_stable_verdicts_stop_at_min_clean():
-    """When the re-derivation agrees with the in-flight verdicts the
-    early break holds: two clean legs commit, the rest never run."""
-
-    class SteadyBw:
-        def window(self):
-            class W:
-                bws = [16.0, 16.0]
-
-                def __enter__(self):
-                    return self
-
-                def __exit__(self, *exc):
-                    return False
-
-                def gathers(self):
-                    return []
-
-            return W()
-
-        def leg_clean_full(self, bws, gathers):
-            return True
-
-    runs = []
-
-    def make_leg(sec):
-        def leg():
-            runs.append(sec)
-            return sec
-
-        return leg
-
-    sec, tag, legs = bench.qualified_legs(
-        _QuietQual(),
-        [make_leg(s) for s in (0.5, 0.6, 0.7)],
-        bw=SteadyBw(),
-    )
-    assert len(runs) == 2
-    assert (sec, tag) == (0.5, "clean")
+def _ledger(path, floors):
+    """Write a ledger: ``floors`` is ``{(key, cpus): (sec, certified)}``."""
+    keys: dict = {}
+    for (k, cpus), (sec, cert) in floors.items():
+        keys.setdefault(k, {})[str(cpus)] = {
+            "sec": sec, "cpus": cpus, "certified": cert,
+        }
+    (path / bench.LEDGER).write_text(json.dumps({"keys": keys, "runs": []}))
 
 
 def test_commit_and_drift_stats():
@@ -239,42 +50,33 @@ def test_commit_and_drift_stats():
 
 def test_drift_anchors_and_vs_floor(tmp_path):
     """r14 verdict #5: the formal drift anchor is the certified floor
-    (BENCH_QUIET.json), falling back to best-ever committed (BENCH_r*,
-    headline AND tail sections) only for never-certified keys; a key
-    with neither gets an explicit 'none' anchor, not a silent skip."""
-    import json
-
-    (tmp_path / "BENCH_QUIET.json").write_text(json.dumps({
-        "keys": {
-            "a": {"sec": 0.5, "certified": True},
-            "b": {"sec": 9.9, "certified": False},  # uncertified: ignored
-        }
-    }))
+    (the ledger), falling back to best-ever committed (BENCH_r*, headline
+    AND tail sections) only for never-certified keys; a key with neither
+    gets an explicit 'none' anchor, not a silent skip."""
+    _ledger(tmp_path, {
+        ("a", 32): (0.5, True),
+        ("b", 32): (9.9, False),  # uncertified: ignored
+        ("e", 32): (0.7, True),
+        ("f", 32): (0.2, False),
+    })
     (tmp_path / "BENCH_r01.json").write_text(json.dumps({
+        "cpus": 32,
         "parsed": {"queries": {"a": 0.8, "b": 2.0},
-                   "tail_queries": {"c": 1.5}}
+                   "tail_queries": {"c": 1.5}},
     }))
     (tmp_path / "BENCH_r02.json").write_text(json.dumps({
-        "parsed": {"queries": {"b": 1.0}}
-    }))
-
-    (tmp_path / "BENCH_BULK.json").write_text(json.dumps({
-        "keys": {
-            "a": {"sec": 0.1, "certified": True},   # QUIET wins on overlap
-            "e": {"sec": 0.7, "certified": True},
-            "f": {"sec": 0.2, "certified": False},
-        }
+        "cpus": 32, "parsed": {"queries": {"b": 1.0}}
     }))
 
     certified, best = bench.drift_anchors(str(tmp_path))
-    assert certified == {"a": 0.5, "e": 0.7}
-    assert best == {"a": 0.8, "b": 1.0, "c": 1.5}
+    assert certified == {"a": {32: 0.5}, "e": {32: 0.7}}
+    assert best == {"a": {32: 0.8}, "b": {32: 1.0}, "c": {32: 1.5}}
 
     out = bench.vs_floor(
         {"a": 0.6, "b": 1.2, "c": 1.5, "d": 3.0}, certified, best
     )
-    # certified floor wins over a lower best-ever? no — certified is the
-    # FORMAL anchor even when best-ever is lower (provenance beats luck)
+    # certified is the FORMAL anchor even when best-ever is lower
+    # (provenance beats luck)
     assert out["a"] == {"ratio": 1.2, "anchor": "certified",
                         "floor_sec": 0.5}
     assert out["b"] == {"ratio": 1.2, "anchor": "best_ever",
@@ -284,7 +86,7 @@ def test_drift_anchors_and_vs_floor(tmp_path):
 
 
 def test_accrue_certified_ledger_semantics():
-    """The shared certification-ledger merge (certify_bench + bulk_bench,
+    """The shared certification-ledger merge (tools/certify_bench.py,
     ADVICE r14): lowest certified floor wins; a slower re-certification
     resets the carry; a failing run is recorded alongside the carry; a
     floor carried past stale_limit consecutive failing runs expires; an
@@ -364,50 +166,43 @@ def test_accrue_certified_ages_beyond_drift_band():
 
 
 def test_drift_gate_is_core_count_aware(tmp_path):
-    """r16 verdict #2: certified floors carry cpus provenance, and the
-    2x gate only fires against SAME-cpus anchors — an 8-core run must
-    not breach on a 32-core floor for a key whose genuine 8/32 scaling
-    ratio approaches 2 (BENCH_r16_c8 false-fired rc 2 on
-    agg_hll_sketch_exchange at 2.97x a 32-core floor; its real scaling
-    ratio is 2.46).  A same-cpus breach still reds the run."""
-    import json
-
-    (tmp_path / "BENCH_QUIET.json").write_text(json.dumps({
-        "cpus": 32,
-        "keys": {
-            "a": {"sec": 0.5, "certified": True},          # file cpus: 32
-            "b": {"sec": 0.2, "cpus": 8, "certified": True},  # per-key wins
-        }
-    }))
-    # legacy file with NO cpus field anywhere: defaults to 32
+    """r16 verdict #2: floors carry cpus provenance, and the 2x gate only
+    fires against SAME-cpus anchors — an 8-core run must not breach on a
+    32-core floor for a key whose genuine 8/32 scaling ratio approaches
+    2 (BENCH_r16_c8 false-fired rc 2 on agg_hll_sketch_exchange at 2.97x
+    a 32-core floor; its real scaling ratio is 2.46).  A same-cpus
+    breach still reds the run."""
+    _ledger(tmp_path, {("a", 32): (0.5, True), ("b", 8): (0.2, True)})
     (tmp_path / "BENCH_r01.json").write_text(json.dumps({
-        "parsed": {"queries": {"c": 1.0}}
+        "cpus": 32, "parsed": {"queries": {"c": 1.0}}
     }))
     # an 8-core committed run CAN own a best-ever min (fixed-overhead
     # keys run faster at 8 cores); its provenance must ride along
     (tmp_path / "BENCH_r02.json").write_text(json.dumps({
         "cpus": 8, "parsed": {"queries": {"d": 0.3}}
     }))
+    # a record with no cpus field has no provenance: it does not anchor
+    (tmp_path / "BENCH_r03.json").write_text(json.dumps({
+        "parsed": {"queries": {"g": 0.1}}
+    }))
 
     certified, best = bench.drift_anchors(str(tmp_path))
-    cert_cpus, best_cpus = bench.anchor_cpus(str(tmp_path))
-    assert cert_cpus == {"a": 32, "b": 8}
-    assert best_cpus == {"c": 32, "d": 8}
+    assert certified == {"a": {32: 0.5}, "b": {8: 0.2}}
+    assert best == {"c": {32: 1.0}, "d": {8: 0.3}}
 
     # an 8-core run: "a"/"c" anchors are 32-core → never breach even at
     # 3x; "b"/"d" anchors are 8-core → breach normally
     vals = {"a": 1.5, "b": 0.9, "c": 9.0, "d": 0.31}
-    out = bench.vs_floor(vals, certified, best, run_cpus=8,
-                         certified_cpus=cert_cpus, best_cpus=best_cpus)
+    out = bench.vs_floor(vals, certified, best, run_cpus=8)
     assert out["a"]["cpus_match"] is False and out["a"]["ratio"] == 3.0
+    assert out["a"]["anchor_cpus"] == 32
     assert out["b"]["cpus_match"] is True
     assert out["c"]["cpus_match"] is False
     assert out["d"]["cpus_match"] is True
     assert bench.drift_breaches(out) == ["b"]
 
     # the same values judged at 32 cores: now "a"/"c" gate and "b" does not
-    out32 = bench.vs_floor(vals, certified, best, run_cpus=32,
-                           certified_cpus=cert_cpus, best_cpus=best_cpus)
+    out32 = bench.vs_floor(vals, certified, best, run_cpus=32)
     assert bench.drift_breaches(out32) == ["a", "c"]
 
     # legacy records (no cpus_match field at all) gate as before
@@ -426,8 +221,6 @@ def test_best_ever_anchor_is_kept_per_cpus(tmp_path):
     its 32-core minimum, and an 8-core run against the 8-core one.  A key
     with only 8-core history stays visible to a 32-core run without
     gating it."""
-    import json
-
     (tmp_path / "BENCH_r01.json").write_text(json.dumps({
         "cpus": 32, "parsed": {"queries": {"e": 1.0, "g": 2.0}}
     }))
@@ -435,24 +228,22 @@ def test_best_ever_anchor_is_kept_per_cpus(tmp_path):
         "cpus": 8, "parsed": {"queries": {"e": 0.5, "h": 0.4}}
     }))
     certified, best = bench.drift_anchors(str(tmp_path))
-    cert_cpus, best_cpus = bench.anchor_cpus(str(tmp_path))
-    best_at = bench.best_by_cpus(str(tmp_path))
-    assert best == {"e": 0.5, "g": 2.0, "h": 0.4}
-    assert best_cpus == {"e": 8, "g": 32, "h": 8}
-    assert best_at == {"e": {32: 1.0, 8: 0.5}, "g": {32: 2.0}, "h": {8: 0.4}}
+    assert certified == {}
+    assert best == {"e": {32: 1.0, 8: 0.5}, "g": {32: 2.0}, "h": {8: 0.4}}
 
-    kw = dict(certified_cpus=cert_cpus, best_cpus=best_cpus, best_at=best_at)
     vals = {"e": 2.5, "g": 2.1, "h": 1.2}
-    out32 = bench.vs_floor(vals, certified, best, run_cpus=32, **kw)
+    out32 = bench.vs_floor(vals, certified, best, run_cpus=32)
     assert out32["e"] == {"ratio": 2.5, "anchor": "best_ever", "floor_sec": 1.0,
                           "anchor_cpus": 32, "cpus_match": True}
     assert out32["h"]["cpus_match"] is False and out32["h"]["ratio"] == 3.0
     assert bench.drift_breaches(out32) == ["e"]
 
-    out8 = bench.vs_floor(vals, certified, best, run_cpus=8, **kw)
+    out8 = bench.vs_floor(vals, certified, best, run_cpus=8)
     assert out8["e"]["floor_sec"] == 0.5 and out8["e"]["cpus_match"] is True
     assert out8["g"]["cpus_match"] is False
     assert bench.drift_breaches(out8) == ["e", "h"]
+    # without run_cpus a key is anchored at its lowest floor
+    assert bench.vs_floor(vals, certified, best)["e"]["floor_sec"] == 0.5
 
 
 def test_drift_gate_rc_forced_breach():
@@ -479,16 +270,142 @@ def test_loopback_nstream_probe_measures_aggregate():
     assert gibs > 0.01, gibs
 
 
-def test_bw_floor_env_read_at_construction(monkeypatch):
-    """r13 ADVICE: the env floors must be read when the sentinel is
-    BUILT, not when bench is imported — sweep tools set the env var
-    after importing bench."""
-    monkeypatch.setenv("SPARK_GRAFT_BW_REF_FLOOR", "34.5")
-    monkeypatch.setenv("SPARK_GRAFT_GATHER_REF_FLOOR", "5.25")
-    s = bench.BandwidthSentinel()
-    assert s.REF_FLOOR_GBS == 34.5
-    assert s.GATHER_REF_FLOOR_GBS == 5.25
-    # class defaults untouched (the __new__-built stubs elsewhere in
-    # this file rely on them)
-    assert bench.BandwidthSentinel.REF_FLOOR_GBS == 12.0
-    assert bench.BandwidthSentinel.GATHER_REF_FLOOR_GBS == 1.0
+class _ScriptedQual:
+    """A WindowQualifier stand-in: probe ``i`` is contended when ``i`` is
+    in ``bad``; a leg is clean unless BOTH its probes are contended."""
+
+    def __init__(self, bad):
+        self.bad, self.samples = set(bad), []
+
+    def probe(self):
+        self.samples.append(0.01)
+        return len(self.samples) - 1
+
+    def clean(self, before, after):
+        return not (before in self.bad and after in self.bad)
+
+
+def _scripted_measure(values):
+    it = {k: iter(v) for k, v in values.items()}
+    return lambda name: next(it[name])
+
+
+def test_measure_keys_commits_min_over_clean_legs_and_reruns_contended():
+    """Items x, y over three alternating passes: probes 0 x 1 y 2 | 3 y 4
+    x 5 | 6 x 7 y 8.  Every y leg sits between two contended probes, so
+    y re-runs between fresh probes (9-10 contended, 11-12 clean) and
+    commits the clean re-run — not its faster contended pass samples."""
+    qual = _ScriptedQual({1, 2, 3, 4, 7, 8, 9, 10})
+    measure = _scripted_measure(
+        {"x": [0.5, 0.4, 0.6], "y": [0.3, 0.2, 0.25, 0.9, 0.7]}
+    )
+    legs, timings, drift, quality, spread = bench.measure_keys(
+        qual, measure, ["x", "y"]
+    )
+    assert [v for v, _, _ in legs["x"]] == [0.5, 0.4, 0.6]
+    assert timings == {"x": 0.4, "y": 0.7}
+    assert drift == {"x": 0.5, "y": 0.7}
+    assert quality == {"x": "clean", "y": "rerun_clean"}
+    assert spread == {"x": [0.4, 0.6], "y": [0.2, 0.3]}
+
+    # both re-runs contended: commit over everything, flagged
+    qual = _ScriptedQual({1, 2, 3, 4, 7, 8, 9, 10, 11, 12})
+    measure = _scripted_measure(
+        {"x": [0.5, 0.4, 0.6], "y": [0.3, 0.2, 0.25, 0.9, 0.7]}
+    )
+    _, timings, drift, quality, _ = bench.measure_keys(qual, measure, ["x", "y"])
+    assert (timings["y"], drift["y"], quality["y"]) == (0.2, 0.3, "contended")
+
+
+class _Session:
+    """The one attribute of a live session the harness reads."""
+
+    class sparkContext:
+        defaultParallelism = 4
+
+
+def test_core_count_comes_from_the_live_session(tmp_path, monkeypatch):
+    """The cpus a run gates at and stamps on its floors is the live
+    session's core count, not SPARK_GRAFT_CPUS with a 32 default: a
+    certify run on a 4-core box without the env var records cpus=4."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    cpus = bench.session_cpus(_Session())
+    assert cpus == 4
+    tool = _certify_tool()
+    keys = tool.certify({"k": 1.0}, {"k": "clean"}, {"k": [1.0, 1.1]}, cpus)
+    tool.record_run(tmp_path / bench.LEDGER, keys, cpus, {"mode": "headline"})
+    ledger = json.loads((tmp_path / bench.LEDGER).read_text())
+    assert ledger["keys"]["k"]["4"]["cpus"] == 4
+    assert ledger["runs"][-1]["cpus"] == 4
+    assert bench.drift_anchors(str(tmp_path))[0] == {"k": {4: 1.0}}
+
+
+@pytest.mark.parametrize(
+    "floor_cpus, sec, rc",
+    [
+        (4, 2.5, 2),    # 2.5x its cpus=4 floor: breach, the run exits 2
+        (4, 1.1, 0),    # a healthy 4-core run exits 0
+        (32, 10.0, 0),  # a floor only at cpus=32 never gates a 4-core run
+    ],
+)
+def test_gate_on_a_4_core_box(tmp_path, floor_cpus, sec, rc):
+    """The drift gate on a 4-core run, from a floor certified through the
+    certify tool into the ledger."""
+    tool = _certify_tool()
+    key = "q1_pricing_summary"
+    keys = tool.certify({key: 1.0}, {key: "clean"}, {key: [1.0, 1.0]}, floor_cpus)
+    tool.record_run(tmp_path / bench.LEDGER, keys, floor_cpus, {"mode": "registry"})
+    certified, best = bench.drift_anchors(str(tmp_path))
+    out = bench.vs_floor({key: sec}, certified, best, 4)
+    assert out[key]["cpus_match"] is (floor_cpus == 4)
+    assert bench.drift_gate_rc(bench.drift_breaches(out), env={}) == rc
+
+
+def test_tail_rotation_reads_the_same_pass_as_the_anchors(tmp_path):
+    """The tail rotation's ledger comes from read_anchors' one pass over
+    BENCH_r*.json: never-benched keys first, then least recently benched,
+    lexicographic tie-break.  Only ``BENCH_rN.json`` names carry a round;
+    an 8-core ``BENCH_rN_c8.json`` still feeds the best-ever anchors."""
+    (tmp_path / "BENCH_r01.json").write_text(json.dumps({
+        "cpus": 32, "parsed": {"queries": {}, "tail_queries": {"t_a": 1.0}}
+    }))
+    (tmp_path / "BENCH_r02.json").write_text(json.dumps({
+        "cpus": 32, "parsed": {"queries": {}, "tail_queries": {"t_b": 1.0}}
+    }))
+    (tmp_path / "BENCH_r02_c8.json").write_text(json.dumps({
+        "cpus": 8, "parsed": {"queries": {}, "tail_queries": {"t_c": 0.5}}
+    }))
+    certified, best, last_round = bench.read_anchors(str(tmp_path))
+    assert last_round == {"t_a": 1, "t_b": 2}
+    assert best["t_c"] == {8: 0.5}
+    queries = ["t_b", "t_a", "t_c", "t_d", bench.HEADLINE[0]]
+    assert bench._tail_rotation(queries, last_round) == ["t_c", "t_d", "t_a", "t_b"]
+
+
+def test_certify_accrues_per_cpus_and_leaves_unmeasured_keys(tmp_path):
+    """The certify tool accrues a run into the ledger at its own cpus
+    only: a slower re-certification keeps the lower floor at that cpus,
+    another core count's floor and the records of keys the run did not
+    measure are left exactly as they were."""
+    tool = _certify_tool()
+    path = tmp_path / bench.LEDGER
+
+    def run(timings, cpus):
+        keys = tool.certify(
+            timings, {k: "clean" for k in timings},
+            {k: [v, v] for k, v in timings.items()}, cpus,
+        )
+        return tool.record_run(path, keys, cpus, {"mode": "registry"})
+
+    run({"a": 1.0, "b": 2.0}, 4)
+    run({"a": 0.4}, 32)
+    before = json.loads(path.read_text())["keys"]["b"]
+    out = run({"a": 1.2}, 4)
+    assert out["a"]["sec"] == 1.0 and out["a"]["carried_from_prior_run"]
+    ledger = json.loads(path.read_text())
+    assert ledger["keys"]["b"] == before
+    assert ledger["keys"]["a"]["32"]["sec"] == 0.4
+    assert [r["cpus"] for r in ledger["runs"]] == [4, 32, 4]
+    assert bench.drift_anchors(str(tmp_path))[0] == {
+        "a": {4: 1.0, 32: 0.4}, "b": {4: 2.0},
+    }

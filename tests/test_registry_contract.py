@@ -51,15 +51,15 @@ def test_oracle_entries_cover_queries():
 @pytest.mark.skipif(
     __import__("os").environ.get("SPARK_GRAFT_SKIP_RATCHET") == "1",
     reason="ratchet test: couples the suite to committed BENCH_*.json; "
-    "remediation (tools/bulk_bench.py) needs the quiet bench box — "
+    "remediation (tools/certify_bench.py --registry) needs the quiet bench box — "
     "set SPARK_GRAFT_SKIP_RATCHET=1 on machines that can't run it",
 )
 def test_every_registered_query_has_a_committed_timing():
     """r15 invariant (closes r14 verdict #2): every registered query has
     at least one committed clean wall-clock number — a certified floor in
-    BENCH_QUIET.json or BENCH_BULK.json, or a committed headline/tail
-    entry in some BENCH_r*.json.  A newly-registered query fails this
-    until it is benched; `python tools/bulk_bench.py <name>` is the one
+    the BENCH_FLOORS.json ledger, or a committed headline/tail entry in
+    some BENCH_r*.json.  A newly-registered query fails this until it is
+    benched; `python tools/certify_bench.py --registry <name>` is the one
     command that fixes it (quiet window required).
 
     This is an intentional RATCHET (ADVICE r15): registering a query
@@ -79,7 +79,7 @@ def test_every_registered_query_has_a_committed_timing():
     missing = sorted(set(_QUERIES) - covered)
     assert not missing, (
         f"{len(missing)} registered queries have no committed timing "
-        f"(run tools/bulk_bench.py on them in a quiet window): {missing}"
+        f"(run tools/certify_bench.py --registry on them in a quiet window): {missing}"
     )
 
 

@@ -1,46 +1,37 @@
 #!/usr/bin/env python
-"""Quiet-window certification bench (r13 verdict stretch #7).
+"""Quiet-window certification: the one writer of the certified-floor
+ledger (bench.LEDGER, BENCH_FLOORS.json), keyed by (key, cpus).
 
-The 2x-vs-best-ever drift gate has been adjudicated against a FLOATING
-best-ever — whatever minimum any past round happened to commit, each
-carrying unknown box state.  This tool runs one full headline pass and,
-when the window verifies quiet, commits BENCH_QUIET.json as the
-canonical per-key anchor: certified floors + the window evidence, so
-future adjudications compare against numbers with a stated provenance.
+Two modes, one protocol and one ledger:
+
+  python tools/certify_bench.py                  # headline: runs bench.py
+  python tools/certify_bench.py --registry [key ...]
+      # non-headline keys (default: every registered key with no
+      # committed timing), measured in-process by bench.measure_keys
 
 Window verification (conservative — refusing to certify is the safe
 direction):
   - 1-min loadavg below LOAD_MAX before the run starts (the box idle);
-  - every headline key's committed quality tag is "clean";
-  - per-key SPREAD TIGHTNESS: max/min across the passes within
+  - the key's committed quality tag is "clean" (every leg bracketed by
+    the loopback sentinel, bench.WindowQualifier);
+  - SPREAD TIGHTNESS: max/min across the recorded passes within
     SPREAD_BAND (+ an absolute slack for ms-scale keys) — a phase that
-    hit one pass shows as a wide spread even when every probe missed
-    it, so a tight spread is the strongest per-key quiet evidence the
-    box offers.  (The gather series is deliberately NOT a gate: the
-    r14 two-leg correlation dataset closed it — quiet legs routinely
-    show collapsed gather, so gather can refute cleanliness claims
-    post-hoc but cannot assert them; per-key medians stay recorded as
-    diagnostics.)  Keys failing a gate stay UNcertified but recorded,
-    so one phase does not block the rest.
+    hit one pass shows as a wide spread even when every probe missed it.
+    Keys failing a gate stay uncertified but recorded, so one phase does
+    not block the rest.
 
-The whole-file "certified" flag is true only when every headline key
-certified.  Partial files are still useful (per-key flags); re-run in
-a quieter window to upgrade.
-
-Usage: python tools/certify_bench.py           # runs bench.py (sf0.1)
-       LOAD_MAX=1.0 SPREAD_BAND=1.6 python tools/certify_bench.py
-       REUSE_LOG=<stdout file> PRE_LOAD=<load1 at original launch> \\
-           python tools/certify_bench.py       # re-postprocess a run
-Writes BENCH_QUIET.json and prints one JSON summary line.
+Every record is stamped with the cpus of the live session that measured
+it (bench.session_cpus; in headline mode, bench.py's BENCH_DETAIL
+``cpus``).  Records accrue per (key, cpus) with bench.accrue_certified:
+a key keeps its lowest certified floor, and a carried floor expires
+after STALE_LIMIT consecutive measured failures.  Prints one JSON
+summary line.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
-import statistics
 import subprocess
 import sys
 import time
@@ -50,197 +41,195 @@ _REPO = Path(__file__).resolve().parent.parent
 if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
-import bench  # noqa: E402  (accrue_certified — shared ledger semantics)
+import bench  # noqa: E402
 
-LOAD_MAX = float(os.environ.get("LOAD_MAX", "1.0"))
-SPREAD_BAND = float(os.environ.get("SPREAD_BAND", "1.6"))
+LOAD_MAX = 1.0
+SPREAD_BAND = 1.6
 SPREAD_SLACK_SEC = 0.02  # scheduler jitter floor for ms-scale serves
+STALE_LIMIT = 3
+# registry mode: three untimed warm passes (r15: on sub-0.4 s keys one
+# warm pass leaves a monotone C2-compilation decay across the recorded
+# passes — scalar_timezone 0.337 -> 0.178 over six clean legs)
+WARM_PASSES = 3
+# certified registry keys slower than this at sf0.1 are listed for a
+# manual plan review (most are sub-second plans)
+REVIEW_ABOVE_SEC = 2.0
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# r15 (verdict #3, the 44th floor): events_session_window's spread is
-# JIT-INTRINSIC, not box noise — diagnosis committed in bench.py (r15
-# note) and SCALE.md: executed AQE plans are byte-identical between its
-# fast and slow samples (ids normalized), the isolated decay series is
-# 1.51 -> 0.52 s over ~6 executions (C2 promotion of its large generated
-# span), and in the full 44-key bench the bounded codegen/JIT caches
-# evict that span between passes, so per-execution cost stays bimodal
-# (~0.47-0.86 s) even with per-leg re-warm (measured r15: 6-deep initial
-# warm spread [0.47, 1.14]; per-leg 2x re-warm spread [0.467, 0.862]).
-# The spread gate exists to catch co-tenant phases; for this key it
-# measures JVM compilation state instead, so it certifies on a relaxed
-# documented band.  The committed FLOOR is still min-over-clean and is
-# unaffected by the band.  (After the per-leg re-warm moved inside
-# measure_inleg — covering floor_watch extras too — the key's spread
-# measured 1.32x and 1.27x in two consecutive clean runs, INSIDE the
-# strict band; the relaxed entry stays as the documented fallback for
-# windows where eviction pressure still bites.)
+# r15: events_session_window's spread is JIT-intrinsic, not box noise —
+# its executed AQE plans are byte-identical between fast and slow
+# samples, and the bounded codegen/JIT caches evict its generated code
+# between passes (bench.py's _pre_warm note).  It certifies on a relaxed
+# band; its committed floor is still min-over-clean.
 RELAXED_BANDS = {"events_session_window": 2.0}
 
 
-def best_ever() -> dict[str, float]:
-    """Per-key minimum committed value across all BENCH_r*.json."""
-    best: dict[str, float] = {}
-    for path in glob.glob(str(_REPO / "BENCH_r*.json")):
-        try:
-            rec = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        parsed = (rec.get("parsed") or rec) if isinstance(rec, dict) else {}
-        if not isinstance(parsed, dict):
-            continue
-        for k, v in (parsed.get("queries") or {}).items():
-            if isinstance(v, (int, float)):
-                best[k] = min(best.get(k, float("inf")), float(v))
-    return best
+def certify(
+    timings: dict[str, float],
+    quality: dict[str, str],
+    spread: dict[str, list],
+    cpus: int,
+) -> dict[str, dict]:
+    """One run's ledger records, each stamped with ``cpus``.  A key with
+    no window evidence does not certify."""
+    keys: dict[str, dict] = {}
+    for k, v in timings.items():
+        q = quality.get(k, "unknown")
+        sp = spread.get(k)
+        band = RELAXED_BANDS.get(k, SPREAD_BAND)
+        spread_ok = sp is None or sp[1] <= band * sp[0] + SPREAD_SLACK_SEC
+        keys[k] = {
+            "sec": v,
+            "cpus": cpus,
+            "quality": q,
+            "spread": sp,
+            "spread_ok": spread_ok,
+            **({"spread_band": band} if k in RELAXED_BANDS else {}),
+            "certified": q == "clean" and spread_ok,
+        }
+    return keys
 
 
-def main() -> None:
-    if os.environ.get("REUSE_LOG") and os.environ.get("PRE_LOAD"):
-        load_before = float(os.environ["PRE_LOAD"])
-    else:
-        load_before = os.getloadavg()[0]
+def record_run(path: Path, keys: dict[str, dict], cpus: int, run: dict) -> dict:
+    """Accrue ``keys`` into the ledger at ``cpus``, append the run summary
+    and write the ledger back.  Records of keys this run did not measure
+    stay as they are.  Returns the accrued records."""
+    try:
+        ledger = json.loads(path.read_text())
+    except (OSError, ValueError):
+        ledger = {"metric": "certified_floors", "keys": {}, "runs": []}
+    at = str(cpus)
+    prev = {
+        k: ledger["keys"][k][at]
+        for k in keys if at in ledger["keys"].get(k, {})
+    }
+    bench.accrue_certified(keys, prev, stale_limit=STALE_LIMIT)
+    for k, r in keys.items():
+        ledger["keys"].setdefault(k, {})[at] = r
+    ledger["keys"] = dict(sorted(ledger["keys"].items()))
+    n_cert = sum(1 for r in keys.values() if r["certified"])
+    ledger["runs"].append({
+        **run,
+        "cpus": cpus,
+        "certified": n_cert == len(keys),
+        "n_certified": n_cert,
+        "n_keys": len(keys),
+    })
+    path.write_text(json.dumps(ledger, indent=1) + "\n")
+    return keys
+
+
+def _headline() -> tuple[dict, dict, dict, int, dict]:
+    """Run bench.py and read back its committed numbers and window
+    evidence.  SPARK_GRAFT_DRIFT_GATE=0: certification is itself the
+    remediation path for a drift breach, so a breach must not stop it."""
+    proc = subprocess.run(
+        [sys.executable, str(_REPO / "bench.py")],
+        capture_output=True, text=True, cwd=str(_REPO),
+        env={**os.environ, "SPARK_GRAFT_DRIFT_GATE": "0"},
+    )
+    if proc.returncode != 0:
+        raise SystemExit(json.dumps({
+            "metric": "certify_bench", "certified": False,
+            "reason": f"bench.py exit {proc.returncode}",
+            "stderr_tail": proc.stderr[-400:],
+        }))
+    line = [
+        ln for ln in proc.stdout.splitlines()
+        if ln.startswith("{") and '"headline_queries_total"' in ln
+    ][-1]
+    out = json.loads(line)
+    detail = json.loads((_REPO / "BENCH_DETAIL.json").read_text())
+    evidence = {
+        "sentinel_median": detail["sentinel"]["median"],
+        "loopback_gibs": detail["loopback_gibs"],
+        "flagged": detail["window"]["flagged"],
+    }
+    return (out["queries"], detail["window"]["quality"],
+            detail.get("spread", {}), int(detail["cpus"]), evidence)
+
+
+def _registry(targets: list[str]) -> tuple[dict, dict, dict, int, dict]:
+    """Measure non-headline keys in-process through bench.measure_keys:
+    WARM_PASSES untimed passes, then bench's three bracketed passes."""
+    from arrow_experiments_spark.registry import all_queries
+    from arrow_experiments_spark.session import build_session
+
+    spark = build_session(app_name="certify_bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        queries = all_queries()
+        bad = [t for t in targets if t not in queries]
+        if bad:
+            raise SystemExit(f"unknown query keys: {bad}")
+        if not targets:
+            certified, best = bench.drift_anchors(str(_REPO))
+            targets = sorted(set(queries) - set(certified) - set(best))
+        measure = bench.query_timer(spark, SF_DIR, queries)
+        qual = bench.WindowQualifier(
+            lambda: bench._bench_transport(spark, "s2_serve_1m_identity")
+        )
+        for _ in range(3):  # seed the floor; the first pays the server fill
+            qual.probe()
+        for _ in range(WARM_PASSES):
+            for name in targets:
+                measure(name)
+        _, timings, _, quality, spread = bench.measure_keys(qual, measure, targets)
+        evidence = {"sentinel_probe_floor": round(qual.floor, 4),
+                    "warm_passes": WARM_PASSES}
+        return timings, quality, spread, bench.session_cpus(spark), evidence
+    finally:
+        spark.stop()
+
+
+def main(argv: list[str]) -> None:
+    registry = argv[:1] == ["--registry"]
+    load_before = os.getloadavg()[0]
     if load_before >= LOAD_MAX:
         print(json.dumps({
-            "metric": "certify_bench",
-            "certified": False,
+            "metric": "certify_bench", "certified": False,
             "reason": f"load1 {load_before:.2f} >= {LOAD_MAX} before run "
                       "— not a quiet window; try later",
         }))
         sys.exit(1)
-
     t0 = time.time()
-    reuse = os.environ.get("REUSE_LOG")
-    if reuse:
-        # post-process an already-completed bench run (its stdout log +
-        # the BENCH_DETAIL.json it wrote) instead of re-running ~25 min
-        # of bench — e.g. after fixing a post-processing bug
-        stdout = open(reuse).read()
-    else:
-        # SPARK_GRAFT_DRIFT_GATE=0: bench.py exits nonzero on a >2x
-        # drift breach (r15 verdict #7), but certification IS the
-        # adjudication/remediation path for a breach — gating it on the
-        # breach being absent would deadlock exactly when it is needed.
-        proc = subprocess.run(
-            [sys.executable, str(_REPO / "bench.py")],
-            capture_output=True, text=True, cwd=str(_REPO),
-            env={**os.environ, "SPARK_GRAFT_DRIFT_GATE": "0"},
-        )
-        if proc.returncode != 0:
-            print(json.dumps({
-                "metric": "certify_bench", "certified": False,
-                "reason": f"bench.py exit {proc.returncode}",
-                "stderr_tail": proc.stderr[-400:],
-            }))
-            sys.exit(1)
-        stdout = proc.stdout
-        # persist immediately: a post-processing crash must not lose a
-        # ~25-min bench run (REUSE_LOG recovers from this file)
-        Path("/tmp/certify_bench_stdout.txt").write_text(stdout)
-    line = [
-        ln for ln in stdout.splitlines()
-        if ln.startswith("{") and '"headline_queries_total"' in ln
-    ][-1]
-    bench_out = json.loads(line)
-    load_after = os.getloadavg()[0]
-    detail = json.load(open(_REPO / "BENCH_DETAIL.json"))
-
-    quality: dict[str, str] = detail["window"]["quality"]
-    gmed: dict[str, list] = detail["window"]["inleg"]["gather_med_by_key"]
-    spread: dict[str, list] = detail.get("spread", {})
-    bests = best_ever()
-
-    # core-count provenance (r16 verdict #2): floors are only a valid
-    # drift anchor for runs at the SAME cpus — record it per key (so a
-    # floor carried through accrual keeps its provenance even if a later
-    # ledger mixes core counts) and at the top level.
-    try:
-        run_cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 32)
-    except ValueError:
-        run_cpus = 32
-
-    keys: dict[str, dict] = {}
-    for k, v in bench_out["queries"].items():
-        # a key with NO window evidence must not certify (refusing is the
-        # safe direction) — default to a non-clean sentinel, not "clean"
-        q = quality.get(k, "unknown")
-        sp = spread.get(k)
-        band = RELAXED_BANDS.get(k, SPREAD_BAND)
-        spread_ok = sp is None or (
-            sp[1] <= band * sp[0] + SPREAD_SLACK_SEC
-        )
-        keys[k] = {
-            "sec": v,
-            "cpus": run_cpus,
-            "quality": q,
-            "spread": sp,
-            "spread_ok": spread_ok,
-            **(
-                {"spread_band": band,
-                 "band_note": "JIT-intrinsic spread, plan-identical "
-                              "fast/slow samples (bench.py r15 note)"}
-                if k in RELAXED_BANDS else {}
-            ),
-            # recorded-only diagnostic (r14 gather closure)
-            "gather_meds": [g for g in gmed.get(k, []) if g is not None],
-            "certified": q == "clean" and spread_ok,
-            "vs_best_ever": (
-                round(v / bests[k], 3) if bests.get(k) else None
-            ),
-        }
-    # MERGE with an existing BENCH_QUIET.json: certification accrues —
-    # a key certified by ANY quiet run keeps its lowest certified floor;
-    # carried floors record the current failing result and expire after
-    # CARRY_STALE_LIMIT consecutive carries (bench.accrue_certified).
-    prev_path = _REPO / "BENCH_QUIET.json"
-    if prev_path.exists():
-        try:
-            prev = json.load(open(prev_path)).get("keys", {})
-        except (OSError, ValueError):
-            prev = {}
-        bench.accrue_certified(
-            keys, prev,
-            stale_limit=int(os.environ.get("CARRY_STALE_LIMIT", "3")),
-        )
-    n_cert = sum(1 for r in keys.values() if r["certified"])
-    out = {
-        "metric": "certify_bench",
-        "certified": n_cert == len(keys),
-        "n_certified": n_cert,
-        "n_keys": len(keys),
-        "cpus": run_cpus,
-        "sf": bench_out.get("sf"),
+    timings, quality, spread, cpus, evidence = (
+        _registry(argv[1:]) if registry else _headline()
+    )
+    if not timings:
+        print(json.dumps({"metric": "certify_bench", "n_keys": 0,
+                          "reason": "nothing to certify"}))
+        return
+    keys = certify(timings, quality, spread, cpus)
+    review = sorted(
+        k for k, r in keys.items()
+        if registry and r["certified"] and r["sec"] > REVIEW_ABOVE_SEC
+    )
+    keys = record_run(_REPO / bench.LEDGER, keys, cpus, {
+        "mode": "registry" if registry else "headline",
+        "sf_dir": SF_DIR,
         "wall_min": round((time.time() - t0) / 60, 1),
         "evidence": {
             "load1_before": round(load_before, 2),
-            "load1_after": round(load_after, 2),
+            "load1_after": round(os.getloadavg()[0], 2),
             "load_max": LOAD_MAX,
             "spread_band": SPREAD_BAND,
             "spread_slack_sec": SPREAD_SLACK_SEC,
-            "sentinel_median": detail["sentinel"]["median"],
-            "loopback_gibs": detail["loopback_gibs"],
-            "flagged": detail["window"]["flagged"],
             "statistic": "min over window-qualified clean samples"
-                         " (bench.commit_stat, r14 protocol)",
+                         " (bench.commit_stat)",
+            **evidence,
         },
-        "keys": keys,
-        "drift_watch": detail.get("drift_watch", {}),
-    }
-    with open(_REPO / "BENCH_QUIET.json", "w") as fh:
-        json.dump(out, fh, indent=1)
+        **({"review": review} if registry else {}),
+    })
     print(json.dumps({
         "metric": "certify_bench",
-        "certified": out["certified"],
-        "n_certified": n_cert,
+        "cpus": cpus,
+        "n_certified": sum(1 for r in keys.values() if r["certified"]),
         "n_keys": len(keys),
-        "uncertified": sorted(
-            k for k, r in keys.items() if not r["certified"]
-        ),
-        "new_floors": sorted(
-            k for k, r in keys.items()
-            if r["certified"] and r["vs_best_ever"] is not None
-            and r["vs_best_ever"] < 1.0
-        ),
+        "uncertified": sorted(k for k, r in keys.items() if not r["certified"]),
+        "review": review,
     }))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -325,21 +325,7 @@ def main() -> None:
         "(lost pushdown, a broadcast that became a shuffle, a new nested\n"
         "loop).  Checks summarized per query; full formatted plans below.\n\n"
     )
-    # preserve the demo sections other tools own (cbo_demo.py /
-    # bloom_demo.py append capability demonstrations below the audit — a
-    # regeneration must not destroy them)
-    out = Path(_REPO, "PLANS.md")
-    tail = ""
-    if out.exists():
-        prev = out.read_text()
-        idxs = [
-            prev.index(m)
-            for m in ("\n## Stats-fed planning", "\n## Runtime Bloom-filter")
-            if m in prev
-        ]
-        if idxs:
-            tail = prev[min(idxs) :]
-    out.write_text(header + "\n".join(sections) + tail)
+    Path(_REPO, "PLANS.md").write_text(header + "\n".join(sections))
     spark.stop()
     # completeness gate (r13 verdict #3): one section per registered
     # query (+ the stateful batch twin) or the audit fails
