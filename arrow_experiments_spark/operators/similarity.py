@@ -1119,8 +1119,10 @@ def ensure_ivf_index(
     from arrow_experiments_spark.streaming.egress import (
         WriterLease,
         WriterLeaseHeld,
+        _alloc_seq,
         _committed_version,
         _merge_batch,
+        _write_json_atomic,
         derive_index_buckets,
     )
 
@@ -1188,8 +1190,8 @@ def ensure_ivf_index(
     try:
         if fresh():  # another builder finished while we acquired
             return base, k
-        committed = _committed_version(cells_dir)
-        seq = int(committed[1:]) + 1 if committed else 0
+        # the snapshot's own next version (no checkpoint: never a skip)
+        seq = _alloc_seq(_committed_version(cells_dir), 0, checkpointed=False)
         nz = _nonzero_embeddings(spark, sf_dir)
         postings = nz.select(
             ivf_cell_col(F.col("embedding"), k).alias("cell"),
@@ -1212,22 +1214,12 @@ def ensure_ivf_index(
             # rebuild is the one writer allowed to CHANGE the recorded
             # codebook (a sink attach with a different k must still
             # raise, which _check_geometry enforces for it)
-            tmp = geometry_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"ivf_k": k}, f)
-            os.replace(tmp, geometry_path)
+            _write_json_atomic(geometry_path, {"ivf_k": k})
             if fp is not None:
-                tmp = manifest_path + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(
-                        {
-                            "fingerprint": fp,
-                            "k": k,
-                            "maintained_by": "builder",
-                        },
-                        f,
-                    )
-                os.replace(tmp, manifest_path)
+                _write_json_atomic(
+                    manifest_path,
+                    {"fingerprint": fp, "k": k, "maintained_by": "builder"},
+                )
         return base, k
     finally:
         lease.release()

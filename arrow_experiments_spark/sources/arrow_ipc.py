@@ -199,9 +199,11 @@ def spill_dataframe(
     carry serve-sized batches — the prerequisite for the zero-copy splice
     serve (:func:`raw_spill_stream`), which replays file bytes verbatim
     and therefore cannot re-chunk.  Each file's final batch may be
-    partial (per-partition tails don't merge across files).
+    partial (per-partition tails don't merge across files).  If the spill
+    job fails, the directory is removed before the error propagates.
     """
     import glob
+    import shutil
     import tempfile
 
     d = tempfile.mkdtemp(prefix="arrow-egress-", dir=spill_dir)
@@ -241,7 +243,11 @@ def spill_dataframe(
             {"pid": pa.array([pid], pa.int64()), "rows": pa.array([rows], pa.int64())}
         )
 
-    df.mapInArrow(dump, "pid long, rows long").collect()  # tiny summary only
+    try:
+        df.mapInArrow(dump, "pid long, rows long").collect()  # tiny summary only
+    except BaseException:
+        shutil.rmtree(d, ignore_errors=True)
+        raise
     files = sorted(glob.glob(os.path.join(d, "part-*.arrows")))
     if files:
         with open(files[0], "rb") as f:
@@ -260,7 +266,8 @@ def spilled_files_reader(
     cleanup_dir: str | None = None,
 ) -> pa.RecordBatchReader:
     """Stream spilled ``.arrows`` files in order with O(batch) memory;
-    optionally remove ``cleanup_dir`` once the stream is exhausted."""
+    optionally remove ``cleanup_dir`` once the stream ends, or once the
+    reader is dropped, read part way or not at all."""
     import shutil
 
     from arrow_experiments_spark.transport.server import rebatch_reader
@@ -272,9 +279,13 @@ def spilled_files_reader(
                     yield from ipc.open_stream(f)
         finally:
             if cleanup_dir is not None:
-                shutil.rmtree(cleanup_dir, ignore_errors=True)
+                release()
 
-    reader = pa.RecordBatchReader.from_batches(schema, gen())
+    batches = gen()
+    if cleanup_dir is not None:
+        # a reader dropped before its first read never enters the generator
+        release = weakref.finalize(batches, shutil.rmtree, cleanup_dir, True)
+    reader = pa.RecordBatchReader.from_batches(schema, batches)
     return rebatch_reader(reader, batch_rows)
 
 

@@ -13,11 +13,16 @@ Clients discover batches through the catalog endpoint (the get_indirect
 two-step shape): ``GET /catalog`` lists ``{prefix}.{batch_id}`` entries as
 they appear; each is an independently fetchable Arrow stream.
 
-The snapshot sinks merge micro-batches into versioned parquet snapshots
-(:func:`upsert_snapshot_sink`, :func:`incremental_curation_sink`, the IVF
-index sink).  The two near-dup gates keep a corpus snapshot plus a probe
-index and share one skeleton, :func:`_corpus_index_sink`, whose docstring
-states their fused-commit and crash-heal contract.
+The snapshot sinks merge micro-batches into versioned parquet snapshots:
+:func:`upsert_snapshot_sink`, :func:`incremental_curation_sink`, the two
+near-dup gates and the IVF index sink.  All five run on one scaffold,
+:func:`_snapshot_sink`, which holds the single-writer lease, the
+per-micro-batch version ids, the crash-replay skip and the fencing
+contract; each writer plugs in only its attach check and its merge.  The
+gate sinks (curation and both near-dup gates) share one seen-before
+corpus leg, :func:`_corpus_leg`.  The near-dup gates also keep a probe
+index next to their corpus, on :func:`_corpus_index_sink`, whose
+docstring states their fused-commit and crash-heal contract.
 """
 
 from __future__ import annotations
@@ -42,16 +47,25 @@ def stream_to_registry(
     per-partition Arrow IPC files by the executors (bounded driver
     memory); the registry entry is a factory that re-streams the files
     per request — replay-many serving with O(batch) memory on both the
-    publish and the serve side.  Spill files live until process exit (or
-    until the caller removes ``spill_dir``).
+    publish and the serve side.  The call spills into one directory
+    (under ``spill_dir``, else the system temp dir), removed when
+    ``registry`` is garbage-collected or at interpreter exit, whichever
+    comes first.
     """
+    import shutil
+    import tempfile
+    import weakref
+
     from arrow_experiments_spark.sources.arrow_ipc import (
         spill_dataframe,
         spilled_files_reader,
     )
 
+    root = tempfile.mkdtemp(prefix="arrow-egress-", dir=spill_dir)
+    weakref.finalize(registry, shutil.rmtree, root, True)
+
     def publish(batch_df: DataFrame, batch_id: int) -> None:
-        _d, files, schema = spill_dataframe(batch_df, spill_dir)
+        _d, files, schema = spill_dataframe(batch_df, root)
         if files:
             registry.register(
                 f"{prefix}.{batch_id}",
@@ -135,9 +149,9 @@ def upsert_snapshot_sink(
       skipped — a second run against an existing snapshot merges its
       first micro-batch instead of silently discarding it.
 
-    Per micro-batch (:func:`_snapshot_sink`, shared with
-    :func:`incremental_curation_sink`): lease heartbeat, version id, then
-    one :func:`_merge_batch` — a touched-bucket probe, the pruned
+    Per micro-batch (:func:`_snapshot_sink`, the scaffold every snapshot
+    writer shares): lease heartbeat, version id, then one
+    :func:`_merge_batch` — a touched-bucket probe, the pruned
     read-back and merge window, the write.  A steady-state micro-batch
     runs 7 Spark jobs at ``local[4]``; ``insert_only`` adds the
     seen-before anti-join and its backfill-guard count (14 jobs).
@@ -170,7 +184,8 @@ def upsert_snapshot_sink(
     spark = stream_df.sparkSession
     _check_bucket_cols(key_cols, bucket_cols)
 
-    def merge_one(batch_df: DataFrame, committed: str | None, seq: int, lease) -> None:
+    def merge_one(batch_df: DataFrame, state: dict, lease) -> None:
+        committed, seq = state["."]
         _merge_batch(
             spark,
             batch_df,
@@ -195,35 +210,74 @@ def upsert_snapshot_sink(
 
 def _snapshot_sink(
     stream_df: DataFrame,
-    snapshot_dir: str,
+    base_dir: str,
     merge_one,
     *,
     what: str,
     checkpoint_dir: str | None,
     timeout_sec: int,
     lease_ttl_sec: float,
+    subdirs: tuple[str, ...] = (".",),
+    attach=None,
 ):
-    """The scaffolding of the single-snapshot sinks
-    (:func:`upsert_snapshot_sink`, :func:`incremental_curation_sink`):
-    one :class:`WriterLease` over ``snapshot_dir`` for the run; per
-    micro-batch a heartbeat, the committed pointer and the version id
-    (:func:`_alloc_seq` — a checkpointed replay of an already-committed
-    batch is skipped here), then ``merge_one(batch_df, committed, seq,
-    lease)``, which writes and commits ``v{seq}``."""
-    lease = WriterLease.acquire(snapshot_dir, ttl_sec=lease_ttl_sec)
+    """The one scaffold every snapshot writer runs on (upsert, curation,
+    the two near-dup gates, the IVF index).  It holds the single-writer,
+    crash-replay and fencing contract; a writer supplies only ``attach``
+    and ``merge_one``.
+
+    Attach: ONE :class:`WriterLease` over ``base_dir`` for the run — it
+    covers every versioned snapshot under it, because the hazard is two
+    writers interleaving commits, which per-snapshot leases would not
+    stop.  ``attach()`` (the index sinks' geometry check) runs under the
+    lease; if it raises, the lease is released and the error propagates.
+
+    Per micro-batch: a heartbeat, then for each of ``subdirs`` (the
+    snapshot directories under ``base_dir``; ``"."`` is ``base_dir``
+    itself) the committed pointer and the version id (:func:`_alloc_seq`).
+    The batch is skipped only when EVERY subdir already committed it (a
+    checkpointed replay); a partly committed batch — a crash between two
+    pointer swaps — runs again, and ``merge_one(batch_df, {subdir:
+    (committed, seq)}, lease)`` skips the legs whose ``seq`` is None.
+    ``merge_one`` writes and commits ``v{seq}``, fence-checked by
+    :func:`_merge_batch` against ``lease`` before each pointer swap.
+
+    Row bounds: the writers hand :func:`_anti_join_small_left` and
+    :func:`_merge_batch` row counts (``small_rows_max``,
+    ``incoming_rows_max``) so those skip their backfill-guard count
+    jobs.  Each must be a TRUE upper bound on the rows of the frame it
+    describes — a count that undercounts could send a giant backfill down
+    the broadcast path.  So every bound is derived from a count of the
+    very frame it bounds, or of a frame the bounded one is provably no
+    larger than (see :func:`_corpus_leg` and :func:`_corpus_index_sink`).
+
+    Size ``lease_ttl_sec`` above the slowest expected micro-batch: the
+    heartbeat runs once per batch, and a batch outliving the TTL can
+    lose the lease mid-flight (its commit then fences, safely)."""
+    import os
+
+    lease = WriterLease.acquire(base_dir, ttl_sec=lease_ttl_sec)
+    try:
+        if attach is not None:
+            attach()
+    except BaseException:
+        lease.release()
+        raise
+    ckpt = checkpoint_dir is not None
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         lease.heartbeat()
-        committed = _committed_version(snapshot_dir)
-        seq = _alloc_seq(committed, batch_id, checkpoint_dir is not None)
-        if seq is None:
+        state = {}
+        for d in subdirs:
+            committed = _committed_version(os.path.join(base_dir, d))
+            state[d] = (committed, _alloc_seq(committed, batch_id, ckpt))
+        if all(seq is None for _c, seq in state.values()):
             return  # replay of an already-committed batch — idempotent skip
-        merge_one(batch_df, committed, seq, lease)
+        merge_one(batch_df, state, lease)
 
     try:
         return _run_foreach_batch(
             stream_df, merge, checkpoint_dir, timeout_sec,
-            f"{what} ({snapshot_dir})",
+            f"{what} ({base_dir})",
         )
     finally:
         lease.release()
@@ -401,6 +455,32 @@ def _committed_version(snapshot_dir: str) -> str | None:
         return f.read().strip()
 
 
+def _read_json(path: str):
+    """The JSON value stored at ``path``, or None when the file is missing
+    or unreadable."""
+    import json
+
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def _write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` through a uniquely named temp file
+    and an atomic rename: a reader sees the old file or the new one, never
+    a partial write, and two writers never share a temp file."""
+    import json
+    import os
+    import uuid
+
+    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 def _alloc_seq(
     committed: str | None, batch_id: int, checkpointed: bool
 ) -> int | None:
@@ -441,25 +521,38 @@ _VERSION_READ_CACHE: dict[tuple, object] = {}
 _LAYOUT_CACHE: dict[tuple, dict] = {}
 
 
+def _walk_parquet(vdir: str) -> list[str]:
+    """The version's parquet files, relative to ``vdir``, by one walk."""
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(dirpath, fn), vdir)
+        for dirpath, _dirs, fns in os.walk(vdir)
+        for fn in fns
+        if fn.endswith(".parquet")
+    )
+
+
+def _manifest_files(vdir: str) -> list[str] | None:
+    """The version's parquet files as its ``_MANIFEST.json`` lists them,
+    or None when it has no readable manifest."""
+    import os
+
+    man = _read_json(os.path.join(vdir, "_MANIFEST.json"))
+    files = man.get("files") if isinstance(man, dict) else None
+    return files if isinstance(files, list) else None
+
+
 def _write_manifest(vdir: str) -> None:
     """Record the version's parquet files in ``_MANIFEST.json`` so
     readers list the version by manifest instead of walking the bucket
     directories (r9 verdict #4; the object-store seat of the same idea
     is the table-format manifest this layout stands in for)."""
-    import json
     import os
 
-    files = []
-    for dirpath, _dirs, fns in os.walk(vdir):
-        for fn in fns:
-            if fn.endswith(".parquet"):
-                files.append(
-                    os.path.relpath(os.path.join(dirpath, fn), vdir)
-                )
-    tmp = os.path.join(vdir, "_MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"files": sorted(files)}, f)
-    os.replace(tmp, os.path.join(vdir, "_MANIFEST.json"))
+    _write_json_atomic(
+        os.path.join(vdir, "_MANIFEST.json"), {"files": _walk_parquet(vdir)}
+    )
 
 
 def _anti_join_small_left(
@@ -525,31 +618,16 @@ def _bucket_file_counts(vdir: str) -> dict[int, int]:
     """Parquet files per ``_bucket=k`` partition of a committed version —
     the insert-only compaction trigger's input.  Read from the manifest
     when present (no directory walk), else one walk."""
-    import json
     import os
 
     counts: dict[int, int] = {}
-
-    def _add(rel: str) -> None:
+    files = _manifest_files(vdir)
+    for rel in _walk_parquet(vdir) if files is None else files:
         head = rel.split(os.sep, 1)[0]
         if head.startswith("_bucket="):
             val = head.split("=", 1)[1]
             if val.isdigit():
                 counts[int(val)] = counts.get(int(val), 0) + 1
-
-    manifest = os.path.join(vdir, "_MANIFEST.json")
-    if os.path.exists(manifest):
-        try:
-            with open(manifest) as f:
-                for rel in json.load(f)["files"]:
-                    _add(rel)
-            return counts
-        except (OSError, ValueError, KeyError):
-            counts.clear()
-    for dirpath, _dirs, fns in os.walk(vdir):
-        for fn in fns:
-            if fn.endswith(".parquet"):
-                _add(os.path.relpath(os.path.join(dirpath, fn), vdir))
     return counts
 
 
@@ -559,7 +637,6 @@ def _read_version(spark, vdir: str):
     (no directory walk at all — hive ``_bucket=`` partition parsing
     still applies); legacy versions fall back to the directory read.
     Sound because committed versions never change in place."""
-    import json
     import os
 
     # inode + mtime in the key: a version dir deleted and re-created at
@@ -575,19 +652,12 @@ def _read_version(spark, vdir: str):
     hit = _VERSION_READ_CACHE.get(key)
     if hit is not None:
         return hit
-    manifest = os.path.join(vdir, "_MANIFEST.json")
-    df = None
-    if os.path.exists(manifest):
-        try:
-            with open(manifest) as f:
-                files = json.load(f)["files"]
-        except (OSError, ValueError, KeyError):
-            files = None
-        if files:
-            df = spark.read.option("basePath", vdir).parquet(
-                *[os.path.join(vdir, p) for p in files]
-            )
-    if df is None:
+    files = _manifest_files(vdir)
+    if files:
+        df = spark.read.option("basePath", vdir).parquet(
+            *[os.path.join(vdir, p) for p in files]
+        )
+    else:
         df = spark.read.parquet(vdir)
     if len(_VERSION_READ_CACHE) > 128:
         _VERSION_READ_CACHE.clear()
@@ -833,7 +903,6 @@ def _merge_batch(
     directory tree plays here (retain manifests, GC by reference).  Nothing about the reader contract
     depends on POSIX link counts; they are only the local-FS
     implementation of shared immutable extents."""
-    import json
     import os
     import shutil
 
@@ -876,26 +945,27 @@ def _merge_batch(
             # read-back+rewrite set (upsert); otherwise one collect_set
             # job derives it (not distinct().collect() — _touched_list)
             if touched is None:
-                touched = set(
-                    inc.agg(
-                        F.collect_set("_bucket").alias("s")
-                    ).collect()[0]["s"]
-                )
+                touched = set(_touched_list(inc, F.col("_bucket")))
+            touched_ids = [int(t) for t in touched if t is not None]
             rec = _layout_record(vdir_committed)
             if "_bucket" in raw.columns and _geometry_matches(
                 rec, n_buckets, key_cols, bucket_cols
             ):
+                # committed bucket dirs → bucket id (None: not numeric,
+                # e.g. Hive's NULL partition)
+                buckets = {
+                    d: int(d[8:]) if d[8:].isdigit() else None
+                    for d in os.listdir(vdir_committed)
+                    if d.startswith("_bucket=")
+                }
                 if insert_only:
                     # first-wins append: drop re-inserted keys against a
                     # narrow pruned key scan, rewrite only buckets past
                     # the compaction threshold, link every other file
                     per_bucket = _bucket_file_counts(vdir_committed)
                     compact = {
-                        int(t)
-                        for t in touched
-                        if t is not None
-                        and per_bucket.get(int(t), 0) + 1
-                        > max_files_per_bucket
+                        t for t in touched_ids
+                        if per_bucket.get(t, 0) + 1 > max_files_per_bucket
                     }
                     # in-batch first-wins: the LOWEST order_col per key
                     # (current callers pre-dedupe, so this is the
@@ -910,12 +980,7 @@ def _merge_batch(
                         .drop("_rn")
                     )
                     if not assume_novel:
-                        seen = raw.filter(
-                            F.col("_bucket").isin(
-                                [int(t) for t in touched if t is not None]
-                            )
-                            | F.col("_bucket").isNull()
-                        ).select(*key_cols)
+                        seen = _filter_buckets(raw, touched_ids).select(*key_cols)
                         # incoming_rows_max: the sink's batch-derived
                         # bound skips the backfill-guard count job
                         fresh = _anti_join_small_left(
@@ -939,27 +1004,15 @@ def _merge_batch(
                     out = fresh.unionByName(
                         raw.filter(F.col("_bucket").isin(list(compact)))
                     )
-                    for d in os.listdir(vdir_committed):
-                        if not d.startswith("_bucket="):
-                            continue
-                        val = d.split("=", 1)[1]
-                        if not (val.isdigit() and int(val) in compact):
-                            linked.append(d)
+                    linked = [d for d, b in buckets.items() if b not in compact]
                 else:
                     # same bucket geometry: read back ONLY the touched
                     # buckets (partition pruning), link the rest verbatim
-                    cur = raw.filter(
-                        F.col("_bucket").isin(
-                            [int(t) for t in touched if t is not None]
-                        )
-                        | F.col("_bucket").isNull()
-                    )
-                    for d in os.listdir(vdir_committed):
-                        if not d.startswith("_bucket="):
-                            continue
-                        val = d.split("=", 1)[1]
-                        if val.isdigit() and int(val) not in touched:
-                            linked.append(d)
+                    cur = _filter_buckets(raw, touched_ids)
+                    linked = [
+                        d for d, b in buckets.items()
+                        if b is not None and b not in touched
+                    ]
                     merged = inc.unionByName(cur.withColumn("_src", F.lit(0)))
             else:
                 # legacy flat version, or the caller changed the bucket
@@ -1016,15 +1069,10 @@ def _merge_batch(
     # next merge prunes only when count AND columns both match — plus
     # the resolved retention window (adopted by conf-free re-attaches)
     retain = _retain_versions(spark, snapshot_dir, committed, retain_versions)
-    with open(os.path.join(vdir, "_LAYOUT.json"), "w") as f:
-        json.dump(
-            {
-                "n_buckets": n_buckets,
-                "bucket_cols": bcols,
-                "retain_versions": retain,
-            },
-            f,
-        )
+    _write_json_atomic(
+        os.path.join(vdir, "_LAYOUT.json"),
+        {"n_buckets": n_buckets, "bucket_cols": bcols, "retain_versions": retain},
+    )
     # one Python walk now saves every reader a directory walk later
     _write_manifest(vdir)
 
@@ -1177,7 +1225,6 @@ class WriterLease:
 
     @classmethod
     def acquire(cls, base_dir: str, ttl_sec: float = 60.0) -> "WriterLease":
-        import json
         import os
         import time
         import uuid
@@ -1199,11 +1246,7 @@ class WriterLease:
         # token (tombstones preserve it — see release) so fencing
         # tokens are monotonic across release/reacquire cycles.
         with cls._mutate_lock(path):
-            try:
-                with open(path) as f:
-                    cur = json.load(f)
-            except (OSError, ValueError):
-                cur = {}
+            cur = _read_json(path) or {}
             if cur and not cur.get("released"):
                 age = time.time() - float(cur.get("heartbeat", 0))
                 if age <= ttl_sec:
@@ -1217,23 +1260,11 @@ class WriterLease:
                         "writers' buckets"
                     ) from None
             token = int(cur.get("token", 0)) + 1
-            tmp = path + f".tmp.{nonce}"
-            with open(tmp, "w") as f:
-                json.dump(cls._payload(nonce, token), f)
-            os.replace(tmp, path)
+            _write_json_atomic(path, cls._payload(nonce, token))
         return cls(path, nonce, token)
 
-    def _current(self) -> dict:
-        import json
-
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {}
-
     def check(self) -> None:
-        cur = self._current()
+        cur = _read_json(self.path) or {}
         if cur.get("nonce") != self.nonce or int(cur.get("token", -1)) != self.token:
             raise WriterFenced(
                 f"writer lease on {self.path} was taken over "
@@ -1243,9 +1274,6 @@ class WriterLease:
             )
 
     def heartbeat(self) -> None:
-        import json
-        import os
-
         # check-and-refresh under the mutation lock: unlocked, a writer
         # stalled past its TTL could pass check(), lose the lease to a
         # concurrent stale-takeover, then blindly os.replace the
@@ -1256,15 +1284,9 @@ class WriterLease:
         # lands second SEES the other's write and fences correctly.
         with self._mutate_lock(self.path):
             self.check()
-            tmp = self.path + f".tmp.{self.nonce}"
-            with open(tmp, "w") as f:
-                json.dump(self._payload(self.nonce, self.token), f)
-            os.replace(tmp, self.path)
+            _write_json_atomic(self.path, self._payload(self.nonce, self.token))
 
     def release(self) -> None:
-        import json
-        import os
-
         # same read-check-replace race as heartbeat: without the lock a
         # takeover landing between the nonce check and the write would
         # have THIS writer clobber the successor's lease.  Release
@@ -1274,12 +1296,8 @@ class WriterLease:
         # writer whose token happens to equal the restarted counter
         # pass check() it should fail).
         with self._mutate_lock(self.path):
-            cur = self._current()
-            if cur.get("nonce") == self.nonce:
-                tmp = self.path + f".tmp.{self.nonce}"
-                with open(tmp, "w") as f:
-                    json.dump({"released": True, "token": self.token}, f)
-                os.replace(tmp, self.path)
+            if (_read_json(self.path) or {}).get("nonce") == self.nonce:
+                _write_json_atomic(self.path, {"released": True, "token": self.token})
 
 
 def _check_geometry(base_dir: str, record: dict, subdirs: list[str]) -> None:
@@ -1288,13 +1306,11 @@ def _check_geometry(base_dir: str, record: dict, subdirs: list[str]) -> None:
     holds live data (a committed version in any of ``subdirs``) — a
     record left by a run that died before its first commit pins
     nothing and is overwritten instead of bricking the directory."""
-    import json
     import os
 
     geo_path = os.path.join(base_dir, "_GEOMETRY.json")
     if os.path.exists(geo_path):
-        with open(geo_path) as f:
-            rec = json.load(f)
+        rec = _read_json(geo_path)
         if rec == record:
             return
         if any(
@@ -1310,10 +1326,7 @@ def _check_geometry(base_dir: str, record: dict, subdirs: list[str]) -> None:
             )
         # stale record from a run that never committed — re-record
     os.makedirs(base_dir, exist_ok=True)
-    tmp = geo_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(record, f)
-    os.replace(tmp, geo_path)
+    _write_json_atomic(geo_path, record)
 
 
 def _gated_firsts(batch_df: DataFrame) -> DataFrame:
@@ -1349,6 +1362,64 @@ def _gated_firsts(batch_df: DataFrame) -> DataFrame:
     )
 
 
+def _corpus_leg(
+    batch_df: DataFrame,
+    gate,
+    view: DataFrame | None,
+    n_buckets: int,
+    key_cols: list[str],
+    pinned: list,
+    *,
+    probe_first: bool = False,
+    return_matched: bool = False,
+):
+    """The seen-before corpus leg of every gate sink (curation and both
+    near-dup gates), against ``view``, the committed corpus snapshot as
+    :func:`_prepare_view` returns it (None before the first commit):
+
+    1. ``gate(batch_df)`` is PERSISTED (appended to ``pinned``; the
+       caller unpersists): the probe, the anti-join and the merge build
+       on it, so the raw batch is read once;
+    2. ONE :func:`_touched_list` aggregate over the gate yields the
+       corpus buckets its keys hash into (exactly the merge's bucket set)
+       and its row count;
+    3. the gate is anti-joined against the bucket-pruned committed keys
+       (:func:`_anti_join_small_left`) with ``small_rows_max`` = that
+       count — the exact size of the frame it bounds, so the backfill
+       guard's count job never runs on a micro-batch.
+
+    Before the first commit there is nothing to anti-join, and the probe
+    runs only when ``probe_first`` asks for its count.
+
+    Returns ``(gated, fresh, touched, n_rows, matched)``: the persisted
+    gate; its rows whose keys the committed corpus does not hold; the
+    probe's bucket list and the gate's row count (None when nothing was
+    probed); and, with ``return_matched``, the persisted matched keys
+    (also in ``pinned``; None on the shuffled-fallback path or before
+    the first commit).  Sound against replays because the gate reads the
+    same committed pointer the merge writes past."""
+    from pyspark.sql import functions as F
+
+    gated = gate(batch_df).persist()
+    pinned.append(gated)
+    if view is None and not probe_first:
+        return gated, gated, None, None, None
+    bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
+    touched, n_rows = _touched_list(gated, bucket, with_count=True)
+    if view is None:
+        return gated, gated, touched, n_rows, None
+    seen = _filter_buckets(view, touched).select(*key_cols)
+    fresh = _anti_join_small_left(
+        gated, seen, key_cols, return_matched=return_matched, small_rows_max=n_rows
+    )
+    matched = None
+    if return_matched:
+        fresh, matched = fresh
+        if matched is not None:
+            pinned.append(matched)
+    return gated, fresh, touched, n_rows, matched
+
+
 def incremental_curation_sink(
     stream_df: DataFrame,
     snapshot_dir: str,
@@ -1371,57 +1442,50 @@ def incremental_curation_sink(
     bucketed-by-hash fingerprint-table shape a 100 TB warehouse runs,
     made concrete by the versioned layout.
 
-    Per micro-batch, the shape of the near-dup sinks' corpus leg
-    (:func:`_corpus_index_sink`): the gate is PERSISTED, then ONE
-    aggregate over it (not over the raw batch, so its bucket set is
-    exactly the merge's) yields the touched buckets and its row count,
-    which bounds the anti-join's backfill guard (no count job); the
-    survivors go to the insert-only merge with that bucket set and
-    ``assume_novel``, so the merge neither probes nor anti-joins again.
-    Sound because the gate reads the same committed pointer the merge
-    writes past: a replayed batch whose commit was lost re-gates
-    against the version before it.  The raw batch is read once, and a
-    steady-state micro-batch runs 9 Spark jobs (16 stages) at
-    ``local[4]``.
+    Per micro-batch: the seen-before corpus leg shared with the near-dup
+    gates (:func:`_corpus_leg`: persisted gate, one probe aggregate over
+    it, the pruned anti-join bounded by its count), then the insert-only
+    merge with the probe's bucket set and ``assume_novel``, so the merge
+    neither probes nor anti-joins again.  Sound because the gate reads
+    the same committed pointer the merge writes past: a replayed batch
+    whose commit was lost re-gates against the version before it.  The
+    raw batch is read once, and a steady-state micro-batch runs 9 Spark
+    jobs (16 stages) at ``local[4]``.
 
     Expects ``doc_id`` and ``text`` columns; the snapshot carries the
     batch columns plus ``content_hash``.  First-seen-wins across
     micro-batches (arrival order), min-doc_id-wins within one batch.
     The lease, version-id and checkpoint-replay contract is
-    :func:`upsert_snapshot_sink`'s (both run on :func:`_snapshot_sink`).
+    :func:`upsert_snapshot_sink`'s (every snapshot writer runs on
+    :func:`_snapshot_sink`).
     This gate is EXACT-only; :func:`incremental_neardup_sink` is the
     same funnel extended with near-duplicate rejection over a persisted
     band index, and :func:`incremental_embedding_dedup_sink` its
     embedding-modality twin.
     """
-    from pyspark.sql import functions as F
-
     spark = stream_df.sparkSession
     key = ["content_hash"]
-    # the merge's ``_bucket`` expression
-    hash_bucket = F.pmod(F.xxhash64(*key), F.lit(n_buckets)).cast("int")
 
-    def merge_one(batch_df: DataFrame, committed: str | None, seq: int, lease) -> None:
-        # persisted: the probe, the anti-join and the merge build on it
-        fresh = firsts = _gated_firsts(batch_df).persist()
-        touched = None
+    def merge_one(batch_df: DataFrame, state: dict, lease) -> None:
+        committed, seq = state["."]
+        pinned: list = []
         try:
             view = _prepare_view(spark, snapshot_dir, committed, n_buckets, key)
-            if view is not None:
-                touched, n_rows = _touched_list(firsts, hash_bucket, with_count=True)
-                seen = _filter_buckets(view, touched).select(*key)
-                fresh = _anti_join_small_left(firsts, seen, key, small_rows_max=n_rows)
-                touched = set(touched)
+            _g, fresh, touched, _n, _m = _corpus_leg(
+                batch_df, _gated_firsts, view, n_buckets, key, pinned
+            )
             _merge_batch(
                 spark, fresh, snapshot_dir,
                 key_cols=key, order_col="doc_id", n_buckets=n_buckets,
                 bucket_cols=None, seq=seq, committed=committed, lease=lease,
                 # first-seen-wins is this gate's contract, and ``fresh`` was
                 # anti-joined against THIS committed version over ``touched``
-                insert_only=True, assume_novel=True, touched=touched,
+                insert_only=True, assume_novel=True,
+                touched=None if touched is None else set(touched),
             )
         finally:
-            firsts.unpersist()
+            for f in pinned:
+                f.unpersist()
 
     return _snapshot_sink(
         stream_df, snapshot_dir, merge_one, what="curation",
@@ -1469,9 +1533,10 @@ def _corpus_index_sink(
     timeout_sec: int,
     lease_ttl_sec: float,
 ):
-    """The corpus-plus-index skeleton both near-dup gates
+    """The corpus-plus-index writer both near-dup gates
     (:func:`incremental_neardup_sink`, :func:`incremental_embedding_dedup_sink`)
-    run on.  Two bucketed versioned snapshots live under ``base_dir``:
+    run on :func:`_snapshot_sink`.  Two bucketed versioned snapshots live
+    under ``base_dir``:
 
     * ``{corpus}/`` — the retained rows, keyed and bucketed on
       ``key_col``;
@@ -1490,42 +1555,42 @@ def _corpus_index_sink(
     expression over the raw batch), its column names and its
     ``geometry`` record.
 
-    Attach: ONE :class:`WriterLease` over ``base_dir`` covers BOTH
-    snapshots — the hazard is two writers interleaving corpus and index
-    commits (a LATEST pointer mixing writers' buckets), which per-subdir
-    leases would not stop.  Size ``lease_ttl_sec`` above the slowest
-    expected micro-batch: the heartbeat runs once per batch, and a batch
-    outliving the TTL can lose the lease mid-flight (its commit then
-    fences, safely).  ``geometry`` is INDEX-LIFETIME: every posting is a
-    function of it, so the first commit records it in
-    ``{base_dir}/_GEOMETRY.json`` and later runs raise on mismatch
-    instead of silently missing duplicates (:func:`_check_geometry`).
+    Attach (the scaffold's one lease covers both snapshots): ``geometry``
+    is INDEX-LIFETIME — every posting is a function of it, so the first
+    commit records it in ``{base_dir}/_GEOMETRY.json`` and later runs
+    raise on mismatch instead of silently missing duplicates
+    (:func:`_check_geometry`).
 
-    Per micro-batch: (1) ONE probe aggregate over the raw batch yields
-    the corpus buckets its keys hash into — pruning both the seen-before
-    anti-join and the heal read-back below — and the batch row count,
-    which bounds every downstream backfill guard (r12 floor cut);
-    (2) the row gate, persisted BEFORE the anti-join (the helper's
-    broadcast-size probe is an eager count, and unpersisted it executed
-    the whole gate plan one extra time per micro-batch — ADVICE r10);
-    (3) the bucket-pruned first-seen anti-join against the committed
-    corpus, which also returns the MATCHED keys — the batch's
-    re-delivered rows; (4) ``screen``; (5) the fused commit.
+    Per micro-batch: (1) the seen-before corpus leg (:func:`_corpus_leg`:
+    the persisted gate, ONE probe aggregate over it — the corpus buckets
+    that prune the anti-join, the corpus merge and the re-delivered
+    read-back, plus the gate's row count — and the pruned first-seen
+    anti-join, which also returns the MATCHED keys, the batch's
+    re-delivered rows); (2) ``screen``; (3) the fused commit.
+
+    Row bounds (the scaffold's rule: each bound is a true upper bound).
+    The gate's count ``n`` bounds the anti-join exactly.  The index
+    leg's postings come from survivors (≤ n rows) plus the committed
+    rows of the re-delivered keys (≤ n: the corpus is key-unique and the
+    keys are the gate's), so ``incoming_rows_max = 2 · cells_per_row ·
+    n``.  On a replay heal the corpus leg is skipped and the postings
+    come from the committed rows of the RAW batch's keys, so there the
+    probe runs over the raw batch and ``n`` is its row count.
 
     ``index_buckets`` — the index's bucket count — defaults to DERIVED
     (r10 verdict #4): an existing committed index's recorded layout is
     ADOPTED verbatim (no migration on re-attach), else the first batch
     sizes it via :func:`derive_index_buckets` (``max(postings/50k,
-    4·cells·delta)`` rounded to a power of two) — the ``B ≥ cells ×
-    delta`` rule that keeps the delta's touched set a small fraction of
-    the index instead of all of it.  Bucket counts are NOT in
-    ``_GEOMETRY.json``: they are not a function of the DATA (a mismatch
-    migrates the layout wholesale, correctly, via the per-version
-    ``_LAYOUT.json`` record — the same mechanism ``n_buckets`` has
-    always used), so the committed layout record IS their geometry
-    record.  An explicit value migrates the index once; long-lived
-    sinks whose corpus outgrows the derived count re-attach with a
-    larger explicit value.
+    4·cells·delta)`` rounded to a power of two, ``delta`` the gate's row
+    count) — the ``B ≥ cells × delta`` rule that keeps the delta's
+    touched set a small fraction of the index instead of all of it.
+    Bucket counts are NOT in ``_GEOMETRY.json``: they are not a function
+    of the DATA (a mismatch migrates the layout wholesale, correctly, via
+    the per-version ``_LAYOUT.json`` record — the same mechanism
+    ``n_buckets`` has always used), so the committed layout record IS
+    their geometry record.  An explicit value migrates the index once;
+    long-lived sinks whose corpus outgrows the derived count re-attach
+    with a larger explicit value.
 
     FUSED commit (r10 verdict #2): both legs' WRITE phases run before
     either pointer swaps (``_merge_batch(..., defer_commit=True)``;
@@ -1558,35 +1623,12 @@ def _corpus_index_sink(
     index_keys = [*cell_cols, id_col]
     # resolved once at attach: follows the session's coalescing posture
     par_writes = _resolve_parallel_writes(spark)
-    lease = WriterLease.acquire(base_dir, ttl_sec=lease_ttl_sec)
-    try:
-        _check_geometry(base_dir, geometry, [corpus, index])
-    except Exception:
-        lease.release()
-        raise
-    corpus_bucket = F.pmod(F.xxhash64(batch_key), F.lit(n_buckets)).cast("int")
     resolved = {"index": index_buckets}
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        lease.heartbeat()
-        ckpt = checkpoint_dir is not None
-        committed_corpus = _committed_version(corpus_dir)
-        seq_corpus = _alloc_seq(committed_corpus, batch_id, ckpt)
-        committed_index = _committed_version(index_dir)
-        seq_index = _alloc_seq(committed_index, batch_id, ckpt)
-        pinned = []
-        corpus_touched, n_batch = _touched_list(
-            batch_df, corpus_bucket, with_count=True
-        )
-        if resolved["index"] is None:
-            # adopt-else-derive (see docstring)
-            resolved["index"] = _adopted_index_buckets(index_dir) or (
-                derive_index_buckets(
-                    cells_per_row * n_batch, bands=cells_per_row, delta_rows=n_batch
-                )
-            )
-        index_n = resolved["index"]
-        index_bucket = F.pmod(F.xxhash64(*cell_cols), F.lit(index_n)).cast("int")
+    def merge_one(batch_df: DataFrame, state: dict, lease) -> None:
+        committed_corpus, seq_corpus = state[corpus]
+        committed_index, seq_index = state[index]
+        pinned: list = []
         index_touched = None
 
         def probe(delta_cells: DataFrame) -> DataFrame | None:
@@ -1614,25 +1656,36 @@ def _corpus_index_sink(
             )
 
         try:
-            survivors = None
-            redelivered = None
+            survivors = redelivered = None
             view = _prepare_view(
                 spark, corpus_dir, committed_corpus, n_buckets, [key_col]
             )
             if seq_corpus is not None:
-                fresh = gate(batch_df).persist()
-                pinned.append(fresh)
+                gated, fresh, corpus_touched, n_rows, redelivered = _corpus_leg(
+                    batch_df, gate, view, n_buckets, [key_col], pinned,
+                    probe_first=True, return_matched=True,
+                )
                 if view is not None:
-                    seen = _filter_buckets(view, corpus_touched).select(key_col)
-                    fresh, redelivered = _anti_join_small_left(
-                        fresh, seen, [key_col], return_matched=True,
-                        small_rows_max=n_batch,
-                    )
                     # feeds both the screen and the corpus merge
                     fresh = fresh.persist()
                     pinned.append(fresh)
-                    if redelivered is not None:
-                        pinned.append(redelivered)
+            else:
+                # replay heal: the join-back below reads the RAW batch's keys
+                corpus_touched, n_rows = _touched_list(
+                    batch_df,
+                    F.pmod(F.xxhash64(batch_key), F.lit(n_buckets)).cast("int"),
+                    with_count=True,
+                )
+            if resolved["index"] is None:
+                # adopt-else-derive (see docstring)
+                resolved["index"] = _adopted_index_buckets(index_dir) or (
+                    derive_index_buckets(
+                        cells_per_row * n_rows, bands=cells_per_row, delta_rows=n_rows
+                    )
+                )
+            index_n = resolved["index"]
+            index_bucket = F.pmod(F.xxhash64(*cell_cols), F.lit(index_n)).cast("int")
+            if seq_corpus is not None:
                 # persisted: BOTH legs' write phases build on survivors
                 survivors = screen(fresh, probe, pinned).persist()
                 pinned.append(survivors)
@@ -1642,7 +1695,7 @@ def _corpus_index_sink(
             from_survivors_only = False
             if view is None:
                 from_survivors_only = survivors is not None
-            elif survivors is not None and redelivered is not None:
+            elif redelivered is not None:
                 if redelivered.isEmpty():
                     from_survivors_only = True
                 else:
@@ -1652,13 +1705,17 @@ def _corpus_index_sink(
                         .select(*post_cols)
                     )
             else:
-                # replay heal (corpus leg skipped) or the giant-backfill
-                # fallback (matched set unavailable): the unconditional
-                # pruned join-back on the batch's keys
-                batch_keys = batch_df.select(batch_key.alias(key_col)).distinct()
+                # replay heal (the raw batch's keys) or the giant-backfill
+                # fallback (matched set unavailable: the gate's keys) —
+                # the unconditional pruned join-back
+                keys = (
+                    batch_df.select(batch_key.alias(key_col))
+                    if survivors is None
+                    else gated.select(key_col)
+                ).distinct()
                 again = (
                     _filter_buckets(view, corpus_touched)
-                    .join(batch_keys, key_col)
+                    .join(keys, key_col)
                     .select(*post_cols)
                 )
                 post_src = again if post_src is None else post_src.unionByName(again)
@@ -1669,7 +1726,7 @@ def _corpus_index_sink(
                     key_cols=[key_col], n_buckets=n_buckets, bucket_cols=None,
                     seq=seq_corpus, committed=committed_corpus,
                     # survivors were anti-joined against THIS committed
-                    # version above; their buckets ⊆ the raw batch's
+                    # version above, over exactly these buckets
                     assume_novel=True, touched=set(corpus_touched),
                 ))
             if seq_index is not None and post_src is not None:
@@ -1688,9 +1745,9 @@ def _corpus_index_sink(
                         if from_survivors_only and index_touched is not None
                         else None
                     ),
-                    # post_src ≤ survivors ∪ re-delivered ≤ 2·batch rows —
-                    # a sound bound that skips the backfill-guard count
-                    incoming_rows_max=2 * cells_per_row * n_batch,
+                    # post_src ≤ 2·n rows (see docstring) — a true bound
+                    # that skips the backfill-guard count
+                    incoming_rows_max=2 * cells_per_row * n_rows,
                 ))
             commits, errors = _parallel_writes(legs, parallel=par_writes)
             # commit in list order, corpus first; a failed leg raises
@@ -1704,12 +1761,12 @@ def _corpus_index_sink(
             for f in pinned:
                 f.unpersist()
 
-    try:
-        return _run_foreach_batch(
-            stream_df, merge, checkpoint_dir, timeout_sec, f"{what} ({base_dir})"
-        )
-    finally:
-        lease.release()
+    return _snapshot_sink(
+        stream_df, base_dir, merge_one, what=what,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        lease_ttl_sec=lease_ttl_sec, subdirs=(corpus, index),
+        attach=lambda: _check_geometry(base_dir, geometry, [corpus, index]),
+    )
 
 
 def incremental_neardup_sink(
@@ -2080,8 +2137,8 @@ def incremental_embedding_dedup_sink(
         )
 
     def screen(fresh: DataFrame, probe, pinned: list) -> DataFrame:
-        # Two-pass probe (the skeleton's id probe on the raw batch, the
-        # cells probe on the gated delta here): a one-job variant
+        # Two-pass probe (the corpus leg's id probe on the gate, the
+        # cells probe on the exact-novel delta here): a one-job variant
         # measured a wash in two paired A/Bs (r13, r14; SCALE.md).
         # Cells materialized once behind a persist barrier — the
         # hyperplane dot-products would otherwise re-inline per band
@@ -2254,8 +2311,8 @@ def incremental_ivf_index_sink(
 
     spark = stream_df.sparkSession
     cells_dir = os.path.join(base_dir, "cells")
-    lease = WriterLease.acquire(base_dir, ttl_sec=lease_ttl_sec)
-    try:
+
+    def attach() -> None:
         _check_geometry(base_dir, {"ivf_k": k}, ["cells"])
         # Stamp EXPLICIT ownership at attach (r11 ADVICE): once a sink
         # maintains this index, ``ensure_ivf_index`` must never rebuild
@@ -2265,16 +2322,11 @@ def incremental_ivf_index_sink(
         # sink-ingested postings the corpus files don't contain exist
         # (and a sink that attaches intends to create them).  Written
         # under the lease, atomic-replace like every pointer here.
-        import json as _json
+        _write_json_atomic(
+            os.path.join(base_dir, "_INDEX_MANIFEST.json"),
+            {"maintained_by": "sink", "k": k},
+        )
 
-        manifest_path = os.path.join(base_dir, "_INDEX_MANIFEST.json")
-        tmp = manifest_path + ".tmp.sink"
-        with open(tmp, "w") as f:
-            _json.dump({"maintained_by": "sink", "k": k}, f)
-        os.replace(tmp, manifest_path)
-    except Exception:
-        lease.release()
-        raise
     # adopt-else-derive, as in the dedup gates: an existing committed
     # layout wins (no migration on re-attach); else the first batch
     # sizes the bucket count via derive_index_buckets.  Probes adopt
@@ -2282,21 +2334,13 @@ def incremental_ivf_index_sink(
     # count needs no side-channel.
     resolved = {"cells": n_buckets}
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        lease.heartbeat()
-        committed = _committed_version(cells_dir)
-        seq = _alloc_seq(committed, batch_id, checkpoint_dir is not None)
+    def merge_one(batch_df: DataFrame, state: dict, lease) -> None:
+        committed, seq = state["cells"]
         if resolved["cells"] is None:
-            adopted = _adopted_index_buckets(cells_dir)
-            if adopted is not None:
-                resolved["cells"] = adopted
-            else:
+            resolved["cells"] = _adopted_index_buckets(cells_dir)
+            if resolved["cells"] is None:
                 n_delta = batch_df.count()
-                resolved["cells"] = derive_index_buckets(
-                    n_delta, delta_rows=n_delta
-                )
-        if seq is None:
-            return
+                resolved["cells"] = derive_index_buckets(n_delta, delta_rows=n_delta)
         postings = batch_df.select(
             ivf_cell_col(F.col("embedding"), k).alias("cell"),
             "vec_id",
@@ -2310,13 +2354,11 @@ def incremental_ivf_index_sink(
             insert_only=True,
         )
 
-    try:
-        return _run_foreach_batch(
-            stream_df, merge, checkpoint_dir, timeout_sec,
-            f"ivf-index ({base_dir})",
-        )
-    finally:
-        lease.release()
+    return _snapshot_sink(
+        stream_df, base_dir, merge_one, what="ivf-index",
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        lease_ttl_sec=lease_ttl_sec, subdirs=("cells",), attach=attach,
+    )
 
 
 def _layout_record(vdir: str) -> dict:
@@ -2327,7 +2369,6 @@ def _layout_record(vdir: str) -> dict:
     comparison to their own columns (those versions were always
     bucketed on ``key_cols``).  Cached per version directory — the
     record is written once before the pointer swap and never changes."""
-    import json
     import os
 
     path = os.path.join(vdir, "_LAYOUT.json")
@@ -2339,12 +2380,8 @@ def _layout_record(vdir: str) -> dict:
     hit = _LAYOUT_CACHE.get(key)
     if hit is not None:
         return hit
-    try:
-        with open(path) as f:
-            rec = json.load(f)
-        rec = rec if isinstance(rec, dict) else {}
-    except (OSError, ValueError):
-        rec = {}
+    rec = _read_json(path)
+    rec = rec if isinstance(rec, dict) else {}
     if len(_LAYOUT_CACHE) > 512:
         _LAYOUT_CACHE.clear()
     _LAYOUT_CACHE[key] = rec
@@ -2360,11 +2397,9 @@ def read_snapshot(spark, snapshot_dir: str) -> DataFrame | None:
     partitioned form directly."""
     import os
 
-    pointer = os.path.join(snapshot_dir, "LATEST")
-    if not os.path.exists(pointer):
+    version = _committed_version(snapshot_dir)
+    if version is None:
         return None
-    with open(pointer) as f:
-        version = f.read().strip()
     df = _read_version(spark, os.path.join(snapshot_dir, version))
     if "_bucket" in df.columns:
         df = df.drop("_bucket")
@@ -2391,11 +2426,9 @@ def snapshot_reader_factory(snapshot_dir: str):
     import pyarrow.dataset as pads
 
     def factory():
-        pointer = os.path.join(snapshot_dir, "LATEST")
-        if not os.path.exists(pointer):
+        version = _committed_version(snapshot_dir)
+        if version is None:
             return None
-        with open(pointer) as f:
-            version = f.read().strip()
         # ignore_prefixes: pyarrow's default ['.', '_'] would skip the
         # hash-bucketed '_bucket=' layout dirs entirely — keep only the
         # genuinely-hidden prefixes (Spark's _SUCCESS/_committed markers
@@ -2450,16 +2483,13 @@ def register_ivf_index(registry, name: str, base_dir: str) -> None:
     different k), and the layout bucket count only changes on a full
     rebuild — re-register after one, exactly as with any catalog
     dataset whose identity changed."""
-    import json
     import os
 
     cells_dir = os.path.join(base_dir, "cells")
     meta: dict = {"kind": "ivf_index", "base_dir": base_dir}
-    try:
-        with open(os.path.join(base_dir, "_GEOMETRY.json")) as f:
-            meta["geometry"] = json.load(f)
-    except (OSError, ValueError):
-        pass
+    geometry = _read_json(os.path.join(base_dir, "_GEOMETRY.json"))
+    if geometry is not None:
+        meta["geometry"] = geometry
     committed = _committed_version(cells_dir)
     if committed is not None:
         rec = _layout_record(os.path.join(cells_dir, committed))

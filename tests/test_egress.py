@@ -119,6 +119,25 @@ def test_no_persisted_rdd_left_behind(spark):
     assert _persisted(spark) == base
 
 
+def test_spill_fallback_leaves_no_spill_dir(spark, monkeypatch, tmp_path):
+    """The spill fallback removes its spill directory when the reader is
+    dropped before its first read, and when the spill job fails."""
+    import tempfile
+
+    monkeypatch.setattr(arrow_ipc, "probe_once", lambda *a: False)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    reader = df_to_reader(gen_flight_bench(spark, rows=1_000))
+    assert list(tmp_path.glob("arrow-egress-*"))  # held while the reader lives
+    del reader
+    gc.collect()
+    assert not list(tmp_path.glob("arrow-egress-*"))
+
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        df_to_reader(spark.sql("SELECT CAST(id + 2147483647 AS INT) AS x FROM range(10)"))
+    assert not list(tmp_path.glob("arrow-egress-*"))
+
+
 def test_runtime_error_answers_400_before_any_body(spark):
     """An ANSI runtime failure in ``GET /query`` surfaces while the
     query runs, before the response starts: both front-ends answer 400

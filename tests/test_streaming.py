@@ -267,6 +267,39 @@ def test_stream_to_registry_serves_microbatches(spark, events_stream):
         httpd.shutdown()
 
 
+def test_stream_to_registry_spill_dir_removed_at_exit(tmp_path):
+    """The published micro-batches' spill files live until the process
+    exits, and not past it: a run in a child process with ``TMPDIR`` at
+    ``tmp_path`` leaves no ``arrow-egress-*`` directory behind."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    src = str(tmp_path / "src")
+    script = textwrap.dedent(f"""
+        import glob
+        from arrow_experiments_spark.session import build_session
+        from arrow_experiments_spark.streaming.egress import stream_to_registry
+        from arrow_experiments_spark.transport.server import DatasetRegistry
+
+        spark = build_session(master="local[1]", shuffle_partitions=1)
+        spark.range(100).repartition(2).write.parquet({src!r})
+        registry = DatasetRegistry()
+        stream_to_registry(spark.readStream.schema("id long").parquet({src!r}), registry)
+        assert registry.names()
+        assert glob.glob({str(tmp_path / "arrow-egress-*")!r})
+        spark.stop()
+    """)
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g")
+    subprocess.run(
+        [sys.executable, "-c", script], env=env, check=True, timeout=600,
+        cwd=str(Path(__file__).resolve().parent.parent),
+    )
+    assert not list(tmp_path.glob("arrow-egress-*"))
+
+
 def test_streaming_interval_join_equals_batch(spark, events_stream):
     """Stream-stream interval join == batch interval join (watermark beyond
     the data span, so no state eviction and exact equality)."""
@@ -821,7 +854,34 @@ def _jobs_so_far(spark) -> int:
     return max(jobs.head().jobId(), jobs.last().jobId()) if jobs.size() else -1
 
 
-def test_curation_sink_steady_state_jobs_per_batch(spark, tmp_path, monkeypatch):
+@pytest.fixture
+def sink_jobs(spark, monkeypatch):
+    """The Spark jobs each snapshot-sink micro-batch of the test runs, in
+    order: every sink runs its batches through ``_run_foreach_batch``,
+    whose ``merge`` is wrapped to diff the newest job id around it."""
+    from arrow_experiments_spark.streaming import egress
+
+    jobs: list[int] = []
+    run_foreach_batch = egress._run_foreach_batch
+
+    def counted(stream_df, merge, *args):
+        def merge_counted(batch_df, batch_id):
+            before = _jobs_so_far(spark)
+            merge(batch_df, batch_id)
+            jobs.append(_jobs_so_far(spark) - before)
+
+        return run_foreach_batch(stream_df, merge_counted, *args)
+
+    monkeypatch.setattr(egress, "_run_foreach_batch", counted)
+    return jobs
+
+
+def _within(jobs: list[int], caps: list[int]) -> bool:
+    """Same number of micro-batches as ``caps``, none running more jobs."""
+    return len(jobs) == len(caps) and all(j <= c for j, c in zip(jobs, caps))
+
+
+def test_curation_sink_steady_state_jobs_per_batch(spark, tmp_path, sink_jobs):
     """A curation micro-batch against a committed snapshot probes its
     touched buckets once, anti-joins once and merges without a second
     anti-join: at most 12 Spark jobs, and the raw delta is read once."""
@@ -841,18 +901,6 @@ def test_curation_sink_steady_state_jobs_per_batch(spark, tmp_path, monkeypatch)
         # increasing mtimes: the file source reads oldest first
         os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
 
-    jobs: list[int] = []
-    run_foreach_batch = egress._run_foreach_batch
-
-    def counted(stream_df, merge, *args):
-        def merge_counted(batch_df, batch_id):
-            before = _jobs_so_far(spark)
-            merge(batch_df, batch_id)
-            jobs.append(_jobs_so_far(spark) - before)
-
-        return run_foreach_batch(stream_df, merge_counted, *args)
-
-    monkeypatch.setattr(egress, "_run_foreach_batch", counted)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -861,8 +909,8 @@ def test_curation_sink_steady_state_jobs_per_batch(spark, tmp_path, monkeypatch)
     snap = str(tmp_path / "snap")
     q = egress.incremental_curation_sink(stream, snap)
 
-    assert len(jobs) == 3, jobs
-    assert max(jobs[1:]) <= 12, jobs  # batches 1, 2 merge into a committed v
+    assert len(sink_jobs) == 3, sink_jobs
+    assert max(sink_jobs[1:]) <= 12, sink_jobs  # batches 1, 2 merge into a committed v
     assert [p.numInputRows for p in q.recentProgress] == [20, 20, 20]
     assert egress.read_snapshot(spark, snap).count() == 60
 
@@ -974,7 +1022,7 @@ def test_curation_sink_checkpointed_reattach_commits_nothing(spark, tmp_path):
     assert read_snapshot(spark, snap).count() == 10
 
 
-def test_incremental_neardup_sink_gates_exact_and_near(spark, tmp_path):
+def test_incremental_neardup_sink_gates_exact_and_near(spark, tmp_path, sink_jobs):
     """The near-dup extension of the incremental curation gate: exact
     re-ingests drop at the hash anti-join, NEAR duplicates (distinct
     hash, same token stream -> identical MinHash signatures, 8/8
@@ -1061,6 +1109,9 @@ def test_incremental_neardup_sink_gates_exact_and_near(spark, tmp_path):
     assert read_snapshot(spark, os.path.join(base, "bands")).count() == 4 * len(
         got_ids
     )
+    # Spark jobs per micro-batch [b1, b2, b3, re-delivery]: no more than
+    # the sink ran when its seen-before probe read the raw batch
+    assert _within(sink_jobs, [30, 47, 42, 44]), sink_jobs
 
 
 def _heal_fixture(spark, tmp_path, kind):
@@ -1145,7 +1196,106 @@ def test_dedup_sink_index_leg_heals_after_crash(spark, tmp_path, kind):
     assert index_rows.count() == postings  # rebuilt
 
 
-def test_incremental_embedding_dedup_sink_gates_by_cosine(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["upsert", "curation", "neardup", "embedding", "ivf"])
+def test_snapshot_scaffold_contract(spark, tmp_path, kind):
+    """The scaffold every snapshot writer runs on: an attach that fails
+    its check raises and leaves the lease released (an immediate
+    re-attach succeeds), and a checkpointed replay of a committed batch
+    writes nothing — LATEST and every version file stay as they were.
+    The curation sink has no attach check; its failing run is a
+    micro-batch that fails the gate, and the lease is released all the
+    same."""
+    import json
+    import os
+
+    import arrow_experiments_spark.streaming.egress as eg
+
+    base = str(tmp_path / "base")
+    ckpt = str(tmp_path / "ckpt")
+    staged = str(tmp_path / "staged")
+    if kind == "upsert":
+        rows = table(spark, SF_DIR, "events").select("user_id", "event_id", "value")
+        rows = rows.limit(50)
+    elif kind in ("curation", "neardup"):
+        rows = spark.createDataFrame(_curation_docs(spark, 2), "doc_id long, text string")
+    else:
+        rows = spark.createDataFrame(
+            [(i, [float(i == j) for j in range(64)]) for i in range(2)],
+            "vec_id bigint, embedding array<float>",
+        )
+    rows.coalesce(1).write.parquet(staged)
+
+    def run(schema=rows.schema, **kw):
+        stream = spark.readStream.schema(schema).parquet(staged)
+        if kind == "upsert":
+            eg.upsert_snapshot_sink(
+                stream, base, key_cols=["user_id"], order_col="event_id", **kw
+            )
+        elif kind == "curation":
+            eg.incremental_curation_sink(stream, base, **kw)
+        elif kind == "neardup":
+            eg.incremental_neardup_sink(stream, base, n_buckets=8, **kw)
+        elif kind == "embedding":
+            eg.incremental_embedding_dedup_sink(stream, base, n_buckets=8, **kw)
+        else:
+            eg.incremental_ivf_index_sink(stream, base, **{"k": 4, **kw})
+
+    def state():
+        """{snapshot dir: (LATEST, [(version file, inode)])}"""
+        snaps = {}
+        for sdir, dirs, files in os.walk(base):
+            if "LATEST" not in files:
+                continue
+            with open(os.path.join(sdir, "LATEST")) as f:
+                latest = f.read()
+            files = [
+                os.path.join(dp, fn)
+                for v in dirs if v.startswith("v")
+                for dp, _d, fns in os.walk(os.path.join(sdir, v))
+                for fn in fns
+            ]
+            snaps[sdir] = (latest, sorted(
+                (os.path.relpath(p, sdir), os.stat(p).st_ino) for p in files
+            ))
+        return snaps
+
+    run(checkpoint_dir=ckpt)
+    before = state()
+    assert len(before) == (2 if kind in ("neardup", "embedding") else 1), before
+
+    if kind == "upsert":
+        with pytest.raises(ValueError, match="subset of key_cols"):
+            run(bucket_cols=["value"])
+    elif kind == "curation":
+        with pytest.raises(Exception, match="UNRESOLVED_COLUMN"):
+            run(schema="doc_id long")  # no text column for the gate
+    elif kind == "neardup":
+        # an index built by code with other MinHash constants
+        geo = os.path.join(base, "_GEOMETRY.json")
+        with open(geo) as f:
+            recorded = f.read()
+        with open(geo, "w") as f:
+            json.dump({"n_sigs": 16, "n_bands": 8}, f)
+        with pytest.raises(ValueError, match="geometry mismatch"):
+            run()
+        with open(geo, "w") as f:
+            f.write(recorded)
+    else:
+        with pytest.raises(ValueError, match="geometry mismatch"):
+            run(**({"bits": 6} if kind == "embedding" else {"k": 5}))
+    assert state() == before
+
+    # crash after commit: the offsets are logged, the commit marker lost;
+    # the replay re-attaches at once, so the failed attach released the lease
+    os.remove(os.path.join(ckpt, "commits", "0"))
+    crc = os.path.join(ckpt, "commits", ".0.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    run(checkpoint_dir=ckpt)
+    assert state() == before
+
+
+def test_incremental_embedding_dedup_sink_gates_by_cosine(spark, tmp_path, sink_jobs):
     """SemDeDup at ingest: scaled copies of a retained vector (cosine
     exactly 1 — same direction, same LSH cells at every band) drop at
     the cell-index probe; orthogonal basis vectors (cosine 0) are
@@ -1235,6 +1385,9 @@ def test_incremental_embedding_dedup_sink_gates_by_cosine(spark, tmp_path):
     assert read_snapshot(spark, os.path.join(base, "cells")).count() == 3 * len(
         got
     )
+    # Spark jobs per micro-batch [b1, b2, b3, re-delivery]: no more than
+    # the sink ran when its seen-before probe read the raw batch
+    assert _within(sink_jobs, [30, 53, 57, 54]), sink_jobs
 
 
 def test_merge_batch_matches_latest_wins_model(spark, tmp_path):
@@ -2136,7 +2289,7 @@ def test_reader_exact_rows_during_compacting_commit(spark, tmp_path):
     assert not os.path.isdir(vdir), "two-version retention: N pruned at N+2"
 
 
-def test_incremental_ivf_index_sink_and_probe(spark, tmp_path):
+def test_incremental_ivf_index_sink_and_probe(spark, tmp_path, sink_jobs):
     """r9 verdict #5: the IVF index is a MAINTAINED artifact — a sink
     delta-maintains the (cell, vec_id, embedding) posting snapshot, the
     registered probe reads it, and after deltas the probe's result
@@ -2175,6 +2328,9 @@ def test_incremental_ivf_index_sink_and_probe(spark, tmp_path):
     base = str(tmp_path / "ivf")
     incremental_ivf_index_sink(stream, base, k=k)
 
+    # Spark jobs per micro-batch: the first sizes the index's buckets
+    # from the batch count
+    assert _within(sink_jobs, [6, 13, 13]), sink_jobs
     cells = read_snapshot(spark, os.path.join(base, "cells"))
     assert cells.count() == n  # one posting per vector, dedup across batches
     assert set(cells.columns) == {"cell", "vec_id", "embedding"}
