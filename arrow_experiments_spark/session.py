@@ -5,7 +5,8 @@ Arrow-vectorized Python interop, explicit batch sizing
 (``spark.sql.execution.arrow.maxRecordsPerBatch`` — the reference's
 4096/6144-row batch knobs, http/get_simple server.py:35), UTC session time
 (data/arrow-commits/arrow-commits.R:34), and AQE on for runtime re-planning
-at scale.
+at scale, with a generated-code class cache that holds the engine's whole
+working set (``CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -15,11 +16,25 @@ import os
 import threading
 import weakref
 from collections.abc import Callable, Iterable
+from functools import reduce
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_BATCH_ROWS = 4096  # reference default batch size (get_simple server.py:35)
+
+# Spark keeps at most this many Janino-compiled classes per JVM (Spark's
+# default is 100).  One pass over the 154 registered queries at sf0.01
+# (local[4]) compiles 1,448 distinct classes, so at 100 the cache evicts
+# in a cycle and every request compiles its Java again: a second
+# registry pass compiles 1,812 classes at 100 and 31 at 4096, and a
+# steady perfbench query_ingest deck about 55 at 100 and 0 at 4096
+# (SCALE.md, "Generated-code cache").  4096 is the next power of two
+# above twice the registry's working set.  Re-measure by diffing
+# codegen_stats(spark) around a second pass of the workload: a nonzero
+# count at steady state means the working set outgrew the cache.
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def _env_extra_conf() -> list[tuple[str, str]]:
@@ -125,6 +140,18 @@ def build_session(
     batch_rows: int = DEFAULT_BATCH_ROWS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's SparkSession: ``local[SPARK_GRAFT_CPUS or host
+    cores]`` with the engine's static and runtime confs.
+
+    Cache contract: the session keeps up to ``CODEGEN_CACHE_ENTRIES``
+    generated classes, so a request that repeats an earlier plan reuses
+    its compiled code instead of compiling it again.  The conf is static
+    and JVM-global: Spark sizes the cache at the JVM's first codegen, so
+    the conf takes effect only if this call creates the session before
+    any query ran in the JVM; a session that getOrCreate returns, or an
+    earlier session in the same JVM, keeps the size it started with.
+    ``extra_conf`` and ``SPARK_GRAFT_EXTRA_CONF`` override it like any
+    other conf."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
@@ -145,6 +172,9 @@ def build_session(
         # a local[32] tweak; the only loss is the call-site line in
         # DataFrame error contexts (diagnostic only).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # static and JVM-global: Spark sizes the generated-class cache
+        # once, at the JVM's first codegen (see CODEGEN_CACHE_ENTRIES)
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -164,10 +194,21 @@ def build_session(
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally-built session (the
-    driver owns its own SparkSession; these are all SQL confs)."""
+    driver owns its own SparkSession; these are all SQL confs).
+
+    Cache contract: the generated-class cache size
+    (``spark.sql.codegen.cache.maxEntries``) is static, so it cannot be
+    raised here.  When the live value is below ``CODEGEN_CACHE_ENTRIES``
+    one warning per SparkContext says so; the session still works, but
+    recompiles generated code that falls out of its smaller cache."""
     for k, v in _RUNTIME_CONF:
         spark.conf.set(k, v)
     _disable_debugging_cache()
+    probe_once(
+        spark.sparkContext, "codegen_cache_size",
+        lambda: _warn_small_codegen_cache(spark),
+        "the generated-class cache size is not checked",
+    )
     # same escape hatch as build_session (r12 ADVICE: the A/B-a-conf-
     # without-a-code-edit workflow must cover driver-owned sessions).
     # Static/core confs cannot be set on a live session — the builder
@@ -222,6 +263,53 @@ def probe_once(
                     feature, ", ".join(missing), fallback,
                 )
         return seen[feature]
+
+
+def _warn_small_codegen_cache(spark: SparkSession) -> list[str]:
+    """The probe :func:`tune_session` runs once per SparkContext: warn
+    when the live generated-class cache is smaller than the engine's.
+    The shortfall is a sizing, not a missing entry point, so it logs its
+    own warning and reports nothing missing."""
+    live = int(spark.conf.get(CODEGEN_CACHE_CONF))
+    if live < CODEGEN_CACHE_ENTRIES:
+        _log.warning(
+            "%s is %d, below the engine's %d: generated classes are "
+            "evicted and compiled again on later requests.  The conf is "
+            "static; set it to %d when the session is built.",
+            CODEGEN_CACHE_CONF, live, CODEGEN_CACHE_ENTRIES,
+            CODEGEN_CACHE_ENTRIES,
+        )
+    return []
+
+
+_CODEGEN_METRICS = "org.apache.spark.metrics.source.CodegenMetrics"
+_CODE_GENERATOR = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float] | None:
+    """``(compilations, compile_ms)``: the Janino compilations of
+    generated code and their total wall time since the JVM started,
+    from Spark's ``CodegenMetrics`` and ``CodeGenerator.compileTime``.
+    Both are JVM-global and only grow, so diff two reads around the work
+    to count.  A cache hit compiles nothing, so a repeated plan adds 0.
+    None (after one logged warning per SparkContext) when this Spark
+    build lacks either counter."""
+    sc = spark.sparkContext
+    if not probe_once(
+        sc, "codegen_stats",
+        lambda: missing_jvm_methods(sc, [
+            (_CODEGEN_METRICS, "METRIC_COMPILATION_TIME"),
+            (_CODE_GENERATOR, "compileTime"),
+        ]),
+        "codegen compilations are not counted",
+    ):
+        return None
+    metrics, generator = (
+        reduce(getattr, name.split("."), sc._jvm)
+        for name in (_CODEGEN_METRICS, _CODE_GENERATOR)
+    )
+    n = metrics.METRIC_COMPILATION_TIME().getCount()
+    return int(n), generator.compileTime() / 1e6
 
 
 def missing_jvm_methods(sc: SparkContext, methods: Iterable[tuple]) -> list[str]:

@@ -24,7 +24,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from arrow_experiments_spark.registry import all_queries
-from arrow_experiments_spark.session import build_session
+from arrow_experiments_spark.session import build_session, codegen_stats
 
 # Headline set: one representative per category plus the heavy hitters.
 HEADLINE = [
@@ -393,6 +393,7 @@ def vs_floor(
     certified: dict[str, dict[int, float]],
     best: dict[str, dict[int, float]],
     run_cpus: int | None = None,
+    compiles: dict[str, int | None] | None = None,
 ) -> dict[str, dict]:
     """Each key's committed value vs its drift anchor: the certified
     floor when one exists, else best-ever committed, else no anchor
@@ -401,7 +402,9 @@ def vs_floor(
     only other-cpus floors is anchored at its lowest one, which stays
     visible (``cpus_match: false``) but does not gate (r16 verdict #2: a
     32-core floor is not a valid 2x bound for an 8-core run).  Without
-    ``run_cpus`` the records carry no cpus fields."""
+    ``run_cpus`` the records carry no cpus fields.  With ``compiles``
+    each record carries ``codegen_compiles``: the key's generated-code
+    compilations during its measured samples (None: not counted)."""
     out: dict[str, dict] = {}
     for k, v in vals.items():
         src = "certified" if k in certified else "best_ever" if k in best else None
@@ -420,7 +423,21 @@ def vs_floor(
             rec["anchor_cpus"] = a_cpus
             rec["cpus_match"] = a_cpus == run_cpus
         out[k] = rec
+    if compiles is not None:
+        for k, rec in out.items():
+            rec["codegen_compiles"] = compiles.get(k)
     return out
+
+
+def compiles_during(spark, leg):
+    """``(leg(), n)``: ``n`` is the generated-code compilations the call
+    ran (``session.codegen_stats`` diffed around it), None when Spark's
+    counter is unavailable.  A steady-state leg whose plans are already
+    in the codegen cache compiles 0."""
+    before = codegen_stats(spark)
+    v = leg()
+    after = codegen_stats(spark)
+    return v, None if before is None or after is None else after[0] - before[0]
 
 
 def drift_breaches(vs_floor_all: dict[str, dict]) -> list[str]:
@@ -1162,16 +1179,26 @@ def main() -> None:
     # its spread was the JVM C2 compiler promoting the key's large
     # generated-code span across its first ~6 executions (decay series
     # 1.51, 0.71, 0.60, ... 0.52 s), and with 43 other keys compiled
-    # between passes the bounded codegen/JIT caches evict it, so a
-    # one-time deeper warm is not enough.  Applied in measure_leg so
-    # every recorded sample — pass legs, re-runs, floor_watch extras —
-    # is steady-state.
+    # between passes the bounded codegen/JIT caches evicted it, so a
+    # one-time deeper warm was not enough.  (That was Spark's 100-class
+    # codegen cache; build_session now keeps 4096 classes, and whether
+    # this re-warm still moves a sample is unmeasured.)  Applied in
+    # measure_leg so every recorded sample — pass legs, re-runs,
+    # floor_watch extras — is steady-state.
     _pre_warm = {"events_session_window": 2}
+    # per key: generated-code compilations summed over its recorded
+    # samples (None: counter unavailable); 0 once its plans are cached
+    compiles: dict[str, int | None] = {}
+
+    def count(name: str, n: int | None) -> None:
+        compiles[name] = None if n is None else compiles.get(name, 0) + n
 
     def measure_leg(name: str) -> float:
         for _ in range(_pre_warm.get(name, 0)):
             measure(name)
-        return measure(name)
+        v, n = compiles_during(spark, lambda: measure(name))
+        count(name, n)
+        return v
 
     items = ["s1_replay_10m", "s1_replay_10m_x4", *_S2_STRATEGIES, *names]
     # WARM PASS (r14): run every item once, untimed, before the three
@@ -1200,7 +1227,12 @@ def main() -> None:
     def replay_in_band(best_sec: float) -> bool:
         return payload_gib_100m / best_sec >= 0.70 * loopback_gibs[0]
 
-    r100 = _bench_replay_100m(spark, qual=qual, qualify=replay_in_band)
+    # one call measures both 100m keys, so each carries its compilations
+    r100, n = compiles_during(
+        spark, lambda: _bench_replay_100m(spark, qual=qual, qualify=replay_in_band)
+    )
+    count("s1_replay_100m", n)
+    count("s1_replay_100m_x4", n)
     loopback_gibs.append(_loopback_gibs())
     qual.probe()
     for k in ("s1_replay_100m", "s1_replay_100m_x4"):
@@ -1208,7 +1240,10 @@ def main() -> None:
         # r16 (r15 verdict Wrong #3): x4 wears ITS OWN quality tag, earned
         # against its own 4-stream paired ceiling
         quality[k] = r100[f"{k}_quality"]
-    timings["s2_serve_42m_zstd"] = _bench_serve_42m(spark, qual=qual)
+    timings["s2_serve_42m_zstd"], n = compiles_during(
+        spark, lambda: _bench_serve_42m(spark, qual=qual)
+    )
+    count("s2_serve_42m_zstd", n)
     quality["s2_serve_42m_zstd"] = (
         _SERVE_42M_QUALITY[-1] if _SERVE_42M_QUALITY else "clean"
     )
@@ -1282,8 +1317,8 @@ def main() -> None:
     # minus headline), so the merge below cannot shadow a ratio
     assert not set(timings) & set(tail), "headline/tail key overlap"
     vs_floor_all = {
-        **vs_floor(timings, certified, best, run_cpus),
-        **vs_floor(tail, certified, best, run_cpus),
+        **vs_floor(timings, certified, best, run_cpus, compiles),
+        **vs_floor(tail, certified, best, run_cpus, compiles),
     }
     # The stdout line stays COMPACT (r7 verdict #1: the driver's capture
     # window truncated longer lines); diagnostics go to BENCH_DETAIL.json.
@@ -1291,7 +1326,8 @@ def main() -> None:
         "spread": spread,
         "total_excludes": sorted(total_excludes),
         # each key's committed value vs its certified floor (else its
-        # best-ever committed value), headline and tail
+        # best-ever committed value), headline and tail, with its
+        # generated-code compilations (codegen_compiles)
         "vs_certified_floor": vs_floor_all,
         # keys whose committed value breached the 2x drift gate vs a
         # same-cpus anchor this run (see drift_breaches)

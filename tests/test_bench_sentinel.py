@@ -1,7 +1,8 @@
 """The bench harness's measurement and gating logic, without Spark:
 the committed statistic, the per-key bracketed measurement, the
 certified-floor ledger (one file keyed by (key, cpus)) and the drift
-gate read from it, and the certify tool that writes the ledger."""
+gate read from it, and the certify tool that writes the ledger.  One
+test runs a real leg to check its per-key codegen compilation count."""
 
 from __future__ import annotations
 
@@ -409,3 +410,29 @@ def test_certify_accrues_per_cpus_and_leaves_unmeasured_keys(tmp_path):
     assert bench.drift_anchors(str(tmp_path))[0] == {
         "a": {4: 1.0, 32: 0.4}, "b": {4: 2.0},
     }
+
+
+def test_key_records_carry_codegen_compiles(spark, monkeypatch):
+    """Each key's BENCH_DETAIL record carries ``codegen_compiles``: the
+    generated-code compilations of its measured legs as an int, or None
+    when Spark's counter is unavailable."""
+    from arrow_experiments_spark.registry import all_queries
+    from conftest import SF_DIR
+
+    measure = bench.query_timer(spark, SF_DIR, all_queries())
+    measure("q1_pricing_summary")  # warm: its plans are compiled now
+    sec, n = bench.compiles_during(spark, lambda: measure("q1_pricing_summary"))
+    assert sec > 0 and n == 0  # a steady leg hits the codegen cache
+    monkeypatch.setattr(bench, "codegen_stats", lambda spark: None)
+    _, missing = bench.compiles_during(spark, lambda: 1.0)
+    assert missing is None
+
+    compiles = {"q1_pricing_summary": n, "new_key": missing}
+    out = bench.vs_floor(
+        {"q1_pricing_summary": sec, "new_key": 1.0},
+        {"q1_pricing_summary": {4: sec}}, {}, 4, compiles,
+    )
+    assert out["q1_pricing_summary"]["codegen_compiles"] == 0
+    assert isinstance(out["q1_pricing_summary"]["codegen_compiles"], int)
+    assert out["new_key"] == {"ratio": None, "anchor": "none", "codegen_compiles": None}
+    assert "codegen_compiles" not in bench.vs_floor({"k": 1.0}, {}, {})["k"]

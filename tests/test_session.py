@@ -200,22 +200,89 @@ def test_session_entry_points_apply_pinned_conf_sets(recording_builder):
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "100",
         "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.sql.codegen.cache.maxEntries": "4096",
         "spark.ui.enabled": "false",
         "spark.driver.memory": "8g",
     }
 
-    class RecordingConf:
-        def __init__(self):
-            self.set_calls: dict[str, str] = {}
+    spark = _FakeSession(codegen_cache="4096")
+    tune_session(spark)
+    assert spark.conf.set_calls == _SHARED_CONF
 
-        def set(self, key, value):
-            self.set_calls[key] = value
 
-    class FakeSpark:
-        conf = RecordingConf()
+class _FakeContext:
+    """A stand-in SparkContext: only its identity matters (the key of
+    ``session.probe_once``'s once-per-context cache)."""
 
-    tune_session(FakeSpark())
-    assert FakeSpark.conf.set_calls == _SHARED_CONF
+
+class _FakeConf:
+    """Records the confs set on it; reads the static generated-class
+    cache size as ``codegen_cache``."""
+
+    def __init__(self, codegen_cache: str):
+        self.codegen_cache = codegen_cache
+        self.set_calls: dict[str, str] = {}
+
+    def set(self, key, value):
+        self.set_calls[key] = value
+
+    def get(self, key):
+        assert key == "spark.sql.codegen.cache.maxEntries", key
+        return self.codegen_cache
+
+
+class _FakeSession:
+    """A stand-in live session for tune_session."""
+
+    def __init__(self, codegen_cache: str, sc=None):
+        self.conf = _FakeConf(codegen_cache)
+        self.sparkContext = sc or _FakeContext()
+
+
+def test_tune_session_warns_once_per_context_on_small_codegen_cache(
+    spark, monkeypatch, caplog
+):
+    """A live session whose generated-class cache reads as Spark's
+    default (100) cannot be raised by tune_session (the conf is static):
+    tune_session still applies every runtime conf, raises nothing, and
+    logs ONE warning per SparkContext naming the conf and when to set
+    it."""
+    import logging
+    from weakref import WeakKeyDictionary
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from arrow_experiments_spark import session
+    from arrow_experiments_spark.session import CODEGEN_CACHE_CONF, tune_session
+
+    monkeypatch.setattr(session, "_PROBED", WeakKeyDictionary())
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    assert spark.conf.get(CODEGEN_CACHE_CONF) == "4096"
+    real_get = RuntimeConfig.get
+
+    def default_cache_size(self, key, *args):
+        if key == CODEGEN_CACHE_CONF:
+            return "100"
+        return real_get(self, key, *args)
+
+    monkeypatch.setattr(RuntimeConfig, "get", default_cache_size)
+    other = _FakeContext()
+    fakes = [_FakeSession("100", other), _FakeSession("100", other)]
+    with caplog.at_level(logging.WARNING, logger="arrow_experiments_spark"):
+        assert tune_session(spark) is spark
+        assert tune_session(spark) is spark
+        for fake in fakes:
+            assert tune_session(fake) is fake
+    records = [r.getMessage() for r in caplog.records
+               if r.name.startswith("arrow_experiments_spark")]
+    assert len(records) == 2, records  # the fixture's context, then `other`
+    for msg in records:
+        assert CODEGEN_CACHE_CONF in msg and "100" in msg, msg
+        assert "when the session is built" in msg, msg
+    for k, v in _SHARED_CONF.items():
+        assert spark.conf.get(k) == v
+    for fake in fakes:
+        assert fake.conf.set_calls == _SHARED_CONF
 
 
 def test_build_session_defaults_to_host_cores(recording_builder):
@@ -271,3 +338,16 @@ def test_extra_conf_env_applies_last(spark, monkeypatch):
                 s.conf.unset(k)
             else:
                 s.conf.set(k, v)
+
+
+def test_codegen_cache_size_is_overridable(recording_builder, monkeypatch):
+    """The generated-class cache size is an ordinary builder conf:
+    ``extra_conf`` overrides the engine's size and SPARK_GRAFT_EXTRA_CONF
+    overrides both."""
+    from arrow_experiments_spark.session import CODEGEN_CACHE_CONF
+
+    build_session(extra_conf={CODEGEN_CACHE_CONF: "256"})
+    assert recording_builder.conf[CODEGEN_CACHE_CONF] == "256"
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", f"{CODEGEN_CACHE_CONF}=512")
+    build_session(extra_conf={CODEGEN_CACHE_CONF: "256"})
+    assert recording_builder.conf[CODEGEN_CACHE_CONF] == "512"

@@ -881,38 +881,98 @@ def _within(jobs: list[int], caps: list[int]) -> bool:
     return len(jobs) == len(caps) and all(j <= c for j, c in zip(jobs, caps))
 
 
-def test_curation_sink_steady_state_jobs_per_batch(spark, tmp_path, sink_jobs):
-    """A curation micro-batch against a committed snapshot probes its
-    touched buckets once, anti-joins once and merges without a second
-    anti-join: at most 12 Spark jobs, and the raw delta is read once."""
+def _curation_stream(spark, tmp_path, batches: int, rows: int = 20):
+    """A file stream of ``batches`` micro-batches of ``rows`` distinct
+    documents that pass the curation gate, one staged file each."""
     import os
 
-    from arrow_experiments_spark.streaming import egress
-
-    docs = _curation_docs(spark, 60)
+    docs = _curation_docs(spark, batches * rows)
     staged = str(tmp_path / "staged")
     os.makedirs(staged)
-    for i in range(3):
+    for i in range(batches):
         part = str(tmp_path / f"part{i}")
-        schema = _stage_docs(spark, part, docs[i * 20:(i + 1) * 20])
+        schema = _stage_docs(spark, part, docs[i * rows:(i + 1) * rows])
         src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
         dst = os.path.join(staged, f"{i:03d}.parquet")
         os.replace(os.path.join(part, src), dst)
         # increasing mtimes: the file source reads oldest first
         os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-
-    stream = (
+    return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
+
+
+def test_curation_sink_steady_state_jobs_per_batch(spark, tmp_path, sink_jobs):
+    """A curation micro-batch against a committed snapshot probes its
+    touched buckets once, anti-joins once and merges without a second
+    anti-join: at most 8 Spark jobs, and the raw delta is read once
+    (the version read binds the manifest's schema instead of running an
+    inference job)."""
+    from arrow_experiments_spark.streaming import egress
+
     snap = str(tmp_path / "snap")
-    q = egress.incremental_curation_sink(stream, snap)
+    q = egress.incremental_curation_sink(_curation_stream(spark, tmp_path, 3), snap)
 
     assert len(sink_jobs) == 3, sink_jobs
-    assert max(sink_jobs[1:]) <= 12, sink_jobs  # batches 1, 2 merge into a committed v
+    assert max(sink_jobs[1:]) <= 8, sink_jobs  # batches 1, 2 merge into a committed v
     assert [p.numInputRows for p in q.recentProgress] == [20, 20, 20]
     assert egress.read_snapshot(spark, snap).count() == 60
+
+
+def test_repeated_requests_reuse_generated_code(spark, tmp_path, monkeypatch):
+    """The session keeps the engine's working set of generated classes:
+    a second steady curation micro-batch, and serving the same
+    registered queries again after the sink ran, compile no Java.  (At
+    Spark's default cache of 100 classes this working set evicts itself
+    and every request compiles its code again.)"""
+    from arrow_experiments_spark.registry import all_queries
+    from arrow_experiments_spark.session import (
+        CODEGEN_CACHE_CONF,
+        CODEGEN_CACHE_ENTRIES,
+        codegen_stats,
+    )
+    from arrow_experiments_spark.sources.arrow_ipc import df_to_reader
+    from arrow_experiments_spark.streaming import egress
+
+    if codegen_stats(spark) is None:
+        pytest.skip("this Spark build has no codegen compilation counter")
+    assert spark.conf.get(CODEGEN_CACHE_CONF) == str(CODEGEN_CACHE_ENTRIES)
+
+    def compiles(fn) -> int:
+        before = codegen_stats(spark)[0]
+        fn()
+        return codegen_stats(spark)[0] - before
+
+    queries = all_queries()
+    # with the sink below, more distinct classes than Spark's default
+    # cache holds, so at that size the second pass misses
+    names = ["q1_pricing_summary", "q18_large_volume_customer",
+             "window_running_sum", "events_session_window",
+             "q3_shipping_priority", "q5_local_supplier_volume",
+             "topk_per_group"]
+
+    def serve_all():
+        for name in names:
+            df_to_reader(queries[name].build(spark, SF_DIR)).read_all()
+
+    serve_all()
+    per_batch: list[int] = []
+    run_foreach_batch = egress._run_foreach_batch
+
+    def counted(stream_df, merge, *args):
+        def merge_counted(batch_df, batch_id):
+            per_batch.append(compiles(lambda: merge(batch_df, batch_id)))
+
+        return run_foreach_batch(stream_df, merge_counted, *args)
+
+    monkeypatch.setattr(egress, "_run_foreach_batch", counted)
+    snap = str(tmp_path / "snap")
+    egress.incremental_curation_sink(_curation_stream(spark, tmp_path, 3), snap)
+    # batch 0 commits the first version; batches 1 and 2 are steady
+    assert len(per_batch) == 3 and per_batch[2] == 0, per_batch
+    assert compiles(serve_all) == 0
 
 
 def test_curation_sink_commits_only_novel_hashes(spark, tmp_path):
@@ -2734,6 +2794,63 @@ def test_anti_join_small_left_fallback_matches_plain(spark):
 
     fallback_form = _anti_join_small_left(small, big, ["k"], max_keys=2)
     assert {tuple(r) for r in fallback_form.collect()} == want
+
+
+def test_read_version_binds_the_manifest_schema(spark, tmp_path, monkeypatch):
+    """A committed version's manifest records the schema Spark reads
+    back, so reading the version runs no schema-inference job; the bound
+    schema and rows equal an inferring read's (nullability of nested
+    fields included), and a manifest without a schema still infers."""
+    import json
+    import os
+
+    from pyspark.sql.types import (
+        ArrayType,
+        IntegerType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from arrow_experiments_spark.streaming import egress
+
+    schema = StructType([
+        StructField("k", IntegerType(), False),
+        StructField("seq", IntegerType(), False),
+        StructField("arr", ArrayType(IntegerType(), False), False),
+        StructField("m", MapType(StringType(), IntegerType(), False)),
+        StructField("st", StructType([StructField("x", IntegerType(), False)])),
+    ])
+    batch = spark.createDataFrame(
+        [(i, i, [i, i + 1], {"a": i}, (i,)) for i in range(20)], schema
+    )
+    snap = str(tmp_path / "snap")
+    v = egress._merge_batch(
+        spark, batch, snap,
+        key_cols=["k"], order_col="seq", n_buckets=4, bucket_cols=None,
+        seq=0, committed=None,
+    )
+    vdir = os.path.join(snap, v)
+    manifest = os.path.join(vdir, "_MANIFEST.json")
+    with open(manifest) as f:
+        man = json.load(f)
+    inferred = spark.read.option("basePath", vdir).parquet(
+        *[os.path.join(vdir, p) for p in man["files"]]
+    )
+
+    monkeypatch.setattr(egress, "_VERSION_READ_CACHE", {})
+    before = _jobs_so_far(spark)
+    bound = egress._read_version(spark, vdir)
+    assert _jobs_so_far(spark) == before
+    assert bound.schema == inferred.schema
+    assert bound.orderBy("k").collect() == inferred.orderBy("k").collect()
+
+    del man["schema"]
+    with open(manifest, "w") as f:
+        json.dump(man, f)
+    monkeypatch.setattr(egress, "_VERSION_READ_CACHE", {})
+    assert egress._read_version(spark, vdir).schema == inferred.schema
 
 
 def test_read_version_survives_corrupt_manifest(spark, tmp_path):
