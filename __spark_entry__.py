@@ -46,12 +46,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     # Geometry-parametric oracles (callables) resolve against the driver's
     # correctness corpus (sf0.01 by default; SPARK_GRAFT_ORACLE_SF_DIR
-    # overrides) using the same bits/k derivation the builders run.  When
-    # a Spark session is ACTIVE in this process its geometry confs
-    # (emb.lshBits, ivf.k, corpusNOverride) flow into the derivation —
-    # matching what the builders will compute on that session; with no
-    # session the derivation uses parquet footer counts and no overrides.
-    # The driver's contract is the latter: sf0.01, conf-free.
+    # overrides) using the same bits/k derivation the builders run, from
+    # the corpus's parquet footer row count.  No conf flows into the
+    # geometry; an ACTIVE session, if any, serves only to count a corpus
+    # whose footer is unreadable.
     return {
         name: q.oracle_sql()
         for name, q in all_queries().items()

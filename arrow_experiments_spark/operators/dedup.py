@@ -47,8 +47,7 @@ _SH_SQL = SHINGLES3_SQL.format(t=TOKENS_SQL.format(col="text"))
 # ~3.7e5 LSH-bucket pairs; clone replication grows both ~quadratically
 # (x10 ≈ 3.5e7), so 1e8 passes any sane sample and fires on the 100×
 # clone corpus (~3e9) long before the shuffle materializes.
-_EXACT_PAIR_LIMIT_CONF = "spark.arrowExperimentsSpark.dedup.maxExactPairs"
-_EXACT_PAIR_LIMIT_DEFAULT = 100_000_000
+_EXACT_PAIR_LIMIT = 100_000_000
 
 
 class PairMassExceeded(ValueError):
@@ -75,16 +74,6 @@ def _guard_pair_mass(
     stage at build() time rather than at first action; plan-only callers
     (explain audits) pay that stage once.  The frames involved are
     persisted, so the action's work is reused by the returned plan."""
-    raw_limit = spark.conf.get(
-        _EXACT_PAIR_LIMIT_CONF, str(_EXACT_PAIR_LIMIT_DEFAULT)
-    )
-    try:
-        limit = int(raw_limit)
-    except (TypeError, ValueError):
-        raise ValueError(
-            f"{_EXACT_PAIR_LIMIT_CONF} must be an integer pair count, "
-            f"got {raw_limit!r}"
-        ) from None
     pair_expr = (
         F.sum(F.col("pairs"))
         if "pairs" in buckets.columns
@@ -92,10 +81,10 @@ def _guard_pair_mass(
     )
     est = buckets.agg(pair_expr.alias("p")).first()["p"]
     est = int(est or 0)
-    if est > limit:
+    if est > _EXACT_PAIR_LIMIT:
         raise PairMassExceeded(
             f"{name}: estimated candidate-pair mass {est:,} exceeds the "
-            f"sample-only limit {limit:,} ({_EXACT_PAIR_LIMIT_CONF}). "
+            f"sample-only limit {_EXACT_PAIR_LIMIT:,}. "
             f"This exact scorer exists as an oracle cross-check for "
             f"samples; run {sibling} on full corpora — its candidates "
             f"are LSH-bounded and its output per-key capped."
@@ -334,7 +323,7 @@ def release_curate_tokens(spark: SparkSession, sf_dir: str) -> None:
     """Release the token-stage persist a ``defer_materialize=True``
     :func:`curate_corpus` call parked (r17).  Safe at any point: if the
     corpus cache is not yet materialized (e.g. the fast-path edge
-    collect was conf-disabled and no action ran), it is counted first —
+    collect was skipped and no action ran), it is counted first —
     restoring exactly the eager path's materialize-before-release
     contract, never the 5× tokenizer re-inline."""
     import os
@@ -676,13 +665,12 @@ _PROP_MAX_ROUNDS = 25
 # union-find instead of 3 Spark jobs per propagation round.  The limit
 # bounds the COLLECTED ROWS of the raw collision stream (session 2: the
 # fast path collects without the distinct, since union-find dedupes),
-# default 4M rows ≈ 64 MB of (long, long) — the same order
+# 4M rows ≈ 64 MB of (long, long) — the same order
 # as a broadcast relation, far below driver memory.  Above the limit the
 # distributed propagation/contraction paths run unchanged, so the 100 TB
 # posture (no unbounded driver materialization) is preserved: the collect
 # is gated exactly like a broadcast build side.
-_DRIVER_EDGE_LIMIT_CONF = "spark.arrowExperimentsSpark.dedup.maxDriverEdges"
-_DRIVER_EDGE_LIMIT_DEFAULT = 4_000_000
+_DRIVER_EDGE_LIMIT = 4_000_000
 
 
 def _driver_components(spark: SparkSession, tbl) -> DataFrame:
@@ -728,7 +716,7 @@ def _driver_components(spark: SparkSession, tbl) -> DataFrame:
     # toArrow(), so hand the labels back as a pyarrow table too —
     # createDataFrame(list-of-tuples) pickles every row through the py4j
     # channel, while the Arrow path ships columnar buffers.  Bounded by
-    # the same maxDriverEdges gate either way; the resulting plan is the
+    # the same _DRIVER_EDGE_LIMIT gate either way; the resulting plan is the
     # same LocalRelation.
     import pyarrow as pa
 
@@ -750,7 +738,7 @@ def _driver_components(spark: SparkSession, tbl) -> DataFrame:
     doc="duplicate clustering: connected components over the MinHash-LSH "
     "candidate graph (cluster_id = min doc_id in component).  Strategy is "
     "size-adaptive like a broadcast-join decision: a candidate graph "
-    "under maxDriverEdges (default 4M edges — broadcast-relation-sized) "
+    "under 4M edges (broadcast-relation-sized) "
     "is solved driver-side with union-find in one collect; a larger one "
     "runs iterative min-label propagation (one shuffle join per round, "
     "convergence by the monotone sum-of-labels invariant), and if the "
@@ -815,14 +803,7 @@ def _clusters_impl(
     # falls back to the distributed path a little earlier; both paths
     # emit identical labels, so the strategy choice is invisible.
     edges_raw = _candidate_edges(spark, sf_dir, corpus=corpus, dedupe=False)
-    try:
-        edge_limit = int(
-            spark.conf.get(
-                _DRIVER_EDGE_LIMIT_CONF, str(_DRIVER_EDGE_LIMIT_DEFAULT)
-            )
-        )
-    except (TypeError, ValueError):
-        edge_limit = _DRIVER_EDGE_LIMIT_DEFAULT
+    edge_limit = _DRIVER_EDGE_LIMIT
     edge_tbl = (
         edges_raw.limit(edge_limit + 1).toArrow() if edge_limit > 0 else None
     )
@@ -1171,30 +1152,19 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EMB_LSH_BANDS = 3
 _EMB_LSH_BITS = 4
 
-# Cell-population knob for the bounded top-k scorer: in-bucket work is
-# quadratic in bucket population, so at production scale bits grow with
-# the corpus (each bit halves expected cell population; the recall cost
-# is bought back by adding bands).  The DEFAULT must stay 4 — it is what
-# the shared oracle describes; non-default values are for scale runs.
-_EMB_LSH_BITS_CONF = "spark.arrowExperimentsSpark.emb.lshBits"
-
-# ---- auto-derived cell geometry (r7 verdict #2) ---------------------------
-# When the bits conf is UNSET, derive it from corpus size so the 100 TB run
-# gets linear total in-cell work without anyone remembering a conf:
-#   bits = max(4, ceil(log2(N / targetCellPop)))
-# Each bit halves expected (band, bucket) population, so this holds cell
-# population ≈ targetCellPop as N grows — the SCALE.md decade sweep measured
-# the fixed-bits decade exponent at ~2 (quadratic in-cell scorer) and the
-# matched-population arm at ~1.  targetCellPop = 2000 reproduces the sweep's
+# ---- cell geometry derived from the corpus (r7 verdict #2) ----------------
+# In-bucket work of the bounded top-k scorer is quadratic in bucket
+# population, so bits grow with the corpus (each bit halves expected cell
+# population; the recall cost is bought back by adding bands):
+#   bits = max(4, ceil(log2(N / _EMB_TARGET_CELL_POP)))
+# This holds cell population ≈ 2000 as N grows — the SCALE.md decade sweep
+# measured the fixed-bits decade exponent at ~2 (quadratic in-cell scorer)
+# and the matched-population arm at ~1.  2000 reproduces the sweep's
 # measured-good geometry: at the 100× corpus (200k vectors) it derives
-# 7 bits, the arm that ran 4.9× faster than the 4-bit default; at every
-# oracle fixture (N ≤ 2000) it derives the floor 4 — exactly the geometry
-# the shared oracle describes, so correctness fixtures never shift.
-_EMB_TARGET_CELL_POP_CONF = "spark.arrowExperimentsSpark.emb.targetCellPop"
+# 7 bits, the arm that ran 4.9× faster than the 4-bit floor; at every
+# oracle fixture (N ≤ 32,000) it derives the floor 4.  The oracles run
+# the same derivation, so builder and oracle always share one geometry.
 _EMB_TARGET_CELL_POP = 2000
-# Stats seam: tests (and any engine that already knows its table stats)
-# can inject N instead of paying the footer read.
-_EMB_CORPUS_N_CONF = "spark.arrowExperimentsSpark.emb.corpusNOverride"
 
 
 def _parquet_num_rows(path: str) -> int | None:
@@ -1222,29 +1192,11 @@ def _parquet_num_rows(path: str) -> int | None:
     return None
 
 
-def _conf_get(spark: SparkSession | None, key: str, default: str = "") -> str:
-    """Conf lookup that tolerates ``spark=None`` — geometry derivation for
-    oracle resolution runs without a live session (footer counts only),
-    so conf overrides apply only when a session is actually given."""
-    if spark is None:
-        return default
-    return spark.conf.get(key, default)
-
-
 def _embeddings_n(spark: SparkSession | None, sf_dir: str) -> int:
-    """Corpus size N for geometry derivation: the conf override when
-    set, else the parquet footer count, else one Spark count."""
+    """Corpus size N for geometry derivation: the parquet footer count,
+    else (footer unreadable) one Spark count on ``spark``."""
     import os
 
-    raw = _conf_get(spark, _EMB_CORPUS_N_CONF)
-    if raw:
-        try:
-            return int(raw)
-        except (TypeError, ValueError):
-            raise ValueError(
-                f"{_EMB_CORPUS_N_CONF} must be an integer row count, "
-                f"got {raw!r}"
-            ) from None
     n = _parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
     if n is not None:
         return n
@@ -1267,38 +1219,14 @@ def derive_lsh_bits(n: int, target_pop: int, floor: int = 4) -> int:
     return max(floor, math.ceil(math.log2(n / target_pop)))
 
 
-def _emb_lsh_bits(
-    spark: SparkSession | None, sf_dir: str | None = None
-) -> int:
-    """Sign-bit count for the embedding LSH family: the ``emb.lshBits``
-    conf when set, else derived from the corpus footer count.  The
-    geometry-parametric oracles (r9 verdict #1) call this with the SAME
-    (spark, sf_dir) the builder sees, so the DuckDB SQL is regenerated at
-    the derived bit count and the comparison is structurally aligned at
-    every corpus size — no conf pinning, no import-time floor baking."""
-    raw = _conf_get(spark, _EMB_LSH_BITS_CONF)
-    if raw:
-        try:
-            return int(raw)
-        except (TypeError, ValueError):
-            raise ValueError(
-                f"{_EMB_LSH_BITS_CONF} must be an integer bit count, "
-                f"got {raw!r}"
-            ) from None
-    if sf_dir is None:
-        return _EMB_LSH_BITS
-    target_raw = _conf_get(
-        spark, _EMB_TARGET_CELL_POP_CONF, str(_EMB_TARGET_CELL_POP)
-    )
-    try:
-        target = int(target_raw)
-    except (TypeError, ValueError):
-        raise ValueError(
-            f"{_EMB_TARGET_CELL_POP_CONF} must be an integer population, "
-            f"got {target_raw!r}"
-        ) from None
+def _emb_lsh_bits(spark: SparkSession | None, sf_dir: str) -> int:
+    """Sign-bit count for the embedding LSH family, derived from the
+    corpus size.  The geometry-parametric oracles (r9 verdict #1) call
+    this with the same ``sf_dir`` the builder sees, so the DuckDB SQL is
+    regenerated at the derived bit count and the comparison is
+    structurally aligned at every corpus size."""
     return derive_lsh_bits(
-        _embeddings_n(spark, sf_dir), target, floor=_EMB_LSH_BITS
+        _embeddings_n(spark, sf_dir), _EMB_TARGET_CELL_POP, floor=_EMB_LSH_BITS
     )
 
 
@@ -1897,16 +1825,14 @@ def _bucket_topk_pdf(pdf):
     "row): Spark has no bounded-state top-k aggregate, so the window "
     "form must materialize the pair list; applyInPandas is what bounds "
     "it.  Same declared result as dedup_embedding_topk (shared oracle).  "
-    "Cell population is the scale knob: "
-    "spark.arrowExperimentsSpark.emb.lshBits — each extra bit halves "
+    "Cell population is the scale lever: each extra sign-bit halves "
     "expected bucket population, so bits grow ~log2(N) with the corpus "
     "and per-bucket quadratic work stays constant (recall bought back by "
-    "adding bands); SCALE.md measures the knob at 1000×.  When the conf "
-    "is UNSET, bits are AUTO-DERIVED as max(4, ceil(log2(N / "
-    "targetCellPop))) from a footer-metadata corpus count (r7 verdict "
-    "#2) — the 100 TB run gets linear total in-cell work without "
-    "remembering a conf, and every oracle fixture derives the floor 4, "
-    "the geometry the shared oracle describes.",
+    "adding bands); SCALE.md measures it at 1000×.  Bits are DERIVED as "
+    "max(4, ceil(log2(N / 2000))) from a footer-metadata corpus count "
+    "(r7 verdict #2) — the 100 TB run gets linear total in-cell work, "
+    "every oracle fixture derives the floor 4, and the oracle is "
+    "regenerated at the same derived bit count.",
     oracle=_emb_topk_oracle,
 )
 def dedup_embedding_topk_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1945,62 +1871,29 @@ def dedup_embedding_topk_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDEDUP_TAU = 0.3
 _SEMDEDUP_SCALE = 1_000_000  # analytics._CENT_SCALE: exact integer centroid sums
 
-# Cluster-population knob: production SemDeDup holds per-cluster population
+# Cluster population: production SemDeDup holds per-cluster population
 # constant by growing k with the corpus (k ≈ N / target_population).  The
-# fixture's assignment is a FIXED vocabulary, so scale runs need an
-# equivalent: clusterBits > 0 sub-splits each cluster by n sign-bits of the
-# deterministic hyperplane LSH family — exactly "re-cluster at higher k"
-# (verdicts and centroids become subcluster-scoped).  The DEFAULT must stay
-# 0 — it is what the oracle describes; non-default values are for scale runs.
-_SEMDEDUP_BITS_CONF = "spark.arrowExperimentsSpark.semdedup.clusterBits"
-
-# Auto-derivation twin of the lshBits rule (r7 verdict #2): with the conf
-# unset, bits = max(0, ceil(log2(pop / targetClusterPop))) where pop is the
-# expected per-cluster population N / k.  targetClusterPop = 25000 is the
-# SCALE.md-measured linear-restored cell: the 1000× corpus (200k/cluster at
-# the fixture's fixed k=10 vocabulary) derives 3 bits — exactly the arm that
-# measured decade exponent 1.02; every oracle fixture (pop ≤ 200) derives 0,
-# the geometry the shared oracle describes.
-_SEMDEDUP_TARGET_POP_CONF = (
-    "spark.arrowExperimentsSpark.semdedup.targetClusterPop"
-)
+# fixture's assignment is a FIXED vocabulary, so the equivalent here is a
+# sub-split of each cluster by n sign-bits of the deterministic hyperplane
+# LSH family — exactly "re-cluster at higher k" (verdicts and centroids
+# become subcluster-scoped).  Twin of the embedding bits rule (r7 verdict
+# #2): n = max(0, ceil(log2(pop / _SEMDEDUP_TARGET_POP))) where pop is the
+# expected per-cluster population N / k.  25000 is the SCALE.md-measured
+# linear-restored cell: the 1000× corpus (200k/cluster at the fixture's
+# fixed k=10 vocabulary) derives 3 bits — exactly the arm that measured
+# decade exponent 1.02; every oracle fixture (pop ≤ 200) derives 0.
 _SEMDEDUP_TARGET_POP = 25000
 _SEMDEDUP_FIXTURE_K = 10  # the fixture's fixed label vocabulary
 
 
-def _semdedup_cluster_bits(
-    spark: SparkSession | None, sf_dir: str | None = None
-) -> int:
-    """Sub-split bit count for SemDeDup clusters — same derivation seam
-    as :func:`_emb_lsh_bits`; the registered oracle is regenerated at the
-    same bit count (r9 verdict #1), so no geometry pinning is needed for
-    an oracle comparison at any corpus size."""
-    raw = _conf_get(spark, _SEMDEDUP_BITS_CONF)
-    if raw:
-        try:
-            return int(raw)
-        except (TypeError, ValueError):
-            raise ValueError(
-                f"{_SEMDEDUP_BITS_CONF} must be an integer bit count, "
-                f"got {raw!r}"
-            ) from None
-    if sf_dir is None:
-        return 0
-    target_raw = _conf_get(
-        spark, _SEMDEDUP_TARGET_POP_CONF, str(_SEMDEDUP_TARGET_POP)
-    )
-    try:
-        target = int(target_raw)
-    except (TypeError, ValueError):
-        raise ValueError(
-            f"{_SEMDEDUP_TARGET_POP_CONF} must be an integer population, "
-            f"got {target_raw!r}"
-        ) from None
-    n = _embeddings_n(spark, sf_dir)
-    # The fixture assignment is a fixed k=10 label vocabulary; production
-    # SemDeDup grows k with N instead, making this sub-split a no-op there.
-    pop = n // _SEMDEDUP_FIXTURE_K
-    return derive_lsh_bits(pop, target, floor=0)
+def _semdedup_cluster_bits(spark: SparkSession | None, sf_dir: str) -> int:
+    """Sub-split bit count for SemDeDup clusters, derived from the corpus
+    size like :func:`_emb_lsh_bits`; the registered oracle is regenerated
+    at the same bit count (r9 verdict #1).  The fixture assignment is a
+    fixed k=10 label vocabulary; production SemDeDup grows k with N
+    instead, making this sub-split a no-op there."""
+    pop = _embeddings_n(spark, sf_dir) // _SEMDEDUP_FIXTURE_K
+    return derive_lsh_bits(pop, _SEMDEDUP_TARGET_POP, floor=0)
 
 
 def _cluster_semantic_pdf(pdf):
@@ -2135,17 +2028,16 @@ def _semdedup_oracle_sql(bits: int = 0) -> str:
     "k — cluster count grows ∝ N (k ≈ N/target_population, e.g. 50k "
     "clusters for 100M docs in the paper) so population and per-cluster "
     "cost stay constant while total work stays linear; the same "
-    "knob-not-plan story as the lshBits cell-population control, with "
+    "knob-not-plan story as the embedding cell-population bits, with "
     f"the tau gate at the production ~0.9 instead of the {_SEMDEDUP_TAU} "
     "that exercises pairs at fixture scale.  Because the fixture's "
-    "assignment is a fixed vocabulary, scale runs use "
-    "spark.arrowExperimentsSpark.semdedup.clusterBits: n > 0 sub-splits "
-    "each cluster by n hyperplane sign-bits — the conf-level equivalent "
-    "of re-clustering at higher k (each bit halves expected population; "
+    "assignment is a fixed vocabulary, large corpora sub-split each "
+    "cluster by n hyperplane sign-bits — the equivalent of "
+    "re-clustering at higher k (each bit halves expected population; "
     "verdicts and centroids become subcluster-scoped, as they would at "
-    "higher k).  When the conf is UNSET, bits are AUTO-DERIVED as "
-    "max(0, ceil(log2(pop / targetClusterPop))) from a footer-metadata "
-    "corpus count (r7 verdict #2); the oracle is geometry-parametric — "
+    "higher k).  n is DERIVED as max(0, ceil(log2(pop / 25000))) from a "
+    "footer-metadata corpus count (r7 verdict #2), pop = N / 10, so "
+    "every oracle fixture derives 0; the oracle is geometry-parametric — "
     "regenerated at the same derived bit count, with centroids and "
     "verdicts subcluster-scoped exactly like the builder's.",
     oracle=lambda spark, sf_dir: _semdedup_oracle_sql(

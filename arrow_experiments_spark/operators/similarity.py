@@ -331,47 +331,23 @@ def _bucket_col(emb: F.Column | str) -> F.Column:
 # PARAMETER: cells scale with the corpus (k ≈ corpus/target_cell_size).
 _IVF_K = 8
 _CODEBOOK_OFFSET = 64
-_IVF_K_CONF = "spark.arrowExperimentsSpark.ivf.k"
-_IVF_TARGET_POP_CONF = "spark.arrowExperimentsSpark.ivf.targetCellPop"
 _IVF_TARGET_POP = 2000
 
 
-def _ivf_k(spark: SparkSession | None, sf_dir: str | None = None) -> int:
-    """Codebook cell count: the ``ivf.k`` conf when set, else derived
-    from the corpus footer count as ``max(_IVF_K, ceil(N / targetCellPop))``
-    — the cells-scale-with-the-corpus rule the codebook comment states,
-    now applied automatically (r8 verdict #7: the one remaining fixed
-    geometry in the similarity family; at 1000× natural density k=8
-    leaves ~250k vectors per cell and the cell join bends quadratic).
-    Floored at the oracle geometry so every correctness fixture derives
-    k=8.  The registered IVF oracles are geometry-parametric (r9 verdict
-    #1): they enumerate the SAME derived k's centroids at check time, so
-    a derived-k corpus oracle-checks without pinning a conf."""
+def _ivf_k(spark: SparkSession | None, sf_dir: str) -> int:
+    """Codebook cell count, derived from the corpus size as
+    ``max(_IVF_K, ceil(N / _IVF_TARGET_POP))`` — the cells-scale-with-the-
+    corpus rule the codebook comment states (r8 verdict #7: at 1000×
+    natural density k=8 leaves ~250k vectors per cell and the cell join
+    bends quadratic).  Floored at the oracle geometry so every
+    correctness fixture derives k=8.  The registered IVF oracles are
+    geometry-parametric (r9 verdict #1): they enumerate the SAME derived
+    k's centroids at check time."""
     import math
 
-    from arrow_experiments_spark.operators.dedup import _conf_get
-
-    raw = _conf_get(spark, _IVF_K_CONF)
-    if raw:
-        try:
-            return int(raw)
-        except (TypeError, ValueError):
-            raise ValueError(
-                f"{_IVF_K_CONF} must be an integer cell count, got {raw!r}"
-            ) from None
-    if sf_dir is None:
-        return _IVF_K
-    target_raw = _conf_get(spark, _IVF_TARGET_POP_CONF, str(_IVF_TARGET_POP))
-    try:
-        target = int(target_raw)
-    except (TypeError, ValueError):
-        raise ValueError(
-            f"{_IVF_TARGET_POP_CONF} must be an integer population, "
-            f"got {target_raw!r}"
-        ) from None
     from arrow_experiments_spark.operators.dedup import _embeddings_n
 
-    return max(_IVF_K, math.ceil(_embeddings_n(spark, sf_dir) / target))
+    return max(_IVF_K, math.ceil(_embeddings_n(spark, sf_dir) / _IVF_TARGET_POP))
 
 
 def _l2sq(a: F.Column, cent: F.Column) -> F.Column:

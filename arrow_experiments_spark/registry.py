@@ -52,17 +52,14 @@ class Query:
     def oracle_sql(
         self, spark: SparkSession | None = None, sf_dir: str | None = None
     ) -> str | None:
-        """The DuckDB oracle SQL for this query against ``sf_dir`` —
-        resolves geometry-parametric oracles with the same derivation
-        the builder runs.  When no ``spark`` is passed, the ACTIVE
-        session (if one exists) is used so geometry conf overrides
-        (``emb.lshBits``, ``ivf.k``, ``corpusNOverride``) flow into the
-        resolved SQL exactly as they flow into the builder — otherwise
-        a conf-pinned builder would silently compare against a
-        footer-count-derived oracle (ADVICE r10).  With no session at
-        all the contract is: footer-count derivation against the
-        driver's sf0.01 corpus and NO conf overrides — the environment
-        ``__spark_entry__.oracle_sql()`` runs in."""
+        """The DuckDB oracle SQL for this query against ``sf_dir`` (the
+        driver's sf0.01 corpus by default) — resolves geometry-parametric
+        oracles with the same derivation the builder runs.  Geometry is a
+        function of the corpus alone (its parquet footer row count); no
+        session conf flows into it, so builder and oracle cannot
+        disagree.  ``spark`` (default: the active session, if any) serves
+        only the fallback that counts the corpus with Spark when its
+        footer is unreadable."""
         if self.oracle is None:
             return None
         if callable(self.oracle):

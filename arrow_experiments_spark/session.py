@@ -37,11 +37,26 @@ CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_ENTRIES = 4096
 
 
+# Spark's Python workers import this package too (pandas UDFs,
+# mapInArrow).  They start in the driver's working directory, so a driver
+# that imported the package through sys.path from elsewhere would leave
+# them unable to; build_session puts the package root on their path.
+_WORKER_PATH_CONF = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _with_package_root(path: str) -> str:
+    """``path`` (an os.pathsep list) with the package root first, so the
+    workers import the same copy of the package as the driver."""
+    parts = [p for p in path.split(os.pathsep) if p and p != _PACKAGE_ROOT]
+    return os.pathsep.join([_PACKAGE_ROOT, *parts])
+
+
 def _env_extra_conf() -> list[tuple[str, str]]:
     """Parse the SPARK_GRAFT_EXTRA_CONF escape hatch: a
     semicolon-separated ``key=value`` list applied LAST (wins over both
-    defaults and ``extra_conf``) so the sweep tools can A/B a conf
-    without a code edit.  Applied by BOTH session entry points —
+    defaults and ``extra_conf``), so an operator can A/B or override a
+    conf without a code edit.  Applied by BOTH session entry points —
     ``build_session`` and ``tune_session`` — so the workflow covers
     driver-owned sessions too (r12 ADVICE).  Limitation: the ';'
     separator is not escapable, so a VALUE containing ';' cannot be
@@ -151,7 +166,11 @@ def build_session(
     any query ran in the JVM; a session that getOrCreate returns, or an
     earlier session in the same JVM, keeps the size it started with.
     ``extra_conf`` and ``SPARK_GRAFT_EXTRA_CONF`` override it like any
-    other conf."""
+    other conf.
+
+    The Python workers get the package root first on
+    ``spark.executorEnv.PYTHONPATH``, ahead of any value ``extra_conf``
+    or ``SPARK_GRAFT_EXTRA_CONF`` gives it."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
@@ -180,13 +199,14 @@ def build_session(
     )
     for k, v in _RUNTIME_CONF:
         builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     # measurement/deployment escape hatch, applied last (see
     # _env_extra_conf), e.g.
     #   SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.coalescePartitions.parallelismFirst=false"
-    for k, v in _env_extra_conf():
+    overrides = [*(extra_conf or {}).items(), *_env_extra_conf()]
+    for k, v in overrides:
         builder = builder.config(k, v)
+    worker_path = dict(overrides).get(_WORKER_PATH_CONF, "")
+    builder = builder.config(_WORKER_PATH_CONF, _with_package_root(worker_path))
     sess = builder.getOrCreate()
     _disable_debugging_cache()
     return sess

@@ -2335,7 +2335,7 @@ def incremental_ivf_index_sink(
     ``{base_dir}/_GEOMETRY.json`` on first commit; re-attaching with a
     different k raises rather than probing a foreign codebook's cells.
     Callers size it from the EXPECTED corpus (``similarity._ivf_k``'s
-    N/targetCellPop rule); zero-norm vectors are the caller's gate, as
+    N/_IVF_TARGET_POP rule); zero-norm vectors are the caller's gate, as
     in the batch ops' ``nz`` entry filter.  Single writer enforced by
     :class:`WriterLease`; readers resolve versions through the LATEST
     pointer as with every snapshot in this module.

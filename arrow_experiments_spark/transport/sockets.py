@@ -57,6 +57,7 @@ from arrow_experiments_spark.transport.dissociated import (
     MSG_EOS,
     MSG_METADATA,
     _BODY_BIT,
+    _encapsulate,
     _messages,
     _pad8,
 )
@@ -476,17 +477,8 @@ class _Reassembler:
                             body = self._body.pop(seq)
                             break
                     self._cv.wait()
-            yield ipc.read_message(pa.py_buffer(_encapsulate_raw(fb, body)))
+            yield ipc.read_message(pa.py_buffer(_encapsulate(fb, body)))
             seq += 1
-
-
-def _encapsulate_raw(fb: bytes, body: bytes) -> bytes:
-    """Encapsulated IPC message bytes from dissociated halves —
-    continuation marker + LE u32 metadata length (8-aligned) + flatbuffer
-    + body (already 8-padded by the sender)."""
-    pad = _pad8(4 + 4 + len(fb))
-    meta = fb + b"\x00" * pad
-    return b"\xff\xff\xff\xff" + struct.pack("<I", len(meta)) + meta + body
 
 
 def fetch_dissociated_sockets(

@@ -1173,19 +1173,6 @@ def main() -> None:
         lambda: _bench_transport(spark, "s2_serve_1m_identity")
     )
 
-    # keys needing a per-leg re-warm (r15): count = untimed executions
-    # immediately before every recorded sample.  events_session_window's
-    # executed AQE plans are byte-identical on its fast and slow runs;
-    # its spread was the JVM C2 compiler promoting the key's large
-    # generated-code span across its first ~6 executions (decay series
-    # 1.51, 0.71, 0.60, ... 0.52 s), and with 43 other keys compiled
-    # between passes the bounded codegen/JIT caches evicted it, so a
-    # one-time deeper warm was not enough.  (That was Spark's 100-class
-    # codegen cache; build_session now keeps 4096 classes, and whether
-    # this re-warm still moves a sample is unmeasured.)  Applied in
-    # measure_leg so every recorded sample — pass legs, re-runs,
-    # floor_watch extras — is steady-state.
-    _pre_warm = {"events_session_window": 2}
     # per key: generated-code compilations summed over its recorded
     # samples (None: counter unavailable); 0 once its plans are cached
     compiles: dict[str, int | None] = {}
@@ -1194,8 +1181,6 @@ def main() -> None:
         compiles[name] = None if n is None else compiles.get(name, 0) + n
 
     def measure_leg(name: str) -> float:
-        for _ in range(_pre_warm.get(name, 0)):
-            measure(name)
         v, n = compiles_during(spark, lambda: measure(name))
         count(name, n)
         return v
@@ -1341,8 +1326,7 @@ def main() -> None:
             " the lower-middle, which continues as drift_watch — compare"
             " r14+ values to earlier rounds via that series",
             "every recorded sample is steady-state: a WARM PASS (every"
-            " item once, untimed) precedes the three recorded passes, and"
-            " events_session_window re-warms twice before each sample",
+            " item once, untimed) precedes the three recorded passes",
             "s1_replay_100m / s1_replay_100m_x4 / s2_serve_42m_zstd commit"
             " the min over their recorded attempts (floor_watch); the"
             " 42m key's attempt 1 fills the encoded-artifact cache, so its"

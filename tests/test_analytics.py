@@ -674,10 +674,10 @@ def test_time_weighted_avg_single_event_yields_null(spark, tmp_path):
     assert rows[0]["twa"] is None
 
 
-def test_exact_scorer_guard_fires_on_clone_corpus(spark, tmp_path):
+def test_exact_scorer_guard_fires_on_clone_corpus(spark, tmp_path, monkeypatch):
     """The sample-only guard (VERDICT r5 #2): the exact scorers must
     REFUSE a dup-dense corpus whose estimated candidate-pair mass
-    exceeds the configured limit — with a pointer to the bounded
+    exceeds the limit — with a pointer to the bounded
     sibling — and keep working on the base corpus under the same
     limit.  The clone corpus replicates each base document 30×
     (the clone shape of SCALE.md's scale sweeps), which grows in-bucket pair mass
@@ -685,8 +685,8 @@ def test_exact_scorer_guard_fires_on_clone_corpus(spark, tmp_path):
     import pyspark.sql.functions as F
     import pytest
 
+    from arrow_experiments_spark.operators import dedup
     from arrow_experiments_spark.operators.dedup import (
-        _EXACT_PAIR_LIMIT_CONF,
         PairMassExceeded,
         dedup_embedding_cosine,
         dedup_ngram_jaccard,
@@ -713,17 +713,13 @@ def test_exact_scorer_guard_fires_on_clone_corpus(spark, tmp_path):
 
     # limit sits between the base corpus's pair mass and the clone
     # corpus's (~900× the base): base passes, clones refuse
-    base_docs_mass_limit = 60_000
-    spark.conf.set(_EXACT_PAIR_LIMIT_CONF, str(base_docs_mass_limit))
-    try:
-        assert dedup_ngram_jaccard(spark, SF_DIR).count() >= 0
-        assert dedup_embedding_cosine(spark, SF_DIR).count() >= 0
-        with pytest.raises(PairMassExceeded, match="dedup_ngram_jaccard_lsh"):
-            dedup_ngram_jaccard(spark, clones)
-        with pytest.raises(PairMassExceeded, match="dedup_embedding_topk_grouped"):
-            dedup_embedding_cosine(spark, clones)
-    finally:
-        spark.conf.unset(_EXACT_PAIR_LIMIT_CONF)
+    monkeypatch.setattr(dedup, "_EXACT_PAIR_LIMIT", 60_000)
+    assert dedup_ngram_jaccard(spark, SF_DIR).count() >= 0
+    assert dedup_embedding_cosine(spark, SF_DIR).count() >= 0
+    with pytest.raises(PairMassExceeded, match="dedup_ngram_jaccard_lsh"):
+        dedup_ngram_jaccard(spark, clones)
+    with pytest.raises(PairMassExceeded, match="dedup_embedding_topk_grouped"):
+        dedup_embedding_cosine(spark, clones)
 
 
 def test_embedding_topk_delegates_to_grouped(spark):
@@ -798,24 +794,20 @@ def test_minhash_estimate_consistent_with_lsh(spark):
         assert est[p][0] == 8, (p, est[p])
 
 
-def test_embedding_topk_grouped_bits_knob(spark):
-    """The cell-population knob (spark.arrowExperimentsSpark.emb.lshBits):
-    a non-default bit count must still produce valid bounded top-k rows
-    (cos >= 0.3, no self pairs, <= 4 per vector, subset of candidate
-    semantics), and a non-integer value must raise a clear error instead
-    of an opaque int() traceback."""
-    import pytest
-
+def test_embedding_topk_grouped_bits_knob(spark, monkeypatch):
+    """The cell-population bits: a corpus size that derives a non-floor
+    bit count (N = 128,000 → 6 bits) must still produce valid bounded
+    top-k rows (cos >= 0.3, no self pairs, <= 4 per vector, subset of
+    candidate semantics)."""
+    from arrow_experiments_spark.operators import dedup
     from arrow_experiments_spark.operators.dedup import (
         dedup_embedding_topk_grouped,
     )
     from conftest import SF_DIR_T2
 
-    spark.conf.set("spark.arrowExperimentsSpark.emb.lshBits", "6")
-    try:
-        rows = dedup_embedding_topk_grouped(spark, SF_DIR_T2).collect()
-    finally:
-        spark.conf.unset("spark.arrowExperimentsSpark.emb.lshBits")
+    monkeypatch.setattr(dedup, "_embeddings_n", lambda spark, sf_dir: 128_000)
+    assert dedup._emb_lsh_bits(spark, SF_DIR_T2) == 6
+    rows = dedup_embedding_topk_grouped(spark, SF_DIR_T2).collect()
     assert rows
     per: dict[int, int] = {}
     for r in rows:
@@ -823,13 +815,6 @@ def test_embedding_topk_grouped_bits_knob(spark):
         assert r["vec_id"] != r["nbr_id"]
         per[r["vec_id"]] = per.get(r["vec_id"], 0) + 1
     assert max(per.values()) <= 4
-
-    spark.conf.set("spark.arrowExperimentsSpark.emb.lshBits", "banana")
-    try:
-        with pytest.raises(ValueError, match="lshBits"):
-            dedup_embedding_topk_grouped(spark, SF_DIR_T2)
-    finally:
-        spark.conf.unset("spark.arrowExperimentsSpark.emb.lshBits")
 
 
 def test_hll_partial_union_mergeable_and_accurate(spark):
@@ -1302,16 +1287,15 @@ def test_semantic_clusters_verdicts_match_reference_rule(spark):
     assert any(kept) and not all(kept)
 
 
-def test_semantic_clusters_subcluster_knob(spark):
-    """clusterBits > 0 must equal the reference rule applied per
-    (label, hyperplane-bucket) subgroup — the conf-level equivalent of
-    re-clustering at higher k — and a junk conf value must raise a
-    clear error naming the conf."""
+def test_semantic_clusters_subcluster_knob(spark, monkeypatch):
+    """A corpus size that derives cluster bits > 0 (N = 1,000,000 → 2
+    bits) must equal the reference rule applied per (label,
+    hyperplane-bucket) subgroup — the equivalent of re-clustering at
+    higher k."""
     import numpy as np
-    import pytest
 
+    from arrow_experiments_spark.operators import dedup
     from arrow_experiments_spark.operators.dedup import (
-        _SEMDEDUP_BITS_CONF,
         _SEMDEDUP_SCALE,
         _SEMDEDUP_TAU,
         dedup_semantic_clusters,
@@ -1324,14 +1308,12 @@ def test_semantic_clusters_subcluster_knob(spark):
 
     import pyspark.sql.functions as F
 
-    spark.conf.set(_SEMDEDUP_BITS_CONF, "2")
-    try:
-        got = {
-            r["vec_id"]: r
-            for r in dedup_semantic_clusters(spark, SF_DIR_T2).collect()
-        }
-    finally:
-        spark.conf.unset(_SEMDEDUP_BITS_CONF)
+    monkeypatch.setattr(dedup, "_embeddings_n", lambda spark, sf_dir: 1_000_000)
+    assert dedup._semdedup_cluster_bits(spark, SF_DIR_T2) == 2
+    got = {
+        r["vec_id"]: r
+        for r in dedup_semantic_clusters(spark, SF_DIR_T2).collect()
+    }
 
     src = (
         _nonzero_embeddings(spark, SF_DIR_T2)
@@ -1369,13 +1351,6 @@ def test_semantic_clusters_subcluster_knob(spark):
         for i, vid in enumerate(ids):
             assert got[vid]["cluster"] == label
             assert got[vid]["kept"] == (not dominated[i])
-
-    spark.conf.set(_SEMDEDUP_BITS_CONF, "banana")
-    try:
-        with pytest.raises(ValueError, match="clusterBits"):
-            dedup_semantic_clusters(spark, SF_DIR_T2)
-    finally:
-        spark.conf.unset(_SEMDEDUP_BITS_CONF)
 
 
 def test_train_split_chunks_matches_hashlib_reference(spark):

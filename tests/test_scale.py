@@ -282,28 +282,27 @@ def test_dedup_clusters_fallback_matches_converged(spark, monkeypatch):
     """Force the propagation cap to 0 so dedup_clusters takes the
     large-star/small-star fallback, and check the fallback output is
     identical to the converged propagation output on the same corpus —
-    the no-user-visible-failure contract.  maxDriverEdges=0 disables the
-    r16 driver-side fast path so both arms actually run the distributed
-    code under test."""
+    the no-user-visible-failure contract.  An edge limit of 0 disables
+    the r16 driver-side fast path so both arms actually run the
+    distributed code under test."""
     from arrow_experiments_spark.operators import dedup
 
     sf = "/root/testdata/sf0.001"
-    spark.conf.set(dedup._DRIVER_EDGE_LIMIT_CONF, "0")
-    try:
-        want = sorted(
-            tuple(r) for r in dedup.dedup_clusters(spark, sf).collect()
-        )
-        monkeypatch.setattr(dedup, "_PROP_MAX_ROUNDS", 0)
-        got = sorted(
-            tuple(r) for r in dedup.dedup_clusters(spark, sf).collect()
-        )
-        assert got == want
-    finally:
-        spark.conf.unset(dedup._DRIVER_EDGE_LIMIT_CONF)
+    monkeypatch.setattr(dedup, "_DRIVER_EDGE_LIMIT", 0)
+    want = sorted(
+        tuple(r) for r in dedup.dedup_clusters(spark, sf).collect()
+    )
+    monkeypatch.setattr(dedup, "_PROP_MAX_ROUNDS", 0)
+    got = sorted(
+        tuple(r) for r in dedup.dedup_clusters(spark, sf).collect()
+    )
+    assert got == want
 
 
-def test_dedup_clusters_driver_fast_path_matches_distributed(spark):
-    """The r16 size-adaptive fast path (edge set under maxDriverEdges →
+def test_dedup_clusters_driver_fast_path_matches_distributed(
+    spark, monkeypatch
+):
+    """The r16 size-adaptive fast path (edge set under the edge limit →
     driver-side union-find) must emit exactly the distributed
     propagation loop's rows — same components, same min-doc_id labels,
     same cluster sizes."""
@@ -313,13 +312,10 @@ def test_dedup_clusters_driver_fast_path_matches_distributed(spark):
     fast = sorted(
         tuple(r) for r in dedup.dedup_clusters(spark, sf).collect()
     )
-    spark.conf.set(dedup._DRIVER_EDGE_LIMIT_CONF, "0")
-    try:
-        slow = sorted(
-            tuple(r) for r in dedup.dedup_clusters(spark, sf).collect()
-        )
-    finally:
-        spark.conf.unset(dedup._DRIVER_EDGE_LIMIT_CONF)
+    monkeypatch.setattr(dedup, "_DRIVER_EDGE_LIMIT", 0)
+    slow = sorted(
+        tuple(r) for r in dedup.dedup_clusters(spark, sf).collect()
+    )
     assert fast == slow
 
 
@@ -339,7 +335,7 @@ def test_dedup_clusters_fast_path_plan_has_no_window(spark):
     assert "Window" not in plan, plan
 
 
-def test_keep_canonical_fast_path_carries_text_len(spark):
+def test_keep_canonical_fast_path_carries_text_len(spark, monkeypatch):
     """r17: on the driver fast path the text_len tie-break rides THROUGH
     the cluster labeling (a carried column on the LocalRelation
     broadcast join), so dedup_keep_canonical's plan has exactly ONE
@@ -356,14 +352,10 @@ def test_keep_canonical_fast_path_carries_text_len(spark):
     assert plan.count("Scan parquet") == 1, plan
     fast = sorted(tuple(r) for r in fast_df.collect())
 
-    spark.conf.set(dedup._DRIVER_EDGE_LIMIT_CONF, "0")
-    try:
-        slow = sorted(
-            tuple(r)
-            for r in dedup.dedup_keep_canonical(spark, sf).collect()
-        )
-    finally:
-        spark.conf.unset(dedup._DRIVER_EDGE_LIMIT_CONF)
+    monkeypatch.setattr(dedup, "_DRIVER_EDGE_LIMIT", 0)
+    slow = sorted(
+        tuple(r) for r in dedup.dedup_keep_canonical(spark, sf).collect()
+    )
     assert fast == slow
 
 
@@ -562,7 +554,7 @@ def test_derive_lsh_bits_formula():
 
 
 def test_auto_bits_fixture_scale_is_oracle_geometry(spark):
-    """With the bits confs UNSET, every test fixture must derive the
+    """Every test fixture must derive the
     oracle geometry (4 emb bits / 0 cluster bits) from its footer
     count — the auto-derivation can never shift a correctness fixture."""
     from arrow_experiments_spark.operators.dedup import (
@@ -575,7 +567,7 @@ def test_auto_bits_fixture_scale_is_oracle_geometry(spark):
         assert _semdedup_cluster_bits(spark, d) == 0
 
 
-def test_auto_bits_beyond_floor_resolve_matching_oracles(spark):
+def test_auto_bits_beyond_floor_resolve_matching_oracles(spark, monkeypatch):
     """r9 verdict #1 replaced the ADVICE-r8 warnings with STRUCTURAL
     alignment: when derivation exceeds the floor, the registered oracle
     (now a callable) resolves to SQL regenerated at the SAME derived
@@ -583,16 +575,15 @@ def test_auto_bits_beyond_floor_resolve_matching_oracles(spark):
     floor to diverge from."""
     import warnings as _warnings
 
+    from arrow_experiments_spark.operators import dedup
     from arrow_experiments_spark.operators.dedup import (
         _emb_lsh_bits,
         _semdedup_cluster_bits,
     )
     from arrow_experiments_spark.registry import all_queries
 
-    spark.conf.set(
-        "spark.arrowExperimentsSpark.emb.corpusNOverride", "2048000"
-    )
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_embeddings_n", lambda spark, sf_dir: 2_048_000)
         with _warnings.catch_warnings():
             _warnings.simplefilter("error")  # any warning = failure
             assert _emb_lsh_bits(spark, SF_DIR_T2) == 10
@@ -606,27 +597,26 @@ def test_auto_bits_beyond_floor_resolve_matching_oracles(spark):
         assert "THEN 512 ELSE" in topk_sql
         sem_sql = qs["dedup_semantic_clusters"].oracle_sql(spark, SF_DIR_T2)
         assert "THEN 8 ELSE" in sem_sql  # 4th sub-split bit (1 << 3)
-    finally:
-        spark.conf.unset("spark.arrowExperimentsSpark.emb.corpusNOverride")
     # floor corpus: same callables resolve the floor geometry
     assert "THEN 512 ELSE" not in qs[
         "dedup_embedding_topk_grouped"
     ].oracle_sql(spark, SF_DIR_T2)
 
 
-def test_auto_ivf_k_derivation_and_fast_kernel(spark):
+def test_auto_ivf_k_derivation_and_fast_kernel(spark, monkeypatch):
     """r8 verdict #7: the IVF codebook cell count derives from the corpus
-    (k = max(8, ceil(N / targetCellPop))) — fixtures stay at the oracle
-    floor k=8, a large-N override derives the scaled k (the oracle is
-    geometry-parametric since r10, so no warning fires), and the ivf.k
-    conf pins it.  Beyond the floor the distance kernel switches to the
-    GEMM form; its distances must match the exact left-fold to float
-    tolerance with identical argmin on the fixture vectors."""
+    (k = max(8, ceil(N / 2000))) — fixtures stay at the oracle floor
+    k=8, and a large corpus size derives the scaled k (the oracle is
+    geometry-parametric since r10, so no warning fires).  Beyond the
+    floor the distance kernel switches to the GEMM form; its distances
+    must match the exact left-fold to float tolerance with identical
+    argmin on the fixture vectors."""
     import warnings as _warnings
 
     import numpy as np
     import pandas as pd
 
+    from arrow_experiments_spark.operators import dedup
     from arrow_experiments_spark.operators.similarity import (
         _IVF_K,
         _codebook_l2sq_np,
@@ -635,20 +625,10 @@ def test_auto_ivf_k_derivation_and_fast_kernel(spark):
 
     assert _ivf_k(spark, SF_DIR_T2) == _IVF_K  # fixture → oracle floor
 
-    spark.conf.set(
-        "spark.arrowExperimentsSpark.emb.corpusNOverride", "2048000"
-    )
-    try:
-        with _warnings.catch_warnings():
-            _warnings.simplefilter("error")
-            assert _ivf_k(spark, SF_DIR_T2) == 1024  # ceil(2048000/2000)
-        spark.conf.set("spark.arrowExperimentsSpark.ivf.k", "8")
-        try:
-            assert _ivf_k(spark, SF_DIR_T2) == 8  # conf pins the geometry
-        finally:
-            spark.conf.unset("spark.arrowExperimentsSpark.ivf.k")
-    finally:
-        spark.conf.unset("spark.arrowExperimentsSpark.emb.corpusNOverride")
+    monkeypatch.setattr(dedup, "_embeddings_n", lambda spark, sf_dir: 2_048_000)
+    with _warnings.catch_warnings():
+        _warnings.simplefilter("error")
+        assert _ivf_k(spark, SF_DIR_T2) == 1024  # ceil(2048000/2000)
 
     rng = np.random.default_rng(7)
     vecs = pd.Series(list(rng.normal(size=(50, 16)).astype("float32")))
@@ -670,9 +650,9 @@ def test_auto_ivf_k_derivation_and_fast_kernel(spark):
     assert (np.argmin(gemm, axis=1) == np.argmin(cb_exact, axis=1)).all()
 
 
-def test_auto_bits_large_n_reaches_the_physical_plan(spark):
-    """r7 verdict #8 guardrail: under a synthetic large-N stats override
-    (corpusNOverride = 2,048,000 → derived 10 bits) the derived bit count
+def test_auto_bits_large_n_reaches_the_physical_plan(spark, monkeypatch):
+    """r7 verdict #8 guardrail: under a synthetic large corpus size
+    (N = 2,048,000 → derived 10 bits) the derived bit count
     must reach the physical bucket computation — the scale knob can't
     silently regress to fixed bits.  Since r16 the buckets come from the
     Arrow-batched lsh_cells_col kernel (the bits are a kernel argument,
@@ -680,6 +660,7 @@ def test_auto_bits_large_n_reaches_the_physical_plan(spark):
     node must be in the plan, and 10-bit banding must shatter the 4-bit
     buckets — strictly fewer candidate pairs survive, so the output row
     set shrinks (both sides deterministic on the fixture)."""
+    from arrow_experiments_spark.operators import dedup
     from arrow_experiments_spark.operators.dedup import (
         dedup_embedding_topk_grouped,
     )
@@ -689,27 +670,23 @@ def test_auto_bits_large_n_reaches_the_physical_plan(spark):
     assert "ArrowEvalPython" in _plan(base) or "pythonUDF" in _plan(base)
     base_rows = set(tuple(r) for r in base.collect())
 
-    spark.conf.set(
-        "spark.arrowExperimentsSpark.emb.corpusNOverride", "2048000"
+    monkeypatch.setattr(dedup, "_embeddings_n", lambda spark, sf_dir: 2_048_000)
+    scaled_rows = set(
+        tuple(r)
+        for r in dedup_embedding_topk_grouped(spark, SF_DIR_T2).collect()
     )
-    try:
-        scaled_rows = set(
-            tuple(r)
-            for r in dedup_embedding_topk_grouped(spark, SF_DIR_T2).collect()
-        )
-    finally:
-        spark.conf.unset("spark.arrowExperimentsSpark.emb.corpusNOverride")
     assert scaled_rows != base_rows
     assert len(scaled_rows) < len(base_rows)
 
 
-def test_auto_cluster_bits_large_n_subsplits(spark):
+def test_auto_cluster_bits_large_n_subsplits(spark, monkeypatch):
     """Same guardrail for the SemDeDup sub-split: a synthetic 2M-vector
-    override (pop 200k at the fixture's k=10) derives 3 bits, and the
+    corpus size (pop 200k at the fixture's k=10) derives 3 bits, and the
     plan's subcluster expression carries the 3rd sign-bit term; the
     fixture default has no sub-split at all (subcluster = literal 0)."""
     import re as _re
 
+    from arrow_experiments_spark.operators import dedup
     from arrow_experiments_spark.operators.dedup import (
         dedup_semantic_clusters,
     )
@@ -717,21 +694,16 @@ def test_auto_cluster_bits_large_n_subsplits(spark):
     base = dedup_semantic_clusters(spark, SF_DIR_T2)
     assert "THEN 4 ELSE" not in _plan(base)
 
-    spark.conf.set(
-        "spark.arrowExperimentsSpark.emb.corpusNOverride", "2000000"
-    )
-    try:
-        scaled = dedup_semantic_clusters(spark, SF_DIR_T2)
-        plan = _plan(scaled)
-        assert "THEN 4 ELSE" in plan, plan[:2000]  # 3rd bit (1 << 2)
-    finally:
-        spark.conf.unset("spark.arrowExperimentsSpark.emb.corpusNOverride")
+    monkeypatch.setattr(dedup, "_embeddings_n", lambda spark, sf_dir: 2_000_000)
+    scaled = dedup_semantic_clusters(spark, SF_DIR_T2)
+    plan = _plan(scaled)
+    assert "THEN 4 ELSE" in plan, plan[:2000]  # 3rd bit (1 << 2)
 
 
 def test_auto_geometry_oracle_green_above_threshold(spark, tmp_path):
     """r9 verdict #1 'done' criterion: an auto-geometry query oracle-checks
-    GREEN on a corpus above the derivation threshold (>32,768 embeddings)
-    with NO conf pinned — the registered oracle is a callable that
+    GREEN on a corpus above the derivation threshold (>32,000 embeddings)
+    — the registered oracle is a callable that
     regenerates the DuckDB SQL at the same derived bit count the builder
     uses, so both sides compare the same bucketing instead of the
     pre-r10 floor-baked string.
@@ -771,8 +743,7 @@ def test_auto_geometry_oracle_green_above_threshold(spark, tmp_path):
     )
     pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
 
-    # no conf set: derivation must leave the floor on its own
-    assert spark.conf.get("spark.arrowExperimentsSpark.emb.lshBits", "") == ""
+    # the footer count alone takes the derivation off the floor
     assert _emb_lsh_bits(spark, str(tmp_path)) == 5
 
     q = all_queries()["dedup_embedding_topk_grouped"]
@@ -826,7 +797,7 @@ def test_lsh_cells_kernel_matches_in_plan_buckets(spark):
 def test_auto_ivf_oracle_green_above_threshold(spark, tmp_path):
     """The IVF seat of the geometry-parametric contract: on a corpus
     above the k-derivation threshold (40,960 rows → k = 21 > the floor
-    8, no conf pinned) the resolved oracle enumerates the same 21
+    8) the resolved oracle enumerates the same 21
     derived centroids the builder assigns with — and the builder is on
     its GEMM kernel path up there (k > floor), so this also pins
     GEMM-vs-exact-fold argmin agreement on real data."""
@@ -854,7 +825,6 @@ def test_auto_ivf_oracle_green_above_threshold(spark, tmp_path):
     )
     pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
 
-    assert spark.conf.get("spark.arrowExperimentsSpark.ivf.k", "") == ""
     assert _ivf_k(spark, str(tmp_path)) == 21  # ceil(40960/2000), > floor 8
 
     from arrow_experiments_spark.operators.similarity import (

@@ -11,9 +11,17 @@ sinks' per-batch floor, so a silent conf regression here would cost
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
+
 import pytest
 
 from arrow_experiments_spark.session import build_session
+
+REPO = str(Path(__file__).resolve().parent.parent)
 
 
 def test_session_scale_posture(spark):
@@ -203,6 +211,7 @@ def test_session_entry_points_apply_pinned_conf_sets(recording_builder):
         "spark.sql.codegen.cache.maxEntries": "4096",
         "spark.ui.enabled": "false",
         "spark.driver.memory": "8g",
+        "spark.executorEnv.PYTHONPATH": REPO,
     }
 
     spark = _FakeSession(codegen_cache="4096")
@@ -309,7 +318,7 @@ def test_extra_conf_env_rejects_malformed(monkeypatch):
 def test_extra_conf_env_applies_last(spark, monkeypatch):
     """A SPARK_GRAFT_EXTRA_CONF entry lands on the (existing) session —
     getOrCreate applies runtime-settable builder confs to a live
-    session, which is exactly how the sweep tools A/B a conf.
+    session, which is how an operator A/Bs a conf without a code edit.
 
     getOrCreate applies ALL the builder's runtime-settable defaults
     onto the live fixture session (shuffle.partitions flips from
@@ -351,3 +360,52 @@ def test_codegen_cache_size_is_overridable(recording_builder, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", f"{CODEGEN_CACHE_CONF}=512")
     build_session(extra_conf={CODEGEN_CACHE_CONF: "256"})
     assert recording_builder.conf[CODEGEN_CACHE_CONF] == "512"
+
+
+def test_worker_path_puts_package_root_first(recording_builder, monkeypatch):
+    """The workers' PYTHONPATH starts with the package root and keeps
+    what ``extra_conf`` or SPARK_GRAFT_EXTRA_CONF gave it, once each."""
+    key = "spark.executorEnv.PYTHONPATH"
+    build_session(extra_conf={key: os.pathsep.join(["/a", REPO])})
+    assert recording_builder.conf[key] == os.pathsep.join([REPO, "/a"])
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", f"{key}=/b")
+    build_session(extra_conf={key: "/a"})
+    assert recording_builder.conf[key] == os.pathsep.join([REPO, "/b"])
+
+
+def test_workers_import_package_when_driver_runs_elsewhere(tmp_path):
+    """A driver that imports the package through sys.path from another
+    working directory must still run the queries whose Python workers
+    import it (here an applyInPandas top-k over Arrow-batched LSH
+    cells): a child process started in an empty directory builds one."""
+    from conftest import SF_DIR
+
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from arrow_experiments_spark.registry import all_queries
+        from arrow_experiments_spark.session import build_session
+
+        spark = build_session(master="local[2]", shuffle_partitions=2)
+        q = all_queries()["dedup_embedding_topk_grouped"]
+        print("rows", q.build(spark, {SF_DIR!r}).count())
+        spark.stop()
+        """
+    )
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("PYTHONPATH", "SPARK_GRAFT_EXTRA_CONF")
+    }
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "rows " in proc.stdout

@@ -58,9 +58,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # r15: events_session_window's spread is JIT-intrinsic, not box noise —
 # its executed AQE plans are byte-identical between fast and slow
-# samples, and the bounded codegen/JIT caches evict its generated code
-# between passes (bench.py's _pre_warm note).  It certifies on a relaxed
-# band; its committed floor is still min-over-clean.
+# samples, and its first sample of a pass runs slowest (SCALE.md,
+# "bench.py's re-warm re-measured").  It certifies on a relaxed band;
+# its committed floor is still min-over-clean.
 RELAXED_BANDS = {"events_session_window": 2.0}
 
 
