@@ -350,13 +350,6 @@ def _ivf_k(spark: SparkSession | None, sf_dir: str) -> int:
     return max(_IVF_K, math.ceil(_embeddings_n(spark, sf_dir) / _IVF_TARGET_POP))
 
 
-def _l2sq(a: F.Column, cent: F.Column) -> F.Column:
-    diffs = F.zip_with(
-        a, cent, lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
-
-
 def _l2sq_sql(a: str, cent: str) -> str:
     return (
         f"list_reduce(list_transform(list_zip({a}, {cent}),"

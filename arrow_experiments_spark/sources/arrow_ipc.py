@@ -11,9 +11,10 @@ the reference's only parallel ingest path (get_indirect).
 
 Egress has two shapes.  Per request, :func:`df_to_reader` runs the
 query to completion in the JVM (executors build Arrow IPC batch
-messages, kept on executor disk) and then streams the batches to the
-driver in partition order: no Python worker runs and no spill file is
-written.  Materialize once and serve many, :func:`spill_dataframe` writes
+messages, kept on executor disk) and then streams the persisted blocks
+from the driver's BlockManager in partition order: no Python worker
+runs, no spill file is written and no further Spark job runs.
+Materialize once and serve many, :func:`spill_dataframe` writes
 per-partition ``.arrows`` files through executor Python workers, which
 :func:`spilled_files_reader` streams and :func:`raw_spill_stream`
 splices byte for byte.
@@ -28,6 +29,7 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 import pyarrow.ipc as ipc
+from py4j.java_gateway import java_import
 from pyspark.sql import DataFrame, SparkSession
 
 from arrow_experiments_spark.session import missing_jvm_methods, probe_once
@@ -50,13 +52,6 @@ def read_ipc_stream(spark: SparkSession, source: str | bytes | io.IOBase) -> Dat
         table = ipc.open_stream(io.BytesIO(source)).read_all()
     else:
         table = ipc.open_stream(source).read_all()
-    return spark.createDataFrame(table)
-
-
-def read_ipc_file(spark: SparkSession, path: str) -> DataFrame:
-    """.arrow (IPC file format, seekable footer) → DataFrame."""
-    with open(path, "rb") as f:
-        table = ipc.open_file(f).read_all()
     return spark.createDataFrame(table)
 
 
@@ -102,11 +97,42 @@ def _missing_egress_entry_points(df: DataFrame) -> list[str]:
 
     missing = missing_jvm_methods(df.sparkSession.sparkContext, [
         (df._jdf.getClass(), "toArrowBatchRdd"),
-        ("org.apache.spark.api.python.PythonRDD", "toLocalIteratorAndServe"),
+        ("org.apache.spark.SparkEnv", "blockManager"),
+        ("org.apache.spark.storage.BlockManager", "getStatus"),
+        ("org.apache.spark.storage.BlockManager", "getLocalValues"),
+        ("org.apache.spark.storage.RDDBlockId", "rddId"),
+        ("org.apache.spark.api.python.PythonRDD", "serveIterator"),
+        ("org.apache.spark.api.python.PythonRDD", "runJob"),
     ])
-    if not hasattr(pyspark.util, "_local_iterator_from_socket"):
-        missing.append("pyspark.util._local_iterator_from_socket")
+    if not hasattr(pyspark.util, "_load_from_socket"):
+        missing.append("pyspark.util._load_from_socket")
     return missing
+
+
+def _max_result_bytes(sc) -> int:
+    """``spark.driver.maxResultSize`` in bytes; 0 means no bound."""
+    return sc._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+
+
+def _result_blocks(sc, blocks, jrdd) -> list:
+    """The block id of each partition of the persisted ``jrdd``, in
+    order, after checking from the driver's block status in the
+    BlockManager ``blocks`` (no job) that no block is larger than
+    ``spark.driver.maxResultSize``: the bound a partition's task result
+    is held to when a job carries it."""
+    block_id = sc._jvm.RDDBlockId
+    limit = _max_result_bytes(sc)
+    rdd_id, ids = jrdd.id(), []
+    for p in range(jrdd.getNumPartitions()):
+        block = block_id(rdd_id, p)
+        status = blocks.getStatus(block)
+        if limit and status.isDefined() and status.get().diskSize() > limit:
+            raise RuntimeError(
+                f"result partition {p} holds {status.get().diskSize()} bytes of "
+                f"Arrow batches, more than spark.driver.maxResultSize ({limit})"
+            )
+        ids.append(block)
+    return ids
 
 
 def df_to_reader(df: DataFrame, batch_rows: int = 4096) -> pa.RecordBatchReader:
@@ -123,18 +149,28 @@ def df_to_reader(df: DataFrame, batch_rows: int = 4096) -> pa.RecordBatchReader:
        fully parallel ``count()`` job runs the query to completion
        before this function returns, so a runtime error (ANSI overflow,
        a failed task) raises here, before an HTTP server has sent
-       headers.
-    2. The reader then pulls the persisted partitions to the driver in
-       partition order (``toLocalIteratorAndServe``, one small job per
-       partition, the next one prefetched), decoding one message at a
-       time.  Partition order preserves any order the plan produced.
+       headers.  Each partition's block is then sized from the driver's
+       block status, and a block larger than
+       ``spark.driver.maxResultSize`` raises here too.
+    2. The reader then serves the persisted blocks in partition order
+       with no further Spark job: each block is read from the driver's
+       BlockManager and drained to a list in one JVM call (the read
+       lock is released as the drain ends, so a reader dropped part way
+       never leaves a lock held), and the list is streamed to Python
+       over a local socket (``PythonRDD.serveIterator``), decoded one
+       message at a time.  A block the driver cannot read locally (lost,
+       or held by a remote executor) is recomputed by a one-partition
+       job (``PythonRDD.runJob``).  Partition order preserves any order
+       the plan produced.
     3. The persisted blocks are released when the stream ends, when the
        reader is dropped part way, or when step 1 fails.
 
-    Memory: the driver JVM holds at most two partitions of Arrow bytes
-    (the one being served and the prefetched one), Python holds one
-    batch plus the rebatch buffer.  A single result partition larger
-    than ``spark.driver.maxResultSize`` fails with Spark's error.
+    Memory: the driver JVM holds at most one result partition of Arrow
+    bytes (the one being served), Python holds one batch plus the
+    rebatch buffer.  A result partition larger than
+    ``spark.driver.maxResultSize`` fails before this function returns;
+    one the driver holds no block of is bounded by Spark itself when its
+    job runs.
 
     The entry points are private Spark API, probed once per
     SparkContext; if one is missing, one warning is logged and results
@@ -152,29 +188,40 @@ def df_to_reader(df: DataFrame, batch_rows: int = 4096) -> pa.RecordBatchReader:
         return spilled_files_reader(files, schema, batch_rows, cleanup_dir=tmp)
 
     schema = _arrow_schema(df)
+    # a class named by its full path costs a py4j round trip per package
+    # level on every use; imported, it costs one
+    java_import(sc._jvm, "org.apache.spark.SparkEnv")
+    java_import(sc._jvm, "org.apache.spark.storage.*")
     jrdd = df._jdf.toArrowBatchRdd()
-    jrdd.persist(sc._jvm.org.apache.spark.storage.StorageLevel.DISK_ONLY())
+    jrdd.persist(sc._jvm.StorageLevel.DISK_ONLY())
     try:
         jrdd.count()
+        blocks = sc._jvm.SparkEnv.get().blockManager()
+        block_ids = _result_blocks(sc, blocks, jrdd)
     except BaseException:
         jrdd.unpersist(False)
         raise
 
     def batches() -> Iterator[pa.RecordBatch]:
         from pyspark.serializers import NoOpSerializer
-        from pyspark.util import _local_iterator_from_socket
+        from pyspark.util import _load_from_socket
 
         try:
-            frames = _local_iterator_from_socket(
-                sc._jvm.PythonRDD.toLocalIteratorAndServe(jrdd, True),
-                NoOpSerializer(),
-            )
-            try:
-                for frame in frames:
+            python_rdd = sc._jvm.PythonRDD
+            for p, block in enumerate(block_ids):
+                local = blocks.getLocalValues(block)
+                if local.isDefined():
+                    # toList drains the block in this one call; its
+                    # CompletionIterator releases the read lock as it ends
+                    values = local.get().data().toList()
+                    if values.isEmpty():
+                        continue
+                    sock = python_rdd.serveIterator(values.iterator(), "serve Arrow block")
+                    del values  # the serving thread holds the only reference
+                else:
+                    sock = python_rdd.runJob(sc._jsc.sc(), jrdd.toJavaRDD(), [p])
+                for frame in _load_from_socket(sock, NoOpSerializer()):
                     yield pa.ipc.read_record_batch(pa.py_buffer(frame), schema)
-            finally:
-                # stop the JVM serving thread before its blocks go
-                frames.close()
         finally:
             release()
 
@@ -431,10 +478,12 @@ def register_dataframe(registry, name: str, df: DataFrame, batch_rows: int = 409
                        meta: dict | None = None) -> None:
     """Register a live DataFrame with the HTTP server: each request re-runs
     the (lazy) plan through :func:`df_to_reader`, so the query finishes
-    before the response starts and the driver holds at most two result
-    partitions of Arrow bytes in the JVM and one batch in Python per
-    in-flight request.  The Arrow schema is derived from the plan (no
-    job) so /describe answers without executing the query."""
+    before the response starts, a runtime error or a result partition
+    larger than ``spark.driver.maxResultSize`` fails before it, and the
+    driver holds at most one result partition of Arrow bytes in the JVM
+    and one batch in Python per in-flight request.  The Arrow schema is
+    derived from the plan (no job) so /describe answers without
+    executing the query."""
     registry.register(
         name,
         lambda: df_to_reader(df, batch_rows),
@@ -699,11 +748,6 @@ def parquet_to_sqlite(parquet_path: str, db_path: str, table_name: str = "random
         )
     finally:
         con.close()
-
-
-def write_jsonl(df: DataFrame, path: str) -> None:
-    """JSONL mirror (arrow-commits.R:68-77 semantics) — Spark-native."""
-    df.coalesce(1).write.mode("overwrite").json(path)
 
 
 def run_pipeline(df: DataFrame, out_dir: str, stem: str = "random") -> dict[str, str]:

@@ -21,8 +21,6 @@ Widening map (ingress)           Restore map (egress)
 
 from __future__ import annotations
 
-import json
-
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -30,16 +28,6 @@ import pyarrow.compute as pc
 def build_sidecar(schema: pa.Schema) -> dict[str, str]:
     """{column name: original Arrow type string} — JSON-serializable."""
     return {f.name: str(f.type) for f in schema}
-
-
-def save_sidecar(schema: pa.Schema, path: str) -> None:
-    with open(path, "w") as f:
-        json.dump(build_sidecar(schema), f, indent=2)
-
-
-def load_sidecar(path: str) -> dict[str, str]:
-    with open(path) as f:
-        return json.load(f)
 
 
 def _widened_type(t: pa.DataType) -> pa.DataType:

@@ -71,25 +71,3 @@ def dedup_within_watermark(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-
-
-def run_to_memory_sink(stream_df: DataFrame, query_name: str, timeout_sec: int = 60):
-    """Drive a streaming DataFrame into an in-memory table (complete or
-    append mode chosen automatically) and block until idle.  Returns the
-    StreamingQuery; results land in ``spark.table(query_name)``."""
-    has_agg = stream_df.isStreaming and bool(stream_df.schema)
-    mode = "complete" if _has_aggregation(stream_df) else "append"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    return q
-
-
-def _has_aggregation(df: DataFrame) -> bool:
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return "Aggregate" in plan

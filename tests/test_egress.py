@@ -4,19 +4,23 @@ The reference's servers hold O(batch), never the whole response
 (http/get_simple/python/server/http.server/server.py:59-72); the Spark
 adapter must match.  ``df_to_reader`` runs the query to completion in
 the JVM (executors build Arrow IPC batches, persisted to executor disk),
-then streams them in partition order; if Spark lacks the private entry
-points it serves through the executor-side IPC spill instead.  The
-contract pinned here: the schema and data of ``df.toArrow()`` in any
-session time zone, global order, bounded driver memory, a runtime error
-raised before the HTTP response starts, and no persisted RDD left
-behind.  ``spill_dataframe``/``spilled_files_reader`` remain the
-materialize-once serve path.
+then serves the persisted blocks in partition order from the driver's
+BlockManager with no further Spark job; if Spark lacks the private
+entry points it serves through the executor-side IPC spill instead.
+The contract pinned here: the schema and data of ``df.toArrow()`` in
+any session time zone, global order, at most one result partition in
+the driver JVM and one batch in Python, a runtime error or an oversize
+partition raised before the HTTP response starts, no Spark job while
+the reader drains, no block read lock or persisted RDD left behind, and
+a lost block recomputed.  ``spill_dataframe``/``spilled_files_reader``
+remain the materialize-once serve path.
 """
 
 from __future__ import annotations
 
 import gc
 import logging
+import threading
 
 import pyarrow as pa
 import pytest
@@ -119,6 +123,120 @@ def test_no_persisted_rdd_left_behind(spark):
     assert _persisted(spark) == base
 
 
+def _new_persisted_rdd(spark, before):
+    """The one RDD persisted since ``before`` (a set of RDD ids)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    (rdd_id,) = set(rdds.keySet()) - before
+    return rdd_id, rdds[rdd_id]
+
+
+def _block_manager(spark):
+    return spark.sparkContext._jvm.org.apache.spark.SparkEnv.get().blockManager()
+
+
+def _rdd_block(spark, rdd_id, p):
+    return spark.sparkContext._jvm.org.apache.spark.storage.RDDBlockId(rdd_id, p)
+
+
+def _jobs_in_group(spark, group) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("shape", ["aggregate", "partitions"])
+def test_drain_runs_no_spark_job(spark, shape):
+    """Every Spark job of a request runs before ``df_to_reader`` returns:
+    draining the reader serves the persisted blocks from the driver's
+    BlockManager, with no job per result partition.  Checked on a
+    one-partition aggregate and on a four-partition result."""
+    gen = gen_flight_bench(spark, rows=20_000)
+    if shape == "aggregate":
+        df, key = gen.groupBy("b").sum("a"), "b"
+    else:
+        df, key = gen.repartition(4), "a"
+    expect = df.toArrow().combine_chunks().sort_by(key)
+    sc = spark.sparkContext
+    group = f"egress-drain-{shape}"
+    sc.setJobGroup(group, "df_to_reader drain")
+    try:
+        reader = df_to_reader(df, batch_rows=1024)
+        before = _jobs_in_group(spark, group)
+        got = reader.read_all()
+        after = _jobs_in_group(spark, group)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert before >= 1  # the count() job ran under the group
+    assert after == before, f"draining ran {after - before} Spark job(s)"
+    assert got.combine_chunks().sort_by(key).equals(expect)
+
+
+def test_dropped_reader_releases_block_locks(spark):
+    """A reader dropped after its first batch holds no block read lock:
+    every block of the persisted result reads ``readerCount == 0`` and a
+    blocking unpersist returns at once."""
+    base = _persisted(spark)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    df = gen_flight_bench(spark, rows=50_000).repartition(4)
+    reader = df_to_reader(df, batch_rows=4096)
+    rdd_id, jrdd = _new_persisted_rdd(spark, before)
+    assert reader.read_next_batch().num_rows == 4096
+
+    info = _block_manager(spark).blockInfoManager()
+    readers = []
+    for p in range(jrdd.getNumPartitions()):
+        block = info.get(_rdd_block(spark, rdd_id, p))
+        assert block.isDefined()
+        readers.append(block.get().readerCount())
+    assert readers == [0] * jrdd.getNumPartitions()
+
+    reader.close()
+    del reader
+    gc.collect()
+    unpersist = threading.Thread(target=jrdd.unpersist, args=(True,), daemon=True)
+    unpersist.start()
+    unpersist.join(timeout=5)
+    assert not unpersist.is_alive(), "unpersist(blocking=True) waited on a block lock"
+    assert _persisted(spark) == base
+
+
+def test_lost_block_is_recomputed(spark):
+    """A block removed between the ``count()`` job and the read is
+    recomputed by a one-partition job; the stream still equals
+    ``toArrow()``, in order."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    df = gen_flight_bench(spark, rows=20_000).orderBy("a")
+    expect = df.toArrow()
+    sc.setJobGroup("egress-lost-block", "df_to_reader recompute")
+    try:
+        reader = df_to_reader(df, batch_rows=4096)
+        rdd_id, jrdd = _new_persisted_rdd(spark, before)
+        blocks = _block_manager(spark)
+        lost = range(0, jrdd.getNumPartitions(), 2)
+        for p in lost:
+            blocks.removeBlock(_rdd_block(spark, rdd_id, p), True)
+            assert not blocks.getStatus(_rdd_block(spark, rdd_id, p)).isDefined()
+        jobs = _jobs_in_group(spark, "egress-lost-block")
+        got = reader.read_all()
+        assert _jobs_in_group(spark, "egress-lost-block") - jobs == len(lost)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert got.combine_chunks().equals(expect.combine_chunks())
+
+
+def test_oversize_partition_raises_before_return(spark, monkeypatch):
+    """A result partition larger than ``spark.driver.maxResultSize``
+    fails before ``df_to_reader`` returns (so before an HTTP response
+    starts) and leaves no persisted RDD."""
+    monkeypatch.setattr(arrow_ipc, "_max_result_bytes", lambda sc: 64 * 1024)
+    base = _persisted(spark)
+    df = gen_flight_bench(spark, rows=50_000).repartition(2)
+    with pytest.raises(RuntimeError, match="spark.driver.maxResultSize"):
+        df_to_reader(df)
+    assert _persisted(spark) == base
+
+
 def test_spill_fallback_leaves_no_spill_dir(spark, monkeypatch, tmp_path):
     """The spill fallback removes its spill directory when the reader is
     dropped before its first read, and when the spill job fails."""
@@ -164,7 +282,7 @@ def test_runtime_error_answers_400_before_any_body(spark):
 
 @pytest.mark.parametrize(
     "entry_point",
-    ["toArrowBatchRdd", "toLocalIteratorAndServe", "_local_iterator_from_socket"],
+    ["toArrowBatchRdd", "getLocalValues", "serveIterator", "_load_from_socket"],
 )
 def test_missing_entry_point_falls_back_to_spill(spark, monkeypatch, caplog, entry_point):
     """With any private entry point missing, the probe logs ONE warning
@@ -173,7 +291,7 @@ def test_missing_entry_point_falls_back_to_spill(spark, monkeypatch, caplog, ent
     from weakref import WeakKeyDictionary
 
     monkeypatch.setattr(session, "_PROBED", WeakKeyDictionary())
-    if entry_point == "_local_iterator_from_socket":
+    if entry_point == "_load_from_socket":
         monkeypatch.delattr(pyspark.util, entry_point)
     else:
         real = arrow_ipc.missing_jvm_methods
