@@ -14,10 +14,13 @@ query to completion in the JVM (executors build Arrow IPC batch
 messages, kept on executor disk) and then streams the persisted blocks
 from the driver's BlockManager in partition order: no Python worker
 runs, no spill file is written and no further Spark job runs.
-Materialize once and serve many, :func:`spill_dataframe` writes
-per-partition ``.arrows`` files through executor Python workers, which
-:func:`spilled_files_reader` streams and :func:`raw_spill_stream`
-splices byte for byte.
+Materialize once and serve many,
+:func:`register_dataframe_materialized` drains that same reader into
+one driver-written ``.arrows`` file, which :func:`spilled_files_reader`
+streams and :func:`raw_spill_stream` splices byte for byte.
+:func:`spill_dataframe` writes per-partition ``.arrows`` files through
+executor Python workers instead: ``df_to_reader``'s fallback and the
+streaming sinks use it.
 """
 
 from __future__ import annotations
@@ -363,8 +366,9 @@ def raw_spill_stream(files: list[str], schema: pa.Schema, chunk_bytes: int = 1 <
     (http/get_simple/python/server/http.server/server.py:59-72 builds its
     buffers once and replays them).
 
-    Returns a zero-arg factory yielding byte chunks, or None when the
-    files aren't splice-eligible (so callers fall back to the
+    Returns a zero-arg factory yielding byte chunks (which also carries
+    the stream's length and reads it whole: :class:`_SplicedSpill`), or
+    None when the files aren't splice-eligible (so callers fall back to the
     reader-based path): requires a non-empty file list, identical
     serialized schema message across files, the 8-byte EOS trailer on
     every file, and no dictionary-encoded fields (concatenating streams
@@ -403,26 +407,60 @@ def raw_spill_stream(files: list[str], schema: pa.Schema, chunk_bytes: int = 1 <
             f.seek(size - len(_IPC_EOS))
             if f.read(len(_IPC_EOS)) != _IPC_EOS:
                 return None
+    return _SplicedSpill(files, schema_msg, chunk_bytes)
 
-    def gen():
+
+class _SplicedSpill:
+    """The splice of :func:`raw_spill_stream`.  Calling it yields the
+    stream's chunks, mmap'd and zero-copy; ``nbytes`` is the stream's
+    exact length, known before any byte is read, and :meth:`read`
+    returns the whole stream in one Arrow buffer."""
+
+    def __init__(self, files: list[str], schema_msg: bytes, chunk_bytes: int) -> None:
+        self.schema_msg = schema_msg
+        self.chunk_bytes = chunk_bytes
+        # each file's batch messages run from the end of its schema
+        # message to the start of its EOS marker
+        self.bodies = [(p, os.path.getsize(p) - len(_IPC_EOS)) for p in files]
+        head = len(schema_msg)
+        self.nbytes = head + sum(end - head for _, end in self.bodies) + len(_IPC_EOS)
+
+    def __call__(self) -> Iterator:
         import mmap
 
-        yield schema_msg
-        for path in files:
+        yield self.schema_msg
+        step = self.chunk_bytes
+        for path, end in self.bodies:
             with open(path, "rb") as f:
                 mm = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
             mv = memoryview(mm)
-            end = len(mv) - len(_IPC_EOS)
-            off = schema_len
+            off = len(self.schema_msg)
             while off < end:
-                yield mv[off : min(off + chunk_bytes, end)]
-                off += chunk_bytes
+                yield mv[off : min(off + step, end)]
+                off += step
             # drop our refs; the mapping unmaps once the last yielded
             # slice (which holds a buffer ref to mm) has been consumed
             del mv, mm
         yield _IPC_EOS
 
-    return gen
+    def read(self) -> pa.Buffer:
+        """The whole stream in one Arrow-pool buffer, filled with plain
+        file reads: unlike joining the mmap'd chunks, this maps no page
+        of the files into the process."""
+        buf = pa.allocate_buffer(self.nbytes)
+        out = memoryview(buf).cast("B")
+        head = len(self.schema_msg)
+        out[:head] = self.schema_msg
+        off = head
+        for path, end in self.bodies:
+            with open(path, "rb") as f:
+                f.seek(head)
+                n = end - head
+                if f.readinto(out[off : off + n]) != n:
+                    raise OSError(f"{path} shrank while it was read")
+            off += n
+        out[off:] = _IPC_EOS
+        return buf
 
 
 def register_spilled_files(
@@ -458,19 +496,45 @@ def register_dataframe_materialized(
     spill_dir: str | None = None,
     meta: dict | None = None,
 ) -> str:
-    """Spill ONCE, serve many: run the plan now, keep the executor-side
-    IPC spill as the dataset's backing store, and serve every request
-    from those bytes — zero-copy spliced for plain identity GETs, via
-    the batch reader otherwise.  This is the reference's
-    pre-materialize-once model (get_simple server.py:144) for results
-    too large for the in-memory identity cache: no Spark job runs at
-    request time and the driver never holds more than one batch.  The
-    complement of :func:`register_dataframe`, which re-runs the (lazy)
-    plan per request for freshness.  Returns the spill directory — the
-    caller owns its lifetime (remove it to retire the dataset's bytes).
+    """Materialize ONCE, serve many: run the plan now, write its result
+    to one ``.arrows`` file in a new directory under ``spill_dir``, and
+    serve every request from those bytes — zero-copy spliced for plain
+    identity GETs, via the batch reader otherwise.  This is the
+    reference's pre-materialize-once model (get_simple server.py:144)
+    for results too large for the in-memory identity cache: no Spark
+    job runs at request time.  The complement of
+    :func:`register_dataframe`, which re-runs the (lazy) plan per
+    request for freshness.
+
+    The result comes through :func:`df_to_reader`: one ``count()`` job
+    over JVM-built Arrow blocks, no Python worker, and the driver
+    writes the stream (:func:`write_ipc_stream`), so the file lands
+    where the server runs.  Every
+    batch holds ``batch_rows`` rows but the last.  Memory is
+    ``df_to_reader``'s bound: at most one result partition of Arrow
+    bytes in the driver JVM and one batch in Python; a result partition
+    larger than ``spark.driver.maxResultSize`` raises here.  Where Spark
+    lacks that path's private entry points, ``df_to_reader`` reads
+    through the executor-side spill instead, and its temporary files
+    are removed once drained.
+
+    Returns the directory — the caller owns its lifetime (remove it to
+    retire the dataset's bytes).  If the plan or the write fails, the
+    directory is removed before the error propagates.
     """
-    d, files, schema = spill_dataframe(df, spill_dir, batch_rows=batch_rows)
-    register_spilled_files(registry, name, files, schema, batch_rows, meta)
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix="arrow-egress-", dir=spill_dir)
+    path = os.path.join(d, "part-00000000.arrows")
+    try:
+        write_ipc_stream(df, path, batch_rows)
+    except BaseException:
+        shutil.rmtree(d, ignore_errors=True)
+        raise
+    with open(path, "rb") as f:
+        schema = ipc.open_stream(f).schema
+    register_spilled_files(registry, name, [path], schema, batch_rows, meta)
     return d
 
 

@@ -18,7 +18,11 @@ implementation:
     and its default costs ~4.7× the encode time of level 4 for ~4% body
     size on the dict-encoded trading serve — nginx-style server levels
     are the standard tradeoff), ``br`` via ``pa.CompressedOutputStream``
-    (spelled ``brotli`` for Arrow; no stdlib brotli to control).
+    (spelled ``brotli`` for Arrow), which takes no level and so runs at
+    Arrow's default, 8: no brotli module is installed to control it.
+    Live ``br`` streams pay that level; replayed ones do not, as the
+    server compresses their cached body or disk artifact in one shot at
+    level 2 (``DatasetRegistry.BR_CACHE_LEVEL``).
 """
 
 from __future__ import annotations

@@ -252,13 +252,28 @@ class DatasetRegistry:
     # compressed ONCE and replayed — the identity-body serve-many model
     # extended to negotiated codings (what gzip_static / a CDN variant
     # cache does).  Encoder choices are the measured knees: brotli one-shot
-    # level 2 matches the streaming default's ratio at ~1/34 the CPU
-    # (0.593 vs 0.586 on a 19 MiB body, 0.13 s vs 4.4 s — and the
-    # streaming CompressedOutputStream has no level knob at all); gzip
-    # uses the same level-4 knee the streaming path does; zstd its
+    # level 2 gives sf0.1 lineitem's 47 MB identity body as 12.85 MB in
+    # 0.45 s, against 11.08 MB in 7.2 s at level 8, the level the
+    # streaming CompressedOutputStream is stuck at (it has no level knob);
+    # gzip uses the same level-4 knee the streaming path does; zstd its
     # pyarrow default.
     BR_CACHE_LEVEL = 2
     CACHED_CODINGS = ("br", "gzip", "zstd")
+
+    def _compress_once(self, coding: str, identity) -> bytes:
+        """The whole ``coding`` body of the ``identity`` IPC bytes,
+        compressed in one call at the coding's knee (above)."""
+        if coding == "br":
+            return pa.Codec(
+                "brotli", compression_level=self.BR_CACHE_LEVEL
+            ).compress(identity, asbytes=True)
+        if coding == "gzip":
+            import gzip as _gzip
+
+            from arrow_experiments_spark.transport.ipc_stream import GZIP_LEVEL
+
+            return _gzip.compress(bytes(identity), compresslevel=GZIP_LEVEL)
+        return pa.Codec("zstd").compress(identity, asbytes=True)
 
     def encoded_body(self, name: str, coding: str) -> memoryview | None:
         """Cached ``coding``-compressed body of a pre-materialized table,
@@ -274,18 +289,7 @@ class DatasetRegistry:
         identity = self.identity_body(name)
         if identity is None:
             return None
-        if coding == "br":
-            body = pa.Codec(
-                "brotli", compression_level=self.BR_CACHE_LEVEL
-            ).compress(identity, asbytes=True)
-        elif coding == "gzip":
-            import gzip as _gzip
-
-            from arrow_experiments_spark.transport.ipc_stream import GZIP_LEVEL
-
-            body = _gzip.compress(bytes(identity), compresslevel=GZIP_LEVEL)
-        else:
-            body = pa.Codec("zstd").compress(identity, asbytes=True)
+        body = self._compress_once(coding, identity)
         with self._lock:
             body = self._coded_bodies.setdefault(key, body)
         return memoryview(body)
@@ -345,8 +349,11 @@ class DatasetRegistry:
         then stream these bytes zero-copy instead of re-running the
         per-batch IPC writer loop; every other request shape (projection,
         rebatch, compression, multipart, dissociated) still goes through
-        the batch-reader factory.  Call AFTER register() — re-registering
-        the name drops the raw source."""
+        the batch-reader factory.  A source that also has ``nbytes`` (the
+        stream's length) and ``read()`` (the whole stream, one buffer)
+        lets a ``br`` artifact fill in one shot (:meth:`one_shot_fill`).
+        Call AFTER register() — re-registering the name drops the raw
+        source."""
         with self._lock:
             if name not in self._factories:
                 raise KeyError(f"register() {name!r} before register_raw()")
@@ -462,6 +469,31 @@ class DatasetRegistry:
                         pass
 
         return tee()
+
+    def one_shot_fill(self, name: str, strategy: str):
+        """Chunks of the ``br`` body of an opted-in dataset, compressed
+        in one call at ``BR_CACHE_LEVEL`` from its whole identity stream
+        read into one Arrow buffer; the caller tees them into the
+        artifact.  None unless ``strategy`` is ``br``, ``name`` is opted
+        in, and its identity stream's length is known before encoding
+        (a raw source that reads itself whole: the spliced spill files)
+        and at most ``IDENTITY_CACHE_MAX_BYTES``.  Other codings stream
+        at their knees already; a pre-materialized table under the cap
+        never gets here, the memory seat answers it first."""
+        if strategy != "br" or self._artifact_path(name, strategy) is None:
+            return None
+        raw = self._raw.get(name)
+        nbytes = getattr(raw, "nbytes", None)
+        if nbytes is None or nbytes > self.IDENTITY_CACHE_MAX_BYTES:
+            return None
+
+        def chunks():
+            body = memoryview(self._compress_once(strategy, raw.read()))
+            step = self.ARTIFACT_SLICE_BYTES
+            for i in range(0, len(body), step):
+                yield body[i : i + step]
+
+        return chunks()
 
     def reader(self, name: str) -> pa.RecordBatchReader | None:
         factory = self._factories.get(name)
@@ -790,7 +822,9 @@ def _arrow_stream(
     raw spill bytes, the compress-once body of a content coding, the
     encode-once IPC-codec body, then the disk-backed encoded artifact of
     an opted-in factory dataset.  On a miss the stream is encoded live
-    and, for any strategy but identity, teed into the artifact cache."""
+    and, for any strategy but identity, teed into the artifact cache;
+    a ``br`` artifact of known identity size is compressed in one shot
+    instead (:meth:`DatasetRegistry.one_shot_fill`)."""
     default = "identity" if http10 else "gzip"
     strategy = choose_strategy(headers, AVAILABLE_IPC_CODECS, AVAILABLE_CODINGS, default)
     if strategy is None:
@@ -806,10 +840,13 @@ def _arrow_stream(
                 chunks = registry.encoded_slices(name, strategy)
             if chunks is None:
                 chunks = registry.encoded_artifact_stream(name, strategy)
+            if chunks is None:
+                fill = registry.one_shot_fill(name, strategy)
+                if fill is None:
+                    fill = encode_ipc_chunks(reader.schema, reader, strategy)
+                chunks = registry.tee_encoded(name, strategy, fill)
     if chunks is None:
         chunks = encode_ipc_chunks(reader.schema, reader, strategy)
-        if name is not None and strategy != "identity":
-            chunks = registry.tee_encoded(name, strategy, chunks)
 
     if strategy.startswith("identity+"):
         # the compression is inside the IPC stream, declared by the

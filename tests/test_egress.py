@@ -12,8 +12,9 @@ any session time zone, global order, at most one result partition in
 the driver JVM and one batch in Python, a runtime error or an oversize
 partition raised before the HTTP response starts, no Spark job while
 the reader drains, no block read lock or persisted RDD left behind, and
-a lost block recomputed.  ``spill_dataframe``/``spilled_files_reader``
-remain the materialize-once serve path.
+a lost block recomputed.  ``register_dataframe_materialized`` drains the
+same reader into one driver-written file that ``spilled_files_reader``
+and the raw splice serve; ``spill_dataframe`` remains the fallback.
 """
 
 from __future__ import annotations
@@ -746,6 +747,69 @@ def test_register_dataframe_materialized_serves_without_rerun(spark):
     finally:
         httpd.shutdown()
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_register_dataframe_materialized_streams_in_order(spark, egress, monkeypatch, tmp_path):
+    """Materialize-once goes through ``df_to_reader``: on the JVM path no
+    Python worker spills (``spill_dataframe`` is never called), on a
+    probe miss the spill fallback still materializes.  Either way the
+    driver writes one file under ``spill_dir``, the served stream is
+    ``df.toArrow()`` in order, and every batch but the last holds
+    ``batch_rows`` rows."""
+    import os
+
+    from arrow_experiments_spark.sources.arrow_ipc import register_dataframe_materialized
+    from arrow_experiments_spark.transport.server import DatasetRegistry
+
+    spills = []
+    real_spill = arrow_ipc.spill_dataframe
+
+    def spill(*args, **kwargs):
+        if egress == "jvm":
+            raise AssertionError("materialized through Python workers")
+        spills.append(args)
+        return real_spill(*args, **kwargs)
+
+    monkeypatch.setattr(arrow_ipc, "spill_dataframe", spill)
+    df = spark.range(0, 25_000, 1, 3).selectExpr(
+        "id", "id * 3 AS b", "CAST(id AS STRING) AS s"
+    )
+    registry = DatasetRegistry()
+    d = register_dataframe_materialized(
+        registry, "m", df, batch_rows=4096, spill_dir=str(tmp_path)
+    )
+    assert len(spills) == (egress == "spill")
+    assert os.path.dirname(d) == str(tmp_path)
+    assert len(os.listdir(d)) == 1
+    body = b"".join(bytes(c) for c in registry.identity_stream("m"))  # the splice
+    batches = list(pa.ipc.open_stream(body))
+    assert [b.num_rows for b in batches] == [4096] * 6 + [25_000 - 6 * 4096]
+    expect = df.toArrow()
+    assert pa.Table.from_batches(batches).equals(expect)
+    assert registry.reader("m").read_all().equals(expect)
+
+
+def test_register_dataframe_materialized_empty_result(spark, egress, tmp_path):
+    """An empty result registers, splices and serves 0 rows with the
+    DataFrame's columns."""
+    from arrow_experiments_spark.sources.arrow_ipc import register_dataframe_materialized
+    from arrow_experiments_spark.transport.client import fetch_arrow
+    from arrow_experiments_spark.transport.server import DatasetRegistry, serve
+
+    df = spark.range(0).selectExpr("id", "CAST(id AS STRING) AS s")
+    registry = DatasetRegistry()
+    register_dataframe_materialized(registry, "e", df, spill_dir=str(tmp_path))
+    assert registry.identity_stream("e") is not None
+    httpd = serve(registry)
+    host, port = httpd.server_address
+    try:
+        for coding in ("identity", "zstd"):
+            tbl, m = fetch_arrow(
+                f"http://{host}:{port}/datasets/e", accept_encoding=coding
+            )
+            assert m.rows == 0 and tbl.column_names == ["id", "s"]
+    finally:
+        httpd.shutdown()
 
 
 def test_raw_spill_serve_survives_client_disconnect(spark):

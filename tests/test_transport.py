@@ -998,6 +998,127 @@ def test_encoded_artifact_aborted_encode_leaves_no_artifact(tmp_path, table):
     assert not [f for f in os.listdir(cache_dir) if f.endswith(".bin")]
 
 
+def _register_spliced(registry, name, table, tmp_path) -> None:
+    """``table`` as two spill files behind the raw splice."""
+    from arrow_experiments_spark.sources.arrow_ipc import register_spilled_files
+
+    files = []
+    for i, part in enumerate((table.slice(0, 6000), table.slice(6000))):
+        path = str(tmp_path / f"part-{i}.arrows")
+        with open(path, "wb") as f, pa.ipc.new_stream(f, table.schema) as w:
+            w.write_table(part, max_chunksize=1000)
+        files.append(path)
+    assert register_spilled_files(registry, name, files, table.schema, 1000)
+
+
+def _get_body(base: str, name: str, coding: str) -> bytes:
+    req = urllib.request.Request(
+        f"{base}/datasets/{name}", headers={"Accept-Encoding": coding}
+    )
+    with urllib.request.urlopen(req) as resp:
+        assert resp.headers["Content-Encoding"] == coding
+        return resp.read()
+
+
+def test_br_artifact_fills_in_one_shot(tmp_path, table, monkeypatch):
+    """The first ``br`` request of an opted-in spliced dataset compresses
+    the whole identity stream once at BR_CACHE_LEVEL, with no streaming
+    encode; the second replays the artifact byte for byte.  Other
+    codings keep the streaming tee."""
+    import os
+
+    from arrow_experiments_spark.transport import server as srv
+    from arrow_experiments_spark.transport.ipc_stream import decode_body
+
+    registry = DatasetRegistry()
+    _register_spliced(registry, "sp", table, tmp_path)
+    cache_dir = registry.enable_encoded_artifact("sp", str(tmp_path / "cache"))
+    assert registry.one_shot_fill("sp", "gzip") is None
+    assert registry.one_shot_fill("sp", "zstd") is None
+
+    def no_stream(*args, **kwargs):
+        raise AssertionError("the br fill streamed")
+
+    monkeypatch.setattr(srv, "encode_ipc_chunks", no_stream)
+    httpd = serve(registry)
+    base = "http://%s:%d" % httpd.server_address
+    try:
+        b1 = _get_body(base, "sp", "br")
+        assert decode_body(io.BytesIO(b1), "br").read_all().equals(table)
+        b2 = _get_body(base, "sp", "br")
+        assert b2 == b1
+    finally:
+        httpd.shutdown()
+    identity = b"".join(bytes(c) for c in registry.identity_stream("sp"))
+    want = pa.Codec(
+        "brotli", compression_level=DatasetRegistry.BR_CACHE_LEVEL
+    ).compress(identity, asbytes=True)
+    assert os.path.getsize(os.path.join(cache_dir, "br.bin")) == len(want)
+    assert b1 == want
+
+
+@pytest.mark.parametrize("case", ["over_cap", "unknown_size"])
+def test_br_artifact_streams_without_known_size(tmp_path, table, monkeypatch, case):
+    """A ``br`` artifact whose identity size is over the cap, or unknown
+    before encoding (a plain factory), streams and tees as before."""
+    import os
+
+    from arrow_experiments_spark.transport import server as srv
+    from arrow_experiments_spark.transport.ipc_stream import decode_body
+
+    registry = DatasetRegistry()
+    if case == "over_cap":
+        _register_spliced(registry, "d", table, tmp_path)
+        monkeypatch.setattr(DatasetRegistry, "IDENTITY_CACHE_MAX_BYTES", 1024)
+    else:
+        registry.register("d", lambda: pa.RecordBatchReader.from_batches(
+            table.schema, table.to_batches()))
+    cache_dir = registry.enable_encoded_artifact("d", str(tmp_path / "cache"))
+    assert registry.one_shot_fill("d", "br") is None
+    streamed = []
+    real_encode = srv.encode_ipc_chunks
+
+    def spy(schema, batches, strategy, *args, **kwargs):
+        streamed.append(strategy)
+        return real_encode(schema, batches, strategy, *args, **kwargs)
+
+    monkeypatch.setattr(srv, "encode_ipc_chunks", spy)
+    httpd = serve(registry)
+    base = "http://%s:%d" % httpd.server_address
+    try:
+        b1 = _get_body(base, "d", "br")
+        assert streamed == ["br"]
+        assert decode_body(io.BytesIO(b1), "br").read_all().equals(table)
+        with open(os.path.join(cache_dir, "br.bin"), "rb") as f:
+            assert f.read() == b1
+        assert _get_body(base, "d", "br") == b1
+        assert streamed == ["br"]  # the second one replayed the artifact
+    finally:
+        httpd.shutdown()
+
+
+def test_br_one_shot_fill_aborted_leaves_no_artifact(tmp_path, table):
+    """A first ``br`` response dropped after its first chunk commits no
+    artifact and leaves no temporary file."""
+    import os
+
+    from arrow_experiments_spark.transport.server import respond
+
+    registry = DatasetRegistry()
+    _register_spliced(registry, "sp", table, tmp_path)
+    cache_dir = registry.enable_encoded_artifact("sp", str(tmp_path / "cache"))
+    registry.ARTIFACT_SLICE_BYTES = 1024  # a body of many chunks
+    resp = respond(
+        "GET", "/datasets/sp", "", {"Accept-Encoding": "br"}, b"", False,
+        registry=registry, cors=False, sql_runner=None,
+    )
+    assert ("Content-Encoding", "br") in resp.headers
+    chunks = iter(resp.chunks)
+    assert len(next(chunks)) == 1024
+    chunks.close()
+    assert os.listdir(cache_dir) == []
+
+
 def test_ipc_codec_cache_invalidated_on_reregister():
     """Re-registering a name must drop its cached IPC-codec body along
     with the other cached bytes."""
