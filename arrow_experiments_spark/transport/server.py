@@ -36,8 +36,11 @@ Endpoints (the union of the reference's protocol patterns):
 
 The server is engine-agnostic: datasets are callables returning a
 ``pa.RecordBatchReader`` so it can front Spark DataFrames (see
-sources/egress.py) or plain pyarrow data in tests.  Pre-materialize-once,
-serve-many (reference server.py:552-555) is the registry's caching default.
+sources/arrow_ipc.py for queries and spilled results, streaming/egress.py
+for micro-batches and snapshots) or plain pyarrow data in tests.
+Pre-materialize-once, serve-many (reference server.py:552-555) is the
+registry's caching default; its class docstring describes the two replay
+seats.
 
 One core, two front-ends: :func:`respond` holds the routes, the
 content negotiation, the 406/416/CORS rules and the replay ladder, and
@@ -53,10 +56,17 @@ hands them over dechunked.
 
 from __future__ import annotations
 
+import contextlib
+import gzip
 import io
 import json
+import mmap
+import os
 import re
+import shutil
+import tempfile
 import threading
+import uuid
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -64,6 +74,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pyarrow as pa
 
 from arrow_experiments_spark.transport.ipc_stream import (
+    GZIP_LEVEL,
     decode_body,
     encode_ipc_chunks,
     write_chunked,
@@ -155,11 +166,51 @@ def rebatch_reader(reader: pa.RecordBatchReader, n: int) -> pa.RecordBatchReader
 
 
 class DatasetRegistry:
-    """name → RecordBatchReader factory (+ optional metadata dict)."""
+    """name → RecordBatchReader factory (+ optional metadata dict), and
+    the one replay store in front of the factories.
 
-    # pre-materialized tables up to this size also cache their serialized
-    # identity IPC body (see identity_body) — beyond it, stream per request
+    The store keeps "the bytes of dataset X under strategy S" in two
+    seats, and :meth:`replay` is the one ladder over them:
+
+    * **memory**: one ``(name, strategy)`` body map for pre-materialized
+      tables (:meth:`register_table`) up to ``IDENTITY_CACHE_MAX_BYTES``,
+      filled by :meth:`_memory_body`.  The identity body and its IPC
+      buffer-compressed twins (``identity+zstd``/``identity+lz4``) come
+      from one IPC writer; each content coding is compressed once from
+      the identity body (:meth:`_compress_once`).  Concurrent requests
+      send zero-copy slices of one immutable buffer: the reference's
+      serve-many model (get_simple server.py:144), with no writer loop
+      or encoder per request.
+    * **disk**: for factory datasets.  A raw identity source spliced
+      from spill files (:meth:`register_raw`), and, for datasets opted
+      in with :meth:`enable_encoded_artifact`, one encoded artifact per
+      strategy, teed from the first request (:meth:`tee_encoded`) or,
+      for ``br`` of known identity size, compressed in one shot
+      (:meth:`one_shot_fill`): nginx's gzip_static applied to spill-scale
+      serves.
+
+    A projected, re-chunked or multipart request, and a miss of every
+    seat, stream from the factory's reader instead.  The lookups
+    (``identity_stream``, ``encoded_slices``, ``ipc_codec_slices``,
+    ``encoded_artifact_stream``) and the memory-seat entry points
+    (``identity_body``, ``encoded_body``, ``ipc_codec_body``) stay
+    separate methods: the traced benchmark (perfbench/spans.py) wraps
+    each by name to attribute cache fills, misses and hits."""
+
+    # pre-materialized tables up to this size keep their bodies in the
+    # memory seat, and a br artifact of at most this identity size fills
+    # in one shot; anything larger streams
     IDENTITY_CACHE_MAX_BYTES = 1 << 30
+    # every replayed body, in memory or on disk, goes out in slices of
+    # this size
+    ARTIFACT_SLICE_BYTES = 1 << 20
+    # The encoders are the measured knees: brotli one-shot level 2 gives
+    # sf0.1 lineitem's 47 MB identity body as 12.85 MB in 0.45 s, against
+    # 11.08 MB in 7.2 s at level 8, the level the streaming
+    # CompressedOutputStream is stuck at (it has no level knob); gzip
+    # uses the same level-4 knee the streaming path does; zstd its
+    # pyarrow default.
+    BR_CACHE_LEVEL = 2
 
     def __init__(self) -> None:
         self._factories: dict[str, ReaderFactory] = {}
@@ -167,11 +218,13 @@ class DatasetRegistry:
         self._schemas: dict[str, pa.Schema] = {}
         self._files: dict[str, bytes] = {}
         self._tables: dict[str, pa.Table] = {}
-        self._bodies: dict[str, pa.Buffer] = {}
-        self._coded_bodies: dict[tuple[str, str], bytes] = {}
+        self._bodies: dict[tuple[str, str], pa.Buffer | bytes] = {}  # memory seat
         self._raw: dict[str, Callable[[], "Iterable[bytes]"]] = {}
-        self._artifacts: dict[str, str] = {}  # name -> encoded-cache dir
+        self._artifacts: dict[str, str] = {}  # name -> encoded-artifact dir
         self._lock = threading.Lock()
+
+    def __contains__(self, name: str) -> bool:
+        return name in self._factories
 
     def register(
         self,
@@ -193,15 +246,11 @@ class DatasetRegistry:
             # re-registration (e.g. POST /ingest over an existing name)
             # must not keep serving the previous table's cached bytes
             self._tables.pop(name, None)
-            self._bodies.pop(name, None)
-            for k in [k for k in self._coded_bodies if k[0] == name]:
-                self._coded_bodies.pop(k, None)
+            self._bodies = {k: v for k, v in self._bodies.items() if k[0] != name}
             self._raw.pop(name, None)
             artifact_dir = self._artifacts.pop(name, None)
         if artifact_dir is not None:
-            import shutil as _shutil
-
-            _shutil.rmtree(artifact_dir, ignore_errors=True)
+            shutil.rmtree(artifact_dir, ignore_errors=True)
 
     def register_table(self, name: str, table: pa.Table, meta: dict | None = None) -> None:
         def factory() -> pa.RecordBatchReader:
@@ -210,137 +259,6 @@ class DatasetRegistry:
         self.register(name, factory, meta, schema=table.schema)
         with self._lock:
             self._tables[name] = table
-
-    def identity_body(self, name: str) -> memoryview | None:
-        """Serialized identity IPC stream for a pre-materialized table,
-        built once and shared by every request — the reference's
-        serve-many replay model (get_simple server.py:144) taken to its
-        conclusion for the uncompressed case: concurrent handler threads
-        write zero-copy slices of one immutable buffer (sendall releases
-        the GIL), instead of each re-running the Python writer loop.
-        None for factory datasets, oversized tables, or any request that
-        projects/rebatches/compresses — those stream per request."""
-        with self._lock:
-            body = self._bodies.get(name)
-            if body is not None:
-                return memoryview(body)
-            table = self._tables.get(name)
-        if table is None or table.nbytes > self.IDENTITY_CACHE_MAX_BYTES:
-            return None
-        sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, table.schema) as writer:
-            for batch in table.to_batches():
-                writer.write_batch(batch)
-        body = sink.getvalue()
-        with self._lock:
-            self._bodies.setdefault(name, body)
-        return memoryview(body)
-
-    IDENTITY_SLICE_BYTES = 1 << 20
-
-    def identity_slices(self, name: str):
-        """1 MiB zero-copy slices of the cached identity body, or None —
-        the ONE implementation both server forms stream from."""
-        body = self.identity_body(name)
-        if body is None:
-            return None
-        step = self.IDENTITY_SLICE_BYTES
-        return (body[i : i + step] for i in range(0, len(body), step))
-
-    # Compress-once replay for pre-materialized tables: the identity body
-    # is already cached whole, so each pure content coding's twin is
-    # compressed ONCE and replayed — the identity-body serve-many model
-    # extended to negotiated codings (what gzip_static / a CDN variant
-    # cache does).  Encoder choices are the measured knees: brotli one-shot
-    # level 2 gives sf0.1 lineitem's 47 MB identity body as 12.85 MB in
-    # 0.45 s, against 11.08 MB in 7.2 s at level 8, the level the
-    # streaming CompressedOutputStream is stuck at (it has no level knob);
-    # gzip uses the same level-4 knee the streaming path does; zstd its
-    # pyarrow default.
-    BR_CACHE_LEVEL = 2
-    CACHED_CODINGS = ("br", "gzip", "zstd")
-
-    def _compress_once(self, coding: str, identity) -> bytes:
-        """The whole ``coding`` body of the ``identity`` IPC bytes,
-        compressed in one call at the coding's knee (above)."""
-        if coding == "br":
-            return pa.Codec(
-                "brotli", compression_level=self.BR_CACHE_LEVEL
-            ).compress(identity, asbytes=True)
-        if coding == "gzip":
-            import gzip as _gzip
-
-            from arrow_experiments_spark.transport.ipc_stream import GZIP_LEVEL
-
-            return _gzip.compress(bytes(identity), compresslevel=GZIP_LEVEL)
-        return pa.Codec("zstd").compress(identity, asbytes=True)
-
-    def encoded_body(self, name: str, coding: str) -> memoryview | None:
-        """Cached ``coding``-compressed body of a pre-materialized table,
-        or None (same eligibility as identity_body; compressed once,
-        shared by every request)."""
-        if coding not in self.CACHED_CODINGS:
-            return None
-        key = (name, coding)
-        with self._lock:
-            body = self._coded_bodies.get(key)
-        if body is not None:
-            return memoryview(body)
-        identity = self.identity_body(name)
-        if identity is None:
-            return None
-        body = self._compress_once(coding, identity)
-        with self._lock:
-            body = self._coded_bodies.setdefault(key, body)
-        return memoryview(body)
-
-    def encoded_slices(self, name: str, coding: str):
-        """1 MiB slices of the cached compressed body, or None."""
-        body = self.encoded_body(name, coding)
-        if body is None:
-            return None
-        step = self.IDENTITY_SLICE_BYTES
-        return (body[i : i + step] for i in range(0, len(body), step))
-
-    # IPC buffer-compressed twins (identity+zstd / identity+lz4): the
-    # encoded stream is deterministic per (table, codec) — self-describing
-    # record-batch buffer compression, no per-request state — so it has
-    # exactly the cacheability of the HTTP codings above (r8 verdict #2:
-    # these were the two strategies the compress-once cache did NOT cover,
-    # and the only per-request encodes left on pre-materialized serves).
-    CACHED_IPC_CODECS = ("zstd", "lz4")
-
-    def ipc_codec_body(self, name: str, codec: str) -> memoryview | None:
-        """Cached IPC-buffer-compressed stream body of a pre-materialized
-        table, or None (same eligibility as identity_body; encoded once,
-        shared by every request)."""
-        if codec not in self.CACHED_IPC_CODECS:
-            return None
-        key = (name, f"ipc+{codec}")
-        with self._lock:
-            body = self._coded_bodies.get(key)
-            if body is not None:
-                return memoryview(body)
-            table = self._tables.get(name)
-        if table is None or table.nbytes > self.IDENTITY_CACHE_MAX_BYTES:
-            return None
-        sink = pa.BufferOutputStream()
-        opts = pa.ipc.IpcWriteOptions(compression=codec)
-        with pa.ipc.new_stream(sink, table.schema, options=opts) as writer:
-            for batch in table.to_batches():
-                writer.write_batch(batch)
-        body = sink.getvalue()
-        with self._lock:
-            body = self._coded_bodies.setdefault(key, body)
-        return memoryview(body)
-
-    def ipc_codec_slices(self, name: str, codec: str):
-        """1 MiB zero-copy slices of the cached IPC-codec body, or None."""
-        body = self.ipc_codec_body(name, codec)
-        if body is None:
-            return None
-        step = self.IDENTITY_SLICE_BYTES
-        return (body[i : i + step] for i in range(0, len(body), step))
 
     def register_raw(self, name: str, raw_factory: Callable[[], Iterable[bytes]]) -> None:
         """Supplement an existing dataset with a pre-encoded identity-IPC
@@ -359,45 +277,126 @@ class DatasetRegistry:
                 raise KeyError(f"register() {name!r} before register_raw()")
             self._raw[name] = raw_factory
 
-    def identity_stream(self, name: str):
-        """Zero-copy identity-IPC byte chunks for a plain request, or
-        None: the cached in-memory body for pre-materialized tables, else
-        a registered raw (file-backed) source.  The ONE lookup both
-        server forms use."""
-        slices = self.identity_slices(name)
-        if slices is not None:
-            return slices
-        factory = self._raw.get(name)
-        return factory() if factory is not None else None
-
     def register_file(self, name: str, data: bytes) -> None:
         """Static .arrows artifact served with range support."""
         with self._lock:
             self._files[name] = data
 
-    # ---- encoded-artifact replay (disk-backed encode-once) ---------------
-    #
-    # The compress-once caches above hold bodies in memory and only for
-    # pre-materialized tables under the cap.  Factory datasets at spill
-    # scale (the 42M trading serve: ~1 GB dict-encoded + zstd) get the
-    # DISK seat of the same pattern: the first request's encoded bytes
-    # tee to a cache file (atomic rename on completion), every later
-    # request replays the file — nginx's gzip_static, or the reference's
-    # pre-materialize-then-replay model applied to the encoded form.
-    # OPT-IN ONLY: a factory may be non-deterministic (live query, stream
-    # snapshot), so nothing is cached unless the caller asserts
-    # determinism via enable_encoded_artifact().
+    # ---- the ladder --------------------------------------------------------
 
-    ARTIFACT_SLICE_BYTES = 1 << 20
+    def replay(self, name: str, strategy: str):
+        """Chunks of ``name``'s whole stream under ``strategy`` that need
+        no reader, or None: the memory seat, then the raw splice (identity)
+        or the encoded artifact, then a one-shot ``br`` fill teed into the
+        artifact.  On None the caller encodes the factory's reader (and
+        tees it, for any strategy but identity)."""
+        if strategy == "identity":
+            return self.identity_stream(name)
+        if strategy.startswith("identity+"):
+            chunks = self.ipc_codec_slices(name, strategy[len("identity+") :])
+        else:
+            chunks = self.encoded_slices(name, strategy)
+        if chunks is None:
+            chunks = self.encoded_artifact_stream(name, strategy)
+        if chunks is None and (fill := self.one_shot_fill(name, strategy)) is not None:
+            chunks = self.tee_encoded(name, strategy, fill)
+        return chunks
+
+    def _slices(self, body):
+        """``body`` in ``ARTIFACT_SLICE_BYTES`` slices (zero-copy for a
+        memoryview), or None for None: the one slicer of every seat."""
+        if body is None:
+            return None
+        step = self.ARTIFACT_SLICE_BYTES
+        return (body[i : i + step] for i in range(0, len(body), step))
+
+    def identity_stream(self, name: str):
+        """Identity-IPC byte chunks of a plain request, or None: the
+        memory seat's body, else a registered raw (file-backed) source."""
+        chunks = self._slices(self.identity_body(name))
+        if chunks is None and (raw := self._raw.get(name)) is not None:
+            chunks = raw()
+        return chunks
+
+    def encoded_slices(self, name: str, coding: str):
+        """Slices of the memory seat's ``coding``-compressed body, or None."""
+        return self._slices(self.encoded_body(name, coding))
+
+    def ipc_codec_slices(self, name: str, codec: str):
+        """Slices of the memory seat's IPC-``codec`` body, or None."""
+        return self._slices(self.ipc_codec_body(name, codec))
+
+    # ---- memory seat -------------------------------------------------------
+
+    def identity_body(self, name: str) -> memoryview | None:
+        """The memory seat's identity IPC body, or None."""
+        return self._memory_body(name, "identity")
+
+    def encoded_body(self, name: str, coding: str) -> memoryview | None:
+        """The memory seat's body under content ``coding``, or None."""
+        return self._memory_body(name, coding) if coding in AVAILABLE_CODINGS else None
+
+    def ipc_codec_body(self, name: str, codec: str) -> memoryview | None:
+        """The memory seat's IPC buffer-compressed body, or None."""
+        if codec not in AVAILABLE_IPC_CODECS:
+            return None
+        return self._memory_body(name, f"identity+{codec}")
+
+    def _memory_body(self, name: str, strategy: str) -> memoryview | None:
+        """``name``'s body under ``strategy``, built on its first request
+        and shared by every later one; None for factory datasets and
+        tables over ``IDENTITY_CACHE_MAX_BYTES``."""
+        key = (name, strategy)
+        with self._lock:
+            body = self._bodies.get(key)
+            table = self._tables.get(name)
+        if body is not None:
+            return memoryview(body)
+        if table is None or table.nbytes > self.IDENTITY_CACHE_MAX_BYTES:
+            return None
+        if strategy in AVAILABLE_CODINGS:
+            identity = self.identity_body(name)
+            if identity is None:
+                return None
+            body = self._compress_once(strategy, identity)
+        else:  # identity, or identity+codec: compressed inside the stream
+            sink = pa.BufferOutputStream()
+            opts = pa.ipc.IpcWriteOptions(compression=strategy.partition("+")[2] or None)
+            with pa.ipc.new_stream(sink, table.schema, options=opts) as writer:
+                for batch in table.to_batches():
+                    writer.write_batch(batch)
+            body = sink.getvalue()
+        with self._lock:
+            # a table re-registered meanwhile gets this body, not the map
+            if self._tables.get(name) is table:
+                body = self._bodies.setdefault(key, body)
+        return memoryview(body)
+
+    def _compress_once(self, coding: str, identity) -> bytes:
+        """The whole ``coding`` body of the ``identity`` IPC bytes,
+        compressed in one call at the coding's knee (above)."""
+        if coding == "br":
+            return pa.Codec(
+                "brotli", compression_level=self.BR_CACHE_LEVEL
+            ).compress(identity, asbytes=True)
+        if coding == "gzip":
+            return gzip.compress(bytes(identity), compresslevel=GZIP_LEVEL)
+        return pa.Codec("zstd").compress(identity, asbytes=True)
+
+    # ---- disk seat ---------------------------------------------------------
+    #
+    # OPT-IN ONLY: a factory may be non-deterministic (live query, stream
+    # snapshot), so no encoded artifact is written unless the caller
+    # asserts determinism via enable_encoded_artifact().  Every artifact
+    # lands by atomic rename when its stream completes.
 
     def enable_encoded_artifact(self, name: str, cache_dir: str | None = None) -> str:
         """Opt ``name`` into encoded-artifact replay; the caller asserts
         the factory's encoded output is deterministic.  Returns the cache
-        dir (caller-owned when passed, else a per-registry tempdir the
-        caller may remove).  Call AFTER register()."""
-        import os
-        import tempfile
-
+        dir: ``cache_dir`` when passed, else a new tempdir.  Either way
+        the registry removes the dir, with everything in it, when ``name``
+        is registered again, so pass a dir that holds nothing else.  Call
+        AFTER register()."""
         with self._lock:
             if name not in self._factories:
                 raise KeyError(f"register() {name!r} before enabling artifacts")
@@ -409,32 +408,23 @@ class DatasetRegistry:
         return cache_dir
 
     def _artifact_path(self, name: str, strategy: str) -> str | None:
-        import os
-        import re as _re
-
         d = self._artifacts.get(name)
         if d is None:
             return None
-        return os.path.join(d, _re.sub(r"[^A-Za-z0-9+_-]", "_", strategy) + ".bin")
+        return os.path.join(d, re.sub(r"[^A-Za-z0-9+_-]", "_", strategy) + ".bin")
 
     def encoded_artifact_stream(self, name: str, strategy: str):
-        """mmap'd 1 MiB slices of a completed encoded artifact, or None."""
-        import mmap
-        import os
-
+        """mmap'd slices of a completed encoded artifact, or None."""
         path = self._artifact_path(name, strategy)
         if path is None or not os.path.exists(path):
             return None
 
         def slices():
             with open(path, "rb") as fh:
-                size = os.fstat(fh.fileno()).st_size
-                if size == 0:
+                if os.fstat(fh.fileno()).st_size == 0:
                     return
                 with mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-                    step = self.ARTIFACT_SLICE_BYTES
-                    for i in range(0, size, step):
-                        yield mm[i : i + step]
+                    yield from self._slices(mm)
 
         return slices()
 
@@ -443,9 +433,6 @@ class DatasetRegistry:
         cache; the file lands atomically only when the stream completes
         (a broken/aborted encode leaves no artifact).  No-op passthrough
         for datasets not opted in."""
-        import os
-        import uuid
-
         path = self._artifact_path(name, strategy)
         if path is None:
             return chunks
@@ -463,10 +450,8 @@ class DatasetRegistry:
                 if ok:
                     os.replace(tmp, path)
                 else:
-                    try:
+                    with contextlib.suppress(OSError):
                         os.unlink(tmp)
-                    except OSError:
-                        pass
 
         return tee()
 
@@ -488,10 +473,7 @@ class DatasetRegistry:
             return None
 
         def chunks():
-            body = memoryview(self._compress_once(strategy, raw.read()))
-            step = self.ARTIFACT_SLICE_BYTES
-            for i in range(0, len(body), step):
-                yield body[i : i + step]
+            yield from self._slices(memoryview(self._compress_once(strategy, raw.read())))
 
         return chunks()
 
@@ -728,12 +710,12 @@ def _dissociated(registry: DatasetRegistry, name: str, which: str, params) -> Re
         encode_meta_stream,
     )
 
-    reader = registry.reader(name)
-    if reader is None:
+    if name not in registry:
         return _fixed(404)
     # want_data handshake: the client must echo the dataset ident from
     # the describe endpoint before either stream is served (the
-    # reference's tag probe, cudf-flight-server.cc:115-135).
+    # reference's tag probe, cudf-flight-server.cc:115-135), and before
+    # the reader opens: a query dataset's reader runs its Spark job.
     if params.get("want_data") != name:
         return _json(
             {
@@ -743,6 +725,9 @@ def _dissociated(registry: DatasetRegistry, name: str, which: str, params) -> Re
             },
             status=400,
         )
+    reader = registry.reader(name)
+    if reader is None:
+        return _fixed(404)
     encode = encode_meta_stream if which == "meta" else encode_body_stream
     return Response(200, [("Content-Type", "application/octet-stream")], encode(reader))
 
@@ -768,13 +753,15 @@ def _query(sql_runner, params, headers, http10: bool) -> Response:
     return _arrow_stream(reader, headers, http10)
 
 
-
-
 def _dataset(registry: DatasetRegistry, name: str, params, headers, http10: bool) -> Response:
-    reader = registry.reader(name)
-    if reader is None:
+    if name not in registry:
         return _fixed(404)
-    plain = not any(k in params for k in ("columns", "limit", "batch_rows", "multipart"))
+    if not any(k in params for k in ("columns", "limit", "batch_rows", "multipart")):
+        # the whole dataset: replayed when stored, with no reader opened
+        return _arrow_stream(None, headers, http10, registry, name)
+    reader = registry.reader(name)
+    if reader is None:  # a factory with nothing to serve yet
+        return _fixed(404)
 
     # ?columns=a,b&limit=N&batch_rows=M — serve-time projection, slice,
     # and re-chunking (applies to both plain-stream and multipart paths)
@@ -803,11 +790,11 @@ def _dataset(registry: DatasetRegistry, name: str, params, headers, http10: bool
             [("Content-Type", multipart_content_type(boundary))],
             encode_multipart(boundary, meta, reader.schema, reader),
         )
-    return _arrow_stream(reader, headers, http10, registry, name if plain else None)
+    return _arrow_stream(reader, headers, http10)
 
 
 def _arrow_stream(
-    reader: pa.RecordBatchReader,
+    reader: pa.RecordBatchReader | None,
     headers,
     http10: bool,
     registry: DatasetRegistry | None = None,
@@ -817,36 +804,22 @@ def _arrow_stream(
     the dataset and ad-hoc query routes.  Raises NotAcceptable (406).
 
     ``name`` marks a plain request for the whole registered dataset,
-    which may be replayed instead of encoded.  The replay ladder takes
-    the first cached form of the chosen strategy: the identity body or
-    raw spill bytes, the compress-once body of a content coding, the
-    encode-once IPC-codec body, then the disk-backed encoded artifact of
-    an opted-in factory dataset.  On a miss the stream is encoded live
-    and, for any strategy but identity, teed into the artifact cache;
-    a ``br`` artifact of known identity size is compressed in one shot
-    instead (:meth:`DatasetRegistry.one_shot_fill`)."""
+    answered by :meth:`DatasetRegistry.replay` when a stored form exists.
+    Only on a miss is the reader (None here) opened from the registry
+    (404 when its factory returns None); its stream is encoded live and,
+    for any strategy but identity, teed into the artifact of an opted-in
+    dataset."""
     default = "identity" if http10 else "gzip"
     strategy = choose_strategy(headers, AVAILABLE_IPC_CODECS, AVAILABLE_CODINGS, default)
     if strategy is None:
         raise NotAcceptable("no available coding is acceptable")
-    chunks = None
-    if name is not None:
-        if strategy == "identity":
-            chunks = registry.identity_stream(name)
-        else:
-            if strategy.startswith("identity+"):
-                chunks = registry.ipc_codec_slices(name, strategy[9:])
-            else:
-                chunks = registry.encoded_slices(name, strategy)
-            if chunks is None:
-                chunks = registry.encoded_artifact_stream(name, strategy)
-            if chunks is None:
-                fill = registry.one_shot_fill(name, strategy)
-                if fill is None:
-                    fill = encode_ipc_chunks(reader.schema, reader, strategy)
-                chunks = registry.tee_encoded(name, strategy, fill)
+    chunks = registry.replay(name, strategy) if name is not None else None
     if chunks is None:
+        if reader is None and (reader := registry.reader(name)) is None:
+            return _fixed(404)
         chunks = encode_ipc_chunks(reader.schema, reader, strategy)
+        if name is not None and strategy != "identity":
+            chunks = registry.tee_encoded(name, strategy, chunks)
 
     if strategy.startswith("identity+"):
         # the compression is inside the IPC stream, declared by the

@@ -567,3 +567,31 @@ def test_snapshot_dataset_parity(tmp_path, table):
         assert got_asgi.equals(table.select(got_asgi.column_names))
         assert got_threaded.equals(got_asgi)
         assert each(fronts, "GET", "/datasets/empty")[0][0] == 404
+
+
+def test_dissociated_handshake_refused_before_the_reader_opens(table):
+    """A /meta or /body request without the right ``want_data`` answers
+    400 on both front-ends without opening the dataset's reader (for a
+    query dataset, a Spark job); a good handshake opens it once."""
+    opens = []
+
+    def factory():
+        opens.append(1)
+        return table.to_reader()
+
+    r = DatasetRegistry()
+    r.register("q", factory)
+    with front_ends(r) as fronts:
+        for path in (
+            "/datasets/q/meta",
+            "/datasets/q/body",
+            "/datasets/q/meta?want_data=other",
+            "/datasets/q/body?want_data=",
+        ):
+            for status, _, body in each(fronts, "GET", path):
+                assert status == 400, path
+                assert json.loads(body)["expected"] == "q"
+        assert opens == []
+        for status, _, _ in each(fronts, "GET", "/datasets/q/meta?want_data=q"):
+            assert status == 200
+    assert len(opens) == 2  # one per front-end

@@ -866,3 +866,39 @@ def test_raw_spill_stream_refuses_nested_dictionary(tmp_path):
     with open(p, "wb") as f, pa.ipc.new_stream(f, t.schema) as w:
         w.write_table(t)
     assert raw_spill_stream([p], t.schema) is None
+
+
+def test_replayed_query_runs_no_spark_job(spark, tmp_path):
+    """A ``register_dataframe`` dataset opted into encoded artifacts
+    replays its second zstd GET from the artifact without opening the
+    reader, so that request runs no Spark job (counted by job group, as
+    in ``test_drain_runs_no_spark_job``); the first GET ran the query."""
+    import io
+
+    from arrow_experiments_spark.transport.ipc_stream import decode_body
+    from arrow_experiments_spark.transport.server import DatasetRegistry, respond
+
+    df = gen_flight_bench(spark, rows=5_000)
+    expect = df.toArrow().combine_chunks().sort_by("a")
+    registry = DatasetRegistry()
+    register_dataframe(registry, "q", df, batch_rows=1024)
+    registry.enable_encoded_artifact("q", str(tmp_path / "cache"))
+    sc = spark.sparkContext
+    bodies, jobs = [], []
+    for i in range(2):
+        group = f"egress-replay-{i}"
+        sc.setJobGroup(group, "zstd GET")
+        try:
+            resp = respond(
+                "GET", "/datasets/q", "", {"Accept-Encoding": "zstd"}, b"", False,
+                registry=registry, cors=False, sql_runner=None,
+            )
+            bodies.append(b"".join(bytes(c) for c in resp.chunks))
+            jobs.append(_jobs_in_group(spark, group))
+        finally:
+            sc._jsc.clearJobGroup()
+    assert jobs[0] >= 1  # the first GET ran the query
+    assert jobs[1] == 0, f"the replayed GET ran {jobs[1]} Spark job(s)"
+    assert bodies[1] == bodies[0]
+    got = decode_body(io.BytesIO(bodies[1]), "zstd").read_all()
+    assert got.combine_chunks().sort_by("a").equals(expect)

@@ -1139,3 +1139,82 @@ def test_ipc_codec_cache_invalidated_on_reregister():
     reg.register("f", lambda: pa.RecordBatchReader.from_batches(
         t1.schema, t1.to_batches()))
     assert reg.ipc_codec_body("f", "zstd") is None
+
+
+_STRATEGY_HEADERS = {
+    "identity": {"Accept-Encoding": "identity"},
+    "identity+zstd": {
+        "Accept": 'application/vnd.apache.arrow.stream; codecs="zstd"',
+        "Accept-Encoding": "identity",
+    },
+    "identity+lz4": {
+        "Accept": 'application/vnd.apache.arrow.stream; codecs="lz4"',
+        "Accept-Encoding": "identity",
+    },
+    "gzip": {"Accept-Encoding": "gzip"},
+    "br": {"Accept-Encoding": "br"},
+    "zstd": {"Accept-Encoding": "zstd"},
+}
+
+
+def _reader_opens(seat: str, strategy: str) -> tuple[int, int]:
+    """How often a cell's first and second GET open the dataset's reader:
+    the memory seat never does; the splice answers identity, and fills
+    ``br`` in one shot, without it; any other first GET of an opted-in
+    dataset encodes the reader and tees the artifact its second GET
+    replays.  A factory's identity stream is not stored."""
+    if seat == "table" or (seat == "spliced" and strategy in ("identity", "br")):
+        return 0, 0
+    if seat == "factory" and strategy == "identity":
+        return 1, 1
+    return 1, 0
+
+
+@pytest.mark.parametrize("strategy", list(_STRATEGY_HEADERS))
+@pytest.mark.parametrize("seat", ["table", "spliced", "factory"])
+def test_replay_seat_strategy_matrix(tmp_path, table, seat, strategy):
+    """Every replay seat under every strategy: two GETs each decode to the
+    source table, a stored cell's second body is byte-identical to its
+    first, and a replay hit never opens the dataset's reader.  The
+    spliced and factory seats are opted into encoded artifacts, so their
+    gzip and IPC-codec artifacts are filled and replayed too."""
+    from arrow_experiments_spark.transport.ipc_stream import decode_body
+
+    registry = DatasetRegistry()
+    if seat == "table":
+        registry.register_table("d", table)
+    else:
+        if seat == "spliced":
+            _register_spliced(registry, "d", table, tmp_path)
+        else:
+            registry.register("d", lambda: pa.RecordBatchReader.from_batches(
+                table.schema, table.to_batches(max_chunksize=1000)))
+        registry.enable_encoded_artifact("d", str(tmp_path / "cache"))
+    opens = []
+    factory = registry._factories["d"]
+    registry._factories["d"] = lambda: opens.append(1) or factory()
+    codec = strategy.partition("+")[2]
+    httpd = serve(registry)
+    base = "http://%s:%d" % httpd.server_address
+    bodies, per_get = [], []
+    try:
+        for _ in range(2):
+            before = len(opens)
+            req = urllib.request.Request(
+                f"{base}/datasets/d", headers=_STRATEGY_HEADERS[strategy]
+            )
+            with urllib.request.urlopen(req) as resp:
+                assert resp.headers.get("Content-Encoding") == (
+                    None if strategy.startswith("identity") else strategy
+                )
+                assert resp.headers["Content-Type"].endswith(f"codecs={codec}") == bool(codec)
+                body = resp.read()
+            per_get.append(len(opens) - before)
+            assert decode_body(io.BytesIO(body), strategy).read_all().equals(table)
+            bodies.append(body)
+    finally:
+        httpd.shutdown()
+    expected = _reader_opens(seat, strategy)
+    assert tuple(per_get) == expected, f"reader opened {per_get}, want {expected}"
+    if expected[1] == 0:  # a stored cell: replayed byte for byte
+        assert bodies[1] == bodies[0]
