@@ -57,16 +57,17 @@ hands them over dechunked.
 from __future__ import annotations
 
 import contextlib
-import gzip
 import io
 import json
 import mmap
 import os
 import re
 import shutil
+import struct
 import tempfile
 import threading
 import uuid
+import zlib
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -165,6 +166,60 @@ def rebatch_reader(reader: pa.RecordBatchReader, n: int) -> pa.RecordBatchReader
     return pa.RecordBatchReader.from_batches(reader.schema, rebatch_iter(reader, n))
 
 
+# The largest block of each coding's stored form: a deflate stored block's
+# LEN is 16 bits (RFC 1951 §3.2.4), a brotli meta-block's MLEN at most
+# 2^24 (RFC 7932 §9.2).
+GZIP_STORED_BLOCK_BYTES = 0xFFFF
+BR_STORED_BLOCK_BYTES = 1 << 24
+
+
+def _br_block_header(first: bool, mlen: int) -> bytes:
+    """The bits before an uncompressed brotli meta-block of ``mlen`` bytes,
+    padded with zeros to its byte boundary: ISLAST 0, MNIBBLES, MLEN-1,
+    ISUNCOMPRESSED 1; the stream's first also carries WBITS 16 (a lone 0
+    bit).  Brotli packs fields from the least significant bit up."""
+    nibbles = max(4, -(-(mlen - 1).bit_length() // 4))
+    bits = (nibbles - 4) << 1 | (mlen - 1) << 3 | 1 << (3 + 4 * nibbles)
+    width = 4 + 4 * nibbles
+    if first:
+        bits, width = bits << 1, width + 1
+    return bits.to_bytes((width + 7) // 8, "little")
+
+
+def _stored(coding: str, data) -> pa.Buffer:
+    """``data`` as a ``gzip`` or ``br`` body that compresses nothing, in
+    one exact-size Arrow buffer: one gzip member of stored deflate blocks
+    (MTIME 0) with its crc32 and ISIZE, or a brotli stream of uncompressed
+    meta-blocks closed by an empty last one.  Any decoder of the coding
+    reads it at copy speed; the framing adds 18 bytes plus 5 per block for
+    gzip, 1 byte plus 4 per meta-block for br."""
+    src = memoryview(data).cast("B")
+    n = len(src)
+    if coding == "gzip":
+        step = GZIP_STORED_BLOCK_BYTES
+        pieces = [b"\x1f\x8b\x08\x00\x00\x00\x00\x00\x00\xff"]
+        for i in range(0, max(n, 1), step):  # an empty body is one empty block
+            block = src[i : i + step]
+            last = i + step >= n
+            pieces += (struct.pack("<BHH", last, len(block), len(block) ^ 0xFFFF), block)
+        pieces.append(struct.pack("<II", zlib.crc32(src), n & 0xFFFFFFFF))
+    else:
+        step = BR_STORED_BLOCK_BYTES
+        pieces = []
+        for i in range(0, n, step):
+            block = src[i : i + step]
+            pieces += (_br_block_header(i == 0, len(block)), block)
+        # ISLAST 1 and ISLASTEMPTY 1, after the WBITS bit if no block came first
+        pieces.append(b"\x03" if n else b"\x06")
+    out = pa.allocate_buffer(sum(map(len, pieces)))
+    dst = memoryview(out).cast("B")
+    pos = 0
+    for piece in pieces:
+        dst[pos : pos + len(piece)] = piece
+        pos += len(piece)
+    return out
+
+
 class DatasetRegistry:
     """name → RecordBatchReader factory (+ optional metadata dict), and
     the one replay store in front of the factories.
@@ -177,14 +232,17 @@ class DatasetRegistry:
       filled by :meth:`_memory_body`.  The identity body and its IPC
       buffer-compressed twins (``identity+zstd``/``identity+lz4``) come
       from one IPC writer; each content coding is compressed once from
-      the identity body (:meth:`_compress_once`).  Concurrent requests
-      send zero-copy slices of one immutable buffer: the reference's
-      serve-many model (get_simple server.py:144), with no writer loop
-      or encoder per request.
+      the identity body (:meth:`_compress_once`); a gzip or br body
+      that would save less than ``MIN_SAVING`` (1/8) of it is kept in
+      the coding's stored form instead, which clients decode at copy
+      speed.  Concurrent requests send zero-copy slices of one
+      immutable buffer: the reference's serve-many model (get_simple
+      server.py:144), with no writer loop or encoder per request.
     * **disk**: for factory datasets.  A raw identity source spliced
       from spill files (:meth:`register_raw`), and, for datasets opted
-      in with :meth:`enable_encoded_artifact`, one encoded artifact per
-      strategy, teed from the first request (:meth:`tee_encoded`) or,
+      in with :meth:`enable_encoded_artifact`, one artifact per
+      strategy (identity too, unless a raw source answers it), teed
+      from the first request (:meth:`tee_encoded`) or,
       for ``br`` of known identity size, compressed in one shot
       (:meth:`one_shot_fill`): nginx's gzip_static applied to spill-scale
       serves.
@@ -208,9 +266,16 @@ class DatasetRegistry:
     # sf0.1 lineitem's 47 MB identity body as 12.85 MB in 0.45 s, against
     # 11.08 MB in 7.2 s at level 8, the level the streaming
     # CompressedOutputStream is stuck at (it has no level knob); gzip
-    # uses the same level-4 knee the streaming path does; zstd its
-    # pyarrow default.
+    # uses the same level-4 knee the streaming path does, with MTIME 0;
+    # zstd its pyarrow default.  A gzip or br knee that saves less than
+    # MIN_SAVING of the identity body is replaced by the coding's stored
+    # form: random int64 (perfbench's flight) saves 6.2-6.6%, dictionary
+    # trading and lineitem at least 63%, and decoding the knee costs 6-9 ns
+    # per identity byte where a 100 Mb/s link costs 80 ns per byte, so
+    # 1/8 is about break-even there.  zstd needs no floor: its encoder
+    # already emits raw blocks where compression does not pay.
     BR_CACHE_LEVEL = 2
+    MIN_SAVING = 1 / 8
 
     def __init__(self) -> None:
         self._factories: dict[str, ReaderFactory] = {}
@@ -286,13 +351,13 @@ class DatasetRegistry:
 
     def replay(self, name: str, strategy: str):
         """Chunks of ``name``'s whole stream under ``strategy`` that need
-        no reader, or None: the memory seat, then the raw splice (identity)
-        or the encoded artifact, then a one-shot ``br`` fill teed into the
-        artifact.  On None the caller encodes the factory's reader (and
-        tees it, for any strategy but identity)."""
+        no reader, or None: the memory seat or the raw splice, then the
+        encoded artifact, then a one-shot ``br`` fill teed into the
+        artifact.  On None the caller encodes the factory's reader and
+        tees it."""
         if strategy == "identity":
-            return self.identity_stream(name)
-        if strategy.startswith("identity+"):
+            chunks = self.identity_stream(name)
+        elif strategy.startswith("identity+"):
             chunks = self.ipc_codec_slices(name, strategy[len("identity+") :])
         else:
             chunks = self.encoded_slices(name, strategy)
@@ -372,16 +437,26 @@ class DatasetRegistry:
                 body = self._bodies.setdefault(key, body)
         return memoryview(body)
 
-    def _compress_once(self, coding: str, identity) -> bytes:
+    def _compress_once(self, coding: str, identity) -> pa.Buffer | bytes:
         """The whole ``coding`` body of the ``identity`` IPC bytes,
-        compressed in one call at the coding's knee (above)."""
-        if coding == "br":
-            return pa.Codec(
-                "brotli", compression_level=self.BR_CACHE_LEVEL
-            ).compress(identity, asbytes=True)
+        compressed in one call at the coding's knee (above).  A gzip or br
+        knee that saves less than ``MIN_SAVING`` of the identity body is
+        dropped for the coding's stored form (:func:`_stored`)."""
+        if coding == "zstd":
+            return pa.Codec("zstd").compress(identity, asbytes=True)
         if coding == "gzip":
-            return gzip.compress(bytes(identity), compresslevel=GZIP_LEVEL)
-        return pa.Codec("zstd").compress(identity, asbytes=True)
+            body = zlib.compress(identity, GZIP_LEVEL, wbits=31)
+        else:
+            body = pa.Codec("brotli", compression_level=self.BR_CACHE_LEVEL).compress(identity)
+        if len(body) > len(identity) * (1 - self.MIN_SAVING):
+            del body  # freed before the stored form is allocated
+            return _stored(coding, identity)
+        if coding == "br":
+            # the codec's output keeps the encoder's worst-case capacity,
+            # and its buffer protocol reports that capacity as its length
+            body.resize(body.size, shrink_to_fit=True)
+            body = body.slice(0)
+        return body
 
     # ---- disk seat ---------------------------------------------------------
     #
@@ -456,9 +531,10 @@ class DatasetRegistry:
         return tee()
 
     def one_shot_fill(self, name: str, strategy: str):
-        """Chunks of the ``br`` body of an opted-in dataset, compressed
-        in one call at ``BR_CACHE_LEVEL`` from its whole identity stream
-        read into one Arrow buffer; the caller tees them into the
+        """Chunks of the ``br`` body of an opted-in dataset, made by
+        :meth:`_compress_once` (level ``BR_CACHE_LEVEL``, or the stored
+        form below ``MIN_SAVING``) from its whole identity stream read
+        into one Arrow buffer; the caller tees them into the
         artifact.  None unless ``strategy`` is ``br``, ``name`` is opted
         in, and its identity stream's length is known before encoding
         (a raw source that reads itself whole: the spliced spill files)
@@ -804,11 +880,10 @@ def _arrow_stream(
     the dataset and ad-hoc query routes.  Raises NotAcceptable (406).
 
     ``name`` marks a plain request for the whole registered dataset,
-    answered by :meth:`DatasetRegistry.replay` when a stored form exists.
+    answered by :meth:`DatasetRegistry.replay` when the store holds it.
     Only on a miss is the reader (None here) opened from the registry
-    (404 when its factory returns None); its stream is encoded live and,
-    for any strategy but identity, teed into the artifact of an opted-in
-    dataset."""
+    (404 when its factory returns None); its stream is encoded live and
+    teed into the artifact of an opted-in dataset."""
     default = "identity" if http10 else "gzip"
     strategy = choose_strategy(headers, AVAILABLE_IPC_CODECS, AVAILABLE_CODINGS, default)
     if strategy is None:
@@ -818,7 +893,7 @@ def _arrow_stream(
         if reader is None and (reader := registry.reader(name)) is None:
             return _fixed(404)
         chunks = encode_ipc_chunks(reader.schema, reader, strategy)
-        if name is not None and strategy != "identity":
+        if name is not None:
             chunks = registry.tee_encoded(name, strategy, chunks)
 
     if strategy.startswith("identity+"):

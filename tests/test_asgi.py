@@ -540,6 +540,30 @@ def test_raw_spill_parity_with_threaded(tmp_path, table):
             assert t2.num_rows == 7 and t2.column_names == ["a"]
 
 
+@pytest.mark.parametrize("coding", ["gzip", "br"])
+def test_incompressible_table_stored_parity(coding):
+    """A table of random int64 saves less than ``MIN_SAVING`` under gzip
+    and br, so both forms send the coding's stored form of its identity
+    body under the negotiated Content-Encoding, and it decodes whole."""
+    import numpy as np
+
+    from arrow_experiments_spark.transport.server import _stored
+
+    rng = np.random.default_rng(7)
+    table = pa.table({c: rng.integers(-(2**62), 2**62, 20_000) for c in "xy"})
+    reg = DatasetRegistry()
+    reg.register_table("r", table)
+    want = _stored(coding, reg.identity_body("r")).to_pybytes()
+    with front_ends(reg) as fronts:
+        for status, headers, body in each(
+            fronts, "GET", "/datasets/r", {"Accept-Encoding": coding}
+        ):
+            assert status == 200
+            assert headers["content-encoding"] == coding
+            assert body == want
+            assert decode_body(io.BytesIO(body), coding).read_all().equals(table)
+
+
 def test_snapshot_dataset_parity(tmp_path, table):
     """register_snapshot works identically behind both server forms: the
     LATEST pointer resolves per request, both forms serve the current

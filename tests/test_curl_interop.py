@@ -145,6 +145,32 @@ def test_curl_compression_matrix(server, table, tmp_path, extra, strategy, expec
         assert len(body) < got.get_total_buffer_size()
 
 
+@pytest.mark.parametrize("coding", ["gzip", "br"])
+def test_curl_decodes_stored_bodies(tmp_path, coding):
+    """An incompressible table (random int64) is served in the coding's
+    stored form; curl's own zlib/brotli decoder reads it back to the
+    identity body byte for byte."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    table = pa.table({c: rng.integers(-(2**62), 2**62, 100_000) for c in "xy"})
+    registry = DatasetRegistry()
+    registry.register_table("random", table)
+    identity = bytes(registry.identity_body("random"))
+    httpd = serve(registry)
+    host, port = httpd.server_address
+    try:
+        headers, body = _curl(
+            ["--compressed", "-H", f"Accept-Encoding: {coding}",
+             f"http://{host}:{port}/datasets/random"],
+            tmp_path,
+        )
+    finally:
+        httpd.shutdown()
+    assert headers.get("content-encoding") == coding
+    assert body == identity
+
+
 # ---- get_range matrix (client.sh:21-49) ----------------------------------
 
 def test_curl_range_two_part_download(server, table, tmp_path):

@@ -1161,12 +1161,10 @@ def _reader_opens(seat: str, strategy: str) -> tuple[int, int]:
     """How often a cell's first and second GET open the dataset's reader:
     the memory seat never does; the splice answers identity, and fills
     ``br`` in one shot, without it; any other first GET of an opted-in
-    dataset encodes the reader and tees the artifact its second GET
-    replays.  A factory's identity stream is not stored."""
+    dataset, identity of a factory too, encodes the reader and tees the
+    artifact its second GET replays."""
     if seat == "table" or (seat == "spliced" and strategy in ("identity", "br")):
         return 0, 0
-    if seat == "factory" and strategy == "identity":
-        return 1, 1
     return 1, 0
 
 
@@ -1218,3 +1216,134 @@ def test_replay_seat_strategy_matrix(tmp_path, table, seat, strategy):
     assert tuple(per_get) == expected, f"reader opened {per_get}, want {expected}"
     if expected[1] == 0:  # a stored cell: replayed byte for byte
         assert bodies[1] == bodies[0]
+
+
+# ---- stored forms: incompressible bodies under gzip and br ---------------
+
+_STORED_SIZES = [0, 1, 65_535, 65_536, 65_537, 1 << 24, (1 << 24) + 1]
+
+
+def _stored_overhead(coding: str, n: int) -> int:
+    """The most framing a stored body may add to ``n`` bytes: a gzip
+    member's 18 bytes plus 5 per stored block (one at least), or the
+    brotli stream's last byte plus 4 per uncompressed meta-block."""
+    if coding == "gzip":
+        return 18 + 5 * max(1, -(-n // 65_535))
+    return 1 + 4 * -(-n // (1 << 24))
+
+
+@pytest.mark.parametrize("coding", ["gzip", "br"])
+@pytest.mark.parametrize("n", _STORED_SIZES)
+def test_stored_framing_roundtrips(coding, n):
+    """``_stored`` frames any length, block boundaries included, as a body
+    both decoders read back whole, within the framing overhead."""
+    import gzip
+
+    import numpy as np
+
+    from arrow_experiments_spark.transport.server import _stored
+
+    data = np.random.default_rng(n).bytes(n)
+    body = _stored(coding, data)
+    assert len(body) - n <= _stored_overhead(coding, n)
+    codec = "brotli" if coding == "br" else coding
+    assert pa.CompressedInputStream(pa.BufferReader(body), codec).read() == data
+    if coding == "gzip":
+        assert gzip.decompress(body) == data
+
+
+def _random_table(rows: int) -> pa.Table:
+    """Random int64 columns: their IPC body saves far less than 1/8 under
+    any coding."""
+    import numpy as np
+
+    rng = np.random.default_rng(rows)
+    return pa.table({c: rng.integers(-(2**62), 2**62, rows) for c in "xy"})
+
+
+def _ipc_body(table: pa.Table) -> pa.Buffer:
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as w:
+        w.write_table(table)
+    return sink.getvalue()
+
+
+@pytest.mark.parametrize("coding", ["gzip", "br"])
+def test_stored_ipc_body_decodes_across_meta_blocks(coding):
+    """A stored IPC stream of more than one brotli meta-block (2^24 bytes)
+    decodes through the client's ``decode_body`` to its table."""
+    from arrow_experiments_spark.transport.ipc_stream import decode_body
+    from arrow_experiments_spark.transport.server import _stored
+
+    table = _random_table(1_100_000)
+    identity = _ipc_body(table)
+    assert identity.size > 1 << 24
+    body = _stored(coding, identity)
+    assert len(body) - identity.size <= _stored_overhead(coding, identity.size)
+    assert decode_body(pa.BufferReader(body), coding).read_all().equals(table)
+
+
+@pytest.mark.parametrize("coding", ["gzip", "br"])
+def test_memory_seat_keeps_the_knee_of_a_compressible_table(table, coding):
+    """The fixture table saves far more than ``MIN_SAVING`` under both
+    codings, so its bodies are the knees: brotli level 2, and deflate
+    level 4 in a gzip member with MTIME 0."""
+    import zlib
+
+    registry = DatasetRegistry()
+    registry.register_table("t", table)
+    identity = bytes(registry.identity_body("t"))
+    if coding == "br":
+        want = pa.Codec("brotli", compression_level=2).compress(identity, asbytes=True)
+    else:
+        want = zlib.compress(identity, 4, wbits=31)
+    assert bytes(registry.encoded_body("t", coding)) == want
+    assert len(want) < len(identity) * (1 - DatasetRegistry.MIN_SAVING)
+
+
+@pytest.mark.parametrize("coding", ["gzip", "br"])
+def test_memory_seat_stores_an_incompressible_table(coding):
+    """A table whose knee would save less than ``MIN_SAVING`` is served in
+    the coding's stored form, under the coding it negotiated, and the
+    second GET replays it."""
+    from arrow_experiments_spark.transport.ipc_stream import decode_body
+    from arrow_experiments_spark.transport.server import _stored
+
+    table = _random_table(20_000)
+    registry = DatasetRegistry()
+    registry.register_table("r", table)
+    identity = registry.identity_body("r")
+    httpd = serve(registry)
+    base = "http://%s:%d" % httpd.server_address
+    try:
+        bodies = [_get_body(base, "r", coding) for _ in range(2)]
+    finally:
+        httpd.shutdown()
+    assert bodies[0] == bodies[1] == _stored(coding, identity).to_pybytes()
+    assert decode_body(io.BytesIO(bodies[0]), coding).read_all().equals(table)
+
+
+def test_br_one_shot_fill_of_an_incompressible_splice_is_stored(tmp_path):
+    """The one-shot ``br`` fill of an opted-in spliced dataset applies the
+    same floor: random data lands in the artifact in its stored form."""
+    import os
+
+    from arrow_experiments_spark.transport.ipc_stream import decode_body
+    from arrow_experiments_spark.transport.server import _stored
+
+    table = _random_table(20_000)
+    registry = DatasetRegistry()
+    _register_spliced(registry, "sp", table, tmp_path)
+    cache_dir = registry.enable_encoded_artifact("sp", str(tmp_path / "cache"))
+    httpd = serve(registry)
+    base = "http://%s:%d" % httpd.server_address
+    try:
+        body = _get_body(base, "sp", "br")
+        assert _get_body(base, "sp", "br") == body
+    finally:
+        httpd.shutdown()
+    identity = b"".join(bytes(c) for c in registry.identity_stream("sp"))
+    assert body == _stored("br", identity).to_pybytes()
+    with open(os.path.join(cache_dir, "br.bin"), "rb") as f:
+        assert f.read() == body
+    assert decode_body(io.BytesIO(body), "br").read_all().equals(table)
